@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F
 
 import __spark_entry__ as ent
-from lambdo_spark.session import get_spark
+from lambdo_spark.session import get_spark, host_resources
 from lambdo_spark.rollup.tiers import TIER_SECONDS, downsample, finalize, gap_fill
 from lambdo_spark.rollup.compress_stage import compress_tier
 from lambdo_spark.sources.pages import generate_pages
@@ -70,7 +70,7 @@ def run_forced(df) -> int:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, _ = host_resources()
     # sandbox inputs are many ~1 MB parquet files; default bin-packing
     # (128 MB + 4 MB open cost) would cap scan parallelism at ~10 tasks
     # (tools/bench_scaling.py has the full note — real 100 TB tables

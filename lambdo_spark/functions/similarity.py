@@ -297,6 +297,12 @@ def hier_assign_udf(
     sc, members = super_codebook(centroids, n_super, iters)
     n_super = len(sc)
     probes = max(1, min(int(probes), n_super))
+    # a super-cell that ended with no member centroids must never be
+    # routed to: a row whose every probe is dead would get no candidate
+    # at all (the int64 sentinel wraps to -1 in int32 and the id join
+    # downstream silently drops the row)
+    dead = np.array([len(mem) == 0 for mem in members])
+    sentinel = np.iinfo(np.int64).max
 
     @pandas_udf("array<int>")
     def _udf(vecs: pd.Series) -> pd.Series:
@@ -304,12 +310,13 @@ def hier_assign_udf(
         m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
         n = len(m)
         coarse = m @ sc.T  # (n, n_super)
+        coarse[:, dead] = -np.inf
         if probes == 1:
             probed = np.argmax(coarse, axis=1)[:, None]
         else:
             probed = np.argsort(-coarse, axis=1, kind="stable")[:, :probes]
         best_sim = np.full(n, -np.inf)
-        best_idx = np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
+        best_idx = np.full(n, sentinel, dtype=np.int64)
         for s in range(n_super):
             mem = members[s]
             if len(mem) == 0:
@@ -327,6 +334,8 @@ def hier_assign_udf(
             upd = rows[take]
             best_sim[upd] = sim[take]
             best_idx[upd] = cand[take]
+        if (best_idx == sentinel).any():
+            raise AssertionError("hier_assign_udf: row routed to no centroid")
         return pd.Series(list(best_idx.astype(np.int32)[:, None]))
 
     return _udf

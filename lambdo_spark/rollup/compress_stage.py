@@ -17,6 +17,14 @@ partition, and a group straddling two batches is handled by carrying
 the open tail group into the next batch (memory stays O(batch +
 largest group), not O(partition)).
 
+The shuffle is sized to the data: with no explicit ``partitions`` it
+is ``repartition("url")`` (a by-column exchange AQE may coalesce), not
+a fixed count. Each Python task costs ~0.3 s of worker CPU before it
+sees a row (README scale notes), so a fixed 8-way exchange made a
+3k-row tier pay for 8 tasks; coalescing merges whole hash partitions,
+so a (url, chunk) group never splits and the output is unchanged.
+An explicit ``partitions=n`` still pins the exchange to n.
+
 Scale notes:
 - input is *tier rows* (≤ one per bucket), so a url with 10^8 raw
   pages still has ≤ 2.2k rows per 90 days at 1h — hot-url skew is
@@ -83,9 +91,6 @@ def compress_tier(
 ) -> DataFrame:
     """(url, bucket_s, value) tier rows → per-(url, chunk) binary blobs."""
     chunk_span = chunk_buckets * tier_seconds
-    spark = tier.sparkSession
-    if partitions is None:
-        partitions = max(8, spark.sparkContext.defaultParallelism)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry: pd.DataFrame | None = None
@@ -106,6 +111,8 @@ def compress_tier(
         if carry is not None and len(carry):
             yield _encode_batch(carry)
 
+    # no count given → a REPARTITION_BY_COL exchange AQE can coalesce
+    by_url = (partitions, "url") if partitions is not None else ("url",)
     prepared = (
         tier.select(
             "url",
@@ -115,7 +122,7 @@ def compress_tier(
             .cast("long")
             .alias("_chunk"),
         )
-        .repartition(partitions, "url")
+        .repartition(*by_url)
         .sortWithinPartitions("url", "_chunk", "bucket_s")
     )
     return prepared.mapInPandas(kernel, schema=_compressed_schema(tier))

@@ -1,7 +1,9 @@
 """SparkSession factory tuned for the rollup workload.
 
-Defaults target the sandbox (local[N], 32 cores) but every knob is the
-one you would set on a 1000-executor cluster:
+Defaults size the session to the host it runs on (``host_resources``:
+local[CPUs this process may use], a quarter of physical memory for the
+driver) but every knob is the one you would set on a 1000-executor
+cluster:
 
 - AQE on (runtime shuffle coalescing + skew-join splitting),
 - Arrow on (all our Python kernels are pandas/Arrow-vectorized),
@@ -42,19 +44,31 @@ def package_zip() -> str:
     return out
 
 
+def host_resources() -> tuple[int, str]:
+    """(CPUs, driver memory) to run at: ``SPARK_GRAFT_CPUS`` and
+    ``SPARK_DRIVER_MEM`` when set, else the CPUs this process may run
+    on and a quarter of the host's physical memory (MemTotal)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    mem = os.environ.get("SPARK_DRIVER_MEM")
+    if not mem:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        mem = f"{max(1024, total // 4 // 2**20)}m"
+    return (int(cpus) if cpus else len(os.sched_getaffinity(0))), mem
+
+
 def get_spark(
     app_name: str = "lambdo_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, driver_mem = host_resources()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         try:
-            n = int(master.split("[")[1].rstrip("]*")) if "[" in master else 32
+            n = int(master.split("[")[1].rstrip("]*")) if "[" in master else cpus
         except ValueError:
-            n = 32
+            n = cpus
         shuffle_partitions = max(2 * n, 8)
 
     b = (
@@ -78,7 +92,7 @@ def get_spark(
         # min/max stats (measured: the realtime-read tail scan drops
         # from 100% to ~3% of raw bytes, tools/bench_realtime.py).
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -58,6 +58,7 @@ import json
 import os
 import shutil
 import time
+from zoneinfo import ZoneInfo
 
 
 class ConcurrentWriteConflict(RuntimeError):
@@ -66,9 +67,54 @@ class ConcurrentWriteConflict(RuntimeError):
     validation failure). The losing writer's data files are orphans in
     their own ``snapv`` directory — committed data is untouched."""
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 DEFAULT_PART_SECONDS = 7 * 86400  # weekly time partitions (spec 0)
+
+
+_STAT_TYPES = (
+    "tinyint", "smallint", "int", "bigint", "float", "double",
+    "string", "date", "timestamp", "timestamp_ntz",
+)
+
+
+def _stat_form(v, dtype: str, zone):
+    """A footer bound in the manifest's form: numbers and strings as
+    they are, dates and timestamps as Spark's CAST(... AS STRING)."""
+    if v is None or dtype not in ("date", "timestamp", "timestamp_ntz"):
+        return v
+    if dtype == "date":
+        return v.isoformat()
+    if dtype == "timestamp":
+        if zone is None:
+            return None
+        v = v.astimezone(zone).replace(tzinfo=None)
+    frac = f".{v.microsecond:06d}".rstrip("0") if v.microsecond else ""
+    return v.isoformat(" ", "seconds") + frac
+
+
+def _footer_metrics(path: str, stat_types: dict[str, str], zone) -> dict:
+    """Row count and per-column [min, max] of one parquet file, read
+    from its footer. A column with no footer bounds on a row group that
+    holds non-null values (INT96 timestamps, over-long strings) records
+    [None, None], which plan_files keeps as unprunable."""
+    md = pq.read_metadata(path)
+    index = {md.schema.column(i).path: i for i in range(md.num_columns)}
+    stats = {}
+    for c, dtype in stat_types.items():
+        lo = hi = None
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            s = rg.column(index[c]).statistics
+            if s is not None and s.has_min_max:
+                lo = s.min if lo is None else min(lo, s.min)
+                hi = s.max if hi is None else max(hi, s.max)
+            elif s is None or s.null_count != rg.num_rows:
+                lo = hi = None
+                break
+        stats[c] = [_stat_form(v, dtype, zone) for v in (lo, hi)]
+    return {"rows": md.num_rows, "stats": stats}
 
 
 def _atomic_write_json(path: str, obj: dict) -> None:
@@ -260,16 +306,23 @@ class IcebergLayoutTable:
             f"no snapshot at or before ts={ts} on branch {self.branch!r}"
         )
 
+    def _resolve(self, snapshot_id: int | None, required: bool = False) -> dict | None:
+        """Snapshot ``snapshot_id`` (None = this ref's head); with
+        ``required``, a missing one raises FileNotFoundError."""
+        snap = self.current_snapshot() if snapshot_id is None else self.snapshot(snapshot_id)
+        if snap is None and required:
+            raise FileNotFoundError(
+                f"no snapshot {'CURRENT' if snapshot_id is None else snapshot_id} "
+                f"in {self.meta_dir}"
+            )
+        return snap
+
     def committed_parts(self, snapshot_id: int | None = None) -> set[str]:
-        snap = (
-            self.current_snapshot() if snapshot_id is None else self.snapshot(snapshot_id)
-        )
+        snap = self._resolve(snapshot_id)
         return set(snap["parts"]) if snap else set()
 
     def part_versions(self, snapshot_id: int | None = None) -> dict[str, int]:
-        snap = (
-            self.current_snapshot() if snapshot_id is None else self.snapshot(snapshot_id)
-        )
+        snap = self._resolve(snapshot_id)
         return dict(snap["parts"]) if snap else {}
 
     def lineage(self) -> list[dict]:
@@ -1002,23 +1055,47 @@ class IcebergLayoutTable:
         schema_id: int | None = None,
         cluster: bool | None = None,
     ) -> None:
-        spark = df.sparkSession
         if not missing:
             return
         t0 = time.time()
         pending = df.where(F.col(part_col).cast("string").isin(missing)).withColumn(
             "snapv", F.lit(version)
         )
+        dtypes = dict(pending.dtypes)
+        data_cols = [c for c in dtypes if c not in (part_col, "snapv")]
+        sort_cols = [c for c in self.sort_order if c in dtypes]
         # cluster the write: REBALANCE co-locates each partition's rows
         # (AQE splits a skewed part across tasks instead of one-task-
         # per-part), then an in-task sort clusters row groups on the
         # table sort order — content is unchanged (lineage hashes are
         # order-insensitive bit_xor)
-        if self.cluster_writes if cluster is None else cluster:
+        cluster = self.cluster_writes if cluster is None else cluster
+        if cluster:
             pending = pending.hint("rebalance", part_col)
-            sort_cols = [c for c in self.sort_order if c in pending.columns]
-            if sort_cols:
-                pending = pending.sortWithinPartitions(part_col, *sort_cols)
+        # lineage value_hash, observed inside the write job (no read-
+        # back): one conditional bit_xor(xxhash64(data cols in file
+        # order)) per part; maps/structs hash in a stable JSON form. It
+        # sits after the rebalance (result stage: counted once per
+        # task) and below the sort (the write keeps its ordering).
+        obs = Observation()
+        pending = (
+            pending.withColumns({
+                "__lineage_p": F.col(part_col).cast("string"),
+                "__lineage_h": F.xxhash64(*[
+                    F.to_json(c) if dtypes[c].startswith(("map", "struct", "array"))
+                    else F.col(c) for c in data_cols
+                ]),
+            })
+            .observe(obs, *[
+                F.bit_xor(
+                    F.when(F.col("__lineage_p") == p, F.col("__lineage_h"))
+                ).alias(f"h{i}")
+                for i, p in enumerate(missing)
+            ])
+            .drop("__lineage_p", "__lineage_h")
+        )
+        if cluster and sort_cols:
+            pending = pending.sortWithinPartitions(part_col, *sort_cols)
         # dynamic overwrite touches only (part, snapv=version) dirs —
         # never any committed version: version ids are CLAIMED
         # exclusively (_claim_version), so no two writers ever share a
@@ -1032,79 +1109,38 @@ class IcebergLayoutTable:
             .parquet(self.data_dir)
         )
         wall = time.time() - t0
-        # per-partition lineage metrics from what was actually written
-        written = self._read_versions(
-            spark, {p: version for p in missing}, part_col
-        )
-        # maps/structs are not hashable by xxhash64 → stable JSON
-        # form; combine with bit_xor (order-insensitive, no overflow)
-        hashable = [
-            F.to_json(F.col(c)) if t.startswith(("map", "struct", "array")) else F.col(c)
-            for c, t in written.dtypes
-            if c not in (part_col, "snapv")
-        ]
-        # Iceberg-manifest column stats: per-FILE min/max of the sort-
-        # order columns, gathered in the SAME aggregation pass as the
-        # lineage hash (group by file instead of part; part totals are
-        # derived driver-side — sums and xors are associative). The
-        # stats feed plan_files() scan pruning: a per-url or time-range
-        # read skips whole files before Spark ever lists them, which at
-        # 10^12 rows is the difference between touching ~1 file per
-        # (part, url-range) and scanning every file of every part.
-        simple = {c: t for c, t in written.dtypes}
-        stat_cols = [
-            c for c in self.sort_order
-            if c in simple and not simple[c].startswith(("map", "struct", "array", "binary"))
-        ]
-        stat_aggs = []
-        for c in stat_cols:
-            col = F.col(c)
-            if simple[c] not in ("int", "bigint", "smallint", "tinyint", "double", "float"):
-                col = col.cast("string")  # JSON-safe; ISO timestamps sort lexically
-            stat_aggs += [F.min(col).alias(f"_min_{c}"), F.max(col).alias(f"_max_{c}")]
-        per_file = (
-            written.select(
-                F.col(part_col).cast("string").alias("p"),
-                F.input_file_name().alias("f"),
-                F.xxhash64(*hashable).alias("_h"),
-                *[F.col(c) for c in stat_cols],
-            )
-            .groupBy("p", "f")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.expr("bit_xor(_h)").alias("value_hash"),
-                *stat_aggs,
-            )
-            .collect()
-        )
-        by_part: dict[str, list] = {}
-        for r in per_file:
-            by_part.setdefault(str(r["p"]), []).append(r)
-        prefix = "file://" + os.path.abspath(self.data_dir) + "/"
-        for p in missing:
-            frs = by_part.get(p, [])
-            vh = 0
-            for r in frs:
-                vh ^= int(r["value_hash"])
+        hashes = obs.get
+        # Iceberg-manifest column stats: per-FILE rows and min/max of
+        # the sort-order columns from the footers just written (like
+        # Iceberg's writer-collected DataFile metrics). They feed
+        # plan_files() scan pruning: per-url or time-range reads skip
+        # whole files before Spark ever lists them.
+        stat_types = {
+            c: dtypes[c] for c in sort_cols
+            if c in data_cols and dtypes[c] in _STAT_TYPES
+        }
+        try:
+            zone = ZoneInfo(df.sparkSession.conf.get("spark.sql.session.timeZone"))
+        except (KeyError, ValueError):
+            zone = None  # not an IANA zone: timestamp bounds stay unknown
+        for i, p in enumerate(missing):
+            d = self._version_dir(p, version, part_col)
+            names = sorted(os.listdir(d)) if os.path.isdir(d) else []
             files = [
-                {
-                    "path": (r["f"][len(prefix):] if r["f"].startswith(prefix)
-                             else r["f"].split("/data/", 1)[-1]),
-                    "rows": int(r["rows"]),
-                    "stats": {
-                        c: [r[f"_min_{c}"], r[f"_max_{c}"]] for c in stat_cols
-                    },
-                }
-                for r in sorted(frs, key=lambda r: r["f"])
+                {"path": os.path.relpath(os.path.join(d, f), self.data_dir),
+                 **_footer_metrics(os.path.join(d, f), stat_types, zone)}
+                for f in names
+                if f.endswith(".parquet") and not f.startswith((".", "_"))
             ]
+            files = [fr for fr in files if fr["rows"]]
             _atomic_write_json(
                 os.path.join(self.meta_dir, f"manifest-{p}-v{version}.json"),
                 {
                     "part": p,
                     "version": version,
                     "schema_id": schema_id,
-                    "rows": sum(int(r["rows"]) for r in frs),
-                    "value_hash": vh,
+                    "rows": sum(fr["rows"] for fr in files),
+                    "value_hash": int(hashes[f"h{i}"] or 0),
                     "files": files,
                     "wall_time_share_s": wall / len(missing),
                     "input_snapshot": input_snapshot,
@@ -1236,7 +1272,10 @@ class IcebergLayoutTable:
         target_schema: dict | None = None,
         deletes: list[dict] | None = None,
         with_pos: bool = False,
+        files: dict[object, list[str]] | None = None,
     ) -> DataFrame:
+        # ``files``: extra data files to scan, keyed by the schema id
+        # they were written under (plan_files' pruned survivors).
         # pre-MVCC parts (version -1) live as loose files directly
         # under part=<p>; once a later MVCC rewrite adds snapv=<v>
         # subdirs there, reading the bare directory would pick up BOTH
@@ -1267,6 +1306,10 @@ class IcebergLayoutTable:
                 )
             else:
                 dir_groups.setdefault(key, []).append(d)
+        for key, paths in (files or {}).items():
+            dir_groups.setdefault(
+                key if target_schema is not None else None, []
+            ).extend(paths)
 
         def _norm(df: DataFrame, key) -> DataFrame:
             if target_schema is None:
@@ -1409,15 +1452,7 @@ class IcebergLayoutTable:
         Returns ``{"files", "legacy_dirs", "total_files",
         "skipped_files", "skipped_parts", "part_col"}``.
         """
-        snap = (
-            self.current_snapshot() if snapshot_id is None
-            else self.snapshot(snapshot_id)
-        )
-        if snap is None:
-            raise FileNotFoundError(
-                f"no snapshot {'CURRENT' if snapshot_id is None else snapshot_id} "
-                f"in {self.meta_dir}"
-            )
+        snap = self._resolve(snapshot_id, required=True)
         part_col = snap.get("part_col", "part")
         rng = self._normalize_prune(prune or {})
         tsid = snap.get("schema_id")
@@ -1531,69 +1566,26 @@ class IcebergLayoutTable:
             if snapshot_id is not None:
                 raise ValueError("pass snapshot_id OR as_of, not both")
             snapshot_id = self.snapshot_as_of(as_of)["snapshot_id"]
-        snap = (
-            self.current_snapshot() if snapshot_id is None else self.snapshot(snapshot_id)
-        )
-        if snap is None:
-            raise FileNotFoundError(
-                f"no snapshot {'CURRENT' if snapshot_id is None else snapshot_id} "
-                f"in {self.meta_dir}"
-            )
+        snap = self._resolve(snapshot_id, required=True)
         part_col = snap.get("part_col", "part")
         tsid = snap.get("schema_id")
         # normalize to the schema OF THE SNAPSHOT BEING READ — time
         # travel to a pre-rename snapshot sees the old column names
         target = self.schema(tsid) if tsid is not None else None
-        descs = self._delete_descs(snap, snap["parts"])
+        pairs, files = self._version_pairs(snap), None
+        if prune:
+            # scan only the files whose manifest stats can match
+            plan = self.plan_files(snapshot_id, prune)
+            if plan["files"] or plan["legacy_dirs"]:
+                pairs, files = plan["legacy_dirs"], plan["files_by_schema"]
+        out = self._read_versions(
+            spark, pairs, part_col, target_schema=target, with_pos=with_pos,
+            deletes=self._delete_descs(snap, snap["parts"]), files=files,
+        ).drop("snapv")
         if not prune:
-            out = self._read_versions(
-                spark, self._version_pairs(snap), part_col, target_schema=target,
-                deletes=descs, with_pos=with_pos,
-            ).drop("snapv")
             return out
-        plan = self.plan_files(snapshot_id, prune)
-        need_pos = with_pos or any(
-            d.get("kind", "pos") == "pos" for d in descs
-        )
-        dfs = []
-        for wsid, fpaths in sorted(
-            plan["files_by_schema"].items(), key=lambda kv: (kv[0] is None, kv[0])
-        ):
-            rdr = spark.read.option("basePath", self.data_dir)
-            if target is not None:
-                ddl = self._schema_ddl(
-                    self.schema(wsid) if wsid is not None else self.schema(0)
-                )
-                if ddl:
-                    rdr = rdr.schema(ddl)
-            df = rdr.parquet(*fpaths)
-            if need_pos:
-                df = self._with_pos(df)
-            if target is not None:
-                written = self.schema(wsid) if wsid is not None else self.schema(0)
-                df = self._normalize_to_schema(df, written, target, part_col)
-            dfs.append(df)
-        if plan["legacy_dirs"]:
-            dfs.append(
-                self._read_versions(
-                    spark, plan["legacy_dirs"], part_col, target_schema=target,
-                    with_pos=need_pos,
-                )
-            )
-        if not dfs:
-            out = self._read_versions(
-                spark, self._version_pairs(snap), part_col, target_schema=target,
-                with_pos=need_pos,
-            ).limit(0)
-        else:
-            out = dfs[0]
-            for d in dfs[1:]:
-                out = out.unionByName(d, allowMissingColumns=True)
-        if descs:
-            out = self._apply_deletes(spark, out, descs)
-        if need_pos and not with_pos:
-            out = out.drop("_file", "_pos")
-        out = out.drop("snapv") if "snapv" in out.columns else out
+        if files is None:  # nothing can match: empty, in the snapshot's shape
+            return out.limit(0)
         # residual predicate: stats pruning is IO-elision only; the
         # range itself is enforced on the surviving rows (Iceberg's
         # residual evaluation), so results are exact even where stats
@@ -1613,10 +1605,7 @@ class IcebergLayoutTable:
         added / rewritten / removed between them (Iceberg incremental-
         scan planning). No Spark job."""
         a = self.snapshot(from_snapshot)
-        b = (
-            self.current_snapshot() if to_snapshot is None
-            else self.snapshot(to_snapshot)
-        )
+        b = self._resolve(to_snapshot)
         if a is None or b is None:
             raise FileNotFoundError(
                 f"snapshot missing: {from_snapshot} or {to_snapshot} in {self.meta_dir}"
@@ -1676,10 +1665,7 @@ class IcebergLayoutTable:
         # both sides normalized to the TO-snapshot's schema so the row
         # diff compares like with like across a schema evolution (a
         # metadata-only rename yields zero row changes, as it should)
-        to_snap = (
-            self.current_snapshot() if to_snapshot is None
-            else self.snapshot(to_snapshot)
-        )
+        to_snap = self._resolve(to_snapshot)
         tsid = to_snap.get("schema_id") if to_snap else None
         target = self.schema(tsid) if tsid is not None else None
         # each side applies ITS snapshot's merge-on-read deletes and

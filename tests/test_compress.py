@@ -169,3 +169,34 @@ def test_decompress_tier_bucket_range_prunes_chunks(spark):
         assert tail == 2 * 1000
     finally:
         comp.unpersist()
+
+
+def _result_stage_tasks(spark, df, group: str) -> int:
+    """Task count of the stage that produced ``df.collect()``'s rows
+    (the last job's highest stage id), read from the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    last_job = max(st.getJobIdsForGroup(group))
+    return st.getStageInfo(max(st.getJobInfo(last_job).stageIds)).numTasks
+
+
+def test_compress_tier_python_stage_sized_to_data(spark):
+    """Without an explicit partition count the url shuffle is one AQE
+    may coalesce, so a small tier's mapInPandas runs as ONE Python task
+    (each task costs a fixed worker-CPU floor); ``partitions=n`` still
+    pins the exchange to n tasks. Output is identical either way."""
+    from lambdo_spark.rollup.compress_stage import compress_tier
+
+    rows = [(f"u{i % 40}", 3600 * i, float(i % 97)) for i in range(2000)]
+    tier = spark.createDataFrame(rows, "url string, bucket_s long, v double").repartition(4)
+    auto = compress_tier(tier, value_col="v", chunk_buckets=16)
+    pinned = compress_tier(tier, value_col="v", chunk_buckets=16, partitions=8)
+    assert _result_stage_tasks(spark, auto, "compress_auto") == 1
+    assert _result_stage_tasks(spark, pinned, "compress_pinned") == 8
+    key = ["url", "chunk"]
+    assert auto.orderBy(*key).collect() == pinned.orderBy(*key).collect()

@@ -4,8 +4,8 @@ test_reference_examples_parity; 6–9 import sklearn, absent in this
 sandbox, so the reference itself cannot execute them here).
 
 What parity means without sklearn: example9's pipeline
-(/root/reference/examples/example9.json) is rebuilt feature-for-
-feature on the SHIPPED CSVs with this engine's operators — price_fn
+(reference examples/example9.json) is rebuilt feature-for-feature
+with this engine's operators — price_fn
 as a null-guarded JVM expression, mean_weighted/mean rolls, the
 linear_trend_fn slope (examples/example9.py:26-33) via the registry
 ``slope`` kernel (OLS slope is closed-form; sklearn's
@@ -18,6 +18,12 @@ trained on the same slice(end=6000) split. Each fit's coefficients
 are then checked against an independent numpy normal-equations solve
 of the same training frame (and against sklearn itself when sklearn
 IS importable — skipif keeps that leg green either way).
+
+Inputs are seeded synthetic daily OHLCV series in the layout of the
+reference's ^GSPC.csv / ^VIX.csv (Date, Open, High, Low, Close,
+Adj Close, Volume; "null" for missing), written per test module: every
+expected value is computed in-test from the same frame, so the suite
+needs no external data.
 """
 
 from __future__ import annotations
@@ -36,8 +42,37 @@ from lambdo_spark.functions.train import (
 from lambdo_spark.operators import column_ops as C
 from lambdo_spark.operators.table_ops import join_tables, row_filter
 
-GSPC = "/root/reference/examples/^GSPC.csv"
-VIX = "/root/reference/examples/^VIX.csv"
+N_DAYS = 7200
+
+
+def _ohlcv_csv(path, seed: int, start: float, drift: float, vol: float,
+               volume: bool) -> str:
+    """A seeded geometric random walk as a daily OHLCV CSV, with a few
+    "null" rows like the reference files."""
+    rng = np.random.default_rng(seed)
+    close = start * np.exp(np.cumsum(rng.normal(drift, vol, N_DAYS)))
+    open_ = np.concatenate(([start], close[:-1])) * np.exp(rng.normal(0, vol / 4, N_DAYS))
+    high = np.maximum(open_, close) * np.exp(np.abs(rng.normal(0, vol / 2, N_DAYS)))
+    low = np.minimum(open_, close) * np.exp(-np.abs(rng.normal(0, vol / 2, N_DAYS)))
+    pdf = pd.DataFrame({
+        "Date": pd.bdate_range("1990-01-02", periods=N_DAYS).strftime("%Y-%m-%d"),
+        "Open": open_.round(4), "High": high.round(4), "Low": low.round(4),
+        "Close": close.round(4), "Adj Close": close.round(4),
+        "Volume": (rng.lognormal(20, 0.3, N_DAYS).round() if volume
+                   else np.zeros(N_DAYS)),
+    })
+    pdf.loc[rng.choice(np.arange(2000, N_DAYS), 3, replace=False), ["Open", "Close"]] = None
+    pdf.to_csv(path, index=False, na_rep="null")
+    return str(path)
+
+
+@pytest.fixture(scope="module")
+def csvs(tmp_path_factory):
+    d = tmp_path_factory.mktemp("ohlcv")
+    return (
+        _ohlcv_csv(d / "GSPC.csv", seed=9, start=330.0, drift=3e-4, vol=0.011, volume=True),
+        _ohlcv_csv(d / "VIX.csv", seed=10, start=20.0, drift=0.0, vol=0.05, volume=False),
+    )
 
 try:
     import sklearn  # noqa: F401
@@ -89,9 +124,10 @@ FEATS = [
 
 
 @pytest.fixture(scope="module")
-def merged(spark):
-    g = _features(spark, GSPC)
-    v = _features(spark, VIX, vwap=False)
+def merged(spark, csvs):
+    gspc, vix = csvs
+    g = _features(spark, gspc)
+    v = _features(spark, vix, vwap=False)
     # example9 "Merged Table": join by row number, suffixes ["", "_vix"]
     m = join_tables(
         [g.drop("High", "Close"), v.drop("High", "Close", "_rn")],
@@ -187,13 +223,13 @@ def test_example9_fits_match_sklearn(merged):
     np.testing.assert_allclose(m_r["weights"], skr.coef_, rtol=1e-4, atol=1e-6)
 
 
-def test_example6_shape_close_tomorrow(spark):
+def test_example6_shape_close_tomorrow(spark, csvs):
     """Example 6 (example6.json:55-76): predict Close_Tomorrow from
     the daily columns, trained on slice(end=900) — re-expressed with
     fit_linear; coefficient parity vs numpy on the same 900 rows and
     predictions for every row including the held-out tail."""
     df = (
-        spark.read.csv(GSPC, header=True, inferSchema=True, nullValue="null")
+        spark.read.csv(csvs[0], header=True, inferSchema=True, nullValue="null")
         .withColumn("_rn", F.row_number().over(
             Window.orderBy(F.monotonically_increasing_id())))
         .where(F.col("_rn") <= 1000)
@@ -219,7 +255,7 @@ def test_example6_shape_close_tomorrow(spark):
     assert abs(model["weights"][3] - 1.0) < 0.2
 
 
-def test_example7_shape_moving_average_model(spark, tmp_path):
+def test_example7_shape_moving_average_model(spark, tmp_path, csvs):
     """Example 7 (example7.json): diff_high_low, Close_Tomorrow shift,
     the mean_Volume 10/5/2 rolling family, dropna, then a model
     trained on slice(end=900) predicting Close_Tomorrow — the
@@ -227,7 +263,7 @@ def test_example7_shape_moving_average_model(spark, tmp_path):
     absent; the *pipeline shape* is what parity pins here), checked
     against a numpy normal-equations solve of the same frame."""
     df = (
-        spark.read.csv(GSPC, header=True, inferSchema=True, nullValue="null")
+        spark.read.csv(csvs[0], header=True, inferSchema=True, nullValue="null")
         .withColumn("_rn", F.row_number().over(
             Window.orderBy(F.monotonically_increasing_id())))
         .where(F.col("_rn") <= 1000)
@@ -258,17 +294,17 @@ def test_example7_shape_moving_average_model(spark, tmp_path):
     assert got.where(F.col("pred").isNull()).count() == 0
 
 
-def test_example8_shape_two_source_join_model(spark, tmp_path):
+def test_example8_shape_two_source_join_model(spark, tmp_path, csvs):
     """Example 8 (example8.json): GSPC(Close,Volume) row-number-joined
     with VIX(Close) under ["", "_VIX"] suffixes, Close_Tomorrow shift,
     model on the merged frame — registry fit standing in for the
     GradientBoosting, numpy parity on the trained slice."""
     g = (
-        spark.read.csv(GSPC, header=True, inferSchema=True, nullValue="null")
+        spark.read.csv(csvs[0], header=True, inferSchema=True, nullValue="null")
         .limit(1000).select("Close", "Volume")
     )
     v = (
-        spark.read.csv(VIX, header=True, inferSchema=True, nullValue="null")
+        spark.read.csv(csvs[1], header=True, inferSchema=True, nullValue="null")
         .limit(1000).select("Close")
     )
     # suffixes here are per-RIGHT-table (the compiler maps the

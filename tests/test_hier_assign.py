@@ -104,3 +104,26 @@ def test_flat_path_unchanged(spark, emb):
     lookup = {i: cid for i, cid in enumerate(cids)}
     d = {r["vec_id"]: lookup[r["_cell"]] for r in direct.collect()}
     assert {r["vec_id"]: r["cluster_id"] for r in a.collect()} == d
+
+
+def test_dead_super_cells_never_drop_rows(spark, monkeypatch):
+    """A super-cell with no member centroids must not be routed to:
+    rows whose nearest super-cell is dead still get a real centroid
+    (before, the empty probe left the int64 sentinel, which wrapped to
+    -1 in int32 and assign_clusters' inner join dropped the row)."""
+    from lambdo_spark.functions import similarity
+
+    cents = np.array([[1.0, 0.0], [0.9, 0.1], [0.0, 1.0]])
+    # cell 2 is dead and points where the queries are
+    sc = np.array([[1.0, 0.0], [0.0, 1.0], [-1.0, 0.0]])
+    members = [np.array([0, 1]), np.array([2]), np.array([], dtype=np.int64)]
+    monkeypatch.setattr(similarity, "super_codebook", lambda *a, **k: (sc, members))
+    rows = [(0, [-1.0, 0.05]), (1, [-1.0, -0.05]), (2, [1.0, 0.02])]
+    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    got = {
+        r["vec_id"]: r["cluster_id"]
+        for r in assign_clusters(
+            emb, cents, ["c0", "c1", "c2"], n_super=3, probes=1
+        ).collect()
+    }
+    assert got == {0: "c2", 1: "c2", 2: "c0"}

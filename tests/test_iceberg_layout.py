@@ -704,3 +704,182 @@ def test_commit_metadata_preserves_concurrent_parts(spark, tmp_path):
     m = t.commit_metadata(extra={"pending": None})
     assert m["parts"] == s["parts"]
     assert t.read_tier(spark).collect()[0]["k"] == 5
+
+
+def _readback_manifest_oracle(spark, t, part, version, part_col="part"):
+    """Manifest fields recomputed by RE-READING one written version:
+    group by input_file_name() with bit_xor(xxhash64(data cols)) and
+    min/max of the sort-order columns (non-numeric ones as
+    CAST(... AS STRING)). The writer observes the hash in its write job
+    and reads stats from parquet footers; both must agree with this."""
+    written = t._read_versions(spark, {part: version}, part_col)
+    dtypes = dict(written.dtypes)
+    hashable = [
+        F.to_json(F.col(c)) if d.startswith(("map", "struct", "array")) else F.col(c)
+        for c, d in written.dtypes
+        if c not in (part_col, "snapv")
+    ]
+    stat_cols = [
+        c for c in t.sort_order
+        if c in dtypes and c not in (part_col, "snapv")
+        and not dtypes[c].startswith(("map", "struct", "array", "binary"))
+    ]
+    aggs = []
+    for c in stat_cols:
+        col = F.col(c)
+        if dtypes[c] not in ("int", "bigint", "smallint", "tinyint", "double", "float"):
+            col = col.cast("string")
+        aggs += [F.min(col).alias(f"_min_{c}"), F.max(col).alias(f"_max_{c}")]
+    per_file = (
+        written.select(
+            F.input_file_name().alias("f"), F.xxhash64(*hashable).alias("_h"),
+            *stat_cols,
+        )
+        .groupBy("f")
+        .agg(F.count(F.lit(1)).alias("rows"), F.expr("bit_xor(_h)").alias("h"), *aggs)
+        .collect()
+    )
+    vh = 0
+    for r in per_file:
+        vh ^= int(r["h"])
+    files = [
+        {
+            "path": r["f"].split("/data/", 1)[-1],
+            "rows": int(r["rows"]),
+            "stats": {c: [r[f"_min_{c}"], r[f"_max_{c}"]] for c in stat_cols},
+        }
+        for r in sorted(per_file, key=lambda r: r["f"])
+    ]
+    return {"rows": sum(f["rows"] for f in files), "value_hash": vh, "files": files}
+
+
+def _assert_manifests_match_oracle(spark, t):
+    snap = t.current_snapshot()
+    pairs = t._version_pairs(snap)
+    assert pairs
+    for p, v in pairs:
+        m = t._manifest(p, v)
+        got = {
+            "rows": m["rows"],
+            "value_hash": m["value_hash"],
+            "files": [
+                {k: fr[k] for k in ("path", "rows", "stats")} for fr in m["files"]
+            ],
+        }
+        assert got == _readback_manifest_oracle(spark, t, p, v, snap["part_col"]), (p, v)
+
+
+def test_single_pass_manifests_match_readback(spark, tmp_path):
+    """Every writer path — write_tier, overwrite_parts, compaction —
+    records the same manifests (rows, value_hash incl. the lang_hist
+    map column, file paths, per-file stats) as a re-read of its files."""
+    pages = generate_pages(spark, 3000, seed=21)
+    tier = with_part(finalize(partials_from_pages(pages, 3600)))
+    assert dict(tier.dtypes)["lang_hist"].startswith("map")
+    t = IcebergLayoutTable(str(tmp_path / "t"))
+    t.write_tier(tier.repartition(6, "url"))
+    _assert_manifests_match_oracle(spark, t)
+    parts = sorted(t.part_versions())[:2]
+    t.overwrite_parts(
+        tier.where(F.col("part").cast("string").isin(parts)).where(
+            F.col("n_points") > 1
+        ),
+        parts,
+    )
+    _assert_manifests_match_oracle(spark, t)
+    t.compact_parts(spark, target_files=2)
+    _assert_manifests_match_oracle(spark, t)
+
+
+def test_single_pass_manifest_stat_types(spark, tmp_path):
+    """Sort-order stats over bigint, double, string, timestamp and date
+    keep the read-back form (non-numeric as Spark's CAST AS STRING);
+    a map/struct data column hashes like the read-back; an all-null
+    stat column records [None, None]."""
+    rows = [
+        (
+            p, i, i / 7.0, f"u{i % 13:03d}", 1_700_000_000 + 3601 * i + (i % 4) * 0.25,
+            i % 40, {"k": i} if i % 3 else None, (i, f"s{i}"),
+        )
+        for p in (0, 1) for i in range(p * 500, p * 500 + 300)
+    ]
+    df = (
+        spark.createDataFrame(
+            rows,
+            "part long, b long, d double, s string, ts_raw double, dt_raw int, "
+            "m map<string,int>, st struct<x:long,y:string>",
+        )
+        .withColumn("ts", F.col("ts_raw").cast("timestamp"))
+        .withColumn("dt", F.date_add(F.lit("2023-12-30").cast("date"), F.col("dt_raw")))
+        .withColumn("nul", F.lit(None).cast("bigint"))
+        .drop("ts_raw", "dt_raw")
+    )
+    order = ("b", "d", "s", "ts", "dt", "nul")
+    t = IcebergLayoutTable(str(tmp_path / "t"), sort_order=order)
+    t.write_tier(df.repartition(3))
+    _assert_manifests_match_oracle(spark, t)
+    for m in t.lineage():
+        for fr in m["files"]:
+            assert set(fr["stats"]) == set(order)
+            assert fr["stats"]["nul"] == [None, None]
+            assert isinstance(fr["stats"]["ts"][0], str)
+            assert isinstance(fr["stats"]["dt"][0], str)
+
+
+def test_footer_without_bounds_records_unknown(spark, tmp_path):
+    """A file whose footer has no min/max for a stat column (INT96
+    timestamps) records [None, None], and plan_files keeps it under
+    any prune on that column."""
+    df = spark.createDataFrame(
+        [(1, i, float(i)) for i in range(50)], "part long, k long, t double"
+    ).withColumn("ts", F.col("t").cast("timestamp"))
+    t = IcebergLayoutTable(str(tmp_path / "t"), sort_order=("k", "ts"))
+    key = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        t.write_tier(df)
+    finally:
+        spark.conf.set(key, prev)
+    (m,) = t.lineage()
+    (fr,) = m["files"]
+    assert fr["stats"]["ts"] == [None, None]
+    assert fr["stats"]["k"] == [0, 49]
+    assert m["value_hash"] == _readback_manifest_oracle(spark, t, "1", m["version"])["value_hash"]
+    far = ("2999-01-01 00:00:00", "2999-12-31 00:00:00")
+    assert t.plan_files(prune={"ts": far})["files"]
+    assert not t.plan_files(prune={"k": (100, 200)})["files"]
+
+
+def test_overwrite_parts_runs_no_job_after_write(spark, tmp_path, monkeypatch):
+    """The manifest is built from the write job's observation and the
+    parquet footers: once the data write returns, overwrite_parts runs
+    no further Spark job."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    pages = generate_pages(spark, 800, seed=4)
+    tier = with_part(finalize(partials_from_pages(pages, 3600)))
+    t = IcebergLayoutTable(str(tmp_path / "t"))
+    t.write_tier(tier)
+    parts = sorted(t.part_versions())[:2]
+    delta = tier.where(F.col("part").cast("string").isin(parts))
+    sc = spark.sparkContext
+    group = "overwrite_parts_jobs"
+    after_write: list[set] = []
+    orig = DataFrameWriter.parquet
+
+    def parquet(self, *a, **kw):
+        out = orig(self, *a, **kw)
+        after_write.append(set(sc.statusTracker().getJobIdsForGroup(group)))
+        return out
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    sc.setJobGroup(group, "single-pass write")
+    try:
+        t.overwrite_parts(delta, parts)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(after_write) == 1 and after_write[0]
+    assert jobs == after_write[0], sorted(jobs - after_write[0])
+    assert sum(m["rows"] for m in t.lineage() if m["part"] in parts) == delta.count()

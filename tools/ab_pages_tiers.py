@@ -34,7 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from lambdo_spark.session import get_spark
+from lambdo_spark.session import get_spark, host_resources
 from lambdo_spark.rollup.tiers import (
     TIER_SECONDS, downsample, finalize, gap_fill, partials_from_pages,
 )
@@ -108,7 +108,7 @@ def variant_c(pages):
 
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 4
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, _ = host_resources()
     spark = get_spark(
         app_name="ab_pages_tiers",
         master=f"local[{cpus}]",

@@ -32,7 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from lambdo_spark.session import get_spark
+from lambdo_spark.session import get_spark, host_resources
 from lambdo_spark.functions.cluster import dedup_clusters
 from lambdo_spark.sources.documents import generate_documents
 
@@ -60,7 +60,7 @@ def _rest_totals(ui_port: int = 4040) -> dict:
 
 
 def main() -> None:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, _ = host_resources()
     spark = get_spark(
         app_name="bench_clusters_scale",
         master=f"local[{cpus}]",

@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import numpy as np
 import pandas as pd
 
-from lambdo_spark.session import get_spark
+from lambdo_spark.session import get_spark, host_resources
 
 N = int(os.environ.get("BENCH_MEDIA_BLOBS", "100000"))
 
@@ -217,7 +217,7 @@ EXPECTED = {
 
 
 def main() -> None:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, _ = host_resources()
     spark = get_spark(app_name="bench_media_scale", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     # warm the python workers so the first timed kernel isn't paying fork cost

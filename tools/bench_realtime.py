@@ -50,7 +50,7 @@ from lambdo_spark.rollup.realtime import (
     read_realtime_tier,
 )
 from lambdo_spark.rollup.tiers import finalize, partials_from_pages
-from lambdo_spark.session import get_spark
+from lambdo_spark.session import get_spark, host_resources
 from lambdo_spark.sources.pages import generate_pages
 
 
@@ -90,7 +90,7 @@ def fetch_bytes(
 def main() -> None:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, _ = host_resources()
     spark = get_spark(
         app_name="bench_realtime",
         master=f"local[{cpus}]",

@@ -42,7 +42,7 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
-from lambdo_spark.session import get_spark
+from lambdo_spark.session import get_spark, host_resources
 from lambdo_spark.rollup.salting import with_salt
 
 N_ROWS = int(os.environ.get("BENCH_SKEW_ROWS", "20000000"))
@@ -97,7 +97,7 @@ def _salted_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, _ = host_resources()
     spark = get_spark(
         app_name="bench_salted_skew", master=f"local[{cpus}]",
         extra_conf={"spark.ui.enabled": "true"},  # REST API for task skew

@@ -24,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from lambdo_spark.session import get_spark
+from lambdo_spark.session import get_spark, host_resources
 from lambdo_spark.streaming.detect import streaming_anomaly, streaming_cusum
 from lambdo_spark.streaming.smoothing import streaming_ewma
 
@@ -83,7 +83,7 @@ def _run(spark, schema, src, op_name, build, ckpt_root, sink_path=None):
 
 
 def main() -> None:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, _ = host_resources()
     spark = get_spark(
         app_name="bench_stateful",
         master=f"local[{cpus}]",

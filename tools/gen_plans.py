@@ -99,6 +99,10 @@ What to look for:
   a single `MapInPandas` — the Gorilla/delta-of-delta kernel sees
   whole Arrow batches of many contiguous groups (one Python call per
   ~64k rows, not per group);
+- that Exchange is `REPARTITION_BY_COL` with the session's shuffle
+  partition count, which AQE coalesces to what the data needs (a
+  fixed `REPARTITION_BY_NUM` count would not be coalesced, and each
+  Python task costs ~0.3 s of worker CPU before it sees a row);
 - everything upstream of the kernel is JVM.
 """,
             fmt(compress_tier(t1h, value_col="mean_len")),
