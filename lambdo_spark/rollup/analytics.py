@@ -389,27 +389,34 @@ def corr_pairs(
 
     SCALE GUARD: the intermediate is |series|²·|buckets|/2 rows —
     right for monitoring-scale series counts (hundreds), quadratic
-    ruin at thousands. ``max_series`` (default 1000) counts the
-    distinct series first (one cheap aggregate) and raises rather
-    than silently launching an O(|series|²) shuffle; raise the bound
-    deliberately, or pre-select series (top-k by variance, a
-    metadata filter) before calling.
+    ruin at thousands. ``max_series`` (default 1000) puts a distinct-
+    series count in the plan (a scalar subquery, so building the plan
+    runs no job) and the query raises ``USER_RAISED_EXCEPTION`` before
+    the pair join when it is exceeded, rather than silently running an
+    O(|series|²) shuffle; raise the bound deliberately, or pre-select
+    series (top-k by variance, a metadata filter) before calling.
     """
-    if max_series is not None:
-        n_series = df.select(series_col).distinct().count()
-        if n_series > int(max_series):
-            raise ValueError(
-                f"corr_pairs: {n_series} distinct series exceeds "
-                f"max_series={max_series}; the pair join is "
-                f"O(|series|^2 · |buckets|). Pre-filter the series "
-                f"(e.g. top-k by variance) or pass a higher "
-                f"max_series explicitly."
-            )
     a = df.select(
         F.col(series_col).alias("series_a"),
         F.col(bucket_col).alias("_b"),
         F.col(value_col).alias("_va"),
     )
+    if max_series is not None:
+        n_series = df.select(F.count_distinct(series_col)).scalar()
+        a = a.where(
+            F.when(
+                n_series > F.lit(int(max_series)),
+                F.raise_error(F.concat(
+                    F.lit("corr_pairs: "), n_series.cast("string"),
+                    F.lit(
+                        f" distinct series exceeds max_series={max_series}; "
+                        "the pair join is O(|series|^2 · |buckets|). Pre-filter "
+                        "the series (e.g. top-k by variance) or pass a higher "
+                        "max_series explicitly."
+                    ),
+                )),
+            ).otherwise(F.lit(True))
+        )
     b = df.select(
         F.col(series_col).alias("series_b"),
         F.col(bucket_col).alias("_b"),

@@ -7,9 +7,27 @@ cluster:
 
 - AQE on (runtime shuffle coalescing + skew-join splitting),
 - Arrow on (all our Python kernels are pandas/Arrow-vectorized),
-- shuffle partitions sized to the parallelism at hand (AQE coalesces
-  down; at 100 TB you would raise the floor, not lower it),
 - maxPartitionBytes left at 128m so scans split into memory-safe tasks.
+
+Partition policy (n = the master's core count):
+
+- batch shuffles start at ``max(2n, 8)`` partitions
+  (``spark.sql.adaptive.coalescePartitions.initialPartitionNum``) and
+  AQE coalesces them down to what the data needs; at 100 TB you would
+  raise that floor, not lower it;
+- ``spark.sql.shuffle.partitions`` is n. Only plans that run without
+  AQE read it, i.e. streaming queries: a NEW checkpoint records it as
+  its state-partition count, so each micro-batch of a stateful twin
+  runs one wave of n Python tasks and state-store commits instead of
+  two. An existing checkpoint keeps the count its offset log recorded;
+- an explicit ``shuffle_partitions=`` sets both values.
+
+Executor Python workers start with ``_worker_site`` on their
+PYTHONPATH (merged in front of any ``spark.executorEnv.PYTHONPATH``
+the caller passes); its ``sitecustomize`` removes pyspark's per-task
+zip-import re-read on Python < 3.12 (see that module). On a cluster
+whose executors do not share the driver's filesystem the entry does
+not exist there and is ignored.
 """
 
 from __future__ import annotations
@@ -56,6 +74,32 @@ def host_resources() -> tuple[int, str]:
     return (int(cpus) if cpus else len(os.sched_getaffinity(0))), mem
 
 
+WORKER_SITE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker_site")
+
+
+def session_conf(
+    cpus: int,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The partition and worker-path settings ``get_spark`` adds for a
+    master with ``cpus`` cores (policy in the module docstring);
+    ``extra_conf`` wins except for PYTHONPATH, which is merged."""
+    extra = dict(extra_conf or {})
+    if shuffle_partitions is None:
+        state, batch = cpus, max(2 * cpus, 8)
+    else:
+        state = batch = shuffle_partitions
+    path_key = "spark.executorEnv.PYTHONPATH"
+    conf = {
+        "spark.sql.shuffle.partitions": str(state),
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(batch),
+        path_key: os.pathsep.join(p for p in (WORKER_SITE, extra.pop(path_key, "")) if p),
+    }
+    conf.update(extra)
+    return conf
+
+
 def get_spark(
     app_name: str = "lambdo_spark",
     master: str | None = None,
@@ -64,17 +108,14 @@ def get_spark(
 ) -> SparkSession:
     cpus, driver_mem = host_resources()
     master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        try:
-            n = int(master.split("[")[1].rstrip("]*")) if "[" in master else cpus
-        except ValueError:
-            n = cpus
-        shuffle_partitions = max(2 * n, 8)
+    try:
+        n = int(master.split("[")[1].rstrip("]*")) if "[" in master else cpus
+    except ValueError:
+        n = cpus
 
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -96,7 +137,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in session_conf(n, shuffle_partitions, extra_conf).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.addPyFile(package_zip())

@@ -13,6 +13,12 @@ With integer values/target/slack the arithmetic is exact end-to-end
 (the state carries longs); alerts are immediate: each row's scores
 emit in the same micro-batch that folded it.
 
+Values cross the Arrow boundary as a null-free column plus a null
+flag (``_value_null``): Arrow hands a bigint column that holds a null
+to pandas as float64, which rounds longs beyond 2^53, so the twins
+would silently lose precision on exactly the values they promise to
+keep exact.
+
 NULL values mirror the batch twins: a null row is emitted but never
 folds into state (batch ``F.sum``/``F.avg``/``F.count`` skip nulls).
 Its CUSUM scores are the running scores as of the previous fold —
@@ -29,11 +35,10 @@ store and re-seeds as a cold start on its next arrival (recursion and
 
 from __future__ import annotations
 
-import math
-
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -73,6 +78,16 @@ CUSUM_STATE = StructType(
 )
 
 
+NULL_FLAG = "_value_null"
+
+
+def _exact_value(value_col: str) -> dict[str, Column]:
+    """The value with nulls replaced by 0, and its null flag: both
+    reach pandas without a float64 round trip."""
+    v = F.col(value_col)
+    return {value_col: F.coalesce(v, F.lit(0)), NULL_FLAG: v.isNull()}
+
+
 def _make_detector(target: int, slack: int, ts_col: str, value_col: str,
                    ttl_ms: int | None):
     t, s = int(target), int(slack)
@@ -91,18 +106,19 @@ def _make_detector(target: int, slack: int, ts_col: str, value_col: str,
         ts = (
             pdf[ts_col].astype("datetime64[ns]").astype("int64") // 10**9
         ).to_numpy()
-        vals = pdf[value_col].astype("float64").to_numpy()
-        order = pd.DataFrame({"t": ts, "v": vals}).sort_values(
-            ["t", "v"], kind="mergesort"
-        )
+        order = pd.DataFrame(
+            {"t": ts, "null": pdf[NULL_FLAG].to_numpy(), "v": pdf[value_col].to_numpy()}
+        ).sort_values(["t", "null", "v"], kind="mergesort")
         if state.exists:
             p_sum, p_min, q_sum, q_max, last, n = state.get
         else:
             p_sum, p_min, q_sum, q_max, last, n = 0, 0, 0, 0, None, 0
         out = {c: [] for c in ("key", "ts_s", "value", "cusum_pos",
                                "cusum_neg", "late")}
-        for tt, v in zip(order["t"].to_numpy(), order["v"].to_numpy()):
-            if math.isnan(v):
+        for tt, null, v in zip(
+            order["t"].to_numpy(), order["null"].to_numpy(), order["v"].to_numpy()
+        ):
+            if null:
                 iv = None
             else:
                 iv = int(v)
@@ -128,10 +144,11 @@ def _make_detector(target: int, slack: int, ts_col: str, value_col: str,
         )
         if ttl_ms is not None:
             state.setTimeoutDuration(ttl_ms)
-        res = pd.DataFrame(out)
+        # Int64 straight from the Python ints: a DataFrame built from a
+        # list holding None would go through float64 first
         for c in ("value", "cusum_pos", "cusum_neg"):
-            res[c] = pd.array(res[c], dtype="Int64")
-        yield res
+            out[c] = pd.array(out[c], dtype="Int64")
+        yield pd.DataFrame(out)
 
     return fn
 
@@ -173,8 +190,8 @@ def _make_seasonal(lookback: int, min_prior: int, threshold: float,
         pdf = pd.concat(frames, ignore_index=True)
         if len(pdf) == 0:
             return
-        order = pdf[[bucket_col, value_col]].sort_values(
-            [bucket_col, value_col], kind="mergesort"
+        order = pdf[[bucket_col, NULL_FLAG, value_col]].sort_values(
+            [bucket_col, NULL_FLAG, value_col], kind="mergesort"
         )
         if state.exists:
             bufb, bufv = [list(x) for x in state.get]
@@ -183,12 +200,12 @@ def _make_seasonal(lookback: int, min_prior: int, threshold: float,
         newest = bufb[-1] if bufb else None
         out = {c: [] for c in ("key", "bucket_s", "value", "baseline_mean",
                                "n_prior", "zscore", "is_anomaly", "late")}
-        for b, v in zip(
+        for b, is_null, v in zip(
             order[bucket_col].astype("int64").to_numpy(),
-            order[value_col].astype("float64").to_numpy(),
+            order[NULL_FLAG].to_numpy(),
+            order[value_col].to_numpy(),
         ):
             b = int(b)
-            is_null = math.isnan(v)
             prior = [x for bb, x in zip(bufb, bufv) if bb < b][-lookback:]
             n = len(prior)
             if n >= min_prior:
@@ -223,9 +240,8 @@ def _make_seasonal(lookback: int, min_prior: int, threshold: float,
         state.update((bufb, bufv))
         if ttl_ms is not None:
             state.setTimeoutDuration(ttl_ms)
-        res = pd.DataFrame(out)
-        res["value"] = pd.array(res["value"], dtype="Int64")
-        yield res
+        out["value"] = pd.array(out["value"], dtype="Int64")
+        yield pd.DataFrame(out)
 
     return fn
 
@@ -252,8 +268,6 @@ def streaming_anomaly(
     ``late``; its baseline uses whatever older same-phase points the
     buffer still holds (the batch op re-reads history a stream cannot).
     """
-    from pyspark.sql import functions as F
-
     ttl_ms = None if state_ttl_s is None else int(state_ttl_s) * 1000
     if ttl_ms is not None and ttl_ms <= 0:
         raise ValueError(f"state_ttl_s must be positive, got {state_ttl_s}")
@@ -266,7 +280,7 @@ def streaming_anomaly(
         ).alias("_gk"),
         F.col(key_col).cast("string").alias("key"),
         F.col(bucket_col),
-        F.col(value_col),
+        *[c.alias(n) for n, c in _exact_value(value_col).items()],
     )
 
     fn = _make_seasonal(
@@ -314,7 +328,9 @@ def streaming_cusum(
     ttl_ms = None if state_ttl_s is None else int(state_ttl_s) * 1000
     if ttl_ms is not None and ttl_ms <= 0:
         raise ValueError(f"state_ttl_s must be positive, got {state_ttl_s}")
-    renamed = stream.withColumnRenamed(key_col, "key")
+    renamed = stream.withColumnRenamed(key_col, "key").withColumns(
+        _exact_value(value_col)
+    )
     return renamed.groupBy("key").applyInPandasWithState(
         _make_detector(target, slack, ts_col, value_col, ttl_ms),
         outputStructType=CUSUM_SCHEMA,

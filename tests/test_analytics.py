@@ -438,14 +438,33 @@ def test_analytics_over_finalized_tier(spark, tmp_path):
 
 
 def test_corr_pairs_max_series_guard(spark):
-    """More distinct series than max_series must raise loudly (the
-    pair join is quadratic in series count), and the bound must be
-    raisable / disablable deliberately."""
+    """More distinct series than max_series must raise loudly when the
+    query runs (the pair join is quadratic in series count), and the
+    bound must be raisable / disablable deliberately."""
     import pytest as _pytest
+    from pyspark.errors import SparkRuntimeException
 
     rows = [(f"s{i}", b, float(i + b)) for i in range(6) for b in range(3)]
     df = spark.createDataFrame(rows, ["series", "bucket", "v"])
-    with _pytest.raises(ValueError, match="max_series"):
-        corr_pairs(df, "v", "series", "bucket", max_series=5)
+    guarded = corr_pairs(df, "v", "series", "bucket", max_series=5)
+    with _pytest.raises(SparkRuntimeException, match="6 distinct series exceeds max_series=5"):
+        guarded.collect()
     # explicit higher bound (or None) proceeds
-    assert corr_pairs(df, "v", "series", "bucket", max_series=None).count() > 0
+    assert corr_pairs(df, "v", "series", "bucket", max_series=6).count() == 15
+    assert corr_pairs(df, "v", "series", "bucket", max_series=None).count() == 15
+
+
+def test_corr_pairs_guard_builds_without_a_job(spark):
+    """The max_series guard lives in the plan: building the frame runs
+    no Spark job (the count used to run at construction time)."""
+    rows = [(f"s{i}", b, float(i * b)) for i in range(4) for b in range(3)]
+    df = spark.createDataFrame(rows, ["series", "bucket", "v"])
+    sc = spark.sparkContext
+    group = "corr_pairs_build"
+    sc.setJobGroup(group, "plan build only")
+    try:
+        out = corr_pairs(df, "v", "series", "bucket", max_series=3)
+        out.schema  # analysed, not run
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -141,3 +141,56 @@ def test_streaming_anomaly_matches_batch_in_order(spark, tmp_path):
     )
     assert list(got[got["is_anomaly"]]["bucket_s"]) == [8 * 86400 + 3600]
     assert not got["late"].any()
+
+
+def test_streaming_cusum_exact_beyond_2_pow_53(spark, tmp_path):
+    """Seeded longs around 2^53 (with nulls in the same Arrow batches,
+    which Arrow would otherwise hand to pandas as float64): every
+    stream CUSUM value and score equals batch ``cusum`` exactly,
+    across two micro-batches."""
+    import random
+
+    from lambdo_spark.rollup.analytics import cusum
+
+    rng = random.Random(53)
+    target, slack = 2**53 - 500, 3
+    rows = []
+    for k in ("a", "b", "c"):
+        for i in range(40):
+            v = None if rng.random() < 0.15 else 2**53 + rng.randint(-1000, 1000)
+            rows.append((k, _ts(i), v))
+    schema = "k string, ts timestamp, v long"
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    staging = str(tmp_path / "staging")
+    first = [r for r in rows if r[1] < _ts(20)]
+    second = [r for r in rows if r[1] >= _ts(20)]
+    for name, part in (("f1", first), ("f2", second)):
+        f = _land(spark.createDataFrame(part, schema).coalesce(1), staging, src, name)
+    stream = (
+        spark.readStream.schema(spark.read.parquet(f).schema)
+        .option("maxFilesPerTrigger", 1).parquet(src)
+    )
+    q = (
+        streaming_cusum(stream, target, slack, key_col="k", ts_col="ts", value_col="v")
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+    )
+    q.awaitTermination(180)
+    q.stop()
+
+    cols = ["value", "cusum_pos", "cusum_neg"]
+    # collect(), not toPandas(): a nullable long column would come back
+    # as float64 and round the very digits under test
+    got = {
+        (r["key"], r["ts_s"]): tuple(r[c] for c in cols)
+        for r in spark.read.parquet(out).collect()
+    }
+    exp_df = cusum(spark.createDataFrame(rows, schema), "v", ["ts"], ["k"],
+                   target=target, slack=slack)
+    exp = {
+        (r["k"], int(r["ts"].replace(tzinfo=dt.timezone.utc).timestamp())):
+            (r["v"], r["cusum_pos"], r["cusum_neg"])
+        for r in exp_df.collect()
+    }
+    assert any(v is not None and v % 2 for v, _, _ in exp.values())  # not float-exact
+    assert got == exp

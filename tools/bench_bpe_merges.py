@@ -56,10 +56,7 @@ def main() -> None:
                     help="merge count for the recount-mode comparison")
     args = ap.parse_args()
 
-    spark = get_spark(
-        app_name="bench_bpe_merges",
-        extra_conf={"spark.sql.shuffle.partitions": "8"},
-    )
+    spark = get_spark(app_name="bench_bpe_merges", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     from lambdo_spark.functions import bpe

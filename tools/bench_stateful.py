@@ -89,7 +89,6 @@ def main() -> None:
         master=f"local[{cpus}]",
         extra_conf={
             "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
-            "spark.sql.shuffle.partitions": str(int(cpus) * 2),
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
