@@ -26,6 +26,7 @@ from lambdo_spark.rollup.tiers import TIER_SECONDS, downsample, finalize, gap_fi
 from lambdo_spark.rollup.compress_stage import compress_tier
 from lambdo_spark.sources.pages import generate_pages
 from lambdo_spark.rollup.tiers import partials_from_pages
+from tools import load1
 
 PAGES_ROWS = int(os.environ.get("BENCH_PAGES_ROWS", "2000000"))
 # best-of-N per query. 2 catches JVM/codegen warmup; on this co-tenant
@@ -36,14 +37,6 @@ PAGES_ROWS = int(os.environ.get("BENCH_PAGES_ROWS", "2000000"))
 BENCH_REPS = int(os.environ.get("BENCH_REPS", "2"))
 BENCH_MAX_REPS = int(os.environ.get("BENCH_MAX_REPS", "4"))
 BENCH_LOAD_GATE = float(os.environ.get("BENCH_LOAD_GATE", "3.0"))
-
-
-def _load1() -> float:
-    try:
-        with open("/proc/loadavg") as f:
-            return float(f.read().split()[0])
-    except OSError:
-        return 0.0
 
 
 def run(df) -> int:
@@ -105,7 +98,7 @@ def main() -> None:
         best, n = None, 0
         rep = 0
         while rep < BENCH_REPS or (
-            rep < BENCH_MAX_REPS and _load1() > BENCH_LOAD_GATE
+            rep < BENCH_MAX_REPS and load1() > BENCH_LOAD_GATE
         ):
             t0 = time.time()
             n = thunk()

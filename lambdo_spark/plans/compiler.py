@@ -4,8 +4,15 @@ The successor of lambdo's Workflow/Table/Column/Topology machinery
 (/root/reference/lambdo/Workflow.py:27-46, Table.py:17-22,
 Column.py:17-24, Topology.py:18-30), re-imagined:
 
-- a *table definition* compiles to one DataFrame (lazy, immutable) —
-  population ops T1–T7 from ``operators.table_ops``;
+- a *table definition* compiles to one DataFrame (lazy, immutable)
+  through the op table ``_OPS`` — lambdo's own design, JSON definitions
+  resolved to functions. Each entry names the op's callable as a
+  ``module:attr`` ref (resolved when the table builds), the JSON keys it
+  accepts and the keys naming its input tables, and optionally a stream
+  twin. Values reach the callable by keyword, so every default is the
+  callable's own; the table dependencies derive from the entries, and an
+  unknown op or key is refused when the Workflow is constructed. A new
+  op is one ``_OPS`` entry plus its row in docs/workflow_spec.md;
 - *column definitions* compile to withColumn/join stages — C1–C6 from
   ``operators.column_ops``;
 - ``extensions`` desugar compiler-side into N concrete columns
@@ -18,22 +25,13 @@ Column.py:17-24, Topology.py:18-30), re-imagined:
   apply them last in the logical plan and let Catalyst push them down
   (identical semantics — predicates are plain boolean columns).
 
-Spec format (one dict)::
-
-    {"tables": [
-      {"id": T, "operation": "source|data|extend|project|product|join|
-                              aggregate|map|sql",
-       ...population args...,
-       "order_by": [cols], "partition_by": [cols],   # window defaults
-       "columns": [ {"id": C, "operation": "calculate|roll|shift|all|
-                     link|compose|aggregate", ...}, ... ],
-       "row_filter": {...}, "column_filter": [...] | {"exclude": [...]}
-      }, ...]}
+The spec format is documented in docs/workflow_spec.md.
 """
 
 from __future__ import annotations
 
 import copy
+import inspect
 import json
 import re
 from typing import Any
@@ -219,46 +217,228 @@ def expand_extensions(col_def: dict) -> list[dict]:
     return out
 
 
+# ------------------------------------------------------------ op table
+# The machinery behind ``_OPS``, the table itself (end of this module).
+
+
+def _one(cols):
+    if len(cols) != 1:
+        raise ValueError(f"the stream twin takes one key column, got {cols!r}")
+    return cols[0]
+
+
+_COERCE = {
+    "int": int, "float": float, "bool": bool, "str": str, "tuple": tuple,
+    "first": lambda cols: cols[0],
+    "one": _one,
+    "quotas": lambda q: {stratum: int(n) for stratum, n in q.items()},
+}
+
+# accepted on every table: the common table keys, plus the reference's
+# T3 function-table keys (SURVEY.md §2.1)
+_COMMON_KEYS = frozenset({
+    "id", "operation", "columns", "order_by", "partition_by", "row_filter",
+    "column_filter", "after", "function", "inputs", "model", "outputs",
+    "attributes",
+})
+
+
+def _parse_keys(spec: str) -> tuple[tuple[str, str, str | None], ...]:
+    """``"key[=param][:coerce] ..."`` → ``((key, param, coerce), ...)``."""
+    out = []
+    for tok in spec.split():
+        tok, _, conv = tok.partition(":")
+        key, _, param = tok.partition("=")
+        out.append((key, param or key, conv or None))
+    return tuple(out)
+
+
+def _where(tdef: dict) -> str:
+    return f"table {tdef['id']!r} ({tdef.get('operation', 'source')})"
+
+
+class _Op:
+    """One table operation.
+
+    - ``fn``: the callable, a ``module:attr`` ref under ``lambdo_spark``
+      resolved when the table builds (importing the compiler loads no op
+      module), or a function ``fn(wf, tdef, *frames, **values)`` for an op
+      with logic of its own.
+    - ``keys``: the JSON keys it takes, as ``key[=param][:coerce]``;
+      ``param`` defaults to the key, ``coerce`` names a ``_COERCE`` entry.
+      When two keys name one parameter, the first one set wins.
+    - ``tables``: the keys naming input tables, same syntax. ``source``
+      is passed first and positionally, ``=a,b`` unpacks a two-table
+      list, and a dotted key (``realtime.raw``) only orders the build.
+    - ``preset``: arguments passed unless a key sets them.
+    - ``stream``: the twin built when the source table is a stream; its
+      ``fixed`` maps a batch key it has no parameter for to the one value
+      it computes with — any other value is refused.
+    """
+
+    def __init__(
+        self, fn, keys="", tables="source", preset=None, stream=None, fixed=None
+    ):
+        self.fn = fn
+        self.keys = _parse_keys(keys)
+        self.tables = _parse_keys(tables)
+        self.preset = preset or {}
+        self.stream = stream
+        self.fixed = fixed or {}
+        self.accepted = _COMMON_KEYS.union(
+            (k.partition(".")[0] for k, _, _ in self.keys + self.tables),
+            stream.accepted if stream else (),
+        )
+
+    def build(self, wf, tdef: dict) -> DataFrame:
+        args, kw = [], {}
+        for key, param, _ in self.tables:
+            if "." in key or key not in tdef:
+                if key == "source":
+                    raise ValueError(f"{_where(tdef)} needs 'source'")
+                continue
+            names = tdef[key]
+            frames = (
+                wf.tables[names] if isinstance(names, str)
+                else [wf.tables[n] for n in names]
+            )
+            if key == "source":
+                args.append(frames)
+            elif "," in param:
+                kw.update(zip(param.split(","), frames, strict=True))
+            else:
+                kw[param] = frames
+        if self.stream is not None and args[0].isStreaming:
+            self._check_twin(tdef)
+            return self.stream.call(wf, tdef, *args, **kw)
+        return self.call(wf, tdef, *args, **kw)
+
+    def call(self, wf, tdef: dict, *args, **kw) -> DataFrame:
+        """Call with ``kw`` plus the values of this op's keys set in
+        ``tdef`` and the presets no key set."""
+        for key, param, conv in self.keys:
+            if key in tdef and param not in kw:
+                kw[param] = self._value(tdef, key, conv)
+        for param, v in self.preset.items():
+            kw.setdefault(param, v)
+        fn = self._callable()
+        if fn is self.fn:
+            args = (wf, tdef, *args)
+        for i, p in enumerate(inspect.signature(fn).parameters.values()):
+            if (
+                p.default is p.empty and i >= len(args) and p.name not in kw
+                and p.kind in (p.POSITIONAL_OR_KEYWORD, p.KEYWORD_ONLY)
+            ):
+                raise ValueError(f"{_where(tdef)} needs {self._key_of(p.name)!r}")
+        return fn(*args, **kw)
+
+    def _callable(self):
+        if callable(self.fn):
+            return self.fn
+        return resolve_callable("lambdo_spark." + self.fn)
+
+    def _value(self, tdef: dict, key: str, conv: str | None):
+        v = tdef[key]
+        if conv is None:
+            return v
+        try:
+            return _COERCE[conv](v)
+        except (TypeError, ValueError) as e:
+            raise ValueError(f"{_where(tdef)}: {key!r} = {v!r}: {e}") from None
+
+    def _key_of(self, param: str) -> str:
+        return next(
+            (k for k, p, _ in self.keys + self.tables if param in p.split(",")),
+            param,
+        )
+
+    def _check_twin(self, tdef: dict) -> None:
+        """The same spec must mean the same on a stream: a key the twin
+        has no parameter for may only hold the value the twin computes
+        with, and the batch op's required keys stay required (a key the
+        twin reads into the same parameter stands in, e.g. ``ts`` for
+        ``order``)."""
+        twin = {k: p for k, p, _ in self.stream.keys}
+        fixed = self.stream.fixed
+        batch = inspect.signature(self._callable()).parameters
+        for key, param, conv in self.keys:
+            if key not in twin:
+                if key in tdef and (
+                    key not in fixed or self._value(tdef, key, conv) != fixed[key]
+                ):
+                    twin_does = (
+                        f"computes with {fixed[key]!r}" if key in fixed
+                        else "has no such parameter"
+                    )
+                    raise ValueError(
+                        f"{_where(tdef)}: {key!r} = {tdef[key]!r} is not supported "
+                        f"on a streaming source; its twin {twin_does}"
+                    )
+            elif (
+                key not in tdef and param in batch
+                and batch[param].default is inspect.Parameter.empty
+                and not any(k in tdef for k, p in twin.items() if p == twin[key])
+            ):
+                raise ValueError(f"{_where(tdef)} needs {key!r}")
+
+
+def _on(v) -> bool:
+    return v is not None and v is not False
+
+
+class _Chain(_Op):
+    """The shape the mergeable time-series aggregates share: partials,
+    merged to the coarser ``merge_to`` tier when it is set, then a last
+    step run when ``final_if`` (a key and its default) is on. ``direct``
+    is a one-pass form built instead when nothing is merged."""
+
+    def __init__(
+        self, partials, merge, final, final_if=("finalize", True), direct=None
+    ):
+        super().__init__(self._build)
+        self.steps = (partials, merge, final, final_if, direct)
+        self.accepted = self.accepted.union(
+            {"merge_to", final_if[0]},
+            *(s.accepted for s in (partials, merge, final, direct) if s),
+        )
+
+    def _build(self, wf, tdef: dict, src: DataFrame) -> DataFrame:
+        partials, merge, final, (key, default), direct = self.steps
+        if direct is not None and not _on(tdef.get("merge_to")):
+            return direct.call(wf, tdef, src)
+        df = partials.call(wf, tdef, src)
+        if _on(tdef.get("merge_to")):
+            df = merge.call(wf, tdef, df)
+        if _on(tdef.get(key, default)):
+            df = final.call(wf, tdef, df)
+        return df
+
+
+# column ops that need a row order (order_by, or reference_compat's
+# physical row order)
+_ORDERED_COLUMN_OPS = frozenset({"roll", "shift", "delta", "rate", "locf"})
+
+# column ops that read another table, and the key naming it
+_COLUMN_TABLE_KEYS = {
+    "link": "linked_table", "compose": "linked_table", "aggregate": "fact_table",
+}
+
+
 def _table_deps(tdef: dict) -> set[str]:
     deps: set[str] = set()
-    op = tdef.get("operation", "source")
-    if op in (
-        "extend", "project", "map", "sink", "grouping_sets", "sessions",
-        "order_stat", "distinct", "distinct_sketch", "heavy_hitters",
-        "m4", "time_weighted", "counter", "value_hist", "lttb",
-        "window_aggregate", "dedup", "stream_sink",
-        "text_analysis", "dedup_exact", "dedup_minhash", "quality_filter",
-        "keep_latest", "dedup_clusters", "sample_stratified",
-        "remove_boilerplate", "shuffle", "components", "dedup_spans",
-        "audio_features", "video_features", "pack",
-        "ewma", "anomaly", "cusum", "corr_pairs", "rolling_corr", "bm25",
-        "tfidf", "semdedup", "bpe", "holt_winters",
-    ):
-        deps.add(tdef["source"])
-    elif op == "decontaminate":
-        deps.update((tdef["source"], tdef["bench"]))
-    elif op == "lm_score":
-        deps.add(tdef["source"])
-        if "ref" in tdef:
-            deps.add(tdef["ref"])
-    elif op in ("join", "product", "union", "intersect", "except", "sql"):
-        deps.update(tdef.get("inputs", []))
-    if op == "source" and isinstance(tdef.get("realtime"), dict):
-        deps.add(tdef["realtime"]["raw"])
-    elif op == "aggregate":
-        deps.add(tdef["source"])
-    elif op == "asof_join":
-        deps.add(tdef["left"])
-        deps.add(tdef["right"])
+    op = _OPS.get(tdef.get("operation", "source"))
+    for key, _, _ in op.tables if op else ():
+        head, _, sub = key.partition(".")
+        names = tdef.get(head)
+        if sub:
+            names = names.get(sub) if isinstance(names, dict) else None
+        if names is not None:
+            deps.update([names] if isinstance(names, str) else names)
     for cdef in tdef.get("columns", []):
         for c in expand_extensions(cdef):
-            cop = c.get("operation")
-            if cop == "link":
-                deps.add(c["linked_table"])
-            elif cop == "compose":
-                deps.add(c["linked_table"])
-            elif cop == "aggregate":
-                deps.add(c["fact_table"])
+            key = _COLUMN_TABLE_KEYS.get(c.get("operation"))
+            if key:
+                deps.add(c[key])
     # explicit ordering for side-effect chains the data flow can't
     # express (a tier `source` reading a tier `sink`'s root goes
     # through the filesystem, not through a table reference)
@@ -293,6 +473,21 @@ def stratify(spec: dict) -> list[list[str]]:
             done.add(tid)
             remaining.pop(tid)
     return layers
+
+
+def _lookup(tdef: dict) -> _Op:
+    """The table's ``_OPS`` entry; refuses an unknown op or key."""
+    name = tdef.get("operation", "source")
+    op = _OPS.get(name)
+    if op is None:
+        raise ValueError(f"table {tdef['id']!r}: unknown table operation '{name}'")
+    unknown = set(tdef) - op.accepted
+    if unknown:
+        raise ValueError(
+            f"{_where(tdef)}: unknown key(s) {sorted(unknown)}; "
+            f"{name!r} accepts {sorted(op.accepted)}"
+        )
+    return op
 
 
 class Workflow:
@@ -332,6 +527,7 @@ class Workflow:
         self._order = [t["id"] for t in spec["tables"]]
         self._tdefs = {t["id"]: t for t in spec["tables"]}
         self._normalize_operations()
+        self._ops = {tid: _lookup(td) for tid, td in self._tdefs.items()}
         self.layers = stratify(self.spec)
 
     def _normalize_operations(self) -> None:
@@ -476,42 +672,6 @@ class Workflow:
             q.awaitTermination(timeout)
             q.stop()
 
-    # -------------------------------------------------------- streaming
-    def _stream_source(self, tdef: dict) -> DataFrame:
-        """``"stream": true`` source → readStream over the same path.
-        File streams need an explicit schema: take ``"schema"`` (DDL
-        string) or infer it from the existing batch files. An optional
-        ``"watermark": {"ts": col, "delay": "10 minutes"}`` arms
-        event-time finality for downstream window_aggregate / dedup /
-        append sinks."""
-        fmt = tdef.get("format", "parquet")
-        schema = tdef.get("schema")
-        if schema is None:
-            # infer with the SAME reader recipe the batch `source` op
-            # uses (options + csv header/inferSchema defaults) — a bare
-            # read would see a csv header row as data and hand the
-            # stream an all-string _c0/_c1 schema
-            from lambdo_spark.operators.table_ops import source as _src
-
-            schema = _src(
-                self.spark, fmt, tdef["path"], tdef.get("options")
-            ).schema
-        reader = self.spark.readStream.schema(schema).format(fmt)
-        for k, v in (tdef.get("options") or {}).items():
-            reader = reader.option(k, v)
-        df = reader.load(tdef["path"])
-        wm = tdef.get("watermark")
-        if wm:
-            from pyspark.sql import functions as F
-
-            # withWatermark requires TIMESTAMP; parquet files written
-            # without a zone scan as TIMESTAMP_NTZ. The session zone is
-            # pinned to UTC (session.py), so the cast is epoch-exact.
-            if dict(df.dtypes).get(wm["ts"]) == "timestamp_ntz":
-                df = df.withColumn(wm["ts"], F.col(wm["ts"]).cast("timestamp"))
-            df = df.withWatermark(wm["ts"], wm["delay"])
-        return df
-
     # --------------------------------------------------- kernel resolution
     def _eval_lambda(self, src: str):
         """Inline lambda strings (reference resolve.py:24-31,
@@ -578,7 +738,7 @@ class Workflow:
 
     # ------------------------------------------------------------ build
     def _build_table(self, tdef: dict) -> DataFrame:
-        df = self._populate(tdef)
+        df = self._ops[tdef["id"]].build(self, tdef)
         order_by = tdef.get("order_by")
         partition_by = tdef.get("partition_by")
         drop_after: list[str] = []
@@ -609,733 +769,6 @@ class Workflow:
                 df = T.column_filter(df, keep=cf)
         return df
 
-    def _populate(self, tdef: dict) -> DataFrame:
-        op = tdef.get("operation", "source")
-        tid = tdef["id"]
-        if op == "data":  # T1 noop — programmatic injection
-            if tid not in self.tables:
-                raise ValueError(f"table '{tid}' declared as data but not bound")
-            return self.tables[tid]
-        if op == "source":
-            if tdef.get("stream"):
-                return self._stream_source(tdef)
-            if tdef.get("format") == "tier":
-                # snapshot-isolated read of an Iceberg-layout table,
-                # with optional manifest-stat file pruning. Two forms:
-                # `tier: "1h"` reads a retention-pipeline root (path =
-                # --out of retention/refresh; supports read-time
-                # gap-fill); no/empty `tier` reads a table root
-                # directly (e.g. one written by a tier sink).
-                prune = tdef.get("prune")
-                if prune:
-                    prune = {
-                        c: tuple(v) if isinstance(v, list) else v
-                        for c, v in prune.items()
-                    }
-                tier = tdef.get("tier", "1h")
-                if tier:
-                    rt = tdef.get("realtime")
-                    if isinstance(rt, dict):
-                        # real-time continuous aggregate: finalized
-                        # tier ∪ fresh rollup of the raw table's
-                        # un-materialized tail (rollup/realtime.py);
-                        # `raw` names another workflow table
-                        from lambdo_spark.rollup.realtime import read_realtime_tier
-
-                        return read_realtime_tier(
-                            self.spark, tdef["path"], tier,
-                            self.tables[rt["raw"]],
-                            url_col=rt.get("key", "url"),
-                            ts_col=rt.get("ts", "warc_ts"),
-                            text_col=rt.get("text", "text"),
-                            lang_col=rt.get("lang", "lang"),
-                            gapfill=bool(tdef.get("gapfill", False)),
-                            prune=prune,
-                            cascade=bool(rt.get("cascade", False)),
-                        )
-                    from lambdo_spark.rollup.incremental import read_finalized_tier
-
-                    return read_finalized_tier(
-                        self.spark, tdef["path"], tier,
-                        gapfill=bool(tdef.get("gapfill", False)), prune=prune,
-                    )
-                from lambdo_spark.sources.iceberg_layout import IcebergLayoutTable
-
-                # direct table-root read with the full lakehouse knob
-                # set: `snapshot` / `as_of` time travel, `branch` refs,
-                # and `changes: [from, to]` incremental (CDC) reads
-                tbl = IcebergLayoutTable(
-                    tdef["path"], branch=tdef.get("branch", "main")
-                )
-                if tdef.get("changes") is not None:
-                    lo, hi = tdef["changes"]
-                    return tbl.read_changes(
-                        self.spark, int(lo),
-                        None if hi is None else int(hi),
-                    )
-                return tbl.read_tier(
-                    self.spark,
-                    snapshot_id=(
-                        None if tdef.get("snapshot") is None
-                        else int(tdef["snapshot"])
-                    ),
-                    as_of=(
-                        None if tdef.get("as_of") is None
-                        else float(tdef["as_of"])
-                    ),
-                    prune=prune,
-                )
-            df = T.source(
-                self.spark, tdef.get("format", "parquet"), tdef["path"],
-                tdef.get("options"),
-            )
-            if tdef.get("limit") is not None:  # pandas:read_csv nrows
-                df = df.limit(int(tdef["limit"]))
-            return df
-        if op == "function_source":
-            # reference T3 with 0 inputs (Table.py:499: func(**model)
-            # returns a fully populated frame) — the general compat
-            # fallback for driver-side source callables; well-known
-            # idioms (pandas:read_csv) are rewritten to distributed
-            # scans in _normalize_operations instead
-            fn = self._batch_callable(tdef["function"])
-            pdf = fn(**(tdef.get("model") or {}))
-            return self.spark.createDataFrame(pdf)
-        if op == "sql":
-            # Spark-SQL escape hatch (beyond the reference — it has no
-            # SQL surface at all, SURVEY §3): each input table
-            # registers as a temp view named by its workflow id, and
-            # the query plans through Catalyst like any compiled stage
-            # (pushdown / pruning / AQE / broadcast all apply).
-            for dep in tdef.get("inputs", []):
-                self.tables[dep].createOrReplaceTempView(dep)
-            return self.spark.sql(tdef["query"])
-        if op == "extend":
-            return T.extend(self.tables[tdef["source"]])
-        if op == "project":
-            return T.project(
-                self.tables[tdef["source"]], tdef["inputs"], tdef.get("outputs")
-            )
-        if op == "product":
-            return T.product([self.tables[t] for t in tdef["inputs"]])
-        if op == "join":
-            return T.join_tables(
-                [self.tables[t] for t in tdef["inputs"]],
-                tdef.get("keys", []),
-                tdef.get("suffixes"),
-                tdef.get("left_suffix"),
-            )
-        if op == "aggregate":
-            return T.aggregate_table(
-                self.tables[tdef["source"]], tdef["keys"], tdef["aggregations"]
-            )
-        if op == "map":
-            # T3 one-input function table (reference Table.py:461-506):
-            # a named vectorized batch kernel over mapInPandas
-            return T.map_table(
-                self.tables[tdef["source"]],
-                self._batch_callable(tdef["function"]),
-                tdef["schema"],
-            )
-        if op == "union":
-            return T.union_tables(
-                [self.tables[t] for t in tdef["inputs"]],
-                distinct=tdef.get("distinct", False),
-            )
-        if op == "intersect":
-            a, b = tdef["inputs"]
-            return T.intersect_tables(self.tables[a], self.tables[b])
-        if op == "except":
-            a, b = tdef["inputs"]
-            return T.except_tables(self.tables[a], self.tables[b])
-        if op == "asof_join":
-            return T.asof_join(
-                self.tables[tdef["left"]],
-                self.tables[tdef["right"]],
-                tdef["on"],
-                tdef["left_ts"],
-                tdef["right_ts"],
-                tdef["values"],
-                tdef.get("direction", "backward"),
-                tolerance=tdef.get("tolerance"),
-            )
-        if op == "grouping_sets":
-            return T.aggregate_grouping_sets(
-                self.tables[tdef["source"]], tdef["keys"], tdef["aggregations"],
-                mode=tdef.get("mode", "rollup"),
-                gid_col=tdef.get("gid_col", "grouping_id"),
-            )
-        if op == "sessions":
-            from lambdo_spark.rollup.timeseries import session_table
-
-            return session_table(
-                self.tables[tdef["source"]], tdef["keys"], tdef["ts"],
-                int(tdef["gap_seconds"]), tdef.get("tiebreak", ()),
-            )
-        if op == "order_stat":
-            from lambdo_spark.rollup.timeseries import order_stat
-
-            return order_stat(
-                self.tables[tdef["source"]], tdef["keys"], tdef["value"],
-                float(tdef["q"]), tdef.get("tiebreak", ()),
-                tdef.get("output", "order_stat"), tdef.get("exact", True),
-            )
-        if op == "m4":
-            from lambdo_spark.rollup.timeseries import m4_downsample
-
-            return m4_downsample(
-                self.tables[tdef["source"]], tdef["value"], tdef["ts"],
-                int(tdef["tier_seconds"]), tdef["keys"],
-                bucket_col=tdef.get("bucket_col", "bucket_s"),
-            )
-        if op == "lttb":
-            from lambdo_spark.rollup.timeseries import lttb_downsample
-
-            return lttb_downsample(
-                self.tables[tdef["source"]], tdef["value"], tdef["ts"],
-                int(tdef["tier_seconds"]), tdef["keys"],
-                bucket_col=tdef.get("bucket_col", "bucket_s"),
-            )
-        if op == "ewma":
-            src = self.tables[tdef["source"]]
-            if src.isStreaming:
-                # stateful twin: same recursion, incremental state
-                # (streaming/smoothing.py); requires single key + ts
-                from lambdo_spark.streaming.smoothing import streaming_ewma
-
-                (key,) = tdef["keys"]
-                # "ts" alone is a valid streaming spec — only reach
-                # for order[0] when ts is absent (a dict.get default
-                # would evaluate tdef["order"] eagerly and KeyError).
-                return streaming_ewma(
-                    src, float(tdef["alpha"]), key_col=key,
-                    ts_col=(tdef["ts"] if "ts" in tdef
-                            else tdef["order"][0]),
-                    value_col=tdef["value"],
-                    state_ttl_s=tdef.get("state_ttl_s"),
-                )
-            from lambdo_spark.rollup.analytics import ewma
-
-            return ewma(
-                src, tdef["value"], tdef["order"],
-                tdef["keys"], float(tdef["alpha"]),
-                output=tdef.get("output", "ewma"),
-                adjust=bool(tdef.get("adjust", True)),
-            )
-        if op == "anomaly":
-            src = self.tables[tdef["source"]]
-            if src.isStreaming:
-                from lambdo_spark.streaming.detect import streaming_anomaly
-
-                (key,) = tdef["keys"]
-                return streaming_anomaly(
-                    src,
-                    period_s=int(tdef.get("period_seconds", 86400)),
-                    lookback=int(tdef.get("lookback", 7)),
-                    min_prior=int(tdef.get("min_prior", 3)),
-                    threshold=float(tdef.get("threshold", 3.0)),
-                    key_col=key, bucket_col=tdef["bucket"],
-                    value_col=tdef["value"],
-                    state_ttl_s=tdef.get("state_ttl_s"),
-                )
-            from lambdo_spark.rollup.analytics import anomaly_seasonal
-
-            return anomaly_seasonal(
-                src, tdef["value"], tdef["bucket"],
-                tdef["keys"],
-                period_s=int(tdef.get("period_seconds", 86400)),
-                lookback=int(tdef.get("lookback", 7)),
-                min_prior=int(tdef.get("min_prior", 3)),
-                threshold=float(tdef.get("threshold", 3.0)),
-            )
-        if op == "cusum":
-            src = self.tables[tdef["source"]]
-            if src.isStreaming:
-                from lambdo_spark.streaming.detect import streaming_cusum
-
-                (key,) = tdef["keys"]
-                return streaming_cusum(
-                    src, int(tdef.get("target", 0)),
-                    slack=int(tdef.get("slack", 0)), key_col=key,
-                    ts_col=(tdef["ts"] if "ts" in tdef
-                            else tdef["order"][0]),
-                    value_col=tdef["value"],
-                    state_ttl_s=tdef.get("state_ttl_s"),
-                )
-            from lambdo_spark.rollup.analytics import cusum
-
-            return cusum(
-                src, tdef["value"], tdef["order"],
-                tdef["keys"], target=tdef.get("target"),
-                slack=tdef.get("slack", 0),
-            )
-        if op == "corr_pairs":
-            from lambdo_spark.rollup.analytics import corr_pairs
-
-            return corr_pairs(
-                self.tables[tdef["source"]], tdef["value"], tdef["series"],
-                tdef["bucket"], min_buckets=int(tdef.get("min_buckets", 2)),
-                max_series=tdef.get("max_series", 1000),
-            )
-        if op == "holt_winters":
-            from lambdo_spark.rollup.analytics import holt_winters
-
-            return holt_winters(
-                self.tables[tdef["source"]], tdef["value"], tdef["order"],
-                tdef["keys"], int(tdef["season_length"]),
-                alpha=float(tdef.get("alpha", 0.3)),
-                beta=float(tdef.get("beta", 0.1)),
-                gamma=float(tdef.get("gamma", 0.2)),
-                steps=int(tdef.get("steps", 1)),
-                mode=tdef.get("mode", "forecast"),
-            )
-        if op == "rolling_corr":
-            from lambdo_spark.rollup.analytics import rolling_corr
-
-            return rolling_corr(
-                self.tables[tdef["source"]], tdef["x"], tdef["y"],
-                tdef["order"], tdef["keys"], int(tdef["window"]),
-                min_periods=(
-                    int(tdef["min_periods"]) if "min_periods" in tdef else None
-                ),
-                output=tdef.get("output", "rolling_corr"),
-            )
-        if op == "bm25":
-            from lambdo_spark.functions.ir import bm25_scores, bm25_topk
-
-            src = self.tables[tdef["source"]]
-            kw = dict(
-                id_col=tdef.get("id_col", "doc_id"),
-                text_col=tdef.get("text", "text"),
-                k1=float(tdef.get("k1", 1.2)),
-                b=float(tdef.get("b", 0.75)),
-            )
-            if "k" in tdef:
-                return bm25_topk(src, tdef["query"], k=int(tdef["k"]), **kw)
-            return bm25_scores(src, tdef["query"], **kw)
-        if op == "tfidf":
-            from lambdo_spark.functions.ir import tfidf_scores
-
-            return tfidf_scores(
-                self.tables[tdef["source"]], tdef["vocab"],
-                id_col=tdef.get("id_col", "doc_id"),
-                text_col=tdef.get("text", "text"),
-            )
-        if op == "bpe":
-            from lambdo_spark.functions.bpe import bpe_encode, train_bpe
-
-            src = self.tables[tdef["source"]]
-            if "merges" in tdef:
-                merges = [tuple(m) for m in tdef["merges"]]
-            else:
-                merges = train_bpe(
-                    src, int(tdef["num_merges"]),
-                    text_col=tdef.get("text", "text"),
-                    min_count=int(tdef.get("min_count", 1)),
-                )
-            return bpe_encode(
-                src, merges,
-                id_col=tdef.get("id_col", "doc_id"),
-                text_col=tdef.get("text", "text"),
-            )
-        if op == "semdedup":
-            from lambdo_spark.functions.semdedup import semdedup
-
-            return semdedup(
-                self.tables[tdef["source"]], tau=float(tdef["tau"]),
-                k=int(tdef.get("k", 16)), iters=int(tdef.get("iters", 0)),
-                id_col=tdef.get("id_col", "vec_id"),
-                vec_col=tdef.get("vector", "embedding"),
-            )
-        if op == "time_weighted":
-            from lambdo_spark.rollup.timeseries import (
-                time_weighted,
-                time_weighted_downsample,
-                time_weighted_finalize,
-                time_weighted_partials,
-            )
-
-            bcol = tdef.get("bucket_col", "bucket_s")
-            fine = int(tdef["tier_seconds"])
-            if not tdef.get("merge_to"):
-                return time_weighted(
-                    self.tables[tdef["source"]], tdef["value"], tdef["ts"],
-                    fine, tdef["keys"], bucket_col=bcol,
-                    tiebreak=tdef.get("tiebreak", ()),
-                )
-            coarse = int(tdef["merge_to"])
-            tw = time_weighted_downsample(
-                time_weighted_partials(
-                    self.tables[tdef["source"]], tdef["value"], tdef["ts"],
-                    fine, tdef["keys"], bucket_col=bcol,
-                ),
-                fine, coarse, tdef["keys"], bucket_col=bcol,
-            )
-            if tdef.get("finalize", True):
-                tw = time_weighted_finalize(tw, coarse, bucket_col=bcol)
-            return tw
-        if op == "counter":
-            from lambdo_spark.rollup.timeseries import (
-                counter_downsample,
-                counter_finalize,
-                counter_partials,
-            )
-
-            cp = counter_partials(
-                self.tables[tdef["source"]], tdef["value"], tdef["ts"],
-                int(tdef["tier_seconds"]), tdef["keys"],
-                bucket_col=tdef.get("bucket_col", "bucket_s"),
-            )
-            if tdef.get("merge_to"):
-                cp = counter_downsample(
-                    cp, int(tdef["merge_to"]), tdef["keys"],
-                    bucket_col=tdef.get("bucket_col", "bucket_s"),
-                )
-            if tdef.get("finalize", True):
-                cp = counter_finalize(
-                    cp, output=tdef.get("output", "increase")
-                )
-            return cp
-        if op == "value_hist":
-            from lambdo_spark.rollup.timeseries import (
-                quantile_from_hist,
-                value_hist_downsample,
-                value_hist_partials,
-            )
-
-            vh = value_hist_partials(
-                self.tables[tdef["source"]], tdef["value"], tdef["ts"],
-                int(tdef["tier_seconds"]), tdef["keys"],
-                int(tdef["bin_width"]),
-                bucket_col=tdef.get("bucket_col", "bucket_s"),
-            )
-            if tdef.get("merge_to"):
-                vh = value_hist_downsample(
-                    vh, int(tdef["merge_to"]), tdef["keys"],
-                    bucket_col=tdef.get("bucket_col", "bucket_s"),
-                )
-            if tdef.get("q") is not None:
-                vh = quantile_from_hist(
-                    vh, float(tdef["q"]), tdef["keys"],
-                    bucket_col=tdef.get("bucket_col", "bucket_s"),
-                    output=tdef.get("output", "q_est"),
-                )
-            return vh
-        if op == "distinct":
-            from lambdo_spark.rollup.timeseries import distinct_per_bucket
-
-            return distinct_per_bucket(
-                self.tables[tdef["source"]], tdef["keys"], tdef["item"],
-                tdef.get("output", "n_distinct"), tdef.get("exact", True),
-                tdef.get("rsd", 0.05),
-            )
-        if op == "distinct_sketch":
-            from lambdo_spark.rollup.timeseries import (
-                distinct_sketch_downsample,
-                distinct_sketch_finalize,
-                distinct_sketch_partials,
-            )
-
-            sk = distinct_sketch_partials(
-                self.tables[tdef["source"]], tdef["keys"], tdef["item"],
-                tdef["ts"], int(tdef["tier_seconds"]),
-                lgk=int(tdef.get("lgk", 12)),
-            )
-            if tdef.get("merge_to"):
-                sk = distinct_sketch_downsample(
-                    sk, tdef["keys"], int(tdef["merge_to"])
-                )
-            if tdef.get("finalize", True):
-                sk = distinct_sketch_finalize(
-                    sk, output=tdef.get("output", "n_distinct_est")
-                )
-            return sk
-        if op == "text_analysis":
-            from lambdo_spark.functions.text import analyze_documents
-
-            return analyze_documents(
-                self.tables[tdef["source"]], text_col=tdef.get("text", "text")
-            )
-        if op == "quality_filter":
-            # Gopher/C4 web-text rules (functions/text.py): keep rows
-            # passing the composite boolean, or flag them when
-            # `flag: "<col>"` is given (filter stays pushdown-friendly
-            # — it's one JVM expression over the text column)
-            from pyspark.sql import functions as F
-
-            from lambdo_spark.functions.text import gopher_filter
-
-            src = self.tables[tdef["source"]]
-            keep = gopher_filter(
-                F.col(tdef.get("text", "text")), **(tdef.get("rules") or {})
-            )
-            flag = tdef.get("flag")
-            if flag:
-                return src.withColumn(flag, keep)
-            return src.where(keep)
-        if op == "dedup_exact":
-            from lambdo_spark.functions.dedup import dedup_exact
-
-            return dedup_exact(
-                self.tables[tdef["source"]],
-                id_col=tdef.get("id_col", "doc_id"),
-                text_col=tdef.get("text", "text"),
-                keep_rows=True,  # table op = surviving rows, all columns
-            )
-        if op == "keep_latest":
-            from lambdo_spark.functions.dedup import dedup_keep_latest
-
-            return dedup_keep_latest(
-                self.tables[tdef["source"]],
-                tdef["keys"],
-                tdef["ts"],
-                tdef.get("tiebreak", []),
-                n=int(tdef.get("n", 1)),
-            )
-        if op == "audio_features":
-            from lambdo_spark.functions.multimodal import extract_audio_features
-
-            return extract_audio_features(
-                self.tables[tdef["source"]],
-                id_col=tdef.get("id_col", "doc_id"),
-                audio_col=tdef.get("binary", "audio"),
-            )
-        if op == "video_features":
-            from lambdo_spark.functions.multimodal import extract_video_features
-
-            return extract_video_features(
-                self.tables[tdef["source"]],
-                id_col=tdef.get("id_col", "doc_id"),
-                video_col=tdef.get("binary", "video"),
-            )
-        if op == "dedup_spans":
-            from lambdo_spark.functions.exact_substr import (
-                remove_duplicate_spans,
-            )
-
-            return remove_duplicate_spans(
-                self.tables[tdef["source"]],
-                id_col=tdef.get("id_col", "doc_id"),
-                text_col=tdef.get("text", "text"),
-                span_tokens=int(tdef.get("span_tokens", 8)),
-                min_count=int(tdef.get("min_count", 2)),
-                key=tdef.get("key", "hash128"),
-                cache_grams=bool(tdef.get("cache_grams", True)),
-            )
-        if op == "components":
-            from lambdo_spark.functions.cluster import connected_components
-
-            return connected_components(
-                self.tables[tdef["source"]],
-                src=tdef.get("src", "src"),
-                dst=tdef.get("dst", "dst"),
-                max_iter=int(tdef.get("max_iter", 50)),
-            )
-        if op == "pack":
-            from lambdo_spark.functions.sampling import pack_sequences
-
-            return pack_sequences(
-                self.tables[tdef["source"]],
-                tdef["tokens"],
-                int(tdef["budget"]),
-                tdef["order_by"],
-            )
-        if op == "shuffle":
-            from lambdo_spark.functions.sampling import shuffle_deterministic
-
-            return shuffle_deterministic(
-                self.tables[tdef["source"]],
-                tdef["unique_keys"],
-                seed=str(tdef.get("seed", "42")),
-                out_col=tdef.get("out", "shuffle_rank"),
-            )
-        if op == "decontaminate":
-            from lambdo_spark.functions.contamination import decontaminate
-
-            return decontaminate(
-                self.tables[tdef["source"]],
-                self.tables[tdef["bench"]],
-                id_col=tdef.get("id_col", "doc_id"),
-                text_col=tdef.get("text", "text"),
-                bench_text_col=tdef.get("bench_text"),
-                n=int(tdef.get("n", 8)),
-                min_hits=int(tdef.get("min_hits", 1)),
-                broadcast_bench=bool(tdef.get("broadcast_bench", True)),
-                prefilter=tdef.get("prefilter"),
-            )
-        if op == "lm_score":
-            from lambdo_spark.functions.lm import lm_counts, lm_score
-
-            counts = None
-            if "ref" in tdef:
-                counts = lm_counts(
-                    self.tables[tdef["ref"]],
-                    id_col=tdef.get("id_col", "doc_id"),
-                    text_col=tdef.get("text", "text"),
-                )
-            return lm_score(
-                self.tables[tdef["source"]],
-                id_col=tdef.get("id_col", "doc_id"),
-                text_col=tdef.get("text", "text"),
-                alpha=float(tdef.get("alpha", 0.5)),
-                counts=counts,
-            )
-        if op == "remove_boilerplate":
-            from lambdo_spark.functions.text import remove_boilerplate_lines
-
-            return remove_boilerplate_lines(
-                self.tables[tdef["source"]],
-                id_col=tdef.get("id_col", "doc_id"),
-                text_col=tdef.get("text", "text"),
-                group_cols=tuple(tdef.get("group_by", ["source"])),
-                min_docs=int(tdef.get("min_docs", 5)),
-                sep=tdef.get("sep", "\n"),
-            )
-        if op == "dedup_clusters":
-            from lambdo_spark.functions.cluster import dedup_clusters
-
-            return dedup_clusters(
-                self.tables[tdef["source"]],
-                id_col=tdef.get("id_col", "doc_id"),
-                text_col=tdef.get("text", "text"),
-                threshold=float(tdef.get("threshold", 0.8)),
-                score_col=tdef.get("score"),
-            )
-        if op == "sample_stratified":
-            from lambdo_spark.functions.sampling import sample_stratified
-
-            n_spec = None
-            if "quotas" in tdef:  # {stratum: n} mixing recipe
-                n_spec = {k: int(v) for k, v in tdef["quotas"].items()}
-            elif "n" in tdef:
-                n_spec = int(tdef["n"])
-            return sample_stratified(
-                self.tables[tdef["source"]],
-                tdef["keys"],
-                n_spec,
-                tdef["unique_keys"],
-                seed=str(tdef.get("seed", "42")),
-                salt_buckets=int(tdef.get("salt_buckets", 16)),
-                fraction=(
-                    float(tdef["fraction"]) if "fraction" in tdef else None
-                ),
-            )
-        if op == "dedup_minhash":
-            from lambdo_spark.functions.dedup import dedup_minhash_lsh
-
-            return dedup_minhash_lsh(
-                self.tables[tdef["source"]],
-                id_col=tdef.get("id_col", "doc_id"),
-                text_col=tdef.get("text", "text"),
-                threshold=float(tdef.get("threshold", 0.8)),
-                num_hashes=int(tdef.get("num_hashes", 64)),
-                bands=int(tdef.get("bands", 16)),
-                bucket_cap=int(tdef.get("bucket_cap", 1000)),
-                verify=tdef.get("verify", "token"),
-            )
-        if op == "heavy_hitters":
-            from lambdo_spark.rollup.timeseries import heavy_hitters
-
-            return heavy_hitters(
-                self.tables[tdef["source"]], tdef["keys"], tdef["item"],
-                int(tdef["k"]),
-                salt_buckets=int(tdef.get("salt_buckets", 0)),
-            )
-        if op == "window_aggregate":
-            return T.window_aggregate(
-                self.tables[tdef["source"]], tdef["ts"], tdef["duration"],
-                tdef.get("keys", []), tdef["aggregations"],
-                bucket_col=tdef.get("bucket_col", "bucket_s"),
-                slide=tdef.get("slide"),
-            )
-        if op == "dedup":
-            src = self.tables[tdef["source"]]
-            return T.dedup_rows(
-                src, tdef.get("keys"),
-                within_watermark=tdef.get(
-                    "within_watermark", src.isStreaming
-                ),
-            )
-        if op == "stream_sink":
-            src = self.tables[tdef["source"]]
-            if not src.isStreaming:
-                raise ValueError(
-                    f"stream_sink '{tid}': source '{tdef['source']}' is a "
-                    "batch table — use operation 'sink', or mark the "
-                    "source table with \"stream\": true"
-                )
-            if tdef.get("format") == "upsert":
-                # exactly-once streaming MERGE into an Iceberg-layout
-                # table (streaming/upsert_stream.py): each micro-batch
-                # upserts by `keys`; merge-on-read by default so the
-                # per-batch cost is O(batch), never a base rewrite
-                from lambdo_spark.streaming.upsert_stream import (
-                    streaming_upsert_writer,
-                )
-
-                writer = streaming_upsert_writer(
-                    src, tdef["path"], list(tdef["keys"]), tdef["checkpoint"],
-                    mode=tdef.get("mode", "merge-on-read"),
-                    tag_prefix=tdef.get("tag_prefix", f"upsert:{tid}"),
-                    part_col=tdef.get("part_col", "part"),
-                )
-            else:
-                writer = (
-                    src.writeStream.format(tdef.get("format", "parquet"))
-                    .option("path", tdef["path"])
-                    .option("checkpointLocation", tdef["checkpoint"])
-                    .outputMode(tdef.get("output_mode", "append"))
-                )
-            if tdef.get("interval"):
-                writer = writer.trigger(processingTime=tdef["interval"])
-            else:
-                writer = writer.trigger(availableNow=True)
-            self.streams[tid] = writer.start()
-            return src
-        if op == "sink":
-            # reference parity: a function table doubling as a sink
-            # (pandas:DataFrame.to_csv, examples/example1.json:14-22);
-            # here an eager parquet/csv write, returning the source
-            src = self.tables[tdef["source"]]
-            fmt = tdef.get("format", "parquet")
-            if fmt == "tier":
-                # checkpointed Iceberg-layout write: resumable, MVCC
-                # snapshot, per-partition lineage + file column stats.
-                # `part_col` must exist (use with_part upstream or any
-                # string-able column); re-running the workflow skips
-                # committed partitions.
-                from lambdo_spark.sources.iceberg_layout import IcebergLayoutTable
-
-                IcebergLayoutTable(tdef["path"]).write_tier(
-                    src,
-                    part_col=tdef.get("part_col", "part"),
-                    input_snapshot=tdef.get("input_snapshot", f"workflow:{tdef['source']}"),
-                )
-                return src
-            if fmt == "merge":
-                # batch keyed MERGE (upsert) into an existing
-                # Iceberg-layout table — the batch twin of the
-                # streaming `stream_sink format:"upsert"`; `mode`
-                # picks copy-on-write vs merge-on-read (O(delta),
-                # zero base rewrite)
-                from lambdo_spark.sources.iceberg_layout import IcebergLayoutTable
-
-                IcebergLayoutTable(
-                    tdef["path"], branch=tdef.get("branch", "main")
-                ).merge_rows(
-                    src,
-                    keys=tdef["keys"],
-                    mode=tdef.get("mode", "merge-on-read"),
-                    idempotency_tag=tdef.get("tag"),
-                )
-                return src
-            out = src.coalesce(1) if tdef.get("single_file") else src
-            w = out.write.mode(tdef.get("mode", "overwrite"))
-            if fmt == "csv":
-                w = w.option("header", True)
-            w.format(fmt).save(tdef["path"])
-            return src
-        raise ValueError(f"unknown table operation '{op}'")
 
     def _eval_column(
         self, df: DataFrame, c: dict, t_order: list | None, t_part: list | None
@@ -1381,11 +814,12 @@ class Workflow:
                     op = "calculate"
         if op is None:  # C7 noop — reference existing column
             return df
-        if (
-            self.reference_compat
-            and not (c.get("order_by") or t_order)
-            and op in ("roll", "shift", "delta", "rate", "locf")
-        ):
+        out = c["id"]
+        order_by = c.get("order_by", t_order)
+        partition_by = c.get("partition_by", t_part)
+        if op in _ORDERED_COLUMN_OPS and not order_by:
+            if not self.reference_compat:
+                raise ValueError(f"{op} column '{out}' needs order_by")
             # reference implicit physical row order (README.md:109-121)
             if "__row_order__" not in df.columns:
                 from pyspark.sql import functions as F
@@ -1393,10 +827,7 @@ class Workflow:
                 df = df.withColumn(
                     "__row_order__", F.monotonically_increasing_id()
                 )
-            t_order = ["__row_order__"]
-        out = c["id"]
-        order_by = c.get("order_by", t_order)
-        partition_by = c.get("partition_by", t_part)
+            order_by = ["__row_order__"]
         if op == "calculate":
             model = c.get("model")
             if c.get("train") is not None or (
@@ -1413,8 +844,6 @@ class Workflow:
                 c["inputs"], model,
             )
         if op == "roll":
-            if not order_by:
-                raise ValueError(f"roll column '{out}' needs order_by")
             return C.roll(
                 df, out, self._kernel_ref(c), c["inputs"], int(c["window"]),
                 order_by, partition_by, c.get("model"), c.get("min_periods"),
@@ -1425,8 +854,6 @@ class Workflow:
                 c["ts"], partition_by, c.get("model"),
             )
         if op == "shift":
-            if not order_by:
-                raise ValueError(f"shift column '{out}' needs order_by")
             return C.shift(
                 df, out, c["inputs"][0], int(c.get("periods", 1)),
                 order_by, partition_by,
@@ -1462,14 +889,10 @@ class Workflow:
         if op == "delta":
             from lambdo_spark.rollup.timeseries import delta
 
-            if not order_by:
-                raise ValueError(f"delta column '{out}' needs order_by")
             return delta(df, out, c["inputs"][0], order_by, partition_by or [])
         if op == "rate":
             from lambdo_spark.rollup.timeseries import rate
 
-            if not order_by:
-                raise ValueError(f"rate column '{out}' needs order_by")
             return rate(
                 df, out, c["inputs"][0], c["ts"], order_by, partition_by or [],
                 c.get("counter_reset", False), int(c.get("scale", 1_000_000)),
@@ -1477,8 +900,6 @@ class Workflow:
         if op == "locf":
             from lambdo_spark.rollup.timeseries import locf
 
-            if not order_by:
-                raise ValueError(f"locf column '{out}' needs order_by")
             return locf(df, c["inputs"], order_by, partition_by or [])
         if op == "interpolate":
             from lambdo_spark.rollup.timeseries import interpolate_linear
@@ -1495,3 +916,377 @@ def compile_workflow(
 ) -> dict[str, DataFrame]:
     """One-shot: build every table's DataFrame; returns id → DataFrame."""
     return Workflow(spec, spark, data).execute()
+
+
+# ------------------------------------------------------------ op functions
+# Ops with logic of their own: ``fn(wf, tdef, *frames, **values)``.
+
+
+def _data(wf, tdef: dict) -> DataFrame:
+    """T1 noop — a programmatically bound frame."""
+    if tdef["id"] not in wf.tables:
+        raise ValueError(f"table '{tdef['id']}' declared as data but not bound")
+    return wf.tables[tdef["id"]]
+
+
+def _source(wf, tdef: dict, **kw) -> DataFrame:
+    """T1 scan: files, a stream (``stream: true``), or an Iceberg-layout
+    table (``format: "tier"``)."""
+    if kw.get("stream"):
+        return _stream_source(wf.spark, kw)
+    fmt = kw.get("format", "parquet")
+    if fmt == "tier":
+        return _tier_source(wf, kw)
+    df = T.source(wf.spark, fmt, kw["path"], kw.get("options"))
+    if kw.get("limit") is not None:  # pandas:read_csv nrows
+        df = df.limit(int(kw["limit"]))
+    return df
+
+
+def _stream_source(spark: SparkSession, kw: dict) -> DataFrame:
+    """``"stream": true`` → readStream over the same path, with the DDL
+    ``schema`` or one inferred from the existing files; ``watermark``
+    ``{"ts": col, "delay": "10 minutes"}`` arms event-time finality."""
+    fmt = kw.get("format", "parquet")
+    schema = kw.get("schema")
+    if schema is None:
+        # the batch reader recipe (options, csv header/inferSchema): a
+        # bare read would take a csv header row for data
+        schema = T.source(spark, fmt, kw["path"], kw.get("options")).schema
+    reader = spark.readStream.schema(schema).format(fmt)
+    for k, v in (kw.get("options") or {}).items():
+        reader = reader.option(k, v)
+    df = reader.load(kw["path"])
+    wm = kw.get("watermark")
+    if wm:
+        from pyspark.sql import functions as F
+
+        # withWatermark requires TIMESTAMP; parquet files written
+        # without a zone scan as TIMESTAMP_NTZ. The session zone is
+        # pinned to UTC (session.py), so the cast is epoch-exact.
+        if dict(df.dtypes).get(wm["ts"]) == "timestamp_ntz":
+            df = df.withColumn(wm["ts"], F.col(wm["ts"]).cast("timestamp"))
+        df = df.withWatermark(wm["ts"], wm["delay"])
+    return df
+
+
+def _tier_source(wf, kw: dict) -> DataFrame:
+    """Snapshot-isolated Iceberg-layout read with manifest-stat pruning:
+    ``tier`` (default "1h") of a retention-pipeline root, or with an
+    empty ``tier`` a table root directly (e.g. a tier sink's)."""
+    prune = kw.get("prune")
+    if prune:
+        prune = {c: tuple(v) if isinstance(v, list) else v for c, v in prune.items()}
+    tier = kw.get("tier", "1h")
+    if tier:
+        rt = kw.get("realtime")
+        if isinstance(rt, dict):
+            # finalized tier ∪ a fresh rollup of the `raw` table's
+            # un-materialized tail (rollup/realtime.py)
+            from lambdo_spark.rollup.realtime import read_realtime_tier
+
+            names = {
+                "key": "url_col", "ts": "ts_col", "text": "text_col", "lang": "lang_col"
+            }
+            return read_realtime_tier(
+                wf.spark, kw["path"], tier, wf.tables[rt["raw"]],
+                gapfill=bool(kw.get("gapfill", False)),
+                prune=prune,
+                cascade=bool(rt.get("cascade", False)),
+                **{p: rt[k] for k, p in names.items() if k in rt},
+            )
+        from lambdo_spark.rollup.incremental import read_finalized_tier
+
+        return read_finalized_tier(
+            wf.spark, kw["path"], tier,
+            gapfill=bool(kw.get("gapfill", False)), prune=prune,
+        )
+    from lambdo_spark.sources.iceberg_layout import IcebergLayoutTable
+
+    # time travel (`snapshot` / `as_of`), `branch` refs, CDC `changes`
+    tbl = IcebergLayoutTable(kw["path"], branch=kw.get("branch", "main"))
+    if kw.get("changes") is not None:
+        lo, hi = kw["changes"]
+        return tbl.read_changes(wf.spark, int(lo), None if hi is None else int(hi))
+    snapshot, as_of = kw.get("snapshot"), kw.get("as_of")
+    return tbl.read_tier(
+        wf.spark,
+        snapshot_id=None if snapshot is None else int(snapshot),
+        as_of=None if as_of is None else float(as_of),
+        prune=prune,
+    )
+
+
+def _function_source(wf, tdef: dict) -> DataFrame:
+    """Reference T3 with 0 inputs (Table.py:499): ``func(**model)``
+    returns a pandas frame, converted to a DataFrame."""
+    pdf = wf._batch_callable(tdef["function"])(**(tdef.get("model") or {}))
+    return wf.spark.createDataFrame(pdf)
+
+
+def _sql(wf, tdef: dict, inputs=(), *, query: str) -> DataFrame:
+    """Spark-SQL escape hatch (SURVEY §3): inputs register as temp views
+    named by their workflow ids."""
+    for name, df in zip(tdef.get("inputs", []), inputs):
+        df.createOrReplaceTempView(name)
+    return wf.spark.sql(query)
+
+
+def _map(wf, tdef: dict, src: DataFrame, *, function: str, schema) -> DataFrame:
+    """T3 one-input function table (reference Table.py:461-506): a
+    named vectorized batch kernel over mapInPandas."""
+    return T.map_table(src, wf._batch_callable(function), schema)
+
+
+def _dedup(wf, tdef: dict, src: DataFrame, **kw) -> DataFrame:
+    # on a stream, first-seen within the watermark keeps state bounded
+    kw.setdefault("within_watermark", src.isStreaming)
+    return T.dedup_rows(src, **kw)
+
+
+def _quality_filter(wf, tdef, src, text="text", rules=None, flag=None) -> DataFrame:
+    """Gopher/C4 web-text rules (functions/text.py): keep rows passing
+    the composite boolean, or flag them when ``flag: "<col>"`` is given
+    (one JVM expression over the text column, pushdown-friendly)."""
+    from pyspark.sql import functions as F
+
+    from lambdo_spark.functions.text import gopher_filter
+
+    keep = gopher_filter(F.col(text), **(rules or {}))
+    return src.withColumn(flag, keep) if flag else src.where(keep)
+
+
+def _bm25(wf, tdef: dict, docs: DataFrame, **kw) -> DataFrame:
+    """Scores every doc, or the top ``k`` (TakeOrdered) when ``k`` is set."""
+    from lambdo_spark.functions import ir
+
+    return (ir.bm25_topk if "k" in kw else ir.bm25_scores)(docs, **kw)
+
+
+def _bpe(wf, tdef: dict, docs: DataFrame, **kw) -> DataFrame:
+    """Encodes with fixed ``merges``, or with rules trained on the
+    corpus first."""
+    from lambdo_spark.functions.bpe import bpe_encode, train_bpe
+
+    train = {k: kw.pop(k) for k in ("num_merges", "min_count") if k in kw}
+    if "merges" in kw:
+        kw["merges"] = [tuple(m) for m in kw["merges"]]
+    else:
+        if "text_col" in kw:
+            train["text_col"] = kw["text_col"]
+        kw["merges"] = train_bpe(docs, **train)
+    return bpe_encode(docs, **kw)
+
+
+def _lm_score(wf, tdef: dict, docs: DataFrame, ref=None, **kw) -> DataFrame:
+    """Scores against the counts of the ``ref`` corpus, or of the
+    corpus itself."""
+    from lambdo_spark.functions.lm import lm_counts, lm_score
+
+    if ref is not None:
+        cols = {k: v for k, v in kw.items() if k in ("id_col", "text_col")}
+        kw["counts"] = lm_counts(ref, **cols)
+    return lm_score(docs, **kw)
+
+
+def _sink(wf, tdef: dict, src: DataFrame, **kw) -> DataFrame:
+    """Eager write that returns the source — reference parity for a
+    function table doubling as a sink (pandas:DataFrame.to_csv,
+    examples/example1.json:14-22)."""
+    fmt = kw.get("format", "parquet")
+    if fmt in ("tier", "merge"):
+        from lambdo_spark.sources.iceberg_layout import IcebergLayoutTable
+    if fmt == "tier":
+        # checkpointed Iceberg-layout write: a re-run skips committed
+        # partitions; `part_col` must exist
+        IcebergLayoutTable(kw["path"]).write_tier(
+            src,
+            part_col=kw.get("part_col", "part"),
+            input_snapshot=kw.get("input_snapshot", f"workflow:{tdef['source']}"),
+        )
+    elif fmt == "merge":
+        # keyed MERGE (upsert), the batch twin of stream_sink "upsert"
+        IcebergLayoutTable(kw["path"], branch=kw.get("branch", "main")).merge_rows(
+            src,
+            keys=kw["keys"],
+            mode=kw.get("mode", "merge-on-read"),
+            idempotency_tag=kw.get("tag"),
+        )
+    else:
+        out = src.coalesce(1) if kw.get("single_file") else src
+        w = out.write.mode(kw.get("mode", "overwrite"))
+        if fmt == "csv":
+            w = w.option("header", True)
+        w.format(fmt).save(kw["path"])
+    return src
+
+
+def _stream_sink(wf, tdef: dict, src: DataFrame, **kw) -> DataFrame:
+    """``writeStream`` sink; the started query lands in
+    ``Workflow.streams``."""
+    tid = tdef["id"]
+    if not src.isStreaming:
+        raise ValueError(
+            f"stream_sink '{tid}': source '{tdef['source']}' is a "
+            "batch table — use operation 'sink', or mark the "
+            "source table with \"stream\": true"
+        )
+    if kw.get("format") == "upsert":
+        # exactly-once MERGE of each micro-batch by `keys`; merge-on-read
+        # keeps the per-batch cost O(batch)
+        from lambdo_spark.streaming.upsert_stream import streaming_upsert_writer
+
+        writer = streaming_upsert_writer(
+            src, kw["path"], list(kw["keys"]), kw["checkpoint"],
+            mode=kw.get("mode", "merge-on-read"),
+            tag_prefix=kw.get("tag_prefix", f"upsert:{tid}"),
+            part_col=kw.get("part_col", "part"),
+        )
+    else:
+        writer = (
+            src.writeStream.format(kw.get("format", "parquet"))
+            .option("path", kw["path"])
+            .option("checkpointLocation", kw["checkpoint"])
+            .outputMode(kw.get("output_mode", "append"))
+        )
+    if kw.get("interval"):
+        writer = writer.trigger(processingTime=kw["interval"])
+    else:
+        writer = writer.trigger(availableNow=True)
+    wf.streams[tid] = writer.start()
+    return src
+
+
+# ------------------------------------------------------------ the table
+_TO = "operators.table_ops:"
+_TS = "rollup.timeseries:"
+_AN = "rollup.analytics:"
+_SERIES = "value=value_col ts=ts_col tier_seconds=width_s:int keys=partition_by"
+_MERGE = "merge_to=width_s:int keys=partition_by bucket_col"
+_DOCS = "id_col text=text_col"
+_TWIN = "keys=key_col:one value=value_col state_ttl_s"
+_TWIN_TS = _TWIN + " ts=ts_col order=ts_col:first"
+
+_OPS: dict[str, _Op] = {
+    # T1 / T3: inputs and outputs
+    "data": _Op(_data, tables=""),
+    "source": _Op(_source, "format path options limit schema stream watermark tier "
+                  "gapfill prune realtime snapshot as_of branch changes",
+                  tables="realtime.raw"),
+    "function_source": _Op(_function_source, tables=""),
+    "map": _Op(_map, "function schema"),
+    "sql": _Op(_sql, "query", tables="inputs"),
+    "sink": _Op(_sink, "path format mode single_file part_col input_snapshot keys "
+                "tag branch"),
+    "stream_sink": _Op(_stream_sink, "path checkpoint format output_mode interval "
+                       "keys mode tag_prefix part_col"),
+    # T2 / T4-T7 and set operations
+    "extend": _Op(_TO + "extend"),
+    "project": _Op(_TO + "project", "inputs outputs"),
+    "product": _Op(_TO + "product", tables="inputs=dfs"),
+    "join": _Op(_TO + "join_tables", "keys suffixes left_suffix", tables="inputs=dfs",
+                preset={"keys": []}),
+    "aggregate": _Op(_TO + "aggregate_table", "keys aggregations"),
+    "union": _Op(_TO + "union_tables", "distinct", tables="inputs=dfs"),
+    "intersect": _Op(_TO + "intersect_tables", tables="inputs=a,b"),
+    "except": _Op(_TO + "except_tables", tables="inputs=a,b"),
+    "asof_join": _Op(_TO + "asof_join", "on=on_key left_ts right_ts values=value_cols "
+                     "direction tolerance", tables="left right"),
+    "grouping_sets": _Op(_TO + "aggregate_grouping_sets",
+                         "keys aggregations mode gid_col"),
+    "window_aggregate": _Op(_TO + "window_aggregate",
+                            "ts duration keys aggregations bucket_col slide",
+                            preset={"keys": []}),
+    "dedup": _Op(_dedup, "keys within_watermark"),
+    # time series; the mergeable aggregates chain partials → merge_to → finalize
+    "sessions": _Op(_TS + "session_table",
+                    "keys=key ts=ts_col gap_seconds:int tiebreak=order_tiebreak"),
+    "order_stat": _Op(_TS + "order_stat",
+                      "keys value=value_col q:float tiebreak output exact"),
+    "m4": _Op(_TS + "m4_downsample", _SERIES + " bucket_col"),
+    "lttb": _Op(_TS + "lttb_downsample", _SERIES + " bucket_col"),
+    "time_weighted": _Chain(
+        _Op(_TS + "time_weighted_partials", _SERIES + " bucket_col"),
+        _Op(_TS + "time_weighted_downsample", "tier_seconds=fine_width_s:int "
+            "merge_to=coarse_width_s:int keys=partition_by bucket_col"),
+        _Op(_TS + "time_weighted_finalize", "merge_to=width_s:int bucket_col"),
+        direct=_Op(_TS + "time_weighted", _SERIES + " bucket_col tiebreak")),
+    "counter": _Chain(_Op(_TS + "counter_partials", _SERIES + " bucket_col"),
+                      _Op(_TS + "counter_downsample", _MERGE),
+                      _Op(_TS + "counter_finalize", "output")),
+    "value_hist": _Chain(
+        _Op(_TS + "value_hist_partials", _SERIES + " bin_width:int bucket_col"),
+        _Op(_TS + "value_hist_downsample", _MERGE),
+        _Op(_TS + "quantile_from_hist", "q:float keys=partition_by bucket_col output"),
+        final_if=("q", None)),
+    "distinct": _Op(_TS + "distinct_per_bucket", "keys item=item_col output exact rsd"),
+    "distinct_sketch": _Chain(
+        _Op(_TS + "distinct_sketch_partials",
+            "keys item=item_col ts=ts_col tier_seconds:int lgk:int"),
+        _Op(_TS + "distinct_sketch_downsample", "keys merge_to=tier_seconds:int"),
+        _Op(_TS + "distinct_sketch_finalize", "output")),
+    "heavy_hitters": _Op(_TS + "heavy_hitters",
+                         "keys item=item_col k:int salt_buckets:int"),
+    # series analytics, with their stream twins
+    "ewma": _Op(_AN + "ewma", "value=value_col order=order_cols keys alpha:float "
+                "output adjust:bool",
+                stream=_Op("streaming.smoothing:streaming_ewma",
+                           "alpha:float " + _TWIN_TS,
+                           fixed={"output": "ewma", "adjust": True})),
+    "anomaly": _Op(_AN + "anomaly_seasonal", "value=value_col bucket=bucket_col keys "
+                   "period_seconds=period_s:int lookback:int min_prior:int "
+                   "threshold:float",
+                   stream=_Op("streaming.detect:streaming_anomaly", "bucket=bucket_col "
+                              "period_seconds=period_s:int lookback:int "
+                              "min_prior:int threshold:float " + _TWIN)),
+    "cusum": _Op(_AN + "cusum", "value=value_col order=order_cols keys target slack",
+                 stream=_Op("streaming.detect:streaming_cusum",
+                            "target:int slack:int " + _TWIN_TS)),
+    "corr_pairs": _Op(_AN + "corr_pairs", "value=value_col series=series_col "
+                      "bucket=bucket_col min_buckets:int max_series"),
+    "holt_winters": _Op(_AN + "holt_winters", "value=value_col order=order_cols keys "
+                        "season_length:int alpha:float beta:float gamma:float "
+                        "steps:int mode"),
+    "rolling_corr": _Op(_AN + "rolling_corr", "x=x_col y=y_col order=order_cols keys "
+                        "window:int min_periods:int output"),
+    # corpus preparation and retrieval
+    "quality_filter": _Op(_quality_filter, "text rules flag"),
+    "text_analysis": _Op("functions.text:analyze_documents", "text=text_col"),
+    # a table op keeps the surviving rows with all their columns
+    "dedup_exact": _Op("functions.dedup:dedup_exact", _DOCS,
+                       preset={"keep_rows": True}),
+    "keep_latest": _Op("functions.dedup:dedup_keep_latest",
+                       "keys=key_cols ts=ts_col tiebreak=tiebreak_cols n:int",
+                       preset={"tiebreak_cols": []}),
+    "dedup_minhash": _Op("functions.dedup:dedup_minhash_lsh", _DOCS +
+                         " threshold:float num_hashes:int bands:int bucket_cap:int "
+                         "verify"),
+    "dedup_clusters": _Op("functions.cluster:dedup_clusters",
+                          _DOCS + " threshold:float score=score_col"),
+    "sample_stratified": _Op("functions.sampling:sample_stratified",
+                             "keys=group_cols quotas=n_per_group:quotas "
+                             "n=n_per_group:int fraction:float unique_keys=key_cols "
+                             "seed:str salt_buckets:int", preset={"n_per_group": None}),
+    "remove_boilerplate": _Op("functions.text:remove_boilerplate_lines",
+                              _DOCS + " group_by=group_cols:tuple min_docs:int sep"),
+    "decontaminate": _Op("functions.contamination:decontaminate", _DOCS +
+                         " bench_text=bench_text_col n:int min_hits:int "
+                         "broadcast_bench:bool prefilter", tables="source bench"),
+    "lm_score": _Op(_lm_score, _DOCS + " alpha:float", tables="source ref"),
+    "shuffle": _Op("functions.sampling:shuffle_deterministic",
+                   "unique_keys=key_cols seed:str out=out_col"),
+    "components": _Op("functions.cluster:connected_components", "src dst max_iter:int"),
+    "dedup_spans": _Op("functions.exact_substr:remove_duplicate_spans", _DOCS +
+                       " span_tokens:int min_count:int key cache_grams:bool"),
+    "audio_features": _Op("functions.multimodal:extract_audio_features",
+                          "id_col binary=audio_col"),
+    "video_features": _Op("functions.multimodal:extract_video_features",
+                          "id_col binary=video_col"),
+    "pack": _Op("functions.sampling:pack_sequences",
+                "tokens=token_col budget:int order_by=order_cols"),
+    "bm25": _Op(_bm25, "query=query_terms k:int " + _DOCS + " k1:float b:float"),
+    "tfidf": _Op("functions.ir:tfidf_scores", "vocab " + _DOCS),
+    "semdedup": _Op("functions.semdedup:semdedup",
+                    "tau:float k:int iters:int id_col vector=vec_col"),
+    "bpe": _Op(_bpe, "num_merges:int merges " + _DOCS + " min_count:int"),
+}

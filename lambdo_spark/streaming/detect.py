@@ -317,7 +317,7 @@ def streaming_anomaly(
 
 def streaming_cusum(
     stream: DataFrame,
-    target: int,
+    target: int = 0,
     slack: int = 0,
     key_col: str = "key",
     ts_col: str = "ts",

@@ -1,6 +1,8 @@
 """Workflow compiler: spec → stages parity with the reference's
 Workflow/Topology behavior (SURVEY.md §3)."""
 
+import inspect
+
 import pytest
 
 from lambdo_spark.plans.compiler import (
@@ -943,3 +945,1007 @@ def test_workflow_holt_winters_op(spark):
     got = sorted((r["h"], r["hw_forecast"]) for r in out.collect())
     exp = sorted((r["h"], r["hw_forecast"]) for r in direct.collect())
     assert got == exp and len(got) == 4
+
+
+# ------------------------------------------------------------ plumbing pin
+# Every table op, compiled with its library callables replaced by
+# recorders: the recorded calls pin which argument each JSON key
+# reaches, with which value and type (compared by repr, so an int/float
+# drift shows), and every default a spec leaves out.
+
+_PIN_TARGETS = {
+    "lambdo_spark.operators.table_ops": (
+        "source extend project product join_tables aggregate_table "
+        "map_table union_tables intersect_tables except_tables asof_join "
+        "aggregate_grouping_sets window_aggregate dedup_rows"
+    ),
+    "lambdo_spark.rollup.timeseries": (
+        "session_table order_stat m4_downsample lttb_downsample "
+        "time_weighted time_weighted_partials time_weighted_downsample "
+        "time_weighted_finalize counter_partials counter_downsample "
+        "counter_finalize value_hist_partials value_hist_downsample "
+        "quantile_from_hist distinct_per_bucket distinct_sketch_partials "
+        "distinct_sketch_downsample distinct_sketch_finalize heavy_hitters"
+    ),
+    "lambdo_spark.rollup.analytics": (
+        "ewma anomaly_seasonal cusum corr_pairs holt_winters rolling_corr"
+    ),
+    "lambdo_spark.streaming.smoothing": "streaming_ewma",
+    "lambdo_spark.streaming.detect": "streaming_anomaly streaming_cusum",
+    "lambdo_spark.functions.ir": "bm25_scores bm25_topk tfidf_scores",
+    "lambdo_spark.functions.bpe": "train_bpe bpe_encode",
+    "lambdo_spark.functions.semdedup": "semdedup",
+    "lambdo_spark.functions.text": (
+        "analyze_documents gopher_filter remove_boilerplate_lines"
+    ),
+    "lambdo_spark.functions.dedup": (
+        "dedup_exact dedup_keep_latest dedup_minhash_lsh"
+    ),
+    "lambdo_spark.functions.multimodal": (
+        "extract_audio_features extract_video_features"
+    ),
+    "lambdo_spark.functions.exact_substr": "remove_duplicate_spans",
+    "lambdo_spark.functions.cluster": "connected_components dedup_clusters",
+    "lambdo_spark.functions.sampling": (
+        "pack_sequences shuffle_deterministic sample_stratified"
+    ),
+    "lambdo_spark.functions.contamination": "decontaminate",
+    "lambdo_spark.functions.lm": "lm_counts lm_score",
+    "lambdo_spark.rollup.realtime": "read_realtime_tier",
+    "lambdo_spark.rollup.incremental": "read_finalized_tier",
+    "lambdo_spark.streaming.upsert_stream": "streaming_upsert_writer",
+    "lambdo_spark.sources.iceberg_layout": "IcebergLayoutTable",
+}
+
+
+class _Probe:
+    """Stands in for a SparkSession or DataFrame: every method call on
+    it (and on what that call returns) is appended to the log."""
+
+    def __init__(self, log, name, streaming=False):
+        self._log, self._name = log, name
+        self.isStreaming = streaming
+        self.columns, self.dtypes = [], []
+
+    def __getattr__(self, attr):
+        if attr.startswith("__"):
+            raise AttributeError(attr)
+        return _Probe(self._log, f"{self._name}.{attr}", self.isStreaming)
+
+    def __call__(self, *args, **kwargs):
+        parts = [repr(a) for a in args]
+        parts += [f"{k}={v!r}" for k, v in kwargs.items()]
+        self._log.append(f"{self._name}({', '.join(parts)})")
+        return _Probe(self._log, f"{self._name}()", self.isStreaming)
+
+    def __repr__(self):
+        return self._name
+
+
+class _Recorder:
+    """A library callable's stand-in: logs the call bound to the real
+    signature with its defaults applied, returns a frame probe."""
+
+    def __init__(self, log, name, real=None):
+        self._log, self._name = log, name
+        self._sig = None if real is None else inspect.signature(real)
+
+    def __call__(self, *args, **kwargs):
+        if self._sig is None:
+            _Probe(self._log, self._name)(*args, **kwargs)
+        else:
+            bound = self._sig.bind(*args, **kwargs)
+            bound.apply_defaults()
+            parts = [f"{k}={v!r}" for k, v in bound.arguments.items()]
+            self._log.append(f"{self._name}({', '.join(parts)})")
+        streaming = any(getattr(a, "isStreaming", False) is True for a in args)
+        return _Probe(self._log, f"{self._name}()", streaming)
+
+    def __repr__(self):
+        return self._name
+
+
+@pytest.fixture
+def plumbing_log(monkeypatch):
+    import importlib
+    import sys
+    import types
+
+    log: list[str] = []
+    for mod_name, attrs in _PIN_TARGETS.items():
+        mod = importlib.import_module(mod_name)
+        for attr in attrs.split():
+            short = f"{mod_name.rsplit('.', 1)[1]}.{attr}"
+            monkeypatch.setattr(
+                mod, attr, _Recorder(log, short, getattr(mod, attr))
+            )
+    kernels = types.ModuleType("pin_kernels")
+    kernels.make = _Recorder(log, "pin_kernels.make")
+    kernels.kernel = _Recorder(log, "pin_kernels.kernel")
+    monkeypatch.setitem(sys.modules, "pin_kernels", kernels)
+    return log
+
+
+def _pin_run(log, tdef):
+    tdef = {"id": "out", **tdef}
+    data = {
+        "src": _Probe(log, "src"),
+        "other": _Probe(log, "other"),
+        "raw": _Probe(log, "raw"),
+        "events": _Probe(log, "events", streaming=True),
+    }
+    if tdef.get("operation") == "data":
+        data[tdef["id"]] = _Probe(log, tdef["id"])
+    wf = Workflow({"tables": [tdef]}, _Probe(log, "spark"), data)
+    wf.execute()
+    return list(log)
+
+
+_S = {"source": "src"}
+_EV = {"source": "events"}
+_PIN_CASES = [
+    # --- source / data / function_source / sql
+    ("source", {"operation": "source", "format": "csv", "path": "p",
+                "options": {"sep": ";"}, "limit": 5.0}),
+    ("source/min", {"path": "p"}),
+    ("source/stream", {"operation": "source", "stream": True, "format": "csv",
+                       "path": "p", "options": {"sep": ";"},
+                       "schema": "a INT", "watermark": {"ts": "t", "delay": "1 minute"}}),
+    ("source/stream-min", {"operation": "source", "stream": True, "path": "p"}),
+    ("source/tier", {"operation": "source", "format": "tier", "path": "p",
+                     "tier": "1d", "gapfill": 1,
+                     "prune": {"bucket_s": [0, 10], "url": "u"}}),
+    ("source/tier-min", {"operation": "source", "format": "tier", "path": "p"}),
+    ("source/realtime", {"operation": "source", "format": "tier", "path": "p",
+                         "tier": "30d", "gapfill": 1, "prune": {"bucket_s": [0, 10]},
+                         "realtime": {"raw": "raw", "key": "k", "ts": "t",
+                                      "text": "x", "lang": "l", "cascade": 1}}),
+    ("source/realtime-min", {"operation": "source", "format": "tier", "path": "p",
+                             "realtime": {"raw": "raw"}}),
+    ("source/direct", {"operation": "source", "format": "tier", "path": "p",
+                       "tier": "", "branch": "dev", "snapshot": 3.0, "as_of": 7,
+                       "prune": {"bucket_s": [0, 10]}}),
+    ("source/direct-min", {"operation": "source", "format": "tier", "path": "p",
+                           "tier": ""}),
+    ("source/changes", {"operation": "source", "format": "tier", "path": "p",
+                        "tier": "", "branch": "dev", "changes": [1.0, 2.0]}),
+    ("source/changes-open", {"operation": "source", "format": "tier", "path": "p",
+                             "tier": "", "changes": [1, None]}),
+    ("data", {"operation": "data"}),
+    ("function_source", {"function": "pin_kernels:make", "inputs": [],
+                         "model": {"n": 2}}),
+    ("function_source/min", {"operation": "function_source",
+                             "function": "pin_kernels:make"}),
+    ("sql", {"operation": "sql", "inputs": ["src", "other"],
+             "query": "SELECT 1"}),
+    ("sql/min", {"operation": "sql", "query": "SELECT 1"}),
+    # --- T2-T7 and set ops
+    ("extend", {"operation": "extend", **_S}),
+    ("project", {"operation": "project", **_S, "inputs": ["a"], "outputs": ["b"]}),
+    ("project/min", {"operation": "project", **_S, "inputs": ["a"]}),
+    ("product", {"operation": "product", "inputs": ["src", "other"]}),
+    ("join", {"operation": "join", "inputs": ["src", "other"], "keys": [["a"]],
+              "suffixes": ["_r"], "left_suffix": "_l"}),
+    ("join/min", {"operation": "join", "inputs": ["src", "other"]}),
+    ("aggregate", {"operation": "aggregate", **_S, "keys": ["k"],
+                   "aggregations": [{"id": "n"}]}),
+    ("map", {"operation": "map", **_S, "function": "pin_kernels:kernel",
+             "schema": "a INT"}),
+    ("union", {"operation": "union", "inputs": ["src", "other"], "distinct": 1}),
+    ("union/min", {"operation": "union", "inputs": ["src", "other"]}),
+    ("intersect", {"operation": "intersect", "inputs": ["src", "other"]}),
+    ("except", {"operation": "except", "inputs": ["src", "other"]}),
+    ("asof_join", {"operation": "asof_join", "left": "src", "right": "other",
+                   "on": ["k"], "left_ts": "lt", "right_ts": "rt",
+                   "values": ["v"], "direction": "forward", "tolerance": 5}),
+    ("asof_join/min", {"operation": "asof_join", "left": "src", "right": "other",
+                       "on": ["k"], "left_ts": "lt", "right_ts": "rt",
+                       "values": ["v"]}),
+    ("grouping_sets", {"operation": "grouping_sets", **_S, "keys": ["k"],
+                       "aggregations": [{"id": "n"}], "mode": "cube",
+                       "gid_col": "g"}),
+    ("grouping_sets/min", {"operation": "grouping_sets", **_S, "keys": ["k"],
+                           "aggregations": [{"id": "n"}]}),
+    # --- time series
+    ("sessions", {"operation": "sessions", **_S, "keys": ["k"], "ts": "t",
+                  "gap_seconds": 30.0, "tiebreak": ["x"]}),
+    ("sessions/min", {"operation": "sessions", **_S, "keys": ["k"], "ts": "t",
+                      "gap_seconds": 30}),
+    ("order_stat", {"operation": "order_stat", **_S, "keys": ["k"], "value": "v",
+                    "q": 1, "tiebreak": ["x"], "output": "o", "exact": False}),
+    ("order_stat/min", {"operation": "order_stat", **_S, "keys": ["k"],
+                        "value": "v", "q": 1}),
+    ("m4", {"operation": "m4", **_S, "keys": ["k"], "value": "v", "ts": "t",
+            "tier_seconds": 60.0, "bucket_col": "b"}),
+    ("m4/min", {"operation": "m4", **_S, "keys": ["k"], "value": "v", "ts": "t",
+                "tier_seconds": 60}),
+    ("lttb", {"operation": "lttb", **_S, "keys": ["k"], "value": "v", "ts": "t",
+              "tier_seconds": 60.0, "bucket_col": "b"}),
+    ("lttb/min", {"operation": "lttb", **_S, "keys": ["k"], "value": "v",
+                  "ts": "t", "tier_seconds": 60}),
+    ("time_weighted", {"operation": "time_weighted", **_S, "keys": ["k"],
+                       "value": "v", "ts": "t", "tier_seconds": 60.0,
+                       "bucket_col": "b", "tiebreak": ["x"],
+                       "merge_to": 3600.0, "finalize": False}),
+    ("time_weighted/merge", {"operation": "time_weighted", **_S, "keys": ["k"],
+                             "value": "v", "ts": "t", "tier_seconds": 60,
+                             "merge_to": 3600}),
+    ("time_weighted/min", {"operation": "time_weighted", **_S, "keys": ["k"],
+                           "value": "v", "ts": "t", "tier_seconds": 60}),
+    ("counter", {"operation": "counter", **_S, "keys": ["k"], "value": "v",
+                 "ts": "t", "tier_seconds": 60.0, "merge_to": 3600.0,
+                 "finalize": True, "output": "o", "bucket_col": "b"}),
+    ("counter/partials", {"operation": "counter", **_S, "keys": ["k"],
+                          "value": "v", "ts": "t", "tier_seconds": 60,
+                          "finalize": False}),
+    ("counter/min", {"operation": "counter", **_S, "keys": ["k"], "value": "v",
+                     "ts": "t", "tier_seconds": 60}),
+    ("value_hist", {"operation": "value_hist", **_S, "keys": ["k"], "value": "v",
+                    "ts": "t", "tier_seconds": 60.0, "bin_width": 5.0,
+                    "merge_to": 3600.0, "q": 1, "output": "o",
+                    "bucket_col": "b"}),
+    ("value_hist/min", {"operation": "value_hist", **_S, "keys": ["k"],
+                        "value": "v", "ts": "t", "tier_seconds": 60,
+                        "bin_width": 5}),
+    ("distinct", {"operation": "distinct", **_S, "keys": ["k"], "item": "i",
+                  "output": "o", "exact": False, "rsd": 1}),
+    ("distinct/min", {"operation": "distinct", **_S, "keys": ["k"],
+                      "item": "i"}),
+    ("distinct_sketch", {"operation": "distinct_sketch", **_S, "keys": ["k"],
+                         "item": "i", "ts": "t", "tier_seconds": 60.0,
+                         "merge_to": 3600.0, "lgk": 10.0, "finalize": True,
+                         "output": "o"}),
+    ("distinct_sketch/partials", {"operation": "distinct_sketch", **_S,
+                                  "keys": ["k"], "item": "i", "ts": "t",
+                                  "tier_seconds": 60, "finalize": False}),
+    ("distinct_sketch/min", {"operation": "distinct_sketch", **_S,
+                             "keys": ["k"], "item": "i", "ts": "t",
+                             "tier_seconds": 60}),
+    ("heavy_hitters", {"operation": "heavy_hitters", **_S, "keys": ["k"],
+                       "item": "i", "k": 3.0, "salt_buckets": 4.0}),
+    ("heavy_hitters/min", {"operation": "heavy_hitters", **_S, "keys": ["k"],
+                           "item": "i", "k": 3}),
+    ("window_aggregate", {"operation": "window_aggregate", **_S, "ts": "t",
+                          "duration": "1 hour", "keys": ["k"],
+                          "aggregations": [{"id": "n"}], "bucket_col": "b",
+                          "slide": "10 minutes"}),
+    ("window_aggregate/min", {"operation": "window_aggregate", **_S, "ts": "t",
+                              "duration": "1 hour",
+                              "aggregations": [{"id": "n"}]}),
+    ("window_aggregate/stream", {"operation": "window_aggregate", **_EV,
+                                 "ts": "t", "duration": "1 hour",
+                                 "aggregations": [{"id": "n"}]}),
+    ("dedup", {"operation": "dedup", **_S, "keys": ["k"],
+               "within_watermark": 1}),
+    ("dedup/min", {"operation": "dedup", **_S}),
+    ("dedup/stream-min", {"operation": "dedup", **_EV}),
+    # --- corpus prep
+    ("quality_filter", {"operation": "quality_filter", **_S, "text": "x",
+                        "rules": {"min_words": 3}, "flag": "ok"}),
+    ("quality_filter/min", {"operation": "quality_filter", **_S}),
+    ("text_analysis", {"operation": "text_analysis", **_S, "text": "x"}),
+    ("text_analysis/min", {"operation": "text_analysis", **_S}),
+    ("dedup_exact", {"operation": "dedup_exact", **_S, "id_col": "d",
+                     "text": "x"}),
+    ("dedup_exact/min", {"operation": "dedup_exact", **_S}),
+    ("keep_latest", {"operation": "keep_latest", **_S, "keys": ["k"],
+                     "ts": "t", "tiebreak": ["x"], "n": 2.0}),
+    ("keep_latest/min", {"operation": "keep_latest", **_S, "keys": ["k"],
+                         "ts": "t"}),
+    ("dedup_minhash", {"operation": "dedup_minhash", **_S, "id_col": "d",
+                       "text": "x", "threshold": 1, "num_hashes": 8.0,
+                       "bands": 4.0, "bucket_cap": 10.0,
+                       "verify": "jaccard"}),
+    ("dedup_minhash/min", {"operation": "dedup_minhash", **_S}),
+    ("dedup_clusters", {"operation": "dedup_clusters", **_S, "id_col": "d",
+                        "text": "x", "threshold": 1, "score": "s"}),
+    ("dedup_clusters/min", {"operation": "dedup_clusters", **_S}),
+    ("sample_stratified", {"operation": "sample_stratified", **_S,
+                           "keys": ["k"], "n": 2.0, "fraction": 1,
+                           "quotas": {"a": 1.0}, "unique_keys": ["u"],
+                           "seed": 7, "salt_buckets": 4.0}),
+    ("sample_stratified/n", {"operation": "sample_stratified", **_S,
+                             "keys": ["k"], "n": 2.0, "unique_keys": ["u"]}),
+    ("sample_stratified/min", {"operation": "sample_stratified", **_S,
+                               "keys": ["k"], "unique_keys": ["u"]}),
+    ("remove_boilerplate", {"operation": "remove_boilerplate", **_S,
+                            "id_col": "d", "text": "x", "group_by": ["g"],
+                            "min_docs": 2.0, "sep": "|"}),
+    ("remove_boilerplate/min", {"operation": "remove_boilerplate", **_S}),
+    ("decontaminate", {"operation": "decontaminate", **_S, "bench": "other",
+                       "id_col": "d", "text": "x", "bench_text": "y",
+                       "n": 4.0, "min_hits": 2.0, "broadcast_bench": 0,
+                       "prefilter": "hash64"}),
+    ("decontaminate/min", {"operation": "decontaminate", **_S,
+                           "bench": "other"}),
+    ("lm_score", {"operation": "lm_score", **_S, "ref": "other",
+                  "id_col": "d", "text": "x", "alpha": 1}),
+    ("lm_score/min", {"operation": "lm_score", **_S}),
+    ("shuffle", {"operation": "shuffle", **_S, "unique_keys": ["u"],
+                 "seed": 7, "out": "r"}),
+    ("shuffle/min", {"operation": "shuffle", **_S, "unique_keys": ["u"]}),
+    ("components", {"operation": "components", **_S, "src": "a", "dst": "b",
+                    "max_iter": 3.0}),
+    ("components/min", {"operation": "components", **_S}),
+    ("dedup_spans", {"operation": "dedup_spans", **_S, "id_col": "d",
+                     "text": "x", "span_tokens": 4.0, "min_count": 3.0,
+                     "key": "text", "cache_grams": 0}),
+    ("dedup_spans/min", {"operation": "dedup_spans", **_S}),
+    ("audio_features", {"operation": "audio_features", **_S, "id_col": "d",
+                        "binary": "b"}),
+    ("audio_features/min", {"operation": "audio_features", **_S}),
+    ("video_features", {"operation": "video_features", **_S, "id_col": "d",
+                        "binary": "b"}),
+    ("video_features/min", {"operation": "video_features", **_S}),
+    ("pack", {"operation": "pack", **_S, "tokens": "n", "budget": 10.0,
+              "order_by": ["o"]}),
+    # --- analytics, batch and stream twins
+    ("ewma", {"operation": "ewma", **_S, "keys": ["k"], "value": "v",
+              "order": ["t"], "alpha": 1, "output": "e", "adjust": 0,
+              "ts": "t", "state_ttl_s": 60}),
+    ("ewma/min", {"operation": "ewma", **_S, "keys": ["k"], "value": "v",
+                  "order": ["t"], "alpha": 1}),
+    ("ewma/stream", {"operation": "ewma", **_EV, "keys": ["k"], "value": "v",
+                     "order": ["o"], "alpha": 1, "output": "ewma",
+                     "adjust": True, "ts": "t", "state_ttl_s": 60}),
+    ("ewma/stream-min", {"operation": "ewma", **_EV, "keys": ["k"],
+                         "value": "v", "order": ["o", "p"], "alpha": 1}),
+    ("anomaly", {"operation": "anomaly", **_S, "keys": ["k"], "value": "v",
+                 "bucket": "b", "period_seconds": 60.0, "lookback": 2.0,
+                 "min_prior": 1.0, "threshold": 2, "state_ttl_s": 60}),
+    ("anomaly/min", {"operation": "anomaly", **_S, "keys": ["k"],
+                     "value": "v", "bucket": "b"}),
+    ("anomaly/stream", {"operation": "anomaly", **_EV, "keys": ["k"],
+                        "value": "v", "bucket": "b", "period_seconds": 60.0,
+                        "lookback": 2.0, "min_prior": 1.0, "threshold": 2,
+                        "state_ttl_s": 60}),
+    ("anomaly/stream-min", {"operation": "anomaly", **_EV, "keys": ["k"],
+                            "value": "v", "bucket": "b"}),
+    ("cusum", {"operation": "cusum", **_S, "keys": ["k"], "value": "v",
+               "order": ["t"], "target": "tg", "slack": 2, "ts": "t",
+               "state_ttl_s": 60}),
+    ("cusum/min", {"operation": "cusum", **_S, "keys": ["k"], "value": "v",
+                   "order": ["t"]}),
+    ("cusum/stream", {"operation": "cusum", **_EV, "keys": ["k"],
+                      "value": "v", "order": ["o"], "target": 5.0,
+                      "slack": 2.0, "ts": "t", "state_ttl_s": 60}),
+    ("cusum/stream-min", {"operation": "cusum", **_EV, "keys": ["k"],
+                          "value": "v", "order": ["o"]}),
+    ("corr_pairs", {"operation": "corr_pairs", **_S, "series": "s",
+                    "value": "v", "bucket": "b", "min_buckets": 3.0,
+                    "max_series": 7.0}),
+    ("corr_pairs/unbounded", {"operation": "corr_pairs", **_S, "series": "s",
+                              "value": "v", "bucket": "b",
+                              "max_series": None}),
+    ("corr_pairs/min", {"operation": "corr_pairs", **_S, "series": "s",
+                        "value": "v", "bucket": "b"}),
+    ("holt_winters", {"operation": "holt_winters", **_S, "keys": ["k"],
+                      "value": "v", "order": ["t"], "season_length": 4.0,
+                      "alpha": 1, "beta": 1, "gamma": 1, "steps": 2.0,
+                      "mode": "fitted"}),
+    ("holt_winters/min", {"operation": "holt_winters", **_S, "keys": ["k"],
+                          "value": "v", "order": ["t"],
+                          "season_length": 4}),
+    ("rolling_corr", {"operation": "rolling_corr", **_S, "keys": ["k"],
+                      "x": "a", "y": "b", "order": ["t"], "window": 3.0,
+                      "min_periods": 2.0, "output": "o"}),
+    ("rolling_corr/min", {"operation": "rolling_corr", **_S, "keys": ["k"],
+                          "x": "a", "y": "b", "order": ["t"], "window": 3}),
+    # --- retrieval
+    ("bm25", {"operation": "bm25", **_S, "query": ["q"], "k": 3.0,
+              "id_col": "d", "text": "x", "k1": 1, "b": 1}),
+    ("bm25/min", {"operation": "bm25", **_S, "query": ["q"]}),
+    ("tfidf", {"operation": "tfidf", **_S, "vocab": ["w"], "id_col": "d",
+               "text": "x"}),
+    ("tfidf/min", {"operation": "tfidf", **_S, "vocab": ["w"]}),
+    ("semdedup", {"operation": "semdedup", **_S, "tau": 1, "k": 4.0,
+                  "iters": 2.0, "id_col": "d", "vector": "e"}),
+    ("semdedup/min", {"operation": "semdedup", **_S, "tau": 1}),
+    ("bpe", {"operation": "bpe", **_S, "num_merges": 5.0, "text": "x",
+             "id_col": "d", "min_count": 2.0}),
+    ("bpe/merges", {"operation": "bpe", **_S, "merges": [["a", "b"]],
+                    "text": "x", "id_col": "d"}),
+    ("bpe/min", {"operation": "bpe", **_S, "num_merges": 5}),
+    # --- sinks
+    ("sink", {"operation": "sink", **_S, "path": "p", "format": "csv",
+              "mode": "append", "single_file": True}),
+    ("sink/min", {"operation": "sink", **_S, "path": "p"}),
+    ("sink/tier", {"operation": "sink", **_S, "format": "tier", "path": "p",
+                   "part_col": "pc", "input_snapshot": "s1"}),
+    ("sink/tier-min", {"operation": "sink", **_S, "format": "tier",
+                       "path": "p"}),
+    ("sink/merge", {"operation": "sink", **_S, "format": "merge", "path": "p",
+                    "keys": ["k"], "mode": "copy-on-write", "tag": "t1",
+                    "branch": "dev"}),
+    ("sink/merge-min", {"operation": "sink", **_S, "format": "merge",
+                        "path": "p", "keys": ["k"]}),
+    ("stream_sink", {"operation": "stream_sink", **_EV, "path": "p",
+                     "checkpoint": "c", "format": "json",
+                     "output_mode": "update", "interval": "5 seconds"}),
+    ("stream_sink/min", {"operation": "stream_sink", **_EV, "path": "p",
+                         "checkpoint": "c"}),
+    ("stream_sink/upsert", {"operation": "stream_sink", **_EV,
+                            "format": "upsert", "path": "p",
+                            "checkpoint": "c", "keys": ("k",),
+                            "mode": "copy-on-write", "tag_prefix": "tp",
+                            "part_col": "pc", "interval": "5 seconds"}),
+    ("stream_sink/upsert-min", {"operation": "stream_sink", **_EV,
+                                "format": "upsert", "path": "p",
+                                "checkpoint": "c", "keys": ["k"]}),
+]
+
+_PINS = {
+    'source': [
+        "table_ops.source(spark=spark, fmt='csv', path='p', options={'sep': ';'})",
+        'table_ops.source().limit(5)',
+    ],
+    'source/min': [
+        "table_ops.source(spark=spark, fmt='parquet', path='p', options=None)",
+    ],
+    'source/stream': [
+        "spark.readStream.schema('a INT')",
+        "spark.readStream.schema().format('csv')",
+        "spark.readStream.schema().format().option('sep', ';')",
+        "spark.readStream.schema().format().option().load('p')",
+        "spark.readStream.schema().format().option().load().withWatermark('t', '1 minute')",
+    ],
+    'source/stream-min': [
+        "table_ops.source(spark=spark, fmt='parquet', path='p', options=None)",
+        'spark.readStream.schema(table_ops.source().schema)',
+        "spark.readStream.schema().format('parquet')",
+        "spark.readStream.schema().format().load('p')",
+    ],
+    'source/tier': [
+        "incremental.read_finalized_tier(spark=spark, root='p', tier_name='1d', gapfill=True, prune={'bucket_s': (0, 10), 'url': 'u'})",
+    ],
+    'source/tier-min': [
+        "incremental.read_finalized_tier(spark=spark, root='p', tier_name='1h', gapfill=False, prune=None)",
+    ],
+    'source/realtime': [
+        "realtime.read_realtime_tier(spark=spark, root='p', tier_name='30d', raw=raw, url_col='k', ts_col='t', text_col='x', lang_col='l', measure=None, gapfill=True, prune={'bucket_s': (0, 10)}, watermark=None, cascade=True)",
+    ],
+    'source/realtime-min': [
+        "realtime.read_realtime_tier(spark=spark, root='p', tier_name='1h', raw=raw, url_col='url', ts_col='warc_ts', text_col='text', lang_col='lang', measure=None, gapfill=False, prune=None, watermark=None, cascade=False)",
+    ],
+    'source/direct': [
+        "iceberg_layout.IcebergLayoutTable(root='p', sort_order=None, cluster_writes=True, branch='dev')",
+        "iceberg_layout.IcebergLayoutTable().read_tier(spark, snapshot_id=3, as_of=7.0, prune={'bucket_s': (0, 10)})",
+    ],
+    'source/direct-min': [
+        "iceberg_layout.IcebergLayoutTable(root='p', sort_order=None, cluster_writes=True, branch='main')",
+        'iceberg_layout.IcebergLayoutTable().read_tier(spark, snapshot_id=None, as_of=None, prune=None)',
+    ],
+    'source/changes': [
+        "iceberg_layout.IcebergLayoutTable(root='p', sort_order=None, cluster_writes=True, branch='dev')",
+        'iceberg_layout.IcebergLayoutTable().read_changes(spark, 1, 2)',
+    ],
+    'source/changes-open': [
+        "iceberg_layout.IcebergLayoutTable(root='p', sort_order=None, cluster_writes=True, branch='main')",
+        'iceberg_layout.IcebergLayoutTable().read_changes(spark, 1, None)',
+    ],
+    'data': [
+    ],
+    'function_source': [
+        'pin_kernels.make(n=2)',
+        'spark.createDataFrame(pin_kernels.make())',
+    ],
+    'function_source/min': [
+        'pin_kernels.make()',
+        'spark.createDataFrame(pin_kernels.make())',
+    ],
+    'sql': [
+        "src.createOrReplaceTempView('src')",
+        "other.createOrReplaceTempView('other')",
+        "spark.sql('SELECT 1')",
+    ],
+    'sql/min': [
+        "spark.sql('SELECT 1')",
+    ],
+    'extend': [
+        'table_ops.extend(prev=src)',
+    ],
+    'project': [
+        "table_ops.project(df=src, inputs=['a'], outputs=['b'])",
+    ],
+    'project/min': [
+        "table_ops.project(df=src, inputs=['a'], outputs=None)",
+    ],
+    'product': [
+        'table_ops.product(dfs=[src, other])',
+    ],
+    'join': [
+        "table_ops.join_tables(dfs=[src, other], keys=[['a']], suffixes=['_r'], left_suffix='_l')",
+    ],
+    'join/min': [
+        'table_ops.join_tables(dfs=[src, other], keys=[], suffixes=None, left_suffix=None)',
+    ],
+    'aggregate': [
+        "table_ops.aggregate_table(df=src, keys=['k'], aggregations=[{'id': 'n'}])",
+    ],
+    'map': [
+        "table_ops.map_table(df=src, fn=pin_kernels.kernel, schema='a INT')",
+    ],
+    'union': [
+        'table_ops.union_tables(dfs=[src, other], distinct=1)',
+    ],
+    'union/min': [
+        'table_ops.union_tables(dfs=[src, other], distinct=False)',
+    ],
+    'intersect': [
+        'table_ops.intersect_tables(a=src, b=other)',
+    ],
+    'except': [
+        'table_ops.except_tables(a=src, b=other)',
+    ],
+    'asof_join': [
+        "table_ops.asof_join(left=src, right=other, on_key=['k'], left_ts='lt', right_ts='rt', value_cols=['v'], direction='forward', tolerance=5)",
+    ],
+    'asof_join/min': [
+        "table_ops.asof_join(left=src, right=other, on_key=['k'], left_ts='lt', right_ts='rt', value_cols=['v'], direction='backward', tolerance=None)",
+    ],
+    'grouping_sets': [
+        "table_ops.aggregate_grouping_sets(df=src, keys=['k'], aggregations=[{'id': 'n'}], mode='cube', gid_col='g')",
+    ],
+    'grouping_sets/min': [
+        "table_ops.aggregate_grouping_sets(df=src, keys=['k'], aggregations=[{'id': 'n'}], mode='rollup', gid_col='grouping_id')",
+    ],
+    'sessions': [
+        "timeseries.session_table(df=src, key=['k'], ts_col='t', gap_seconds=30, order_tiebreak=['x'])",
+    ],
+    'sessions/min': [
+        "timeseries.session_table(df=src, key=['k'], ts_col='t', gap_seconds=30, order_tiebreak=())",
+    ],
+    'order_stat': [
+        "timeseries.order_stat(df=src, keys=['k'], value_col='v', q=1.0, tiebreak=['x'], output='o', exact=False)",
+    ],
+    'order_stat/min': [
+        "timeseries.order_stat(df=src, keys=['k'], value_col='v', q=1.0, tiebreak=(), output='order_stat', exact=True)",
+    ],
+    'm4': [
+        "timeseries.m4_downsample(df=src, value_col='v', ts_col='t', width_s=60, partition_by=['k'], bucket_col='b')",
+    ],
+    'm4/min': [
+        "timeseries.m4_downsample(df=src, value_col='v', ts_col='t', width_s=60, partition_by=['k'], bucket_col='bucket_s')",
+    ],
+    'lttb': [
+        "timeseries.lttb_downsample(df=src, value_col='v', ts_col='t', width_s=60, partition_by=['k'], bucket_col='b')",
+    ],
+    'lttb/min': [
+        "timeseries.lttb_downsample(df=src, value_col='v', ts_col='t', width_s=60, partition_by=['k'], bucket_col='bucket_s')",
+    ],
+    'time_weighted': [
+        "timeseries.time_weighted_partials(df=src, value_col='v', ts_col='t', width_s=60, partition_by=['k'], bucket_col='b')",
+        "timeseries.time_weighted_downsample(partials=timeseries.time_weighted_partials(), fine_width_s=60, coarse_width_s=3600, partition_by=['k'], bucket_col='b')",
+    ],
+    'time_weighted/merge': [
+        "timeseries.time_weighted_partials(df=src, value_col='v', ts_col='t', width_s=60, partition_by=['k'], bucket_col='bucket_s')",
+        "timeseries.time_weighted_downsample(partials=timeseries.time_weighted_partials(), fine_width_s=60, coarse_width_s=3600, partition_by=['k'], bucket_col='bucket_s')",
+        "timeseries.time_weighted_finalize(partials=timeseries.time_weighted_downsample(), width_s=3600, bucket_col='bucket_s', output='twa')",
+    ],
+    'time_weighted/min': [
+        "timeseries.time_weighted(df=src, value_col='v', ts_col='t', width_s=60, partition_by=['k'], bucket_col='bucket_s', tiebreak=())",
+    ],
+    'counter': [
+        "timeseries.counter_partials(df=src, value_col='v', ts_col='t', width_s=60, partition_by=['k'], bucket_col='b')",
+        "timeseries.counter_downsample(partials=timeseries.counter_partials(), width_s=3600, partition_by=['k'], bucket_col='b')",
+        "timeseries.counter_finalize(partials=timeseries.counter_downsample(), output='o')",
+    ],
+    'counter/partials': [
+        "timeseries.counter_partials(df=src, value_col='v', ts_col='t', width_s=60, partition_by=['k'], bucket_col='bucket_s')",
+    ],
+    'counter/min': [
+        "timeseries.counter_partials(df=src, value_col='v', ts_col='t', width_s=60, partition_by=['k'], bucket_col='bucket_s')",
+        "timeseries.counter_finalize(partials=timeseries.counter_partials(), output='increase')",
+    ],
+    'value_hist': [
+        "timeseries.value_hist_partials(df=src, value_col='v', ts_col='t', width_s=60, partition_by=['k'], bin_width=5, bucket_col='b')",
+        "timeseries.value_hist_downsample(partials=timeseries.value_hist_partials(), width_s=3600, partition_by=['k'], bucket_col='b')",
+        "timeseries.quantile_from_hist(partials=timeseries.value_hist_downsample(), q=1.0, partition_by=['k'], bucket_col='b', output='o')",
+    ],
+    'value_hist/min': [
+        "timeseries.value_hist_partials(df=src, value_col='v', ts_col='t', width_s=60, partition_by=['k'], bin_width=5, bucket_col='bucket_s')",
+    ],
+    'distinct': [
+        "timeseries.distinct_per_bucket(df=src, keys=['k'], item_col='i', output='o', exact=False, rsd=1)",
+    ],
+    'distinct/min': [
+        "timeseries.distinct_per_bucket(df=src, keys=['k'], item_col='i', output='n_distinct', exact=True, rsd=0.05)",
+    ],
+    'distinct_sketch': [
+        "timeseries.distinct_sketch_partials(df=src, keys=['k'], item_col='i', ts_col='t', tier_seconds=60, lgk=10, sketch_col='distinct_sk')",
+        "timeseries.distinct_sketch_downsample(partials=timeseries.distinct_sketch_partials(), keys=['k'], tier_seconds=3600, sketch_col='distinct_sk')",
+        "timeseries.distinct_sketch_finalize(partials=timeseries.distinct_sketch_downsample(), sketch_col='distinct_sk', output='o')",
+    ],
+    'distinct_sketch/partials': [
+        "timeseries.distinct_sketch_partials(df=src, keys=['k'], item_col='i', ts_col='t', tier_seconds=60, lgk=12, sketch_col='distinct_sk')",
+    ],
+    'distinct_sketch/min': [
+        "timeseries.distinct_sketch_partials(df=src, keys=['k'], item_col='i', ts_col='t', tier_seconds=60, lgk=12, sketch_col='distinct_sk')",
+        "timeseries.distinct_sketch_finalize(partials=timeseries.distinct_sketch_partials(), sketch_col='distinct_sk', output='n_distinct_est')",
+    ],
+    'heavy_hitters': [
+        "timeseries.heavy_hitters(df=src, keys=['k'], item_col='i', k=3, count_col='n', rank_col='rank', salt_buckets=4)",
+    ],
+    'heavy_hitters/min': [
+        "timeseries.heavy_hitters(df=src, keys=['k'], item_col='i', k=3, count_col='n', rank_col='rank', salt_buckets=0)",
+    ],
+    'window_aggregate': [
+        "table_ops.window_aggregate(df=src, ts='t', duration='1 hour', keys=['k'], aggregations=[{'id': 'n'}], bucket_col='b', slide='10 minutes')",
+    ],
+    'window_aggregate/min': [
+        "table_ops.window_aggregate(df=src, ts='t', duration='1 hour', keys=[], aggregations=[{'id': 'n'}], bucket_col='bucket_s', slide=None)",
+    ],
+    'window_aggregate/stream': [
+        "table_ops.window_aggregate(df=events, ts='t', duration='1 hour', keys=[], aggregations=[{'id': 'n'}], bucket_col='bucket_s', slide=None)",
+    ],
+    'dedup': [
+        "table_ops.dedup_rows(df=src, keys=['k'], within_watermark=1)",
+    ],
+    'dedup/min': [
+        'table_ops.dedup_rows(df=src, keys=None, within_watermark=False)',
+    ],
+    'dedup/stream-min': [
+        'table_ops.dedup_rows(df=events, keys=None, within_watermark=True)',
+    ],
+    'quality_filter': [
+        "text.gopher_filter(col=Column<'x'>, min_words=3, max_words=100000, min_mean_word_len=3.0, max_mean_word_len=10.0, max_symbol_ratio=0.1, max_repetition=0.3, min_distinct_stopwords=2)",
+        "src.withColumn('ok', text.gopher_filter())",
+    ],
+    'quality_filter/min': [
+        "text.gopher_filter(col=Column<'text'>, min_words=50, max_words=100000, min_mean_word_len=3.0, max_mean_word_len=10.0, max_symbol_ratio=0.1, max_repetition=0.3, min_distinct_stopwords=2)",
+        'src.where(text.gopher_filter())',
+    ],
+    'text_analysis': [
+        "text.analyze_documents(docs=src, text_col='x')",
+    ],
+    'text_analysis/min': [
+        "text.analyze_documents(docs=src, text_col='text')",
+    ],
+    'dedup_exact': [
+        "dedup.dedup_exact(docs=src, id_col='d', text_col='x', keep_rows=True)",
+    ],
+    'dedup_exact/min': [
+        "dedup.dedup_exact(docs=src, id_col='doc_id', text_col='text', keep_rows=True)",
+    ],
+    'keep_latest': [
+        "dedup.dedup_keep_latest(df=src, key_cols=['k'], ts_col='t', tiebreak_cols=['x'], n=2)",
+    ],
+    'keep_latest/min': [
+        "dedup.dedup_keep_latest(df=src, key_cols=['k'], ts_col='t', tiebreak_cols=[], n=1)",
+    ],
+    'dedup_minhash': [
+        "dedup.dedup_minhash_lsh(docs=src, id_col='d', text_col='x', threshold=1.0, num_hashes=8, bands=4, bucket_cap=10, verify='jaccard', metrics=None)",
+    ],
+    'dedup_minhash/min': [
+        "dedup.dedup_minhash_lsh(docs=src, id_col='doc_id', text_col='text', threshold=0.8, num_hashes=64, bands=16, bucket_cap=1000, verify='token', metrics=None)",
+    ],
+    'dedup_clusters': [
+        "cluster.dedup_clusters(docs=src, id_col='d', text_col='x', threshold=1.0, score_col='s', pairs=None, lsh_kwargs={})",
+    ],
+    'dedup_clusters/min': [
+        "cluster.dedup_clusters(docs=src, id_col='doc_id', text_col='text', threshold=0.8, score_col=None, pairs=None, lsh_kwargs={})",
+    ],
+    'sample_stratified': [
+        "sampling.sample_stratified(df=src, group_cols=['k'], n_per_group={'a': 1}, key_cols=['u'], seed='7', salt_buckets=4, fraction=1.0)",
+    ],
+    'sample_stratified/n': [
+        "sampling.sample_stratified(df=src, group_cols=['k'], n_per_group=2, key_cols=['u'], seed='42', salt_buckets=16, fraction=None)",
+    ],
+    'sample_stratified/min': [
+        "sampling.sample_stratified(df=src, group_cols=['k'], n_per_group=None, key_cols=['u'], seed='42', salt_buckets=16, fraction=None)",
+    ],
+    'remove_boilerplate': [
+        "text.remove_boilerplate_lines(docs=src, id_col='d', text_col='x', group_cols=('g',), min_docs=2, sep='|')",
+    ],
+    'remove_boilerplate/min': [
+        "text.remove_boilerplate_lines(docs=src, id_col='doc_id', text_col='text', group_cols=('source',), min_docs=5, sep='\\n')",
+    ],
+    'decontaminate': [
+        "contamination.decontaminate(train=src, bench=other, id_col='d', text_col='x', bench_text_col='y', n=4, min_hits=2, broadcast_bench=False, prefilter='hash64')",
+    ],
+    'decontaminate/min': [
+        "contamination.decontaminate(train=src, bench=other, id_col='doc_id', text_col='text', bench_text_col=None, n=8, min_hits=1, broadcast_bench=True, prefilter=None)",
+    ],
+    'lm_score': [
+        "lm.lm_counts(ref=other, id_col='d', text_col='x')",
+        "lm.lm_score(docs=src, ref=None, id_col='d', text_col='x', alpha=1.0, counts=lm.lm_counts())",
+    ],
+    'lm_score/min': [
+        "lm.lm_score(docs=src, ref=None, id_col='doc_id', text_col='text', alpha=0.5, counts=None)",
+    ],
+    'shuffle': [
+        "sampling.shuffle_deterministic(df=src, key_cols=['u'], seed='7', out_col='r')",
+    ],
+    'shuffle/min': [
+        "sampling.shuffle_deterministic(df=src, key_cols=['u'], seed='42', out_col='shuffle_rank')",
+    ],
+    'components': [
+        "cluster.connected_components(edges=src, src='a', dst='b', max_iter=3)",
+    ],
+    'components/min': [
+        "cluster.connected_components(edges=src, src='src', dst='dst', max_iter=50)",
+    ],
+    'dedup_spans': [
+        "exact_substr.remove_duplicate_spans(docs=src, id_col='d', text_col='x', span_tokens=4, min_count=3, key='text', cache_grams=False)",
+    ],
+    'dedup_spans/min': [
+        "exact_substr.remove_duplicate_spans(docs=src, id_col='doc_id', text_col='text', span_tokens=8, min_count=2, key='hash128', cache_grams=True)",
+    ],
+    'audio_features': [
+        "multimodal.extract_audio_features(df=src, id_col='d', audio_col='b')",
+    ],
+    'audio_features/min': [
+        "multimodal.extract_audio_features(df=src, id_col='doc_id', audio_col='audio')",
+    ],
+    'video_features': [
+        "multimodal.extract_video_features(df=src, id_col='d', video_col='b')",
+    ],
+    'video_features/min': [
+        "multimodal.extract_video_features(df=src, id_col='doc_id', video_col='video')",
+    ],
+    'pack': [
+        "sampling.pack_sequences(df=src, token_col='n', budget=10, order_cols=['o'], pack_col='pack_id', offset_col='pack_offset')",
+    ],
+    'ewma': [
+        "analytics.ewma(df=src, value_col='v', order_cols=['t'], keys=['k'], alpha=1.0, output='e', adjust=False)",
+    ],
+    'ewma/min': [
+        "analytics.ewma(df=src, value_col='v', order_cols=['t'], keys=['k'], alpha=1.0, output='ewma', adjust=True)",
+    ],
+    'ewma/stream': [
+        "smoothing.streaming_ewma(stream=events, alpha=1.0, key_col='k', ts_col='t', value_col='v', state_ttl_s=60)",
+    ],
+    'ewma/stream-min': [
+        "smoothing.streaming_ewma(stream=events, alpha=1.0, key_col='k', ts_col='o', value_col='v', state_ttl_s=None)",
+    ],
+    'anomaly': [
+        "analytics.anomaly_seasonal(df=src, value_col='v', bucket_col='b', keys=['k'], period_s=60, lookback=2, min_prior=1, threshold=2.0)",
+    ],
+    'anomaly/min': [
+        "analytics.anomaly_seasonal(df=src, value_col='v', bucket_col='b', keys=['k'], period_s=86400, lookback=7, min_prior=3, threshold=3.0)",
+    ],
+    'anomaly/stream': [
+        "detect.streaming_anomaly(stream=events, period_s=60, lookback=2, min_prior=1, threshold=2.0, key_col='k', bucket_col='b', value_col='v', state_ttl_s=60)",
+    ],
+    'anomaly/stream-min': [
+        "detect.streaming_anomaly(stream=events, period_s=86400, lookback=7, min_prior=3, threshold=3.0, key_col='k', bucket_col='b', value_col='v', state_ttl_s=None)",
+    ],
+    'cusum': [
+        "analytics.cusum(df=src, value_col='v', order_cols=['t'], keys=['k'], target='tg', slack=2, pos_col='cusum_pos', neg_col='cusum_neg')",
+    ],
+    'cusum/min': [
+        "analytics.cusum(df=src, value_col='v', order_cols=['t'], keys=['k'], target=None, slack=0, pos_col='cusum_pos', neg_col='cusum_neg')",
+    ],
+    'cusum/stream': [
+        "detect.streaming_cusum(stream=events, target=5, slack=2, key_col='k', ts_col='t', value_col='v', state_ttl_s=60)",
+    ],
+    'cusum/stream-min': [
+        "detect.streaming_cusum(stream=events, target=0, slack=0, key_col='k', ts_col='o', value_col='v', state_ttl_s=None)",
+    ],
+    'corr_pairs': [
+        "analytics.corr_pairs(df=src, value_col='v', series_col='s', bucket_col='b', min_buckets=3, max_series=7.0)",
+    ],
+    'corr_pairs/unbounded': [
+        "analytics.corr_pairs(df=src, value_col='v', series_col='s', bucket_col='b', min_buckets=2, max_series=None)",
+    ],
+    'corr_pairs/min': [
+        "analytics.corr_pairs(df=src, value_col='v', series_col='s', bucket_col='b', min_buckets=2, max_series=1000)",
+    ],
+    'holt_winters': [
+        "analytics.holt_winters(df=src, value_col='v', order_cols=['t'], keys=['k'], season_length=4, alpha=1.0, beta=1.0, gamma=1.0, steps=2, mode='fitted')",
+    ],
+    'holt_winters/min': [
+        "analytics.holt_winters(df=src, value_col='v', order_cols=['t'], keys=['k'], season_length=4, alpha=0.3, beta=0.1, gamma=0.2, steps=1, mode='forecast')",
+    ],
+    'rolling_corr': [
+        "analytics.rolling_corr(df=src, x_col='a', y_col='b', order_cols=['t'], keys=['k'], window=3, min_periods=2, output='o')",
+    ],
+    'rolling_corr/min': [
+        "analytics.rolling_corr(df=src, x_col='a', y_col='b', order_cols=['t'], keys=['k'], window=3, min_periods=None, output='rolling_corr')",
+    ],
+    'bm25': [
+        "ir.bm25_topk(docs=src, query_terms=['q'], k=3, id_col='d', text_col='x', k1=1.0, b=1.0)",
+    ],
+    'bm25/min': [
+        "ir.bm25_scores(docs=src, query_terms=['q'], id_col='doc_id', text_col='text', k1=1.2, b=0.75)",
+    ],
+    'tfidf': [
+        "ir.tfidf_scores(docs=src, vocab=['w'], id_col='d', text_col='x')",
+    ],
+    'tfidf/min': [
+        "ir.tfidf_scores(docs=src, vocab=['w'], id_col='doc_id', text_col='text')",
+    ],
+    'semdedup': [
+        "semdedup.semdedup(emb=src, tau=1.0, k=4, iters=2, id_col='d', vec_col='e', method='matmul', n_super=None, probes=1)",
+    ],
+    'semdedup/min': [
+        "semdedup.semdedup(emb=src, tau=1.0, k=16, iters=0, id_col='vec_id', vec_col='embedding', method='matmul', n_super=None, probes=1)",
+    ],
+    'bpe': [
+        "bpe.train_bpe(docs=src, num_merges=5, text_col='x', min_count=2, checkpoint_every=8, mode='incremental')",
+        "bpe.bpe_encode(docs=src, merges=bpe.train_bpe(), id_col='d', text_col='x', output='bpe_tokens', word_re='[a-z0-9]+')",
+    ],
+    'bpe/merges': [
+        "bpe.bpe_encode(docs=src, merges=[('a', 'b')], id_col='d', text_col='x', output='bpe_tokens', word_re='[a-z0-9]+')",
+    ],
+    'bpe/min': [
+        "bpe.train_bpe(docs=src, num_merges=5, text_col='text', min_count=1, checkpoint_every=8, mode='incremental')",
+        "bpe.bpe_encode(docs=src, merges=bpe.train_bpe(), id_col='doc_id', text_col='text', output='bpe_tokens', word_re='[a-z0-9]+')",
+    ],
+    'sink': [
+        'src.coalesce(1)',
+        "src.coalesce().write.mode('append')",
+        "src.coalesce().write.mode().option('header', True)",
+        "src.coalesce().write.mode().option().format('csv')",
+        "src.coalesce().write.mode().option().format().save('p')",
+    ],
+    'sink/min': [
+        "src.write.mode('overwrite')",
+        "src.write.mode().format('parquet')",
+        "src.write.mode().format().save('p')",
+    ],
+    'sink/tier': [
+        "iceberg_layout.IcebergLayoutTable(root='p', sort_order=None, cluster_writes=True, branch='main')",
+        "iceberg_layout.IcebergLayoutTable().write_tier(src, part_col='pc', input_snapshot='s1')",
+    ],
+    'sink/tier-min': [
+        "iceberg_layout.IcebergLayoutTable(root='p', sort_order=None, cluster_writes=True, branch='main')",
+        "iceberg_layout.IcebergLayoutTable().write_tier(src, part_col='part', input_snapshot='workflow:src')",
+    ],
+    'sink/merge': [
+        "iceberg_layout.IcebergLayoutTable(root='p', sort_order=None, cluster_writes=True, branch='dev')",
+        "iceberg_layout.IcebergLayoutTable().merge_rows(src, keys=['k'], mode='copy-on-write', idempotency_tag='t1')",
+    ],
+    'sink/merge-min': [
+        "iceberg_layout.IcebergLayoutTable(root='p', sort_order=None, cluster_writes=True, branch='main')",
+        "iceberg_layout.IcebergLayoutTable().merge_rows(src, keys=['k'], mode='merge-on-read', idempotency_tag=None)",
+    ],
+    'stream_sink': [
+        "events.writeStream.format('json')",
+        "events.writeStream.format().option('path', 'p')",
+        "events.writeStream.format().option().option('checkpointLocation', 'c')",
+        "events.writeStream.format().option().option().outputMode('update')",
+        "events.writeStream.format().option().option().outputMode().trigger(processingTime='5 seconds')",
+        'events.writeStream.format().option().option().outputMode().trigger().start()',
+    ],
+    'stream_sink/min': [
+        "events.writeStream.format('parquet')",
+        "events.writeStream.format().option('path', 'p')",
+        "events.writeStream.format().option().option('checkpointLocation', 'c')",
+        "events.writeStream.format().option().option().outputMode('append')",
+        'events.writeStream.format().option().option().outputMode().trigger(availableNow=True)',
+        'events.writeStream.format().option().option().outputMode().trigger().start()',
+    ],
+    'stream_sink/upsert': [
+        "upsert_stream.streaming_upsert_writer(delta_stream=events, root='p', keys=['k'], checkpoint_dir='c', mode='copy-on-write', tag_prefix='tp', part_col='pc')",
+        "upsert_stream.streaming_upsert_writer().trigger(processingTime='5 seconds')",
+        'upsert_stream.streaming_upsert_writer().trigger().start()',
+    ],
+    'stream_sink/upsert-min': [
+        "upsert_stream.streaming_upsert_writer(delta_stream=events, root='p', keys=['k'], checkpoint_dir='c', mode='merge-on-read', tag_prefix='upsert:out', part_col='part')",
+        'upsert_stream.streaming_upsert_writer().trigger(availableNow=True)',
+        'upsert_stream.streaming_upsert_writer().trigger().start()',
+    ],
+}
+
+
+@pytest.mark.parametrize("case", [c for c, _ in _PIN_CASES])
+def test_table_op_plumbing_pin(case, plumbing_log, request):
+    """Each table op hands the library callable exactly today's
+    arguments: every documented key set (the full case), and only the
+    required keys (the ``/min`` cases pin the defaults)."""
+    tdef = dict(_PIN_CASES)[case]
+    if tdef.get("operation") == "quality_filter":
+        request.getfixturevalue("spark")  # F.col needs an active session
+    assert _pin_run(plumbing_log, tdef) == _PINS[case]
+
+
+# ------------------------------------------------------- op-table refusals
+_TWIN_BASE = {"id": "out", "source": "events", "value": "v", "ts": "t"}
+
+
+@pytest.mark.parametrize("tdef, key", [
+    ({"operation": "ewma", "keys": ["k"], "alpha": 0.5, "adjust": False}, "adjust"),
+    ({"operation": "ewma", "keys": ["k"], "alpha": 0.5, "output": "sm"}, "output"),
+    ({"operation": "cusum", "keys": ["k"], "target": "baseline"}, "target"),
+    ({"operation": "ewma", "keys": ["k", "j"], "alpha": 0.5}, "keys"),
+    ({"operation": "anomaly", "keys": ["k", "j"], "bucket": "b"}, "keys"),
+    ({"operation": "cusum", "keys": ["k", "j"]}, "keys"),
+])
+def test_stream_twin_refuses_what_it_cannot_compute(tdef, key, plumbing_log):
+    """On a streaming source a spec value the stream twin cannot honor
+    is refused, naming the table, the op and the key — never dropped or
+    garbled into a different result than the same spec in batch."""
+    with pytest.raises(ValueError) as err:
+        _pin_run(plumbing_log, {**_TWIN_BASE, **tdef})
+    msg = str(err.value)
+    assert "'out'" in msg and tdef["operation"] in msg and repr(key) in msg
+
+
+@pytest.mark.parametrize("tdef, key", [
+    ({"operation": "ewma", "keys": ["k"], "alpha": 0.5, "value": None}, "value"),
+    ({"operation": "ewma", "keys": ["k"], "alpha": 0.5, "ts": None}, "order"),
+    ({"operation": "anomaly", "bucket": "b", "ts": None}, "keys"),
+])
+def test_stream_twin_keeps_batch_required_keys(tdef, key):
+    """A key the batch op requires stays required on a stream (``ts``
+    stands in for ``order``): the twin's own column-name defaults never
+    apply to a workflow spec."""
+    tdef = {k: v for k, v in {**_TWIN_BASE, **tdef}.items() if v is not None}
+    log: list[str] = []
+    wf = Workflow(
+        {"tables": [tdef]}, _Probe(log, "spark"),
+        {"events": _Probe(log, "events", streaming=True)},
+    )
+    with pytest.raises(ValueError, match=f"^table 'out' .* needs '{key}'$"):
+        wf.execute()
+
+
+@pytest.mark.parametrize("op", ["roll", "shift", "delta", "rate", "locf"])
+def test_ordered_column_op_needs_order_by(op):
+    col = {"id": "c", "operation": op, "inputs": ["v"], "kernel": "sum",
+           "window": 2, "ts": "t"}
+    wf = Workflow(
+        {"tables": [{"id": "t", "operation": "data", "columns": [col]}]},
+        _Probe([], "spark"), {"t": _Probe([], "t")},
+    )
+    with pytest.raises(ValueError, match=f"^{op} column 'c' needs order_by$"):
+        wf.execute()
+
+
+def test_misspelt_key_is_refused_at_construction():
+    spec = {"tables": [{"id": "an", "operation": "anomaly", "source": "h",
+                        "keys": ["k"], "value": "v", "bucket": "b",
+                        "treshold": 2.0}]}
+    with pytest.raises(ValueError) as err:
+        Workflow(spec, _Probe([], "spark"))
+    msg = str(err.value)
+    assert "'treshold'" in msg and "anomaly" in msg and "'threshold'" in msg
+
+
+def test_unknown_op_is_refused_at_construction():
+    with pytest.raises(ValueError, match="unknown table operation 'pivot'"):
+        Workflow({"tables": [{"id": "x", "operation": "pivot"}]}, _Probe([], "spark"))
+
+
+def test_stream_keys_and_reference_keys_compile_on_batch(plumbing_log):
+    """``ts``/``state_ttl_s`` on a batch ewma compile (the same spec runs
+    batch or stream), and a reference T3 function table may carry its
+    ``outputs``/``attributes`` keys."""
+    _pin_run(plumbing_log, {"operation": "ewma", "source": "src", "keys": ["k"],
+                            "value": "v", "order": ["t"], "alpha": 0.5,
+                            "ts": "t", "state_ttl_s": 60})
+    assert plumbing_log[-1].startswith("analytics.ewma(df=src")
+    _pin_run(plumbing_log, {"function": "pin_kernels:make", "inputs": [],
+                            "model": {"n": 1}, "outputs": ["a"],
+                            "attributes": {"x": 1}})
+    assert plumbing_log[-1] == "spark.createDataFrame(pin_kernels.make())"
+
+
+def _documented_table_fields() -> dict[str, set[str]]:
+    """op → the keys docs/workflow_spec.md lists for it (union of its
+    rows; parenthesized remarks are not keys)."""
+    import os
+    import re
+
+    path = os.path.join(os.path.dirname(__file__), "..", "docs", "workflow_spec.md")
+    with open(path) as f:
+        section = f.read().split("## Table definitions")[1].split("\n## ")[0]
+    fields: dict[str, set[str]] = {}
+    for line in section.splitlines():
+        if not line.startswith("| `"):
+            continue
+        op_cell, field_cell = line.split(" | ")[:2]
+        keys = set(re.findall(r"`(\w+)`", re.sub(r"\([^)]*\)", "", field_cell)))
+        for op in re.findall(r"`(\w+)`", op_cell.split(" with ")[0]):
+            fields.setdefault(op, set()).update(keys)
+    return fields
+
+
+def test_docs_list_exactly_the_accepted_keys():
+    from lambdo_spark.plans.compiler import _COMMON_KEYS, _OPS
+
+    documented = _documented_table_fields()
+    assert sorted(documented) == sorted(_OPS)
+    for op, entry in _OPS.items():
+        assert documented[op] - _COMMON_KEYS == entry.accepted - _COMMON_KEYS, op

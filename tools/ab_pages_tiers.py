@@ -40,16 +40,9 @@ from lambdo_spark.rollup.tiers import (
 )
 from lambdo_spark.rollup.compress_stage import compress_tier
 from lambdo_spark.sources.pages import generate_pages
+from tools import load1
 
 PAGES_ROWS = int(os.environ.get("BENCH_PAGES_ROWS", "2000000"))
-
-
-def _load1() -> float:
-    try:
-        with open("/proc/loadavg") as f:
-            return float(f.read().split()[0])
-    except OSError:
-        return 0.0
 
 
 def run(df) -> int:
@@ -136,12 +129,12 @@ def main() -> None:
     counts = set()
     for rep in range(reps):
         for name, fn in variants.items():
-            while _load1() > 8.0:          # wait out load spikes
+            while load1() > 8.0:          # wait out load spikes
                 time.sleep(10)
             t0 = time.time()
             counts.add(fn(pages))
             walls[name].append(round(time.time() - t0, 3))
-            print(f"rep{rep} {name}: {walls[name][-1]}s load={_load1()}",
+            print(f"rep{rep} {name}: {walls[name][-1]}s load={load1()}",
                   file=sys.stderr)
     assert len(counts) == 1, f"variants disagree on row counts: {counts}"
     summary = {

@@ -26,6 +26,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from tools import load1  # noqa: E402
+
 # Parallelism pair evidencing the north rule's N -> 4N criterion.
 # Default 2 -> 8: a raw-CPU spin benchmark (cpu_ceiling) shows this
 # host delivers ~3.8-3.9x for 2->8 processes but only ~2.4-2.8x for
@@ -162,11 +164,6 @@ def subprocess_run(cores: int, rows: int) -> dict:
         capture_output=True, text=True, cwd=REPO, check=True,
     )
     return json.loads(out.stdout.strip().splitlines()[-1])
-
-
-def load1() -> float:
-    with open("/proc/loadavg") as f:
-        return float(f.read().split()[0])
 
 
 def wait_for_quiet(gate: float, timeout_s: float, poll_s: float = 20.0) -> bool:
