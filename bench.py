@@ -143,8 +143,8 @@ def main() -> None:
             # RECOMPUTED finalize but cannot prune through a cache) —
             # re-deriving the pruned aggregate from cached p1h is
             # cheaper than materializing the maps into the block store.
-            # (run_retention_pipeline keeps its persist: its tier
-            # WRITES consume the full map rows.)
+            # (run_retention_pipeline does the same: it persists only
+            # the partials it reads back from its store.)
             n += run(finalize(p1h))
             n += run(finalize(p1d))
             n += run(finalize(p30))

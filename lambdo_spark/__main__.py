@@ -48,60 +48,31 @@ def _run_workflow(args) -> int:
         spark.stop()
 
 
-def _run_retention(args) -> int:
+def _run_tier_build(args) -> int:
+    """``retention`` (a build into an empty root) and ``refresh`` (a
+    pages delta into a built root) differ only in the delta tag; both
+    print the refresh result."""
+    from lambdo_spark.rollup.incremental import refresh_from_pages
     from lambdo_spark.rollup.pipeline import run_retention_pipeline
     from lambdo_spark.sources.pages import generate_pages
 
-    spark = get_spark(app_name="lambdo_spark:retention", master=args.master)
+    spark = get_spark(app_name=f"lambdo_spark:{args.cmd}", master=args.master)
     try:
         if args.synthesize:
             pages = generate_pages(spark, args.synthesize, seed=args.seed)
         elif args.pages:
             pages = spark.read.parquet(args.pages)
         else:
-            print("retention: need --pages PATH or --synthesize N", file=sys.stderr)
+            print(f"{args.cmd}: need --pages PATH or --synthesize N", file=sys.stderr)
             return 2
-        result = run_retention_pipeline(
-            spark, pages, args.out, enforce_audit=not args.no_audit
-        )
-        print(
-            json.dumps(
-                {
-                    tier: {
-                        "snapshot_id": r["tier"]["snapshot_id"],
-                        "new_parts": len(r["tier"]["new_parts"]),
-                        **(
-                            {"compressed_snapshot_id": r["compressed"]["snapshot_id"]}
-                            if "compressed" in r
-                            else {}
-                        ),
-                    }
-                    for tier, r in result.items()
-                },
-                indent=1,
+        if args.cmd == "retention":
+            result = run_retention_pipeline(
+                spark, pages, args.out, enforce_audit=not args.no_audit
             )
-        )
-        return 0
-    finally:
-        spark.stop()
-
-
-def _run_refresh(args) -> int:
-    from lambdo_spark.rollup.incremental import refresh_from_pages
-    from lambdo_spark.sources.pages import generate_pages
-
-    spark = get_spark(app_name="lambdo_spark:refresh", master=args.master)
-    try:
-        if args.synthesize:
-            pages = generate_pages(spark, args.synthesize, seed=args.seed)
-        elif args.pages:
-            pages = spark.read.parquet(args.pages)
         else:
-            print("refresh: need --pages PATH or --synthesize N", file=sys.stderr)
-            return 2
-        result = refresh_from_pages(
-            spark, pages, args.out, delta_tag=args.delta_tag
-        )
+            result = refresh_from_pages(
+                spark, pages, args.out, delta_tag=args.delta_tag
+            )
         print(
             json.dumps(
                 {
@@ -109,9 +80,7 @@ def _run_refresh(args) -> int:
                     "affected_parts": {
                         k: len(v) for k, v in result["affected_parts"].items()
                     },
-                }
-                if "affected_parts" in result
-                else result,
+                },
                 indent=1,
             )
         )
@@ -460,25 +429,20 @@ def main(argv: list[str] | None = None) -> int:
     runp.add_argument("--show-rows", type=int, default=20)
 
     ret = sub.add_parser("retention", help="flagship tier rollup pipeline")
-    ret.add_argument("--pages", default=None, help="pages parquet path")
-    ret.add_argument("--synthesize", type=int, default=0,
-                     help="generate N deterministic pages instead of reading")
-    ret.add_argument("--seed", type=int, default=42)
-    ret.add_argument("--out", required=True, help="tier output root")
-    ret.add_argument("--no-audit", action="store_true")
-    ret.add_argument("--master", default=None)
-
     ref = sub.add_parser(
         "refresh",
         help="incremental tier refresh: merge a pages delta, rebuild "
         "only affected partitions (exactly-once per --delta-tag)",
     )
-    ref.add_argument("--pages", default=None, help="delta pages parquet path")
-    ref.add_argument("--synthesize", type=int, default=0)
-    ref.add_argument("--seed", type=int, default=42)
-    ref.add_argument("--out", required=True, help="tier root (shared with retention)")
+    for p in (ret, ref):
+        p.add_argument("--pages", default=None, help="pages parquet path")
+        p.add_argument("--synthesize", type=int, default=0,
+                       help="generate N deterministic pages instead of reading")
+        p.add_argument("--seed", type=int, default=42)
+        p.add_argument("--out", required=True, help="tier root")
+        p.add_argument("--master", default=None)
+    ret.add_argument("--no-audit", action="store_true")
     ref.add_argument("--delta-tag", default="", help="idempotency key for this delta")
-    ref.add_argument("--master", default=None)
 
     srf = sub.add_parser(
         "stream-refresh",
@@ -685,15 +649,13 @@ def main(argv: list[str] | None = None) -> int:
         return _run_plan(args)
     if args.cmd == "run":
         return _run_workflow(args)
-    if args.cmd == "refresh":
-        return _run_refresh(args)
     if args.cmd == "stream-refresh":
         return _run_stream_refresh(args)
     if args.cmd == "realtime":
         return _run_realtime(args)
     if args.cmd == "maintain":
         return _run_maintain(args)
-    return _run_retention(args)
+    return _run_tier_build(args)
 
 
 if __name__ == "__main__":

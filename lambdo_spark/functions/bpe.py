@@ -17,25 +17,19 @@ corpus-sized step and a vocab-sized loop:
   pairs via ``slice``+``arrays_zip`` (built-in JVM expressions, no
   HOF lambdas) → one map-side-combined groupBy(pair) weighted by word
   count → the argmax pair by (total desc, pair lexicographic) — a
-  deterministic, engine-independent tie-break. Applying the merge is
-  an Arrow-batched pandas kernel over the vocab rows. The frame is
-  re-persisted per round and checkpointed every 8 merges so plan
-  depth stays bounded (same discipline as
-  ``cluster.connected_components``).
-* ``mode="incremental"`` (default) maintains the pair-count table
-  ACROSS merges instead of re-aggregating every adjacent pair each
-  round: merging (a,b) only changes the pair statistics of words
-  whose symbol stream contains a followed by b, so the round filters
-  that affected sub-frame (a cached substring probe on a
-  NUL-delimited marker column — no explode), re-counts pairs for
-  those words before/after the merge, and folds the ±delta into the
-  persisted pair table with one vocab-pair-sized compaction. Per-merge
-  cost is O(|affected words| + |distinct pairs|) — it SHRINKS as
-  training converges (late merges touch few words) and never depends
-  on corpus size or total vocab symbol volume. The merge sequence is
-  byte-identical to the re-count form (``mode="recount"``, kept as
-  the cross-check path); still one driver argmax per merge — exact
-  BPE is inherently sequential in the rule order.
+  deterministic, engine-independent tie-break.
+* the pair-count table is maintained ACROSS merges instead of
+  re-aggregating every adjacent pair each round: merging (a,b) only
+  changes the pair statistics of words whose symbol stream contains a
+  followed by b, so the round filters that affected sub-frame (a
+  cached substring probe on a NUL-delimited marker column — no
+  explode), re-counts pairs for those words before/after the merge,
+  and folds the ±delta into the persisted pair table with one
+  vocab-pair-sized compaction. Per-merge cost is O(|affected words| +
+  |distinct pairs|) — it SHRINKS as training converges (late merges
+  touch few words) and never depends on corpus size or total vocab
+  symbol volume. Still one driver argmax per merge — exact BPE is
+  inherently sequential in the rule order.
 * encoding re-tokenizes documents and encodes each DISTINCT word once
   per Arrow batch with the standard merge-rank greedy loop, so the
   per-batch cost is O(distinct words), not O(tokens).
@@ -64,27 +58,6 @@ def word_counts(
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("count"))
     )
-
-
-def _merge_pair_kernel(a: str, b: str):
-    merged = a + b
-
-    @F.pandas_udf("array<string>")
-    def _apply(syms: pd.Series) -> pd.Series:
-        def one(seq):
-            out, i, n = [], 0, len(seq)
-            while i < n:
-                if i + 1 < n and seq[i] == a and seq[i + 1] == b:
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(seq[i])
-                    i += 1
-            return out
-
-        return syms.map(one)
-
-    return _apply
 
 
 _SEP = "\x00"  # cannot occur in [a-z0-9]+ symbols or </w>
@@ -126,21 +99,22 @@ def train_bpe(
     num_merges: int,
     text_col: str = "text",
     min_count: int = 1,
-    checkpoint_every: int = 8,
-    mode: str = "incremental",
 ) -> list[tuple[str, str]]:
     """Learn ``num_merges`` merge rules. Returns them in rank order.
 
     Stops early when no pair occurs twice (or at all). ``min_count``
     prunes hapax words from the statistics (standard practice; the
-    default keeps everything). ``mode="incremental"`` maintains pair
-    counts as ±deltas across merges (per-merge cost ∝ affected words,
-    production-vocab viable); ``mode="recount"`` re-aggregates every
-    pair each round (the simpler cross-check form). Both produce the
-    identical merge list (pinned).
+    default keeps everything). Pair counts are maintained as ±deltas
+    across merges, so per-merge cost is ∝ affected words.
+
+    Both evolving frames are eagerly ``localCheckpoint``-ed EVERY
+    round: the vocab plan references itself twice per round
+    (affected ∪ unaffected) and the pair plan three times (pc ∪ +delta
+    ∪ −delta), so an un-truncated logical plan grows EXPONENTIALLY in
+    rounds — at merge ~30 Catalyst spends longer stringifying the tree
+    than running it. Lineage truncation per round keeps every plan
+    O(1) deep; the checkpoint write is vocab-sized, never corpus-sized.
     """
-    if mode not in ("incremental", "recount"):
-        raise ValueError(f"unknown train_bpe mode {mode!r}")
     wc = word_counts(docs, text_col)
     if min_count > 1:
         wc = wc.where(F.col("count") >= int(min_count))
@@ -148,63 +122,6 @@ def train_bpe(
         "count",
         F.concat(F.split("word", ""), F.array(F.lit(END))).alias("syms"),
     )
-    if mode == "incremental":
-        return _train_incremental(base, int(num_merges), int(checkpoint_every))
-    return _train_recount(base, int(num_merges), int(checkpoint_every))
-
-
-def _train_recount(
-    base: DataFrame, num_merges: int, checkpoint_every: int
-) -> list[tuple[str, str]]:
-    syms = base.persist()
-    syms.count()  # materialize before the loop
-    merges: list[tuple[str, str]] = []
-    try:
-        for i in range(num_merges):
-            best = (
-                _pair_counts(syms)
-                .orderBy(F.desc("total"), "p0", "p1")
-                .limit(1)
-                .collect()
-            )
-            if not best or int(best[0]["total"]) < 2:
-                break
-            a, b = best[0]["p0"], best[0]["p1"]
-            merges.append((a, b))
-            nxt = syms.withColumn(
-                "syms", _merge_pair_kernel(a, b)(F.col("syms"))
-            )
-            if (i + 1) % checkpoint_every == 0:
-                nxt = nxt.localCheckpoint(eager=True)
-            else:
-                nxt = nxt.persist()
-                nxt.count()
-            syms.unpersist()
-            syms = nxt
-    finally:
-        syms.unpersist()
-    return merges
-
-
-def _train_incremental(
-    base: DataFrame, num_merges: int, checkpoint_every: int
-) -> list[tuple[str, str]]:
-    """Delta-maintained pair statistics: see module doc. Per round —
-    one cached-scan filter of the vocab table, the merge kernel over
-    AFFECTED words only, a pair aggregation over those words
-    before/after, and one |distinct pairs|-sized compaction. No full
-    pair re-count after the initial one.
-
-    Both evolving frames are eagerly ``localCheckpoint``-ed EVERY
-    round (``checkpoint_every`` is accepted for signature parity but
-    the incremental path ignores it): the vocab plan references itself
-    twice per round (affected ∪ unaffected) and the pair plan three
-    times (pc ∪ +delta ∪ −delta), so an un-truncated logical plan
-    grows EXPONENTIALLY in rounds — at merge ~30 Catalyst spends
-    longer stringifying the tree than running it. Lineage truncation
-    per round keeps every plan O(1) deep; the checkpoint write is
-    vocab-sized, never corpus-sized."""
-    del checkpoint_every
     syms = _with_marker(base).localCheckpoint(eager=True)
     pc = _pair_counts(syms).localCheckpoint(eager=True)
     # union doubles the RDD partition count (affected ∪ unaffected
@@ -214,7 +131,7 @@ def _train_incremental(
     # groupBy re-shuffles to spark.sql.shuffle.partitions every round.
     n_parts = max(1, syms.rdd.getNumPartitions())
     merges: list[tuple[str, str]] = []
-    for _ in range(num_merges):
+    for _ in range(int(num_merges)):
         best = pc.orderBy(F.desc("total"), "p0", "p1").limit(1).collect()
         if not best or int(best[0]["total"]) < 2:
             break

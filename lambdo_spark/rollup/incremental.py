@@ -1,7 +1,6 @@
 """Incremental tier refresh — continuous-aggregate maintenance.
 
-``run_retention_pipeline`` recomputes every tier from the full pages
-table; at 10^12 rows a daily crawl delta is ~0.1% of that, so the
+At 10^12 pages a daily crawl delta is ~0.1% of the table, so the
 steady-state operation must touch only what changed. This module
 maintains the tiers incrementally and EXACTLY, leaning on the same
 algebra that makes downsampling exact (SURVEY §7.3: partial+final —
@@ -49,18 +48,6 @@ from lambdo_spark.sources.iceberg_layout import IcebergLayoutTable, with_part
 
 PART_SECONDS = 7 * 86400  # weekly partitions, matching with_part()
 
-PARTIAL_KEYS = ["url", "bucket_s", "lang"]
-
-
-def _merge_partials(a: DataFrame) -> DataFrame:
-    """Algebraic merge of partial rows sharing (url, bucket, lang)."""
-    return a.groupBy(*PARTIAL_KEYS).agg(
-        F.sum("n_points").alias("n_points"),
-        F.sum("sum_len").alias("sum_len"),
-        F.min("min_ts").alias("min_ts"),
-        F.max("max_ts").alias("max_ts"),
-    )
-
 
 def _partials_store(root: str) -> IcebergLayoutTable:
     return IcebergLayoutTable(os.path.join(root, "partials_1h"))
@@ -68,15 +55,6 @@ def _partials_store(root: str) -> IcebergLayoutTable:
 
 def _tier_table(root: str, tier_name: str) -> IcebergLayoutTable:
     return IcebergLayoutTable(os.path.join(root, f"tier_{tier_name}"))
-
-
-def _read_store_parts(
-    spark: SparkSession, store: IcebergLayoutTable, parts: set[str]
-) -> DataFrame | None:
-    """Committed snapshot versions of the requested partitions only —
-    via the store's MVCC path list, so stale rewritten versions are
-    never double-read."""
-    return store.read_parts(spark, parts)
 
 
 def _parts_containing_overlapping_buckets(
@@ -182,11 +160,11 @@ def _rebuild_tiers(
         plans[tier_name] = (tsec, parts_to_rewrite, need_weeks)
     # ONE store scan for all three tiers: the union of the need sets
     # (in practice the 30d superset), persisted because every tier's
-    # rebuild consumes it — same reason pipeline.py caches p1h; the
-    # per-tier need filter is a partition-column predicate on the
-    # cached frame, so no tier reads weeks it doesn't need twice
+    # rebuild consumes it (without the cache each tier re-reads the
+    # store); the per-tier need filter is a partition-column predicate
+    # on the cached frame, so no tier reads weeks it doesn't need twice
     union_weeks = set().union(*(nw for _, _, nw in plans.values()))
-    src_all = _read_store_parts(spark, store, union_weeks)
+    src_all = store.read_parts(spark, union_weeks)
     if src_all is None:
         return
     src_all = src_all.persist()
@@ -281,8 +259,8 @@ def refresh_from_pages(
         # refuse to refresh a root whose tiers exist without a partials
         # store: rebuilding from a delta-only store would overwrite
         # committed partitions with delta-only aggregates (data loss).
-        # run_retention_pipeline persists the store; legacy roots need
-        # a one-time re-run of retention to bootstrap it.
+        # such a root predates the store; rebuild it into an empty
+        # root with run_retention_pipeline.
         existing_tiers = [
             t for t in TIER_SECONDS
             if os.path.exists(
@@ -293,7 +271,7 @@ def refresh_from_pages(
             raise ValueError(
                 f"tier tables {existing_tiers} exist under {root} but no "
                 "partials_1h store does — refresh would destroy base rows. "
-                "Re-run run_retention_pipeline once to bootstrap the store."
+                "Rebuild it into an empty root with run_retention_pipeline."
             )
     prev = prev or {}
     applied = list(prev.get("applied_deltas", []))
@@ -335,11 +313,19 @@ def refresh_from_pages(
         #    (only the weeks the DELTA touches get rewritten — pending
         #    weeks are already merged in the store)
         if delta_parts:
-            existing = _read_store_parts(spark, store, delta_parts)
-            merged = delta.drop("part")
+            # delta partials are unique per key already; only weeks the
+            # store holds need the algebraic merge (a bulk build into
+            # an empty root writes the delta as is)
+            merged = delta
+            existing = store.read_parts(spark, delta_parts)
             if existing is not None:
-                merged = merged.unionByName(existing.drop("part"))
-            merged = with_part(_merge_partials(merged), part_seconds=ps)
+                merged = with_part(
+                    downsample(
+                        delta.drop("part").unionByName(existing.drop("part")),
+                        TIER_SECONDS["1h"],
+                    ),
+                    part_seconds=ps,
+                )
             snap = store.overwrite_parts(
                 merged,
                 sorted(delta_parts),

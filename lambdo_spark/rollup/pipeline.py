@@ -1,8 +1,25 @@
 """End-to-end retention pipeline (the north_rule flagship).
 
-pages scan → hash audit → 1h partials → 1d → 30d (partial+final) →
-finalize per tier → gap-fill → Gorilla/delta-of-delta compression →
-checkpointed Iceberg-layout writes with per-partition lineage.
+pages scan → hash audit → 1h partials store → 1h/1d/30d tiers
+(partial+final) → Gorilla/delta-of-delta compression, each an
+Iceberg-layout table with per-partition lineage. Gap fill is a
+read-time transform (``read_finalized_tier(..., gapfill=True)``).
+
+The build is a refresh into an empty root: one
+``refresh_from_pages`` call under the fixed delta tag
+``RETENTION_TAG``, so a root has one writer and one resume protocol.
+Both live in the partials store's snapshot:
+
+* the merge commit records ``RETENTION_TAG`` in the store's
+  ``applied_deltas`` ledger, so re-running a completed build merges
+  nothing and returns ``{"skipped": RETENTION_TAG, ...}``;
+* the same commit sets a ``pending`` marker naming the affected
+  partitions. A build killed after it (mid tier or compression write)
+  is finished by the re-run, which rebuilds those partitions from the
+  committed store and then clears the marker;
+* a build killed before the merge commit left nothing committed
+  (orphaned data files are invisible to readers and overwritten), so
+  the re-run starts over.
 
 The reference analog is a whole lambdo workflow JSON (e.g.
 /root/reference/examples/example5.json: one table, one family of
@@ -16,15 +33,15 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lambdo_spark.rollup.audit import audit_summary
-from lambdo_spark.rollup.compress_stage import compress_tier
-from lambdo_spark.rollup.tiers import (
-    TIER_SECONDS,
-    downsample,
-    finalize,
-    partials_from_pages,
-)
-from lambdo_spark.sources.iceberg_layout import IcebergLayoutTable, with_part
+from lambdo_spark.rollup.incremental import refresh_from_pages
+from lambdo_spark.sources.iceberg_layout import IcebergLayoutTable
+
+# Module attributes perfbench/spans.py wraps by name when it traces a
+# build; the build itself reaches both through refresh_from_pages.
+from lambdo_spark.rollup.audit import audit_summary  # noqa: F401
+from lambdo_spark.rollup.compress_stage import compress_tier  # noqa: F401
+
+RETENTION_TAG = "retention"
 
 
 def run_retention_pipeline(
@@ -32,83 +49,23 @@ def run_retention_pipeline(
     pages: DataFrame,
     out_root: str,
     enforce_audit: bool = True,
-    compress_value_col: str = "mean_len",
 ) -> dict:
-    """Run all tiers; returns {tier: snapshot dict} plus audit stats.
+    """Build every table of ``out_root`` from ``pages``; returns the
+    ``refresh_from_pages`` result (see the module doc for resume).
 
-    Each tier write is independently resumable: killing the job between
-    tiers (or mid-write) and re-calling this function recomputes only
-    partitions missing from each tier's committed snapshot.
-
-    The 1h **partials store** is persisted first — it is the durable
-    unit `refresh_from_pages` merges deltas into and rebuilds tiers
-    from, so retention and refresh can safely share one ``out_root``.
-    Tier tables hold only REAL rows (no materialized gap rows — gap
-    fill is a read-time transform, ``read_finalized_tier(...,
-    gapfill=True)``): identical shape to the refresh write path, and
-    the only form maintainable incrementally.
+    Refuses a root whose partials store already holds data from
+    anything but this build: merging ``pages`` into it would count
+    every page the store already has twice. Add pages to such a root
+    with ``refresh_from_pages`` and a fresh delta tag.
     """
-    if enforce_audit:
-        a = audit_summary(pages).collect()[0]
-        if a["violations"]:
-            raise ValueError(
-                f"hash audit failed: {a['violations']}/{a['total_rows']} rows "
-                "have non-byte-identical extracted text"
-            )
-
-    # Persist the partial chain: p1h is consumed by SIX downstream
-    # plans (the store write, 1h finalize×2-writes + the 1d downsample,
-    # which feeds 1d's and 30d's); without caching, every tier write
-    # re-runs the full pages scan — one pass vs ~nine at 100 TB.
-    # Partials are orders of magnitude smaller than raw pages
-    # (pre-aggregated per url×bucket×lang) and MEMORY_AND_DISK spills
-    # rather than OOMs.
-    p1h = partials_from_pages(pages, TIER_SECONDS["1h"]).persist()
-    partials = {"1h": p1h}
-    partials["1d"] = downsample(p1h, TIER_SECONDS["1d"]).persist()
-    partials["30d"] = downsample(partials["1d"], TIER_SECONDS["30d"])
-
-    result: dict = {}
-    try:
-        store = IcebergLayoutTable(os.path.join(out_root, "partials_1h"))
-        result["partials_1h"] = {
-            "tier": store.write_tier(
-                # spec-aware: a root whose partitioning was evolved
-                # (evolve_partitioning) keeps its granularity
-                store.with_part(p1h), input_snapshot="pages@partials_1h"
-            )
-        }
-        for tier_name, part in partials.items():
-            # The finalized tier feeds the tier write (which consumes
-            # the full rows, lang_hist map included) and the
-            # compression write (which reads ONLY scalar columns).
-            # Deliberately NOT cached: persisting map-typed rows pays
-            # a columnar cache-store that only the compression read
-            # would reuse — and Catalyst column-prunes a RECOMPUTED
-            # finalize down to the scalar aggregate (no collect_list)
-            # but cannot prune through a cache. Re-deriving the pruned
-            # aggregate from the persisted partials is cheaper than
-            # materializing the maps twice.
-            tier_df = finalize(part)
-            table = IcebergLayoutTable(
-                os.path.join(out_root, f"tier_{tier_name}")
-            )
-            snap = table.write_tier(
-                table.with_part(tier_df), input_snapshot=f"pages@{tier_name}"
-            )
-            comp = compress_tier(
-                finalize(part), value_col=compress_value_col,
-                tier_seconds=TIER_SECONDS[tier_name],
-            )
-            ctable = IcebergLayoutTable(
-                os.path.join(out_root, f"compressed_{tier_name}")
-            )
-            csnap = ctable.write_tier(
-                comp.withColumn("part", comp["chunk"]),
-                input_snapshot=f"tier_{tier_name}@{snap['snapshot_id']}",
-            )
-            result[tier_name] = {"tier": snap, "compressed": csnap}
-    finally:
-        p1h.unpersist()
-        partials["1d"].unpersist()
-    return result
+    snap = IcebergLayoutTable(os.path.join(out_root, "partials_1h")).current_snapshot()
+    if snap and snap["parts"] and RETENTION_TAG not in snap.get("applied_deltas", []):
+        raise ValueError(
+            f"the partials store under {out_root} already holds data that no "
+            "retention build wrote; a retention build would double count it. "
+            "Use refresh_from_pages(spark, pages, root, delta_tag=...) to add "
+            "pages to an existing root."
+        )
+    return refresh_from_pages(
+        spark, pages, out_root, delta_tag=RETENTION_TAG, enforce_audit=enforce_audit
+    )

@@ -27,6 +27,13 @@ propagation over an all-null prefix. A null-valued bucket in the
 seasonal detector gets a null z-score and a false flag and does not
 enter the baseline ring buffer.
 
+The seasonal detector's state holds the phase's newest bucket next to
+its ring buffer, so a null bucket's advance of the ``late`` baseline
+survives the micro-batch boundary. Checkpoints written before that
+field existed hold a two-field state; Spark refuses to restart from
+them (``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``), so such a query
+needs a new checkpoint location.
+
 ``state_ttl_s`` (all three constructors): optional processing-time
 idle eviction — a key silent for that long is dropped from the state
 store and re-seeds as a cold start on its next arrival (recursion and
@@ -166,11 +173,13 @@ ANOMALY_SCHEMA = StructType(
     ]
 )
 
-# ring buffer of the last `lookback` same-phase points, bucket-sorted
+# ring buffer of the last `lookback` same-phase points, bucket-sorted,
+# and the newest bucket seen (null-valued buckets advance it too)
 ANOMALY_STATE = StructType(
     [
         StructField("buckets", ArrayType(LongType())),
         StructField("values", ArrayType(LongType())),
+        StructField("newest", LongType()),
     ]
 )
 
@@ -194,10 +203,10 @@ def _make_seasonal(lookback: int, min_prior: int, threshold: float,
             [bucket_col, NULL_FLAG, value_col], kind="mergesort"
         )
         if state.exists:
-            bufb, bufv = [list(x) for x in state.get]
+            bufb, bufv, newest = state.get
+            bufb, bufv = list(bufb), list(bufv)
         else:
-            bufb, bufv = [], []
-        newest = bufb[-1] if bufb else None
+            bufb, bufv, newest = [], [], None
         out = {c: [] for c in ("key", "bucket_s", "value", "baseline_mean",
                                "n_prior", "zscore", "is_anomaly", "late")}
         for b, is_null, v in zip(
@@ -233,11 +242,10 @@ def _make_seasonal(lookback: int, min_prior: int, threshold: float,
                 bufv.insert(i, int(v))
                 if len(bufb) > lookback:
                     bufb, bufv = bufb[-lookback:], bufv[-lookback:]
-                newest = bufb[-1]
-            elif newest is None or b > newest:
-                # null rows still advance the late-flag baseline
+            if newest is None or b > newest:
+                # null rows advance the late-flag baseline too
                 newest = b
-        state.update((bufb, bufv))
+        state.update((bufb, bufv, newest))
         if ttl_ms is not None:
             state.setTimeoutDuration(ttl_ms)
         out["value"] = pd.array(out["value"], dtype="Int64")

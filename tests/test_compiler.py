@@ -1762,14 +1762,14 @@ _PINS = {
         "semdedup.semdedup(emb=src, tau=1.0, k=16, iters=0, id_col='vec_id', vec_col='embedding', method='matmul', n_super=None, probes=1)",
     ],
     'bpe': [
-        "bpe.train_bpe(docs=src, num_merges=5, text_col='x', min_count=2, checkpoint_every=8, mode='incremental')",
+        "bpe.train_bpe(docs=src, num_merges=5, text_col='x', min_count=2)",
         "bpe.bpe_encode(docs=src, merges=bpe.train_bpe(), id_col='d', text_col='x', output='bpe_tokens', word_re='[a-z0-9]+')",
     ],
     'bpe/merges': [
         "bpe.bpe_encode(docs=src, merges=[('a', 'b')], id_col='d', text_col='x', output='bpe_tokens', word_re='[a-z0-9]+')",
     ],
     'bpe/min': [
-        "bpe.train_bpe(docs=src, num_merges=5, text_col='text', min_count=1, checkpoint_every=8, mode='incremental')",
+        "bpe.train_bpe(docs=src, num_merges=5, text_col='text', min_count=1)",
         "bpe.bpe_encode(docs=src, merges=bpe.train_bpe(), id_col='doc_id', text_col='text', output='bpe_tokens', word_re='[a-z0-9]+')",
     ],
     'sink': [

@@ -92,22 +92,33 @@ def test_sigkill_midrun_then_resume(spark, tmp_path):
     else:
         killed_midrun = False  # tiny host raced it to completion — still valid
 
-    # resume in THIS session: must complete and match a clean run
-    from lambdo_spark.rollup.pipeline import run_retention_pipeline
+    # resume in THIS session: must complete and match a clean build
+    from lambdo_spark.rollup.compress_stage import compress_tier
+    from lambdo_spark.rollup.incremental import read_finalized_tier
+    from lambdo_spark.rollup.pipeline import RETENTION_TAG, run_retention_pipeline
+    from lambdo_spark.rollup.tiers import TIER_SECONDS, rollup_all_tiers
 
     pages = generate_pages(spark, 60000, seed=7)
-    result = run_retention_pipeline(spark, pages, out, enforce_audit=False)
-    assert set(result) == {"partials_1h", "1h", "1d", "30d"}
+    run_retention_pipeline(spark, pages, out, enforce_audit=False)
+    store = IcebergLayoutTable(os.path.join(out, "partials_1h")).current_snapshot()
+    assert store["applied_deltas"] == [RETENTION_TAG]
+    assert store.get("pending") is None
 
-    expected_1h = finalize(partials_from_pages(pages, 3600)).count()
-    got = IcebergLayoutTable(os.path.join(out, "tier_1h")).read_tier(spark)
-    # raw tier rows only (gap fill is read-time); every (url,bucket) once
-    assert got.select("url", "bucket_s").distinct().count() == got.count()
-    assert got.where(F.col("n_points") > 0).count() == expected_1h
-    assert got.count() == expected_1h
+    full = rollup_all_tiers(pages)
+    for tier_name, tsec in TIER_SECONDS.items():
+        got = read_finalized_tier(spark, out, tier_name)
+        # raw tier rows only (gap fill is read-time); every (url,bucket) once
+        assert got.select("url", "bucket_s").distinct().count() == got.count()
+        exp = full[tier_name]
+        for a, b in ((got, exp), (exp, got)):
+            assert a.drop("lang_hist").exceptAll(b.drop("lang_hist")).count() == 0
+        comp = IcebergLayoutTable(os.path.join(out, f"compressed_{tier_name}"))
+        got_c = comp.read_tier(spark).drop("part")
+        exp_c = compress_tier(exp, value_col="mean_len", tier_seconds=tsec)
+        assert got_c.exceptAll(exp_c).count() == exp_c.exceptAll(got_c).count() == 0
     # a second resume is a no-op
     again = run_retention_pipeline(spark, pages, out, enforce_audit=False)
-    assert all(v["tier"]["new_parts"] == [] for v in again.values()), (
+    assert again == {"affected_parts": {}, "snapshots": {}, "skipped": RETENTION_TAG}, (
         killed_midrun,
         again,
     )

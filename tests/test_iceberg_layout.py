@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lambdo_spark.rollup.compress_stage import compress_tier
-from lambdo_spark.rollup.pipeline import run_retention_pipeline
+from lambdo_spark.rollup.pipeline import RETENTION_TAG, run_retention_pipeline
 from lambdo_spark.rollup.tiers import finalize, partials_from_pages
 from lambdo_spark.sources.iceberg_layout import IcebergLayoutTable, with_part
 from lambdo_spark.sources.pages import generate_pages
@@ -100,13 +100,20 @@ def test_full_pipeline_runs_and_resumes(spark, tmp_path):
     pages = generate_pages(spark, 600, seed=11)
     out = str(tmp_path / "pipe")
     r1 = run_retention_pipeline(spark, pages, out)
-    assert set(r1) == {"partials_1h", "1h", "1d", "30d"}
-    for tier in r1.values():
-        assert tier["tier"]["parts"]
-    # re-run is a no-op resume
+    tiers = ("1h", "1d", "30d")
+    assert set(r1["snapshots"]) == {
+        "partials_1h", *tiers, *(f"compressed_{t}" for t in tiers)
+    }
+    for snap in r1["snapshots"].values():
+        assert snap["parts"]
+    # re-run is a no-op resume: the store's tag ledger skips it and no
+    # table gets a new snapshot
+    dirs = ["partials_1h", *(f"{k}_{t}" for k in ("tier", "compressed") for t in tiers)]
+    before = [IcebergLayoutTable(os.path.join(out, d)).current_snapshot() for d in dirs]
     r2 = run_retention_pipeline(spark, pages, out)
-    for tier in r2.values():
-        assert tier["tier"]["new_parts"] == []
+    assert r2 == {"affected_parts": {}, "snapshots": {}, "skipped": RETENTION_TAG}
+    after = [IcebergLayoutTable(os.path.join(out, d)).current_snapshot() for d in dirs]
+    assert after == before
     assert os.path.exists(os.path.join(out, "tier_30d", "metadata", "CURRENT"))
     # the durable partials store exists — refresh can share this root
     assert os.path.exists(os.path.join(out, "partials_1h", "metadata", "CURRENT"))

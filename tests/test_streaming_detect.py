@@ -194,3 +194,36 @@ def test_streaming_cusum_exact_beyond_2_pow_53(spark, tmp_path):
     }
     assert any(v is not None and v % 2 for v, _, _ in exp.values())  # not float-exact
     assert got == exp
+
+
+def test_streaming_anomaly_late_flag_survives_a_trailing_null(spark, tmp_path):
+    """A null-valued bucket advances the phase's newest bucket, and the
+    next micro-batch must still know it: an older bucket arriving there
+    is late even though the null never entered the baseline buffer."""
+    from lambdo_spark.streaming.detect import streaming_anomaly
+
+    day = 86400
+    schema = "k string, bucket_s long, v long"
+    batches = {
+        "f1": [("u", 0, 100), ("u", day, 101), ("u", 3 * day, None)],
+        "f2": [("u", 2 * day, 102)],
+    }
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    staging = str(tmp_path / "staging")
+    for name, rows in batches.items():
+        f = _land(spark.createDataFrame(rows, schema).coalesce(1), staging, src, name)
+    stream = (
+        spark.readStream.schema(spark.read.parquet(f).schema)
+        .option("maxFilesPerTrigger", 1).parquet(src)
+    )
+    q = (
+        streaming_anomaly(stream, period_s=day, key_col="k", bucket_col="bucket_s",
+                          value_col="v")
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+    )
+    q.awaitTermination(180)
+    q.stop()
+
+    got = {r["bucket_s"]: r["late"] for r in spark.read.parquet(out).collect()}
+    assert got == {0: False, day: False, 3 * day: False, 2 * day: True}

@@ -1,10 +1,10 @@
 """BPE merge-training scaling: per-merge cost must track the
 AFFECTED-WORD volume (which shrinks as training converges), never the
-corpus. Runs ``train_bpe`` in incremental mode for ``--merges`` rules
-over the sf documents corpus (plus a deterministic synthetic pad so
-the vocab is big enough to sustain 1k+ productive merges), printing
-windowed per-merge wall times and a recount-mode comparison at a
-small merge count.
+corpus. Runs an instrumented copy of ``train_bpe`` for ``--merges``
+rules over the sf documents corpus (plus a deterministic synthetic pad
+so the vocab is big enough to sustain 1k+ productive merges), printing
+windowed per-merge wall times; the public ``train_bpe`` at a small
+merge count must give the copy's first rules.
 
 Usage: python tools/bench_bpe_merges.py [--merges 1000] [--sf DIR]
 """
@@ -52,8 +52,8 @@ def main() -> None:
     ap.add_argument("--merges", type=int, default=1000)
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
-    ap.add_argument("--recount-merges", type=int, default=8,
-                    help="merge count for the recount-mode comparison")
+    ap.add_argument("--check-merges", type=int, default=8,
+                    help="merge count of the public train_bpe check")
     args = ap.parse_args()
 
     spark = get_spark(app_name="bench_bpe_merges", shuffle_partitions=8)
@@ -63,21 +63,17 @@ def main() -> None:
 
     docs = corpus(spark, args.sf)
 
-    # --- recount-mode reference at a small merge count
+    # --- the public call path at a small merge count
     t0 = time.time()
-    rec = bpe.train_bpe(docs, args.recount_merges, mode="recount")
-    recount_wall = time.time() - t0
-    t0 = time.time()
-    inc_small = bpe.train_bpe(docs, args.recount_merges, mode="incremental")
+    inc_small = bpe.train_bpe(docs, args.check_merges)
     inc_small_wall = time.time() - t0
-    assert rec == inc_small, "mode mismatch at small merge count"
 
-    # --- incremental at full depth, instrumented per merge (inline
-    # copy of _train_incremental with a wall clock around each round)
+    # --- full depth, instrumented per merge (inline copy of
+    # train_bpe with a wall clock around each round)
     walls: list[float] = []
     t_all = time.time()
 
-    def timed_train(base, num_merges, checkpoint_every):
+    def timed_train(base, num_merges):
         # inline copy of the public call path with per-merge timing
         from pyspark.sql import functions as F
 
@@ -142,10 +138,9 @@ def main() -> None:
             ),
         ),
         args.merges,
-        8,
     )
     total_wall = time.time() - t_all
-    assert inc[: len(rec)] == rec, "incremental diverged from recount prefix"
+    assert inc[: len(inc_small)] == inc_small, "instrumented copy diverged from train_bpe"
 
     def window(lo, hi):
         w = walls[lo:hi]
@@ -157,9 +152,8 @@ def main() -> None:
         "sf": args.sf,
         "merges_completed": n,
         "total_wall_s": round(total_wall, 1),
-        "recount_wall_s_at_small": round(recount_wall, 1),
         "incremental_wall_s_at_small": round(inc_small_wall, 1),
-        "small_merges": args.recount_merges,
+        "small_merges": args.check_merges,
         "per_merge_s_first100": window(0, 100),
         "per_merge_s_mid": window(n // 2 - 50, n // 2 + 50),
         "per_merge_s_last100": window(max(0, n - 100), n),

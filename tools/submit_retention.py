@@ -58,8 +58,10 @@ def main() -> int:
     print(
         json.dumps(
             {
-                t: {"snapshot": r["tier"]["snapshot_id"], "new_parts": len(r["tier"]["new_parts"])}
-                for t, r in result.items()
+                "skipped": result.get("skipped"),
+                "affected_parts": {
+                    k: len(v) for k, v in result["affected_parts"].items()
+                },
             }
         )
     )
