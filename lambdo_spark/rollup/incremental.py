@@ -94,10 +94,9 @@ def _recompress_chunks(
             chunks.add(c)
             c += 1
     tier_table = _tier_table(root, tier_name)
-    versions = tier_table.part_versions()
     need = {
-        p: v
-        for p, v in versions.items()
+        p
+        for p in tier_table.committed_parts()
         if any(
             int(p) < (c + 1) * span and int(p) + ps > c * span
             for c in chunks
@@ -105,7 +104,7 @@ def _recompress_chunks(
     }
     if not need:
         return None
-    src = tier_table._read_versions(spark, need).drop("snapv", "part")
+    src = tier_table.read_parts(spark, need).drop("part")
     src = src.where(
         F.floor(F.col("bucket_s") / F.lit(span)).isin(sorted(chunks))
     )
@@ -244,15 +243,6 @@ def refresh_from_pages(
 
     Returns {"affected_parts": {...}, "snapshots": {...}} per tier.
     """
-    if enforce_audit:
-        from lambdo_spark.rollup.audit import audit_summary
-
-        a = audit_summary(new_pages).collect()[0]
-        if a["violations"]:
-            raise ValueError(
-                f"hash audit failed on delta: {a['violations']}/"
-                f"{a['total_rows']} rows have non-byte-identical text"
-            )
     store = _partials_store(root)
     prev = store.current_snapshot()
     if prev is None:
@@ -295,6 +285,17 @@ def refresh_from_pages(
             _clear_pending(store, pending["tag"], expect=pending)
         return result
 
+    # the audit gates only pages that will be merged: a replayed tag
+    # returned above without scanning them
+    if enforce_audit:
+        from lambdo_spark.rollup.audit import audit_summary
+
+        a = audit_summary(new_pages).collect()[0]
+        if a["violations"]:
+            raise ValueError(
+                f"hash audit failed on delta: {a['violations']}/"
+                f"{a['total_rows']} rows have non-byte-identical text"
+            )
     ps = store.part_spec()["part_seconds"]
     _check_uniform_spec(root, ps)
     delta = with_part(

@@ -519,11 +519,9 @@ class IcebergLayoutTable:
                 # merge's equality deletes assume the partition's row
                 # set it read; another add/delete landing in between
                 # would be silently clobbered for shared keys
-                for p, (eadds, edels) in expect_row_state.items():
-                    if (
-                        prev.get("adds", {}).get(p, []) != eadds
-                        or (prev.get("deletes") or {}).get(p, []) != edels
-                    ):
+                now = self._row_state(prev, expect_row_state)
+                for p, state in expect_row_state.items():
+                    if now[p] != state:
                         raise ConcurrentWriteConflict(
                             f"row state of partition {p!r} changed since "
                             f"base snapshot (concurrent merge/delete)"
@@ -983,13 +981,7 @@ class IcebergLayoutTable:
             base = {
                 p: base_snapshot.get("parts", {}).get(p) for p in parts
             }
-            row_state = {
-                p: (
-                    base_snapshot.get("adds", {}).get(p, []),
-                    (base_snapshot.get("deletes") or {}).get(p, []),
-                )
-                for p in parts
-            }
+            row_state = self._row_state(base_snapshot, parts)
         else:
             base = self.part_versions()
             row_state = None
@@ -1160,13 +1152,11 @@ class IcebergLayoutTable:
     def _rel_file_expr():
         return F.substring_index(F.col("_metadata.file_path"), "/data/", -1)
 
-    def _delete_descs(self, snap: dict | None, parts) -> list[dict]:
-        """Flatten the snapshot's merge-on-read delete descriptors for
-        the given partitions (empty list when none exist)."""
-        if not snap:
-            return []
+    @staticmethod
+    def _delete_descs(snap: dict, parts: list[str]) -> list[dict]:
+        """The snapshot's merge-on-read delete descriptors for ``parts``."""
+        want = set(parts)
         dels = snap.get("deletes") or {}
-        want = {str(p) for p in parts}
         return [d for p, ds in dels.items() if p in want for d in ds]
 
     @staticmethod
@@ -1520,28 +1510,52 @@ class IcebergLayoutTable:
             "part_col": part_col,
         }
 
+    def _current_rows(
+        self,
+        spark: SparkSession,
+        snap: dict,
+        parts=None,
+        schema_of: dict | None = None,
+        with_pos: bool = False,
+        plan: dict | None = None,
+    ) -> DataFrame:
+        """The current rows of ``parts`` (default: every partition) in
+        ``snap``: each base version plus its merge-on-read ``adds``,
+        with the snapshot's delete files applied, normalized to the
+        schema of ``schema_of`` (default: ``snap`` itself, so time
+        travel to a pre-rename snapshot sees the old names). ``plan``
+        (a :meth:`plan_files` result) scans its surviving files instead
+        of whole versions. The one reader behind DML, compaction,
+        :meth:`read_tier`, :meth:`read_parts` and :meth:`read_changes`."""
+        parts = list(snap["parts"]) if parts is None else [str(p) for p in parts]
+        sid = (schema_of or snap).get("schema_id")
+        pairs, files = self._version_pairs(snap, parts), None
+        if plan is not None:
+            pairs, files = plan["legacy_dirs"], plan["files_by_schema"]
+        return self._read_versions(
+            spark, pairs, snap.get("part_col", "part"),
+            target_schema=self.schema(sid) if sid is not None else None,
+            deletes=self._delete_descs(snap, parts), with_pos=with_pos,
+            files=files,
+        ).drop("snapv")
+
     def read_parts(
         self,
         spark: SparkSession,
         parts,
         snapshot_id: int | None = None,
     ) -> DataFrame | None:
-        """Public pruned-partition read: exactly the requested
-        partitions at their committed snapshot versions (MVCC — a
-        stale rewritten version is never double-read), None if none of
-        the requested partitions exist. The partition-restricted
-        sibling of :meth:`read_tier` — consumers (incremental refresh,
-        the persisted ANN index) use this instead of reaching into the
-        private version plumbing."""
-        want = {str(p) for p in parts}
-        versions = {
-            p: v
-            for p, v in self.part_versions(snapshot_id).items()
-            if p in want
-        }
-        if not versions:
+        """Public pruned-partition read: the current rows of exactly the
+        requested partitions — the same rows :meth:`read_tier` returns
+        for them (merge-on-read adds and deletes applied, schema
+        normalized) — or None if none of them exist. Consumers
+        (incremental refresh, the persisted ANN index) use this instead
+        of reaching into the private version plumbing."""
+        snap = self._resolve(snapshot_id)
+        want = sorted({str(p) for p in parts} & set((snap or {}).get("parts", {})))
+        if not want:
             return None
-        return self._read_versions(spark, versions).drop("snapv")
+        return self._current_rows(spark, snap, want)
 
     def read_tier(
         self,
@@ -1567,25 +1581,14 @@ class IcebergLayoutTable:
                 raise ValueError("pass snapshot_id OR as_of, not both")
             snapshot_id = self.snapshot_as_of(as_of)["snapshot_id"]
         snap = self._resolve(snapshot_id, required=True)
-        part_col = snap.get("part_col", "part")
-        tsid = snap.get("schema_id")
-        # normalize to the schema OF THE SNAPSHOT BEING READ — time
-        # travel to a pre-rename snapshot sees the old column names
-        target = self.schema(tsid) if tsid is not None else None
-        pairs, files = self._version_pairs(snap), None
-        if prune:
-            # scan only the files whose manifest stats can match
-            plan = self.plan_files(snapshot_id, prune)
-            if plan["files"] or plan["legacy_dirs"]:
-                pairs, files = plan["legacy_dirs"], plan["files_by_schema"]
-        out = self._read_versions(
-            spark, pairs, part_col, target_schema=target, with_pos=with_pos,
-            deletes=self._delete_descs(snap, snap["parts"]), files=files,
-        ).drop("snapv")
         if not prune:
-            return out
-        if files is None:  # nothing can match: empty, in the snapshot's shape
-            return out.limit(0)
+            return self._current_rows(spark, snap, with_pos=with_pos)
+        # scan only the files whose manifest stats can match
+        plan = self.plan_files(snap["snapshot_id"], prune)
+        if not (plan["files"] or plan["legacy_dirs"]):
+            # nothing can match: empty, in the snapshot's shape
+            return self._current_rows(spark, snap, with_pos=with_pos).limit(0)
+        out = self._current_rows(spark, snap, with_pos=with_pos, plan=plan)
         # residual predicate: stats pruning is IO-elision only; the
         # range itself is enforced on the surviving rows (Iceberg's
         # residual evaluation), so results are exact even where stats
@@ -1655,33 +1658,17 @@ class IcebergLayoutTable:
         under duplicate rows. This is the no-jar analog of Iceberg's
         ``incremental read`` / changelog scan."""
         ch = self.changed_parts(from_snapshot, to_snapshot)
-        part_col = ch["part_col"]
-        ins_parts = self._version_pairs(
-            ch["to_snapshot_obj"], ch["added"] + ch["rewritten"]
-        )
-        del_parts = self._version_pairs(
-            ch["from_snapshot_obj"], ch["removed"] + ch["rewritten"]
-        )
-        # both sides normalized to the TO-snapshot's schema so the row
+        to = ch["to_snapshot_obj"]
+        # each side applies ITS snapshot's merge-on-read deletes and
+        # adds, so a MOR-only commit diffs as exactly its row changes;
+        # both are normalized to the TO-snapshot's schema so the row
         # diff compares like with like across a schema evolution (a
         # metadata-only rename yields zero row changes, as it should)
-        to_snap = self._resolve(to_snapshot)
-        tsid = to_snap.get("schema_id") if to_snap else None
-        target = self.schema(tsid) if tsid is not None else None
-        # each side applies ITS snapshot's merge-on-read deletes and
-        # adds, so a MOR-only commit diffs as exactly its row changes
-        new = self._read_versions(
-            spark, ins_parts, part_col, target_schema=target,
-            deletes=self._delete_descs(
-                ch["to_snapshot_obj"], ch["added"] + ch["rewritten"]
-            ),
-        ).drop("snapv")
-        old = self._read_versions(
-            spark, del_parts, part_col, target_schema=target,
-            deletes=self._delete_descs(
-                ch["from_snapshot_obj"], ch["removed"] + ch["rewritten"]
-            ),
-        ).drop("snapv")
+        new = self._current_rows(spark, to, ch["added"] + ch["rewritten"])
+        old = self._current_rows(
+            spark, ch["from_snapshot_obj"], ch["removed"] + ch["rewritten"],
+            schema_of=to,
+        )
         # map columns are not comparable in set ops → diff on sorted
         # entry arrays (deterministic), restore the map type after
         map_cols = [c for c, t in new.dtypes if t.startswith("map<")]
@@ -1697,6 +1684,207 @@ class IcebergLayoutTable:
         return out
 
     # ------------------------------------------------------ row-level ops
+    # Each DML verb is one ROW CHANGE on the partitions it touches: the
+    # rows that leave and the rows that arrive.
+    #
+    #   DELETE  leave: rows where coalesce(predicate, false)  arrive: -
+    #   UPDATE  leave: the same rows            arrive: their SET images
+    #   MERGE   leave: rows whose key is in the delta   arrive: the delta
+    #
+    # ``mode`` picks how _commit_change stores it; both strategies give
+    # the same rows (Iceberg v2 row-level deletes draw the same line):
+    #
+    # - ``copy-on-write`` (default): the touched partitions are
+    #   rewritten as their current rows minus the leaving rows plus the
+    #   arriving ones, in a fresh version (overwrite_parts). Reads of
+    #   the new snapshot pay nothing; best for dense changes.
+    # - ``merge-on-read``: the arriving rows APPEND as new data files
+    #   (the snapshot's ``adds``) and the leaving rows are written as
+    #   one delete-file set — position deletes ``(_file, _pos)`` for
+    #   DELETE/UPDATE, equality deletes on the merge keys for MERGE. No
+    #   base file is rewritten, so write cost is O(changed rows) —
+    #   deleting a few rows from a petabyte partition costs kilobytes.
+    #   Readers anti-join the deletes out (_apply_deletes); an equality
+    #   delete spares rows written at or after its sequence number, so
+    #   a merge keeps its own rows and stacked merges are last-writer-
+    #   wins. compact_parts / rewrite_deletes materialize them.
+    #
+    # MVCC as usual: readers on the prior snapshot are unaffected.
+    _DML_MODES = ("copy-on-write", "merge-on-read")
+
+    def _check_mode(self, mode: str) -> None:
+        # every verb refuses an unknown mode before it reads or writes
+        if mode not in self._DML_MODES:
+            raise ValueError(f"mode must be one of {self._DML_MODES}, got {mode!r}")
+
+    @staticmethod
+    def _row_state(snap: dict, parts) -> dict[str, tuple]:
+        """Per partition, the merge-on-read row state of ``snap`` (its
+        appended versions and delete descriptors) — what a commit pins
+        when its change assumes the partition's row set."""
+        return {
+            p: (
+                snap.get("adds", {}).get(p, []),
+                (snap.get("deletes") or {}).get(p, []),
+            )
+            for p in parts
+        }
+
+    def _write_deletes(
+        self, rows: DataFrame, v: int, part_col: str, keys: list[str] | None
+    ) -> dict[str, list[dict]]:
+        """Write the leaving ``rows`` as one delete-file set under
+        ``deletes/delv=<v>``, one directory per partition, and return
+        each partition's descriptor: position deletes (``rows`` carries
+        ``_file, _pos``; the count comes from the written footers) or,
+        with ``keys``, equality deletes on those columns."""
+        rel = f"deletes/delv={v}"
+        out = os.path.join(self.root, rel)
+        rows = (
+            rows.select(part_col, *keys).distinct() if keys
+            else rows.select(part_col, "_file", "_pos")
+        )
+        rows.write.partitionBy(part_col).parquet(out)
+        descs: dict[str, list[dict]] = {}
+        for d in sorted(os.listdir(out)):
+            if not d.startswith(f"{part_col}="):
+                continue
+            desc = {"path": f"{rel}/{d}", "seq": v}
+            if keys:
+                desc.update(kind="eq", keys=list(keys))
+            else:
+                names = os.listdir(os.path.join(out, d))
+                desc.update(kind="pos", rows=sum(
+                    pq.read_metadata(os.path.join(out, d, f)).num_rows
+                    for f in names if f.endswith(".parquet")
+                ))
+            descs[d.split("=", 1)[1]] = [desc]
+        if not descs:  # nothing left: leave no trace
+            shutil.rmtree(out, ignore_errors=True)
+        return descs
+
+    def _commit_change(
+        self,
+        snap: dict,
+        mode: str,
+        leave: DataFrame,
+        rewrite,
+        label: str,
+        arrive: DataFrame | None = None,
+        keys: list[str] | None = None,
+        extra: dict | None = None,
+        expect_extra: dict | None = None,
+    ) -> dict:
+        """Commit one row change on ``snap``. ``leave``: the leaving
+        rows (with ``_file, _pos``, or the merge ``keys``); ``arrive``:
+        the arriving rows; ``rewrite``: partitions -> their new content,
+        the copy-on-write form of the change. Commits nothing when no
+        row moves and there is no ``extra`` state (the merge ledger)."""
+        if mode == "merge-on-read":
+            return self._commit_mor(snap, leave, label, arrive, keys, extra, expect_extra)
+        # copy-on-write pins the versions AND row state of the parts it
+        # rewrites (overwrite_parts with base_snapshot)
+        part_col = snap.get("part_col", "part")
+        parts = self._parts_of(leave, part_col)
+        if not parts and not extra:
+            return snap
+        return self.overwrite_parts(
+            rewrite(parts), parts, part_col=part_col, input_snapshot=label,
+            extra=extra, base_snapshot=snap, expect_extra=expect_extra,
+        )
+
+    @staticmethod
+    def _parts_of(rows: DataFrame, part_col: str) -> list[str]:
+        return sorted(str(r[0]) for r in rows.select(part_col).distinct().collect())
+
+    def _commit_mor(
+        self, snap: dict, leave: DataFrame, label: str,
+        arrive: DataFrame | None, keys: list[str] | None,
+        extra: dict | None, expect_extra: dict | None,
+    ) -> dict:
+        """The merge-on-read writer: the arriving rows append under a
+        new version through _write_parts (manifests and file stats like
+        any data, so scan pruning sees them; a brand-new partition's
+        files are its base) and the leaving rows become one delete-file
+        set, in one commit."""
+        part_col = snap.get("part_col", "part")
+        schema_id, expect_schema = None, self._SCHEMA_UNCHECKED
+        if arrive is not None:
+            # before anything is written: a refused delta leaves no trace
+            schema_id, expect_schema = self._ensure_write_schema(arrive, part_col)
+        v = self._claim_version()
+        if keys is None:
+            # position deletes land in exactly the partitions holding
+            # leaving rows, so their write also finds the partitions
+            dels = self._write_deletes(leave, v, part_col, None)
+            parts = existing = sorted(dels)
+        else:
+            parts = self._parts_of(leave, part_col)
+            existing = [p for p in parts if p in snap["parts"]]
+            # equality deletes only where base rows exist to supersede
+            dels = self._write_deletes(
+                leave.where(F.col(part_col).cast("string").isin(existing)),
+                v, part_col, keys,
+            ) if existing else {}
+        if not parts and not extra:
+            return snap
+        if arrive is not None:
+            self._write_parts(arrive, parts, v, part_col, label, schema_id)
+        return self._commit(
+            {},
+            {
+                "input_snapshot": label,
+                "new_parts": [p for p in parts if p not in snap["parts"]],
+                "part_col": part_col,
+                **({} if arrive is None else {
+                    "add_parts": existing, "schema_id": schema_id,
+                }),
+                **({} if keys else {"delete_parts": sorted(dels)}),
+                **(extra or {}),
+            },
+            update={p: snap["parts"].get(p, v) for p in parts},
+            base_versions={p: snap["parts"].get(p) for p in parts},
+            expect_schema=expect_schema,
+            add_deletes=dels,
+            add_adds={p: [v] for p in existing} if arrive is not None else None,
+            expect_extra=expect_extra,
+            # a change that appends rows pins the row state it read: a
+            # concurrent delete would see its rows resurrected (update)
+            # or clobbered for shared keys (merge). A pure delete pins
+            # versions only — its positions stay valid while the base
+            # files do, so concurrent deletes on one part all land
+            expect_row_state=(
+                self._row_state(snap, existing) if arrive is not None else None
+            ),
+        )
+
+    def _matches(self, spark: SparkSession, predicate: str, prune: dict | None):
+        """``(snap, hit, rows)``: the current snapshot, the SQL
+        three-valued match ``coalesce(predicate, false)`` and the
+        matching current rows with their ``(_file, _pos)`` — one
+        manifest-stat-pruned scan (``prune`` skips files by sort-order
+        ranges). The scan applies the snapshot's deletes, so stacked
+        deletes never duplicate positions."""
+        snap = self._resolve(None, required=True)
+        hit = F.coalesce(F.expr(predicate), F.lit(False))
+        scan = self.read_tier(
+            spark, snapshot_id=snap["snapshot_id"], prune=prune, with_pos=True
+        )
+        return snap, hit, scan.where(hit)
+
+    @staticmethod
+    def _set_images(rows: DataFrame, sets: dict[str, str], hit=None) -> DataFrame:
+        """``rows`` with the SET expressions applied (only where ``hit``
+        holds, when given), each cast to its column's type — UPDATE
+        never retypes a column."""
+        types = dict(rows.dtypes)
+
+        def image(c):
+            e = F.expr(sets[c]).cast(types[c])
+            return (e if hit is None else F.when(hit, e).otherwise(F.col(c))).alias(c)
+
+        return rows.select(*[image(c) if c in sets else F.col(c) for c in rows.columns])
+
     def merge_rows(
         self,
         delta: DataFrame,
@@ -1707,26 +1895,13 @@ class IcebergLayoutTable:
     ) -> dict:
         """Keyed upsert — ``MERGE INTO t USING delta ON keys WHEN
         MATCHED THEN UPDATE * WHEN NOT MATCHED THEN INSERT *`` with
-        whole-row replacement: every delta row replaces the base rows
-        sharing its key; unseen keys insert. Two physical strategies
-        with identical logical results:
+        whole-row replacement: every delta row replaces the current
+        rows sharing its key; unseen keys insert. Only partitions
+        present in ``delta`` are touched, so merging a day's
+        corrections into years of history costs one bounded key-join
+        (copy-on-write; AQE broadcasts the key side when the delta is
+        small) or O(delta) appends (merge-on-read).
 
-        - ``copy-on-write`` (default): only parts present in ``delta``
-          are read and rewritten (explicit version dirs, no scan of
-          the rest of the table), so merging a day's corrections into
-          years of history costs one bounded key-join — Spark's AQE
-          broadcasts the key side when the delta is small — plus the
-          rebalance write of the touched parts.
-        - ``merge-on-read``: the delta's rows APPEND as new data files
-          and its keys land as per-partition equality-delete files
-          (Iceberg v2 MOR upsert) — write cost is O(delta), no base
-          file is read or rewritten. Readers drop base rows whose key
-          matches a delete with a later sequence number, so stacked
-          merges are last-writer-wins; :meth:`compact_parts`
-          materializes. A concurrent merge/delete on the same
-          partition fails commit validation (serializable row state).
-
-        MVCC as usual: readers on the prior snapshot are unaffected.
         Keys must be unique within ``delta`` per intended output row
         (duplicate-key delta rows all land — same as Iceberg merge
         with multiple matches on the source side being an error left
@@ -1743,7 +1918,9 @@ class IcebergLayoutTable:
         key that can move between partitions (e.g. ``url`` alone on a
         time-partitioned table) is out of contract — same as Iceberg,
         where a MERGE touching rows outside the pruned partition set
-        must read them.
+        must read them. Equality-delete key columns are pinned to the
+        CURRENT schema names; compact before renaming merge-key
+        columns.
 
         ``idempotency_tag`` makes replays exactly-once for a
         single-writer feed (the streaming-upsert sink): a tag already
@@ -1752,6 +1929,7 @@ class IcebergLayoutTable:
         are convergent even WITHOUT the tag — the replay's higher
         sequence supersedes the original rows — but the ledger makes
         them free and keeps the CDC changelog clean.)"""
+        self._check_mode(mode)
         snap = self.current_snapshot()
         if idempotency_tag is not None and snap is not None:
             if idempotency_tag in snap.get("applied_upserts", []):
@@ -1776,110 +1954,18 @@ class IcebergLayoutTable:
         part_col = part_col or (snap.get("part_col", "part") if snap else "part")
         if part_col not in delta.columns:
             raise ValueError(f"delta must carry the partition column {part_col!r}")
-        affected = sorted(
-            str(r[0]) for r in delta.select(part_col).distinct().collect()
-        )
         if snap is None:
             return self.write_tier(
                 delta, part_col=part_col, input_snapshot="merge", extra=ledger
             )
-        if mode == "merge-on-read":
-            return self._merge_rows_mor(
-                delta, keys, snap, part_col, affected, extra=ledger,
-                expect_extra=ledger_cas,
-            )
-        pairs = self._version_pairs(snap, affected)
-        tsid = snap.get("schema_id")
-        target = self.schema(tsid) if tsid is not None else None
-        base = self._read_versions(
-            delta.sparkSession, pairs, part_col, target_schema=target,
-            deletes=self._delete_descs(snap, affected),
-        ).drop("snapv")
-        kept = base.join(delta.select(*keys).distinct(), keys, "left_anti")
-        merged = kept.unionByName(delta, allowMissingColumns=True)
-        return self.overwrite_parts(
-            merged, affected, part_col=part_col, input_snapshot="merge",
-            extra={"merge_keys": list(keys), **ledger},
-            base_snapshot=snap,
-            expect_extra=ledger_cas,
-        )
-
-    def _merge_rows_mor(
-        self, delta: DataFrame, keys: list[str], snap: dict,
-        part_col: str, affected: list[str], extra: dict | None = None,
-        expect_extra: dict | None = None,
-    ) -> dict:
-        """Merge-on-read half of :meth:`merge_rows`: append the delta
-        as new data files (``adds``) and its key tuples as
-        equality-delete files with this write's sequence number. The
-        delta's own rows are exempt from its delete (their data version
-        equals the sequence); earlier rows with matching keys — base
-        or prior adds — are dropped at read. Equality-delete key
-        columns are pinned to the CURRENT schema names; compact before
-        renaming merge-key columns."""
         spark = delta.sparkSession
-        schema_id, expect_schema = self._ensure_write_schema(delta, part_col)
-        v = self._claim_version()
-        # 1. append the delta rows (new snapv=v dirs; manifests + file
-        #    stats written like any other data, so scan pruning sees them)
-        self._write_parts(delta, affected, v, part_col, "merge-mor", schema_id)
-        # 2. equality-delete files: one key tuple per intended upsert,
-        #    only for partitions that HAVE base rows to supersede
-        existing = [p for p in affected if p in snap["parts"]]
-        add_dels: dict[str, list[dict]] = {}
-        if existing:
-            out_dir = os.path.join(self.root, "deletes", f"delv={v}")
-            (
-                delta.where(F.col(part_col).cast("string").isin(existing))
-                .select(part_col, *keys)
-                .distinct()
-                .write.partitionBy(part_col)
-                .parquet(out_dir)
-            )
-            written = sorted(
-                d.split("=", 1)[1]
-                for d in os.listdir(out_dir)
-                if d.startswith(f"{part_col}=")
-            )
-            add_dels = {
-                p: [{
-                    "path": f"deletes/delv={v}/{part_col}={p}",
-                    "kind": "eq",
-                    "keys": list(keys),
-                    "seq": v,
-                }]
-                for p in written
-            }
-        new_parts = [p for p in affected if p not in snap["parts"]]
-        base_vers = {p: snap["parts"].get(p) for p in affected}
-        return self._commit(
-            {},
-            {
-                "input_snapshot": "merge-mor",
-                "new_parts": new_parts,
-                "add_parts": existing,
-                "part_col": part_col,
-                "schema_id": schema_id,
-                "merge_keys": list(keys),
-                **(extra or {}),
-            },
-            # brand-new partitions: the appended files ARE the base
-            update={
-                **{p: snap["parts"][p] for p in existing},
-                **{p: v for p in new_parts},
-            },
-            base_versions=base_vers,
-            expect_schema=expect_schema,
-            add_deletes=add_dels,
-            add_adds={p: [v] for p in existing},
-            expect_extra=expect_extra,
-            expect_row_state={
-                p: (
-                    snap.get("adds", {}).get(p, []),
-                    (snap.get("deletes") or {}).get(p, []),
-                )
-                for p in existing
-            },
+        return self._commit_change(
+            snap, mode, delta,
+            lambda parts: self._current_rows(spark, snap, parts)
+            .join(delta.select(*keys).distinct(), keys, "left_anti")
+            .unionByName(delta, allowMissingColumns=True),
+            "merge", arrive=delta, keys=list(keys),
+            extra={"merge_keys": list(keys), **ledger}, expect_extra=ledger_cas,
         )
 
     def delete_where(
@@ -1890,48 +1976,17 @@ class IcebergLayoutTable:
         mode: str = "copy-on-write",
     ) -> dict:
         """Row-level delete, keeping rows where the predicate is false
-        **or NULL** (SQL DELETE three-valued semantics). Two physical
-        strategies with identical logical results:
-
-        - ``copy-on-write`` (default): one manifest-stat-pruned scan
-          (pass ``prune`` to skip files by sort-order ranges) finds the
-          partitions containing matches; ONLY those rewrite. Best when
-          deletes are dense — reads of the new snapshot pay nothing.
-        - ``merge-on-read``: write only the matched ``(_file, _pos)``
-          positions as per-partition delete files (Iceberg v2 position
-          deletes / deletion vectors); NO data file is rewritten —
-          write cost is O(matched rows), so deleting a few rows from a
-          petabyte partition costs kilobytes. Readers anti-join the
-          positions out; :meth:`compact_parts` materializes and drops
-          them. Best for sparse deletes (GDPR erasure, late
-          corrections) and stacked small deletes.
-        """
-        snap = self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no snapshot in {self.meta_dir}")
-        part_col = snap.get("part_col", "part")
-        if mode == "merge-on-read":
-            return self._delete_where_mor(spark, snap, predicate, prune, part_col)
-        cand = self.read_tier(spark, prune=prune)
-        matching = sorted(
-            str(r[0])
-            for r in cand.where(F.expr(predicate))
-            .select(part_col).distinct().collect()
-        )
-        if not matching:
-            return snap  # nothing to delete — no new snapshot
-        tsid = snap.get("schema_id")
-        target = self.schema(tsid) if tsid is not None else None
-        base = self._read_versions(
-            spark, self._version_pairs(snap, matching), part_col,
-            target_schema=target,
-            deletes=self._delete_descs(snap, matching),
-        ).drop("snapv")
-        kept = base.where(~F.coalesce(F.expr(predicate), F.lit(False)))
-        return self.overwrite_parts(
-            kept, matching, part_col=part_col,
-            input_snapshot=f"delete:{predicate}",
-            base_snapshot=snap,
+        **or NULL** (SQL DELETE three-valued semantics). ``prune``
+        skips files by their sort-order ranges in the scan that finds
+        the matches. No match commits nothing. Merge-on-read suits
+        sparse deletes (GDPR erasure, late corrections) and stacked
+        small deletes."""
+        self._check_mode(mode)
+        snap, hit, rows = self._matches(spark, predicate, prune)
+        return self._commit_change(
+            snap, mode, rows,
+            lambda parts: self._current_rows(spark, snap, parts).where(~hit),
+            f"delete:{predicate}",
         )
 
     def update_where(
@@ -1947,174 +2002,26 @@ class IcebergLayoutTable:
         :meth:`delete_where`. Rows where the predicate is false or
         NULL are untouched (SQL three-valued semantics); ``set`` maps
         column names to SQL expressions evaluated against the row.
-
-        - ``copy-on-write``: rewrite only the partitions containing
-          matches, applying ``CASE WHEN pred THEN expr ELSE col END``
-          projections — one stat-pruned scan plus the bounded rewrite.
-        - ``merge-on-read``: an update is a position-delete of the
-          matched rows plus an APPEND of their updated images — both
-          O(matched rows), zero base rewrite (Iceberg v2 MOR update).
-          Readers see the new images; compaction materializes.
-        """
-        snap = self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no snapshot in {self.meta_dir}")
+        Copy-on-write applies ``CASE WHEN pred THEN expr ELSE col END``
+        in one pass over the touched partitions; merge-on-read deletes
+        the matched positions and appends their images in one commit,
+        so readers flip atomically from old to new images."""
+        self._check_mode(mode)
+        snap, hit, rows = self._matches(spark, predicate, prune)
         part_col = snap.get("part_col", "part")
-        unknown = [c for c in set if c == part_col]
-        if unknown:
+        if part_col in set:
             raise ValueError(f"cannot SET the partition column {part_col!r}")
-        if mode == "merge-on-read":
-            return self._update_where_mor(spark, snap, predicate, set, prune, part_col)
-        cand = self.read_tier(spark, prune=prune)
-        matching = sorted(
-            str(r[0])
-            for r in cand.where(F.expr(predicate))
-            .select(part_col).distinct().collect()
-        )
-        if not matching:
-            return snap
-        base = self._read_versions(
-            spark, self._version_pairs(snap, matching), part_col,
-            target_schema=self.schema(snap.get("schema_id"))
-            if snap.get("schema_id") is not None else None,
-            deletes=self._delete_descs(snap, matching),
-        ).drop("snapv")
-        hit = F.coalesce(F.expr(predicate), F.lit(False))
-        types = dict(base.dtypes)  # UPDATE never changes a column's type
-        updated = base.select(*[
-            (F.when(hit, F.expr(set[c]).cast(types[c]))
-             .otherwise(F.col(c)).alias(c)
-             if c in set else F.col(c))
-            for c in base.columns
-        ])
-        return self.overwrite_parts(
-            updated, matching, part_col=part_col,
-            input_snapshot=f"update:{predicate}",
-            base_snapshot=snap,
-        )
-
-    def _update_where_mor(
-        self, spark, snap, predicate: str, set: dict[str, str],
-        prune: dict | None, part_col: str,
-    ) -> dict:
-        """Merge-on-read UPDATE: one scan finds the matched rows; their
-        positions become a position-delete file and their updated
-        images append as new data files — the same commit carries both,
-        so readers atomically flip from old to new images."""
-        scan = self.read_tier(spark, prune=prune, with_pos=True)
-        hit = F.coalesce(F.expr(predicate), F.lit(False))
-        matched = scan.where(hit)
-        affected = sorted(
-            str(r[0]) for r in matched.select(part_col).distinct().collect()
-        )
-        if not affected:
-            return snap
-        v = self._claim_version()
-        # position-delete files for the old images
-        out_dir = os.path.join(self.root, "deletes", f"delv={v}")
-        matched.select(part_col, "_file", "_pos").write.partitionBy(
-            part_col
-        ).parquet(out_dir)
-        # updated images append (written through the normal path:
-        # manifests, file stats, schema handling); set-expressions
-        # cast to the column's existing type — UPDATE never retypes
-        body = matched.drop("_file", "_pos")
-        types = dict(body.dtypes)
-        images = body.select(*[
-            (F.expr(set[c]).cast(types[c]).alias(c) if c in set else F.col(c))
-            for c in body.columns
-        ])
-        schema_id, expect_schema = self._ensure_write_schema(images, part_col)
-        self._write_parts(
-            images, affected, v, part_col, f"update-mor:{predicate}", schema_id
-        )
-        counts = {
-            str(r[0]): int(r[1])
-            for r in spark.read.parquet(out_dir).groupBy(part_col).count().collect()
-        }
-        add_dels = {
-            p: [{
-                "path": f"deletes/delv={v}/{part_col}={p}",
-                "kind": "pos",
-                "rows": counts.get(p, 0),
-                "seq": v,
-            }]
-            for p in affected
-        }
-        base_vers = {p: snap["parts"][p] for p in affected}
-        return self._commit(
-            {},
-            {
-                "input_snapshot": f"update:{predicate}",
-                "new_parts": [],
-                "add_parts": affected,
-                "delete_parts": affected,
-                "part_col": part_col,
-                "schema_id": schema_id,
-            },
-            update=base_vers,
-            base_versions=base_vers,
-            expect_schema=expect_schema,
-            add_deletes=add_dels,
-            add_adds={p: [v] for p in affected},
-            expect_row_state={
-                p: (
-                    snap.get("adds", {}).get(p, []),
-                    (snap.get("deletes") or {}).get(p, []),
-                )
-                for p in affected
-            },
-        )
-
-    def _delete_where_mor(
-        self, spark, snap, predicate: str, prune: dict | None, part_col: str
-    ) -> dict:
-        """Merge-on-read half of :meth:`delete_where`: one scan emits
-        the matched row positions, partitioned by the table partition;
-        the commit appends a position-delete descriptor per touched
-        partition — data versions UNCHANGED. Already-deleted rows are
-        excluded by the scan (read_tier applies existing deletes), so
-        stacked deletes never duplicate positions. A concurrent rewrite
-        of a touched partition raises ConcurrentWriteConflict (the
-        positions would reference dead files)."""
-        scan = self.read_tier(spark, prune=prune, with_pos=True)
-        matched = scan.where(F.expr(predicate)).select(part_col, "_file", "_pos")
-        v = self._claim_version()
-        out_dir = os.path.join(self.root, "deletes", f"delv={v}")
-        matched.write.partitionBy(part_col).parquet(out_dir)
-        written = sorted(
-            d.split("=", 1)[1]
-            for d in os.listdir(out_dir)
-            if d.startswith(f"{part_col}=")
-        )
-        if not written:  # no matches — leave no trace
-            shutil.rmtree(out_dir, ignore_errors=True)
-            return snap
-        counts = {
-            str(r[0]): int(r[1])
-            for r in spark.read.parquet(out_dir).groupBy(part_col).count().collect()
-        }
-        add = {
-            p: [{
-                "path": f"deletes/delv={v}/{part_col}={p}",
-                "kind": "pos",
-                "rows": counts.get(p, 0),
-                "seq": v,
-            }]
-            for p in written
-        }
-        base_vers = {p: snap["parts"][p] for p in written}
-        return self._commit(
-            {},
-            {
-                "input_snapshot": f"delete:{predicate}",
-                "new_parts": [],
-                "delete_parts": written,
-                "part_col": part_col,
-            },
-            update=base_vers,
-            base_versions=base_vers,
-            add_deletes=add,
+        cols = [c for c in rows.columns if c not in (part_col, "_file", "_pos")]
+        unknown = sorted(c for c in set if c not in cols)
+        if unknown:
+            raise ValueError(f"unknown SET columns {unknown}; the table has {cols}")
+        return self._commit_change(
+            snap, mode, rows,
+            lambda parts: self._set_images(
+                self._current_rows(spark, snap, parts), set, hit
+            ),
+            f"update:{predicate}",
+            arrive=self._set_images(rows.drop("_file", "_pos"), set),
         )
 
     # -------------------------------------------------------- maintenance
@@ -2151,18 +2058,12 @@ class IcebergLayoutTable:
                 "zorder compaction needs target_files > 1 — with one "
                 "file per part there are no file boundaries to cluster"
             )
-        snap = self.current_snapshot()
-        versions = dict((snap or {}).get("parts", {}))
-        todo = sorted(versions) if parts is None else sorted(
-            {str(p) for p in parts} & set(versions)
+        snap = self._resolve(None, required=True)
+        todo = sorted(snap["parts"]) if parts is None else sorted(
+            {str(p) for p in parts} & set(snap["parts"])
         )
-        part_col = snap.get("part_col", "part") if snap else "part"
-        tsid = snap.get("schema_id") if snap else None
-        target = self.schema(tsid) if tsid is not None else None
-        df = self._read_versions(
-            spark, self._version_pairs(snap, todo), part_col, target_schema=target,
-            deletes=self._delete_descs(snap, todo),
-        ).drop("snapv")
+        part_col = snap.get("part_col", "part")
+        df = self._current_rows(spark, snap, todo)
         # the overwrite commit drops the materialized parts' delete
         # descriptors (version changed ⇒ deletes no longer apply) —
         # compaction doubles as Iceberg's rewrite_position_delete_files
@@ -2202,8 +2103,6 @@ class IcebergLayoutTable:
                 ranged, todo, part_col=part_col, input_snapshot="compaction",
                 base_snapshot=snap, cluster=False,
             )
-        if order != "linear":
-            raise ValueError(f"unknown compaction order {order!r}")
         # target_files > 1: a deterministic in-partition salt splits
         # each part across exactly ≤ target_files tasks; the write
         # must NOT re-cluster (the rebalance hint would re-shuffle and

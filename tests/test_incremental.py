@@ -241,3 +241,51 @@ def test_refresh_audit_gate(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="hash audit"):
         refresh_from_pages(spark, bad, str(tmp_path / "t"), delta_tag="x")
+
+
+def test_replayed_tag_runs_no_job(spark, tmp_path):
+    """The tag ledger is consulted before the hash audit: replaying an
+    applied tag with no pending marker scans no page — no Spark job."""
+    root = str(tmp_path / "tiers")
+    pages = generate_pages(spark, 300, seed=63)
+    refresh_from_pages(spark, pages, root, delta_tag="d1")
+    sc = spark.sparkContext
+    group = "replayed_tag"
+    sc.setJobGroup(group, "replay of an applied tag")
+    try:
+        r = refresh_from_pages(spark, pages, root, delta_tag="d1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r == {"affected_parts": {}, "snapshots": {}, "skipped": "d1"}
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_refresh_keeps_a_mor_delete_on_the_store(spark, tmp_path):
+    """A merge-on-read delete on the partials store stays applied when a
+    later delta for another url merges into the same week: the merge
+    reads the store's current rows, so the deleted row is absent from
+    both the store and tier_1h."""
+    from pyspark.sql import functions as F
+
+    from lambdo_spark.rollup.incremental import _partials_store, _tier_table
+
+    root = str(tmp_path / "tiers")
+    base = generate_pages(spark, 1500, seed=64)
+    refresh_from_pages(spark, base, root, delta_tag="base", enforce_audit=False)
+    store = _partials_store(root)
+    gone = store.read_tier(spark).orderBy("part", "url", "bucket_s").first()
+    store.delete_where(
+        spark, f"url = '{gone['url']}' AND bucket_s = {gone['bucket_s']}",
+        mode="merge-on-read",
+    )
+    ts = F.unix_timestamp("warc_ts")
+    delta = base.where(
+        (F.col("url") != gone["url"])
+        & (ts >= int(gone["part"])) & (ts < int(gone["part"]) + PART_SECONDS)
+    ).limit(1)
+    r = refresh_from_pages(spark, delta, root, delta_tag="d1", enforce_audit=False)
+    assert r["affected_parts"]["partials_1h"] == [str(gone["part"])]
+
+    hit = (F.col("url") == gone["url"]) & (F.col("bucket_s") == gone["bucket_s"])
+    assert store.read_tier(spark).where(hit).count() == 0
+    assert _tier_table(root, "1h").read_tier(spark).where(hit).count() == 0

@@ -19,6 +19,19 @@ def _mk(spark, parts=(0, 604800, 1209600), n=30):
     )
 
 
+def _race(t, other_commit):
+    """Land ``other_commit`` (through another handle) between ``t``'s
+    next read and its commit — a concurrent writer in the window."""
+    commit = t._commit
+
+    def racing(*a, **kw):
+        del t._commit
+        other_commit()
+        return commit(*a, **kw)
+
+    t._commit = racing
+
+
 def test_merge_upsert_updates_and_inserts(spark, tmp_path):
     t = IcebergLayoutTable(str(tmp_path / "t"))
     base = _mk(spark)
@@ -251,10 +264,10 @@ def test_mor_delete_conflicts_with_concurrent_rewrite(spark, tmp_path):
     t = IcebergLayoutTable(str(tmp_path / "t"))
     base = _mk(spark, parts=(0,))
     t.write_tier(base)
-    snap0 = t.current_snapshot()
-    t.compact_parts(spark, parts=["0"])  # concurrent rewrite
+    other = IcebergLayoutTable(t.root)
+    _race(t, lambda: other.compact_parts(spark, parts=["0"]))  # concurrent rewrite
     with pytest.raises(ConcurrentWriteConflict):
-        t._delete_where_mor(spark, snap0, "url = 'u0'", None, "part")
+        t.delete_where(spark, "url = 'u0'", mode="merge-on-read")
 
 
 def test_mor_merge_matches_cow_merge(spark, tmp_path):
@@ -354,15 +367,15 @@ def test_mor_merge_conflicts_with_concurrent_mor(spark, tmp_path):
 
     t = IcebergLayoutTable(str(tmp_path / "t"))
     t.write_tier(_mk(spark, parts=(0,), n=4))
-    snap0 = t.current_snapshot()
     d = spark.createDataFrame(
         [("u0", 0, 1.0, 0)], "url string, bucket_s bigint, v double, part bigint"
     )
-    t.merge_rows(d, keys=["url", "bucket_s"], mode="merge-on-read")
-    # a second writer that derived from snap0 must NOT commit: the
-    # partition's row state changed under it
+    other = IcebergLayoutTable(t.root)
+    _race(t, lambda: other.merge_rows(d, keys=["url", "bucket_s"], mode="merge-on-read"))
+    # a writer that derived from the snapshot before the other merge
+    # must NOT commit: the partition's row state changed under it
     with pytest.raises(ConcurrentWriteConflict):
-        t._merge_rows_mor(d, ["url", "bucket_s"], snap0, "part", ["0"])
+        t.merge_rows(d, keys=["url", "bucket_s"], mode="merge-on-read")
 
 
 def test_mor_merge_then_mor_delete_interop(spark, tmp_path):
@@ -515,3 +528,110 @@ def test_drop_parts_older_than_metadata_only(spark, tmp_path):
         d for d in data_dirs if os.path.isdir(d)
     }
     assert all("part=1209600" in d for d in live)
+
+
+def test_concurrent_mor_deletes_on_one_part_both_land(spark, tmp_path):
+    """A MOR delete pins partition versions only: another MOR delete
+    landing in its read->commit window on the same partition does not
+    conflict, and both deletes apply."""
+    t = IcebergLayoutTable(str(tmp_path / "t"))
+    base = _mk(spark, parts=(0,))
+    t.write_tier(base)
+    other = IcebergLayoutTable(t.root)
+    _race(t, lambda: other.delete_where(spark, "url = 'u1'", mode="merge-on-read"))
+    t.delete_where(spark, "url = 'u0'", mode="merge-on-read")
+    assert len(t.current_snapshot()["deletes"]["0"]) == 2
+    back = t.read_tier(spark)
+    assert back.where("url in ('u0', 'u1')").count() == 0
+    assert back.count() == base.where("url not in ('u0', 'u1')").count()
+
+
+def test_read_parts_returns_current_rows(spark, tmp_path):
+    """read_parts serves the same rows as read_tier after MOR deletes,
+    merges and updates (adds and deletes applied), for any subset of
+    partitions."""
+    t = IcebergLayoutTable(str(tmp_path / "t"))
+    t.write_tier(_mk(spark))
+    t.delete_where(spark, "url = 'u0'", mode="merge-on-read")
+    t.merge_rows(spark.createDataFrame(
+        [("u1", 60, 9.0, 0), ("u9", 604860, 1.0, 604800)],
+        "url string, bucket_s bigint, v double, part bigint",
+    ), keys=["url", "bucket_s"], mode="merge-on-read")
+    t.update_where(spark, "v > 20", {"v": "-v"}, mode="merge-on-read")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("url", "bucket_s", "v", "part").collect())
+
+    for ps in (["0"], ["0", "604800"], ["604800", "1209600", "999"]):
+        want = rows(t.read_tier(spark).where(F.col("part").cast("string").isin(ps)))
+        assert rows(t.read_parts(spark, ps)) == want, ps
+    assert t.read_parts(spark, ["999"]) is None
+
+
+def test_update_where_refuses_unknown_set_columns(spark, tmp_path):
+    """A SET naming a column the table lacks raises before any Spark
+    job runs, in both modes, and commits nothing."""
+    import pytest
+
+    t = IcebergLayoutTable(str(tmp_path / "t"))
+    t.write_tier(_mk(spark))
+    t.delete_where(spark, "url = 'u0'", mode="merge-on-read")
+    s0 = t.current_snapshot()["snapshot_id"]
+    sc = spark.sparkContext
+    group = "update_unknown_set"
+    sc.setJobGroup(group, "refused update")
+    try:
+        for mode in ("copy-on-write", "merge-on-read"):
+            with pytest.raises(ValueError, match=r"unknown SET columns \['nope'\]"):
+                t.update_where(spark, "v > 1", {"v": "0.0", "nope": "1"}, mode=mode)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert t.current_snapshot()["snapshot_id"] == s0
+
+
+def test_dml_refuses_an_unknown_mode(spark, tmp_path):
+    """A misspelt mode raises instead of silently running copy-on-write
+    — in every verb, also where a merge returns early (a table with no
+    snapshot yet, a replayed idempotency tag)."""
+    import pytest
+
+    delta = _mk(spark, parts=(0,), n=2)
+    empty = IcebergLayoutTable(str(tmp_path / "empty"))
+    with pytest.raises(ValueError, match="'mor'"):
+        empty.merge_rows(delta, keys=["url", "bucket_s"], mode="mor")
+    assert empty.current_snapshot() is None
+
+    t = IcebergLayoutTable(str(tmp_path / "t"))
+    t.write_tier(_mk(spark, parts=(0,)))
+    t.merge_rows(delta, keys=["url", "bucket_s"], idempotency_tag="d1")
+    s0 = t.current_snapshot()["snapshot_id"]
+    calls = [
+        lambda: t.delete_where(spark, "url = 'u0'", mode="mor"),
+        lambda: t.update_where(spark, "url = 'u0'", {"v": "0.0"}, mode="mor"),
+        lambda: t.merge_rows(delta, keys=["url", "bucket_s"], mode="mor"),
+        lambda: t.merge_rows(
+            delta, keys=["url", "bucket_s"], mode="mor", idempotency_tag="d1"
+        ),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="'mor'"):
+            call()
+    assert t.current_snapshot()["snapshot_id"] == s0
+
+
+def test_mor_merge_refused_by_schema_writes_nothing(spark, tmp_path):
+    """A merge-on-read delta with an incompatible column type raises
+    before a version is claimed or a delete file is written."""
+    import pytest
+
+    t = IcebergLayoutTable(str(tmp_path / "t"))
+    t.write_tier(_mk(spark, parts=(0,)))
+    s0 = t.current_snapshot()["snapshot_id"]
+    bad = spark.createDataFrame(
+        [("u0", 0, "x", 0)], "url string, bucket_s bigint, v string, part bigint"
+    )
+    with pytest.raises(TypeError, match="incompatible write for column 'v'"):
+        t.merge_rows(bad, keys=["url", "bucket_s"], mode="merge-on-read")
+    assert t.current_snapshot()["snapshot_id"] == s0
+    assert not (tmp_path / "t" / "deletes").exists()
