@@ -105,6 +105,28 @@ class _BitReader:
 
 # ---------------------------------------------------------------- timestamps
 
+def _dod_codes(dod: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Delta-of-delta codes as (hi, lo, length) per value: '0' for 0,
+    then '10'/'110'/'1110' + 7/9/12-bit offset, else '1111' + 64 raw
+    bits."""
+    zero = dod == 0
+    s7 = (~zero) & (dod >= -63) & (dod <= 64)
+    s9 = (~zero) & (~s7) & (dod >= -255) & (dod <= 256)
+    s12 = (~zero) & (~s7) & (~s9) & (dod >= -2047) & (dod <= 2048)
+    s64 = ~(zero | s7 | s9 | s12)
+    lengths = np.select(
+        [zero, s7, s9, s12, s64], [1, 9, 12, 16, 68]
+    ).astype(np.int64)
+    lo = np.zeros(len(dod), dtype=np.uint64)
+    hi = np.zeros(len(dod), dtype=np.uint64)
+    lo[s7] = (_U64(0b10) << _U64(7)) | (dod[s7] + 63).astype(np.uint64)
+    lo[s9] = (_U64(0b110) << _U64(9)) | (dod[s9] + 255).astype(np.uint64)
+    lo[s12] = (_U64(0b1110) << _U64(12)) | (dod[s12] + 2047).astype(np.uint64)
+    lo[s64] = dod[s64].view(np.uint64)
+    hi[s64] = _U64(0b1111)
+    return hi, lo, lengths
+
+
 def encode_timestamps(ts: np.ndarray) -> bytes:
     ts = np.asarray(ts, dtype=np.int64)
     n = len(ts)
@@ -116,25 +138,7 @@ def encode_timestamps(ts: np.ndarray) -> bytes:
     header = struct.pack("<Iqq", n, int(ts[0]), int(deltas[0]))
     if n == 2:
         return header
-    dod = np.diff(deltas)
-
-    zero = dod == 0
-    s7 = (~zero) & (dod >= -63) & (dod <= 64)
-    s9 = (~zero) & (~s7) & (dod >= -255) & (dod <= 256)
-    s12 = (~zero) & (~s7) & (~s9) & (dod >= -2047) & (dod <= 2048)
-    s64 = ~(zero | s7 | s9 | s12)
-
-    lengths = np.select(
-        [zero, s7, s9, s12, s64], [1, 9, 12, 16, 68]
-    ).astype(np.int64)
-    lo = np.zeros(len(dod), dtype=np.uint64)
-    hi = np.zeros(len(dod), dtype=np.uint64)
-    # zero -> '0'
-    lo[s7] = (_U64(0b10) << _U64(7)) | (dod[s7] + 63).astype(np.uint64)
-    lo[s9] = (_U64(0b110) << _U64(9)) | (dod[s9] + 255).astype(np.uint64)
-    lo[s12] = (_U64(0b1110) << _U64(12)) | (dod[s12] + 2047).astype(np.uint64)
-    lo[s64] = dod[s64].view(np.uint64) if dod[s64].size else lo[s64]
-    hi[s64] = _U64(0b1111)
+    hi, lo, lengths = _dod_codes(np.diff(deltas))
     return header + _pack_codes(hi, lo, lengths)
 
 
@@ -167,49 +171,35 @@ def decode_timestamps(data: bytes) -> np.ndarray:
 
 # -------------------------------------------------------------------- values
 
-def encode_values(vals: np.ndarray) -> bytes:
-    vals = np.asarray(vals, dtype=np.float64)
-    n = len(vals)
-    if n == 0:
-        return struct.pack("<I", 0)
-    header = struct.pack("<Id", n, float(vals[0]))
-    if n == 1:
-        return header
-    bits = vals.view(np.uint64)
-    xors = bits[1:] ^ bits[:-1]
+def _floor_log2(x: np.ndarray) -> np.ndarray:
+    """floor(log2(x)) of nonzero uint64s, by binary search on the bits."""
+    top = np.zeros(len(x), dtype=np.int64)
+    v = x.copy()
+    for s in (32, 16, 8, 4, 2, 1):
+        big = v >= (_U64(1) << _U64(s))
+        top[big] += s
+        v[big] >>= _U64(s)
+    return top
 
+
+def _xor_codes(xors: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Gorilla XOR codes as (hi, lo, length) per value: '0' for a
+    repeat, else '11' (2 bits) | lead (5 bits) | sig-1 (6 bits, sig in
+    [1,64]) | sigbits (sig bits); total length 13 + sig, may straddle
+    the 64-bit lo/hi boundary. All shifts kept strictly < 64 (numpy
+    shift by >= width is undefined)."""
     zero = xors == 0
     nz = ~zero
-    # leading/trailing zero counts, vectorized via bit tricks
     lead = np.zeros(len(xors), dtype=np.int64)
     trail = np.zeros(len(xors), dtype=np.int64)
     if nz.any():
         x = xors[nz]
-        # leading zeros = 63 - floor(log2(x)) for x>0
-        top = np.zeros(len(x), dtype=np.int64)
-        v = x.copy()
-        for s in (32, 16, 8, 4, 2, 1):
-            big = v >= (_U64(1) << _U64(s))
-            top[big] += s
-            v[big] >>= _U64(s)
-        lead[nz] = np.minimum(63 - top, 31)  # cap at 31 (5-bit field)
-        lowbit = x & (~x + _U64(1))
-        t = np.zeros(len(x), dtype=np.int64)
-        v = lowbit.copy()
-        for s in (32, 16, 8, 4, 2, 1):
-            big = v >= (_U64(1) << _U64(s))
-            t[big] += s
-            v[big] >>= _U64(s)
-        trail[nz] = t
+        lead[nz] = np.minimum(63 - _floor_log2(x), 31)  # 5-bit field
+        trail[nz] = _floor_log2(x & (~x + _U64(1)))     # lowest set bit
 
     sig = np.where(nz, 64 - lead - trail, 0).astype(np.int64)
-    lengths = np.where(zero, 1, 2 + 5 + 6 + sig).astype(np.int64)
+    lengths = np.where(zero, 1, 13 + sig).astype(np.int64)
     sigbits = np.where(nz, xors >> trail.astype(np.uint64), _U64(0))
-
-    # code = '11' (2 bits) | lead (5 bits) | sig-1 (6 bits, sig in
-    # [1,64]) | sigbits (sig bits); total length 13 + sig, may straddle
-    # the 64-bit lo/hi boundary. All shifts kept strictly < 64 (numpy
-    # shift by >= width is undefined).
     head = (_U64(0b11) << _U64(11)) | (
         lead.astype(np.uint64) << _U64(6)
     ) | (np.maximum(sig - 1, 0)).astype(np.uint64)
@@ -221,6 +211,19 @@ def encode_values(vals: np.ndarray) -> bytes:
     hi = np.where(sig64, head, head >> sh_hi)
     lo = np.where(nz, lo, _U64(0)).astype(np.uint64)
     hi = np.where(nz, hi, _U64(0)).astype(np.uint64)
+    return hi, lo, lengths
+
+
+def encode_values(vals: np.ndarray) -> bytes:
+    vals = np.asarray(vals, dtype=np.float64)
+    n = len(vals)
+    if n == 0:
+        return struct.pack("<I", 0)
+    header = struct.pack("<Id", n, float(vals[0]))
+    if n == 1:
+        return header
+    bits = vals.view(np.uint64)
+    hi, lo, lengths = _xor_codes(bits[1:] ^ bits[:-1])
     return header + _pack_codes(hi, lo, lengths)
 
 
@@ -323,23 +326,8 @@ def encode_timestamps_many(ts: np.ndarray, group_starts: np.ndarray) -> list[byt
 
     # dod codes exist for rows with pos >= 2
     code_mask = pos >= 2
-    dod = (deltas - np.roll(deltas, 1))[code_mask]
+    hi, lo, lengths = _dod_codes((deltas - np.roll(deltas, 1))[code_mask])
     code_gid = gid[code_mask]
-
-    zero = dod == 0
-    s7 = (~zero) & (dod >= -63) & (dod <= 64)
-    s9 = (~zero) & (~s7) & (dod >= -255) & (dod <= 256)
-    s12 = (~zero) & (~s7) & (~s9) & (dod >= -2047) & (dod <= 2048)
-    s64 = ~(zero | s7 | s9 | s12)
-    lengths = np.select([zero, s7, s9, s12, s64], [1, 9, 12, 16, 68]).astype(np.int64)
-    lo = np.zeros(len(dod), dtype=np.uint64)
-    hi = np.zeros(len(dod), dtype=np.uint64)
-    lo[s7] = (_U64(0b10) << _U64(7)) | (dod[s7] + 63).astype(np.uint64)
-    lo[s9] = (_U64(0b110) << _U64(9)) | (dod[s9] + 255).astype(np.uint64)
-    lo[s12] = (_U64(0b1110) << _U64(12)) | (dod[s12] + 2047).astype(np.uint64)
-    if s64.any():
-        lo[s64] = dod[s64].view(np.uint64)
-        hi[s64] = _U64(0b1111)
 
     buf, byte_start, byte_len = _grouped_pack(hi, lo, lengths, code_gid, n_groups)
     out: list[bytes] = []
@@ -371,45 +359,8 @@ def encode_values_many(vals: np.ndarray, group_starts: np.ndarray) -> list[bytes
     bits64 = vals.view(np.uint64) if len(vals) else np.zeros(0, dtype=np.uint64)
     prev = np.roll(bits64, 1)
     code_mask = pos >= 1
-    xors = (bits64 ^ prev)[code_mask]
+    hi, lo, lengths = _xor_codes((bits64 ^ prev)[code_mask])
     code_gid = gid[code_mask]
-
-    zero = xors == 0
-    nz = ~zero
-    lead = np.zeros(len(xors), dtype=np.int64)
-    trail = np.zeros(len(xors), dtype=np.int64)
-    if nz.any():
-        x = xors[nz]
-        top = np.zeros(len(x), dtype=np.int64)
-        v = x.copy()
-        for s in (32, 16, 8, 4, 2, 1):
-            big = v >= (_U64(1) << _U64(s))
-            top[big] += s
-            v[big] >>= _U64(s)
-        lead[nz] = np.minimum(63 - top, 31)
-        lowbit = x & (~x + _U64(1))
-        t = np.zeros(len(x), dtype=np.int64)
-        v = lowbit.copy()
-        for s in (32, 16, 8, 4, 2, 1):
-            big = v >= (_U64(1) << _U64(s))
-            t[big] += s
-            v[big] >>= _U64(s)
-        trail[nz] = t
-
-    sig = np.where(nz, 64 - lead - trail, 0).astype(np.int64)
-    lengths = np.where(zero, 1, 13 + sig).astype(np.int64)
-    sigbits = np.where(nz, xors >> trail.astype(np.uint64), _U64(0))
-    head = (_U64(0b11) << _U64(11)) | (
-        lead.astype(np.uint64) << _U64(6)
-    ) | (np.maximum(sig - 1, 0)).astype(np.uint64)
-    sig_u = sig.astype(np.uint64)
-    sh_lo = np.minimum(sig_u, _U64(63))
-    sh_hi = np.minimum(_U64(64) - sig_u, _U64(63))
-    sig64 = sig_u == 64
-    lo = np.where(sig64, sigbits, sigbits | (head << sh_lo))
-    hi = np.where(sig64, head, head >> sh_hi)
-    lo = np.where(nz, lo, _U64(0)).astype(np.uint64)
-    hi = np.where(nz, hi, _U64(0)).astype(np.uint64)
 
     buf, byte_start, byte_len = _grouped_pack(hi, lo, lengths, code_gid, n_groups)
     out: list[bytes] = []

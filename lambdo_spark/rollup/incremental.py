@@ -308,6 +308,14 @@ def refresh_from_pages(
     result = {"affected_parts": {}, "snapshots": {}}
     try:
         if not affected:
+            if delta_tag:
+                # nothing to merge, but the tag is applied: record it
+                # so a replay (or a second retention build) is skipped
+                store.commit_metadata(
+                    input_snapshot=f"delta:{delta_tag}",
+                    extra={"applied_deltas": applied + [delta_tag]},
+                    expect_extra={"applied_deltas": prev.get("applied_deltas")},
+                )
             return result
 
         # 1. merge delta into the stored partials of affected weeks

@@ -1778,19 +1778,30 @@ class IcebergLayoutTable:
         """Commit one row change on ``snap``. ``leave``: the leaving
         rows (with ``_file, _pos``, or the merge ``keys``); ``arrive``:
         the arriving rows; ``rewrite``: partitions -> their new content,
-        the copy-on-write form of the change. Commits nothing when no
-        row moves and there is no ``extra`` state (the merge ledger)."""
+        the copy-on-write form of the change. A change that moves no
+        row reads no data file (see _no_change)."""
         if mode == "merge-on-read":
             return self._commit_mor(snap, leave, label, arrive, keys, extra, expect_extra)
         # copy-on-write pins the versions AND row state of the parts it
         # rewrites (overwrite_parts with base_snapshot)
         part_col = snap.get("part_col", "part")
         parts = self._parts_of(leave, part_col)
-        if not parts and not extra:
-            return snap
+        if not parts:
+            return self._no_change(snap, label, extra, expect_extra)
         return self.overwrite_parts(
             rewrite(parts), parts, part_col=part_col, input_snapshot=label,
             extra=extra, base_snapshot=snap, expect_extra=expect_extra,
+        )
+
+    def _no_change(self, snap: dict, label: str, extra: dict | None,
+                   expect_extra: dict | None) -> dict:
+        """A change that moves no row: commit only the state it CASes
+        (a tagged merge's idempotency ledger) as one metadata-only
+        commit, else nothing."""
+        if not expect_extra:
+            return snap
+        return self.commit_metadata(
+            label, {k: extra[k] for k in expect_extra}, expect_extra
         )
 
     @staticmethod
@@ -1808,6 +1819,11 @@ class IcebergLayoutTable:
         files are its base) and the leaving rows become one delete-file
         set, in one commit."""
         part_col = snap.get("part_col", "part")
+        if keys is not None:
+            # a merge knows its partitions before it claims anything
+            parts = self._parts_of(leave, part_col)
+            if not parts:
+                return self._no_change(snap, label, extra, expect_extra)
         schema_id, expect_schema = None, self._SCHEMA_UNCHECKED
         if arrive is not None:
             # before anything is written: a refused delta leaves no trace
@@ -1818,16 +1834,15 @@ class IcebergLayoutTable:
             # leaving rows, so their write also finds the partitions
             dels = self._write_deletes(leave, v, part_col, None)
             parts = existing = sorted(dels)
+            if not parts:
+                return self._no_change(snap, label, extra, expect_extra)
         else:
-            parts = self._parts_of(leave, part_col)
             existing = [p for p in parts if p in snap["parts"]]
             # equality deletes only where base rows exist to supersede
             dels = self._write_deletes(
                 leave.where(F.col(part_col).cast("string").isin(existing)),
                 v, part_col, keys,
             ) if existing else {}
-        if not parts and not extra:
-            return snap
         if arrive is not None:
             self._write_parts(arrive, parts, v, part_col, label, schema_id)
         return self._commit(

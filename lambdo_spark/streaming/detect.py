@@ -9,9 +9,10 @@ values per key and every emitted row equals the batch CUSUM over the
 rows processed so far (same processing-order contract and per-row
 ``late`` flag as ``streaming/smoothing.py``).
 
-With integer values/target/slack the arithmetic is exact end-to-end
-(the state carries longs); alerts are immediate: each row's scores
-emit in the same micro-batch that folded it.
+With integer values/target/slack the arithmetic is exact end-to-end:
+a sum past the int64 range fails the query instead of wrapping.
+Alerts are immediate: each row's scores emit in the same micro-batch
+that folded it.
 
 Values cross the Arrow boundary as a null-free column plus a null
 flag (``_value_null``): Arrow hands a bigint column that holds a null
@@ -34,56 +35,36 @@ field existed hold a two-field state; Spark refuses to restart from
 them (``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``), so such a query
 needs a new checkpoint location.
 
-``state_ttl_s`` (all three constructors): optional processing-time
-idle eviction — a key silent for that long is dropped from the state
-store and re-seeds as a cold start on its next arrival (recursion and
-``late`` baseline restart from empty). Default None = state forever.
+``cusum_fold`` and ``anomaly_fold`` are the per-group folds and take
+no Spark; ``streaming/_fold.py`` runs them, including the optional
+``state_ttl_s`` idle eviction (an evicted key re-seeds as a cold
+start: recursion and ``late`` baseline restart from empty).
 """
 
 from __future__ import annotations
 
+from bisect import bisect_left, bisect_right
+
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, BooleanType, DoubleType, LongType, StringType
 
-CUSUM_SCHEMA = StructType(
-    [
-        StructField("key", StringType()),
-        StructField("ts_s", LongType()),
-        StructField("value", LongType()),
-        StructField("cusum_pos", LongType()),
-        StructField("cusum_neg", LongType()),
-        StructField("late", BooleanType()),
-    ]
-)
+from lambdo_spark.streaming._fold import epoch_s, late_flags, run_keyed_fold, struct
+
+CUSUM_SCHEMA = struct(key=StringType(), ts_s=LongType(), value=LongType(),
+                      cusum_pos=LongType(), cusum_neg=LongType(),
+                      late=BooleanType())
 
 # (p_sum, p_min, q_sum, q_max, last_ts_s, n_folded) — P/Q cumulative
 # sums of the upper/lower deviations and their running extrema (empty
 # prefix = 0 is folded in by clamping the extrema at 0); n_folded
 # counts non-null folds so an all-null prefix can emit NULL scores
 # exactly like the batch window sum does
-CUSUM_STATE = StructType(
-    [
-        StructField("p_sum", LongType()),
-        StructField("p_min", LongType()),
-        StructField("q_sum", LongType()),
-        StructField("q_max", LongType()),
-        StructField("last_ts_s", LongType()),
-        StructField("n", LongType()),
-    ]
-)
-
+CUSUM_STATE = struct(p_sum=LongType(), p_min=LongType(), q_sum=LongType(),
+                     q_max=LongType(), last_ts_s=LongType(), n=LongType())
 
 NULL_FLAG = "_value_null"
 
@@ -95,163 +76,93 @@ def _exact_value(value_col: str) -> dict[str, Column]:
     return {value_col: F.coalesce(v, F.lit(0)), NULL_FLAG: v.isNull()}
 
 
-def _make_detector(target: int, slack: int, ts_col: str, value_col: str,
-                   ttl_ms: int | None):
-    t, s = int(target), int(slack)
+def cusum_fold(target: int, slack: int, ts_col: str = "ts",
+               value_col: str = "value"):
+    """The per-key fold ``(state | None, rows) -> (state', out)``."""
+    up, down = int(target) + int(slack), int(target) - int(slack)
 
-    def fn(key, pdfs, state: GroupState):
-        (k,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        frames = [pdf for pdf in pdfs]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        if len(pdf) == 0:
-            return
-        ts = (
-            pdf[ts_col].astype("datetime64[ns]").astype("int64") // 10**9
-        ).to_numpy()
-        order = pd.DataFrame(
-            {"t": ts, "null": pdf[NULL_FLAG].to_numpy(), "v": pdf[value_col].to_numpy()}
-        ).sort_values(["t", "null", "v"], kind="mergesort")
-        if state.exists:
-            p_sum, p_min, q_sum, q_max, last, n = state.get
-        else:
-            p_sum, p_min, q_sum, q_max, last, n = 0, 0, 0, 0, None, 0
-        out = {c: [] for c in ("key", "ts_s", "value", "cusum_pos",
-                               "cusum_neg", "late")}
-        for tt, null, v in zip(
-            order["t"].to_numpy(), order["null"].to_numpy(), order["v"].to_numpy()
-        ):
-            if null:
-                iv = None
-            else:
-                iv = int(v)
-                p_sum += iv - t - s
-                q_sum += iv - t + s
-                p_min = min(p_min, p_sum)
-                q_max = max(q_max, q_sum)
-                n += 1
-            out["key"].append(k)
-            out["ts_s"].append(int(tt))
-            out["value"].append(iv)
-            if n == 0:
-                out["cusum_pos"].append(None)
-                out["cusum_neg"].append(None)
-            else:
-                out["cusum_pos"].append(p_sum - min(0, p_min))
-                out["cusum_neg"].append(max(0, q_max) - q_sum)
-            out["late"].append(last is not None and int(tt) < last)
-            last = int(tt) if last is None else max(last, int(tt))
-        state.update(
-            (int(p_sum), int(p_min), int(q_sum), int(q_max), int(last),
-             int(n))
-        )
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        # Int64 straight from the Python ints: a DataFrame built from a
-        # list holding None would go through float64 first
-        for c in ("value", "cusum_pos", "cusum_neg"):
-            out[c] = pd.array(out[c], dtype="Int64")
-        yield pd.DataFrame(out)
+    def fold(state, rows):
+        t, null = epoch_s(rows[ts_col]), rows[NULL_FLAG].to_numpy(bool)
+        v = rows[value_col].to_numpy(np.int64)
+        order = np.lexsort((v, null, t))
+        t, null, v = t[order], null[order], v[order]
+        p_sum, p_min, q_sum, q_max, last, n = state or (0, 0, 0, 0, None, 0)
+        # object arrays of Python ints: the sums are exact past int64,
+        # and the int64 conversions raise OverflowError rather than wrap
+        x = v.astype(object)
+        p = p_sum + np.where(null, 0, x - up).cumsum()
+        q = q_sum + np.where(null, 0, x - down).cumsum()
+        p_low = np.minimum(p_min, np.minimum.accumulate(p))
+        q_high = np.maximum(q_max, np.maximum.accumulate(q))
+        # a null row folds nothing; scores stay NULL until the first fold
+        unscored = n + np.cumsum(~null) == 0
+        late, last = late_flags(t, last)
+        out = pd.DataFrame({
+            "key": rows["key"].to_numpy()[order], "ts_s": t,
+            "value": pd.arrays.IntegerArray(v, null),
+            "cusum_pos": pd.arrays.IntegerArray(np.int64(p - p_low), unscored),
+            "cusum_neg": pd.arrays.IntegerArray(np.int64(q_high - q), unscored),
+            "late": late,
+        })
+        sums = np.int64([p[-1], p_low[-1], q[-1], q_high[-1]]).tolist()
+        return (*sums, last, n + int((~null).sum())), out
 
-    return fn
+    return fold
 
 
-ANOMALY_SCHEMA = StructType(
-    [
-        StructField("key", StringType()),
-        StructField("bucket_s", LongType()),
-        StructField("value", LongType()),
-        StructField("baseline_mean", DoubleType()),
-        StructField("n_prior", LongType()),
-        StructField("zscore", DoubleType()),
-        StructField("is_anomaly", BooleanType()),
-        StructField("late", BooleanType()),
-    ]
-)
+ANOMALY_SCHEMA = struct(key=StringType(), bucket_s=LongType(),
+                        value=LongType(), baseline_mean=DoubleType(),
+                        n_prior=LongType(), zscore=DoubleType(),
+                        is_anomaly=BooleanType(), late=BooleanType())
 
 # ring buffer of the last `lookback` same-phase points, bucket-sorted,
 # and the newest bucket seen (null-valued buckets advance it too)
-ANOMALY_STATE = StructType(
-    [
-        StructField("buckets", ArrayType(LongType())),
-        StructField("values", ArrayType(LongType())),
-        StructField("newest", LongType()),
-    ]
-)
+ANOMALY_STATE = struct(buckets=ArrayType(LongType()),
+                       values=ArrayType(LongType()), newest=LongType())
 
 
-def _make_seasonal(lookback: int, min_prior: int, threshold: float,
-                   bucket_col: str, value_col: str, ttl_ms: int | None):
-    import numpy as np
+def anomaly_fold(lookback: int, min_prior: int, threshold: float,
+                 bucket_col: str = "bucket_s", value_col: str = "value"):
+    """The per-(key, phase) fold ``(state | None, rows) -> (state', out)``:
+    rows fold in (bucket, null, value) order; each reads the ring's
+    points before its own bucket, then enters the ring if non-null."""
 
-    def fn(key, pdfs, state: GroupState):
-        k = key[0]
-        if state.hasTimedOut:
-            state.remove()
-            return
-        frames = [pdf for pdf in pdfs]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        if len(pdf) == 0:
-            return
-        order = pdf[[bucket_col, NULL_FLAG, value_col]].sort_values(
-            [bucket_col, NULL_FLAG, value_col], kind="mergesort"
-        )
-        if state.exists:
-            bufb, bufv, newest = state.get
-            bufb, bufv = list(bufb), list(bufv)
-        else:
-            bufb, bufv, newest = [], [], None
-        out = {c: [] for c in ("key", "bucket_s", "value", "baseline_mean",
-                               "n_prior", "zscore", "is_anomaly", "late")}
-        for b, is_null, v in zip(
-            order[bucket_col].astype("int64").to_numpy(),
-            order[NULL_FLAG].to_numpy(),
-            order[value_col].to_numpy(),
-        ):
-            b = int(b)
-            prior = [x for bb, x in zip(bufb, bufv) if bb < b][-lookback:]
-            n = len(prior)
-            if n >= min_prior:
-                arr = np.asarray(prior, dtype=np.float64)
-                mean = float(arr.mean())
-                sd = float(arr.std(ddof=1)) if n >= 2 else 0.0
-                z = (v - mean) / sd if sd > 0 and not is_null else None
-            else:
-                mean = float(np.mean(prior)) if prior else None
-                z = None
-            out["key"].append(k)
-            out["bucket_s"].append(b)
-            out["value"].append(None if is_null else int(v))
-            out["baseline_mean"].append(mean)
-            out["n_prior"].append(n)
-            out["zscore"].append(z)
-            out["is_anomaly"].append(z is not None and abs(z) > threshold)
-            out["late"].append(newest is not None and b < newest)
-            if not is_null:
-                # insert in bucket order, trim to the lookback window
-                i = len(bufb)
-                while i > 0 and bufb[i - 1] > b:
-                    i -= 1
-                bufb.insert(i, b)
-                bufv.insert(i, int(v))
-                if len(bufb) > lookback:
-                    bufb, bufv = bufb[-lookback:], bufv[-lookback:]
-            if newest is None or b > newest:
-                # null rows advance the late-flag baseline too
-                newest = b
-        state.update((bufb, bufv, newest))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        out["value"] = pd.array(out["value"], dtype="Int64")
-        yield pd.DataFrame(out)
+    def fold(state, rows):
+        b = rows[bucket_col].to_numpy(np.int64)
+        null = rows[NULL_FLAG].to_numpy(bool)
+        v = rows[value_col].to_numpy(np.int64)
+        order = np.lexsort((v, null, b))
+        b, null, v = b[order], null[order], v[order]
+        ring_b, ring_v, newest = state or ([], [], None)
+        ring_b, ring_v = list(ring_b), list(ring_v)
+        mean, z = np.full(len(b), np.nan), np.full(len(b), np.nan)
+        n_prior = np.zeros(len(b), np.int64)
+        for i, bi in enumerate(b.tolist()):
+            lo = bisect_left(ring_b, bi)
+            prior = np.asarray(ring_v[:lo][-lookback:], np.float64)
+            n_prior[i] = len(prior)
+            if len(prior):
+                mean[i] = prior.mean()
+            sd = prior.std(ddof=1) if len(prior) >= 2 else 0.0
+            if len(prior) >= min_prior and sd > 0 and not null[i]:
+                z[i] = (v[i] - mean[i]) / sd
+            if not null[i]:
+                # after equal buckets, then keep the newest `lookback`
+                at = bisect_right(ring_b, bi)
+                ring_b.insert(at, bi)
+                ring_v.insert(at, int(v[i]))
+                del ring_b[:-lookback], ring_v[:-lookback]
+        # null rows advance the late-flag baseline too
+        late, newest = late_flags(b, newest)
+        out = pd.DataFrame({
+            "key": rows["key"].to_numpy()[order], "bucket_s": b,
+            "value": pd.arrays.IntegerArray(v, null), "baseline_mean": mean,
+            "n_prior": n_prior, "zscore": z,
+            "is_anomaly": np.abs(z) > threshold, "late": late,
+        })
+        return (ring_b, ring_v, newest), out
 
-    return fn
+    return fold
 
 
 def streaming_anomaly(
@@ -271,15 +182,13 @@ def streaming_anomaly(
     The group key is (key, phase) — phase = bucket % period — so the
     state store holds one ``lookback``-deep ring buffer per
     (series, hour-of-day): exactly the window the batch op reads, and
-    identical verdicts when points arrive in bucket order (pinned).
+    identical verdicts when points arrive in bucket order (pinned) —
+    for null-free series: a null bucket takes a slot of the batch
+    window (``lookback`` rows) but never enters the ring.
     A point whose bucket regresses the phase's newest is flagged
     ``late``; its baseline uses whatever older same-phase points the
     buffer still holds (the batch op re-reads history a stream cannot).
     """
-    ttl_ms = None if state_ttl_s is None else int(state_ttl_s) * 1000
-    if ttl_ms is not None and ttl_ms <= 0:
-        raise ValueError(f"state_ttl_s must be positive, got {state_ttl_s}")
-
     keyed = stream.select(
         F.concat_ws(
             "␟",
@@ -290,36 +199,11 @@ def streaming_anomaly(
         F.col(bucket_col),
         *[c.alias(n) for n, c in _exact_value(value_col).items()],
     )
-
-    fn = _make_seasonal(
-        int(lookback), int(min_prior), float(threshold), bucket_col,
-        value_col, ttl_ms,
-    )
-
-    def fn_keyed(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        frames = [pdf for pdf in pdfs]
-        if not frames:
-            return
-        # real series key rides in the rows; the group key is (key, phase)
-        first = next((f for f in frames if len(f)), None)
-        if first is None:
-            return
-        real_key = first["key"].iloc[0]
-        yield from fn((real_key,), iter(frames), state)
-
-    return keyed.groupBy("_gk").applyInPandasWithState(
-        fn_keyed,
-        outputStructType=ANOMALY_SCHEMA,
-        stateStructType=ANOMALY_STATE,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    return run_keyed_fold(
+        keyed.groupBy("_gk"),
+        anomaly_fold(int(lookback), int(min_prior), float(threshold),
+                     bucket_col, value_col),
+        ANOMALY_SCHEMA, ANOMALY_STATE, state_ttl_s,
     )
 
 
@@ -333,20 +217,10 @@ def streaming_cusum(
     state_ttl_s: int | None = None,
 ) -> DataFrame:
     """One scored row per input row; see module doc for semantics."""
-    ttl_ms = None if state_ttl_s is None else int(state_ttl_s) * 1000
-    if ttl_ms is not None and ttl_ms <= 0:
-        raise ValueError(f"state_ttl_s must be positive, got {state_ttl_s}")
     renamed = stream.withColumnRenamed(key_col, "key").withColumns(
         _exact_value(value_col)
     )
-    return renamed.groupBy("key").applyInPandasWithState(
-        _make_detector(target, slack, ts_col, value_col, ttl_ms),
-        outputStructType=CUSUM_SCHEMA,
-        stateStructType=CUSUM_STATE,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    return run_keyed_fold(
+        renamed.groupBy("key"), cusum_fold(target, slack, ts_col, value_col),
+        CUSUM_SCHEMA, CUSUM_STATE, state_ttl_s,
     )

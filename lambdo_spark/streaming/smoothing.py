@@ -16,8 +16,7 @@ in (ts, value) order; across micro-batches in arrival order. A late
 row (event time older than the key's newest processed event) still
 folds — smoothing is about recency of PROCESSING for monitoring
 streams — but is flagged ``late=true`` so downstream consumers can
-discount or audit it (the same late-data honesty contract as
-streaming sessions' caveat, surfaced per row instead of buried).
+discount or audit it.
 
 NULL values follow the batch twin's pandas ``ignore_na=False``
 semantics exactly: a null row adds no weight but still decays the
@@ -25,107 +24,59 @@ prior weights (num and den both scale by 1-α — their ratio, the
 emitted ewma, is unchanged), so it re-emits the prior smoothed value
 (null if nothing has been observed yet) without poisoning the state.
 
-State is two doubles + two longs per key — by default forever (a
-10^9-key store ≈ tens of GB cluster-wide). Pass ``state_ttl_s`` to
-bound the store on unbounded key domains (per-url streams): a key
-idle for that long in PROCESSING time is evicted and re-seeds as a
-cold start on its next arrival — its recursion restarts from empty
-(ewma forgets the pre-eviction history; the ``late`` flag also
-resets, because "newest processed event" is part of the evicted
-state). The per-batch fold is a per-key python loop over that key's
-micro-batch rows — bounded by batch size, not history.
+``ewma_fold`` is the per-key fold and takes no Spark;
+``streaming/_fold.py`` runs it, including the optional
+``state_ttl_s`` idle eviction (an evicted key re-seeds as a cold
+start: the recursion and the ``late`` baseline restart from empty).
 """
 
 from __future__ import annotations
 
-import math
+from itertools import accumulate
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import BooleanType, DoubleType, LongType, StringType
 
-EWMA_SCHEMA = StructType(
-    [
-        StructField("key", StringType()),
-        StructField("ts_s", LongType()),
-        StructField("value", DoubleType()),
-        StructField("ewma", DoubleType()),
-        StructField("late", BooleanType()),
-    ]
-)
+from lambdo_spark.streaming._fold import epoch_s, late_flags, run_keyed_fold, struct
+
+EWMA_SCHEMA = struct(key=StringType(), ts_s=LongType(), value=DoubleType(),
+                     ewma=DoubleType(), late=BooleanType())
 
 # (num, den, last_ts_s, n_seen)
-EWMA_STATE = StructType(
-    [
-        StructField("num", DoubleType()),
-        StructField("den", DoubleType()),
-        StructField("last_ts_s", LongType()),
-        StructField("n", LongType()),
-    ]
-)
+EWMA_STATE = struct(num=DoubleType(), den=DoubleType(), last_ts_s=LongType(),
+                    n=LongType())
 
 
-def _make_smoother(alpha: float, ts_col: str, value_col: str,
-                   ttl_ms: int | None):
+def _decay_sum(x: np.ndarray, q: float, start: float) -> np.ndarray:
+    """y_i = x_i + q·y_{i-1} from y_{-1} = ``start``."""
+    ys = accumulate(x.tolist(), lambda y, xi: xi + q * y, initial=start)
+    return np.fromiter(ys, np.float64, len(x) + 1)[1:]
+
+
+def ewma_fold(alpha: float, ts_col: str = "ts", value_col: str = "value"):
+    """The per-key fold ``(state | None, rows) -> (state', out)``."""
     q = 1.0 - float(alpha)
 
-    def fn(key, pdfs, state: GroupState):
-        (k,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        frames = [pdf for pdf in pdfs]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        if len(pdf) == 0:
-            # frames present but empty: nothing to fold, nothing to
-            # update (int(None) on `last` would throw below)
-            return
-        ts = (
-            pdf[ts_col].astype("datetime64[ns]").astype("int64") // 10**9
-        ).to_numpy()
-        vals = pdf[value_col].astype("float64").to_numpy()
-        order = pd.DataFrame({"t": ts, "v": vals}).sort_values(
-            ["t", "v"], kind="mergesort"
-        )
-        if state.exists:
-            num, den, last, n = state.get
-        else:
-            num, den, last, n = 0.0, 0.0, None, 0
-        out = {c: [] for c in ("key", "ts_s", "value", "ewma", "late")}
-        for t, v in zip(order["t"].to_numpy(), order["v"].to_numpy()):
-            if math.isnan(v):
-                # ignore_na=False: decay both sides — the ratio (the
-                # emitted smoothed value) is unchanged, but older
-                # observations now weigh less against the next real one
-                num *= q
-                den *= q
-            else:
-                num = v + q * num
-                den = 1.0 + q * den
-            n += 1
-            out["key"].append(k)
-            out["ts_s"].append(int(t))
-            out["value"].append(float(v))
-            out["ewma"].append(num / den if den > 0.0 else float("nan"))
-            out["late"].append(last is not None and int(t) < last)
-            last = int(t) if last is None else max(last, int(t))
-        state.update((float(num), float(den), int(last), int(n)))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame(out)
+    def fold(state, rows):
+        t = epoch_s(rows[ts_col])
+        v = rows[value_col].to_numpy(np.float64, na_value=np.nan)
+        order = np.lexsort((v, t))
+        t, v = t[order], v[order]
+        num, den, last, n = state or (0.0, 0.0, None, 0)
+        null = np.isnan(v)
+        nums = _decay_sum(np.where(null, 0.0, v), q, num)
+        dens = _decay_sum(np.where(null, 0.0, 1.0), q, den)
+        late, last = late_flags(t, last)
+        with np.errstate(invalid="ignore"):
+            smoothed = np.where(dens > 0.0, nums / dens, np.nan)
+        out = pd.DataFrame({"key": rows["key"].to_numpy()[order], "ts_s": t,
+                            "value": v, "ewma": smoothed, "late": late})
+        return (float(nums[-1]), float(dens[-1]), last, n + len(v)), out
 
-    return fn
+    return fold
 
 
 def streaming_ewma(
@@ -143,18 +94,8 @@ def streaming_ewma(
     """
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    ttl_ms = None if state_ttl_s is None else int(state_ttl_s) * 1000
-    if ttl_ms is not None and ttl_ms <= 0:
-        raise ValueError(f"state_ttl_s must be positive, got {state_ttl_s}")
-    renamed = stream.withColumnRenamed(key_col, "key")
-    return renamed.groupBy("key").applyInPandasWithState(
-        _make_smoother(alpha, ts_col, value_col, ttl_ms),
-        outputStructType=EWMA_SCHEMA,
-        stateStructType=EWMA_STATE,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    return run_keyed_fold(
+        stream.withColumnRenamed(key_col, "key").groupBy("key"),
+        ewma_fold(alpha, ts_col, value_col), EWMA_SCHEMA, EWMA_STATE,
+        state_ttl_s,
     )

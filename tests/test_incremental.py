@@ -289,3 +289,29 @@ def test_refresh_keeps_a_mor_delete_on_the_store(spark, tmp_path):
     hit = (F.col("url") == gone["url"]) & (F.col("bucket_s") == gone["bucket_s"])
     assert store.read_tier(spark).where(hit).count() == 0
     assert _tier_table(root, "1h").read_tier(spark).where(hit).count() == 0
+
+
+def test_empty_tagged_delta_records_its_tag(spark, tmp_path):
+    """A tagged delta that touches no partition still enters the tag
+    ledger: replaying its tag is skipped, and a retention build that
+    merged nothing is not run a second time."""
+    root = str(tmp_path / "tiers")
+    pages = generate_pages(spark, 300, seed=65)
+    refresh_from_pages(spark, pages, root, delta_tag="base", enforce_audit=False)
+    r = refresh_from_pages(spark, pages.limit(0), root, delta_tag="empty",
+                           enforce_audit=False)
+    assert r == {"affected_parts": {}, "snapshots": {}}
+    r = refresh_from_pages(spark, pages, root, delta_tag="empty",
+                           enforce_audit=False)
+    assert r["skipped"] == "empty"
+
+    from lambdo_spark.rollup.pipeline import RETENTION_TAG, run_retention_pipeline
+
+    fresh = str(tmp_path / "fresh")
+    run_retention_pipeline(spark, pages.limit(0), fresh, enforce_audit=False)
+    again = run_retention_pipeline(spark, pages, fresh, enforce_audit=False)
+    assert again["skipped"] == RETENTION_TAG
+    # the ledger-only store still takes real deltas
+    r = refresh_from_pages(spark, pages, fresh, delta_tag="d1", enforce_audit=False)
+    assert r["affected_parts"]["partials_1h"]
+    assert read_finalized_tier(spark, fresh, "1d").count() > 0

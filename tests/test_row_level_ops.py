@@ -635,3 +635,32 @@ def test_mor_merge_refused_by_schema_writes_nothing(spark, tmp_path):
         t.merge_rows(bad, keys=["url", "bucket_s"], mode="merge-on-read")
     assert t.current_snapshot()["snapshot_id"] == s0
     assert not (tmp_path / "t" / "deletes").exists()
+
+
+def test_empty_merge_reads_no_data_file(spark, tmp_path):
+    """Merging an empty delta reads only the delta — here an empty
+    local relation, which needs no job at all — and no data file:
+    untagged it returns the current snapshot, tagged it makes one
+    metadata-only commit recording the tag."""
+    sc = spark.sparkContext
+    empty = _mk(spark).limit(0)
+    for mode in ("copy-on-write", "merge-on-read"):
+        t = IcebergLayoutTable(str(tmp_path / mode))
+        t.write_tier(_mk(spark))
+        before = t.current_snapshot()
+        group = f"empty_merge_{mode}"
+        sc.setJobGroup(group, "empty merge")
+        try:
+            untagged = t.merge_rows(empty, keys=["url", "bucket_s"], mode=mode)
+            tagged = t.merge_rows(empty, keys=["url", "bucket_s"], mode=mode,
+                                  idempotency_tag="b1")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], mode
+        assert untagged == before
+        assert tagged["snapshot_id"] == before["snapshot_id"] + 1
+        assert tagged["parts"] == before["parts"]
+        assert tagged["applied_upserts"] == ["b1"]
+        assert t.merge_rows(empty, keys=["url", "bucket_s"], mode=mode,
+                            idempotency_tag="b1") == tagged
+        assert t.read_tier(spark).count() == 90

@@ -189,15 +189,13 @@ def test_stream_twins_equal_reference_folds(spark, tmp_path, seed, in_order):
     rows, files = _draw(seed, in_order)
     assert any(v is None for _, _, v in rows)
     seq = _processing_order(rows, files)
-    if not in_order:
-        _, late = _ref_ewma(seq)
-        assert sum(late) >= 0.05 * len(rows)
+    ref, late = _ref_ewma(seq)
+    assert in_order or sum(late) >= 0.05 * len(rows)
     # the in-order seed reads every prior same-phase point (lookback
     # above the rows per phase), the batch window's reach
     lookback = 64 if in_order else 3
     got = _run_stream(spark, tmp_path, rows, files, lookback)
 
-    ref, late = _ref_ewma(seq)
     ref = _sorted(pd.DataFrame(ref, columns=["key", "ts_s", "ewma"]).assign(late=late),
                   ["key", "ts_s"])
     e = _sorted(got["ewma"], ["key", "ts_s"])
