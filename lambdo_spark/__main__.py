@@ -100,7 +100,7 @@ def _run_realtime(args) -> int:
         from pyspark.sql import functions as F
 
         raw = spark.read.parquet(args.raw)
-        w = materialization_watermark(args.root, args.tier, spark=spark)
+        w = materialization_watermark(args.root, args.tier)
         df = read_realtime_tier(
             spark, args.root, args.tier, raw,
             gapfill=args.gapfill, cascade=args.cascade,
@@ -400,7 +400,6 @@ def _run_plan(args) -> int:
         "total_files": plan["total_files"],
         "skipped_files": plan["skipped_files"],
         "skipped_parts": plan["skipped_parts"],
-        "legacy_dirs_unplannable": len(plan["legacy_dirs"]),
     }
     print(json.dumps(out, indent=1))
     if args.list_files:
@@ -411,7 +410,7 @@ def _run_plan(args) -> int:
 
 def main(argv: list[str] | None = None) -> int:
     argv = list(sys.argv[1:] if argv is None else argv)
-    # legacy form: `python -m lambdo_spark workflow.json [...]`
+    # bare form: `python -m lambdo_spark workflow.json [...]` runs it
     if argv and argv[0] not in (
         "retention", "refresh", "maintain", "stream-refresh", "plan",
         "schema", "delete", "merge", "branch", "update", "evolve-parts",

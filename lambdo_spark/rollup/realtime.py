@@ -60,7 +60,6 @@ __all__ = ["materialization_watermark", "read_realtime_tier"]
 def materialization_watermark(
     root: str,
     tier_name: str,
-    spark: SparkSession | None = None,
     col: str = "bucket_s",
 ) -> int | None:
     """Max materialized ``bucket_s`` of a tier — metadata-only.
@@ -72,40 +71,26 @@ def materialization_watermark(
     materialized"), not a row max — deleting the newest tier rows must
     not re-open their buckets to the raw tail.
 
-    Legacy manifests without file stats (or files missing the stat
-    column) fall back to one Spark ``max(col)`` over the tier —
-    requires ``spark``. Returns ``None`` for an empty/absent tier.
+    A data file without a ``col`` stat raises ``ValueError`` naming
+    the file. Returns ``None`` for an empty/absent tier.
     """
-    return _table_watermark(_tier_table(root, tier_name), spark, col)
+    return _table_watermark(_tier_table(root, tier_name), col)
 
 
-def _table_watermark(t, spark: SparkSession | None, col: str) -> int | None:
+def _table_watermark(t, col: str) -> int | None:
     snap = t.current_snapshot()
     if snap is None:
         return None
     hi: int | None = None
-    need_scan = False
     for p, v in t._version_pairs(snap):
-        m = t._manifest(p, v) or {}
-        frs = m.get("files")
-        if frs is None:  # legacy manifest — no per-file stats recorded
-            need_scan = True
-            continue
-        for fr in frs:
-            st = (fr.get("stats") or {}).get(col)
+        for fr in t._manifest(p, v)["files"]:
+            st = fr["stats"].get(col)
             if st is None or st[1] is None:
-                need_scan = True
-            else:
-                hi = int(st[1]) if hi is None else max(hi, int(st[1]))
-    if need_scan:
-        if spark is None:
-            raise ValueError(
-                f"table {t.root} has files without {col} stats; pass "
-                "spark= to allow the one-column max() fallback scan"
-            )
-        mx = t.read_tier(spark).agg(F.max(col).alias("mx")).first()["mx"]
-        if mx is not None:
-            hi = int(mx) if hi is None else max(hi, int(mx))
+                raise ValueError(
+                    f"table {t.root}: data file {fr['path']} records no "
+                    f"max {col} stat, so the watermark is unknown"
+                )
+            hi = int(st[1]) if hi is None else max(hi, int(st[1]))
     return hi
 
 
@@ -161,7 +146,7 @@ def read_realtime_tier(
     w = (
         watermark
         if watermark is not None
-        else materialization_watermark(root, tier_name, spark=spark)
+        else materialization_watermark(root, tier_name)
     )
     if measure is None:
         measure = F.length(F.col(text_col)).cast("long")
@@ -184,7 +169,7 @@ def read_realtime_tier(
             from lambdo_spark.rollup.incremental import _partials_store
 
             store = _partials_store(root)
-            w_p = _table_watermark(store, spark, "bucket_s")
+            w_p = _table_watermark(store, "bucket_s")
             if w_p is not None and w_p > w:
                 # 1h partials in [w, w_p) replace that span of raw; the
                 # store's own (possibly partial) newest hour w_p is

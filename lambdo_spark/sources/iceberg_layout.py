@@ -7,7 +7,7 @@ manifests with lineage + metrics, idempotent partition rewrites —
 over partitioned Parquet:
 
     <root>/data/part=<p>/snapv=<v>/*.parquet   (immutable once committed)
-    <root>/metadata/manifest-<p>-v<v>.json     (lineage row per part version)
+    <root>/metadata/manifest-<p>-v<v>.json     (files, stats, lineage per part version)
     <root>/metadata/snapshot-<n>.json          (maps part -> version)
     <root>/metadata/CURRENT                    (atomic pointer, tmp+rename)
 
@@ -28,6 +28,18 @@ versions.
 
 Time travel: ``read_tier(spark, snapshot_id=n)`` reads the exact
 partition-version set snapshot n committed.
+
+**One read path**: every read (``read_tier`` with or without a prune,
+``read_parts``, ``read_changes``, the DML and compaction rewrites) is
+one plan over manifest file lists — never a directory listing or a
+footer inference — and one scan per written schema. ``plan_files``
+returns the exact data files of each base version and each
+merge-on-read ``adds`` version, minus those whose stats cannot meet a
+prune; the scan reads them under the registered schema's DDL with the
+partition column as ``bigint`` (writers refuse non-integer partition
+columns). Layouts this reader does not serve — list-form snapshot
+parts (pre-MVCC loose files), manifests without a file list or a
+schema id, snapshots with parts but no schema — raise ``ValueError``.
 
 **Schema evolution** (field-id based, the Iceberg model): the table
 schema is a list of ``{id, name, type}`` fields stored in immutable
@@ -205,10 +217,16 @@ class IcebergLayoutTable:
             name = f"snapshot-{snapshot_id}.json"
         snap = _read_json(os.path.join(self.meta_dir, name))
         if snap and isinstance(snap.get("parts"), list):
-            # pre-MVCC layout: unversioned parts lived directly under
-            # part=<p>; treat as version -1 (sentinel, no snapv dir)
-            snap["parts"] = {p: -1 for p in snap["parts"]}
+            self._refuse_layout(name, "lists its parts without versions", "pre-MVCC")
+        if snap and snap["parts"] and snap.get("schema_id") is None:
+            self._refuse_layout(name, "has parts but no schema_id", "schema-less")
         return snap
+
+    def _refuse_layout(self, name: str, what: str, layout: str):
+        raise ValueError(
+            f"{self.root}: {name} {what} — the {layout} table layout is not "
+            "read; rewrite the table with a current writer"
+        )
 
     # ------------------------------------------------------------ branches
     def create_branch(self, name: str, from_snapshot: int | None = None) -> dict:
@@ -332,12 +350,7 @@ class IcebergLayoutTable:
         snap = self.current_snapshot()
         if not snap:
             return []
-        out = []
-        for p, v in sorted(self._version_pairs(snap)):
-            m = self._manifest(p, v)
-            if m:
-                out.append(m)
-        return out
+        return [self._manifest(p, v) for p, v in sorted(self._version_pairs(snap))]
 
     def _next_snapshot_id(self) -> int:
         # GLOBAL max across every snapshot file: branches share one
@@ -593,7 +606,7 @@ class IcebergLayoutTable:
     def schema(self, schema_id: int | None = None) -> dict | None:
         """The table schema (``{"schema_id", "fields", "last_field_id"}``)
         — current snapshot's by default, or any historical id. ``None``
-        for pre-evolution tables that never registered one."""
+        while the table has none (no write has landed yet)."""
         if schema_id is None:
             snap = self.current_snapshot()
             schema_id = snap.get("schema_id") if snap else None
@@ -635,7 +648,19 @@ class IcebergLayoutTable:
         this write minted a new schema, or the unchecked sentinel when
         it reuses the current one (reuse is always safe: manifests
         record the written id, so field-id mapping stays correct even
-        if the current pointer moves concurrently)."""
+        if the current pointer moves concurrently).
+
+        Every writer passes through here before it writes a data file,
+        so this is where a non-integer partition column is refused:
+        reads type ``part_col`` as bigint, and the part prune, retention
+        drops and refresh part math all treat partition values as
+        integers."""
+        ptype = dict(df.dtypes).get(part_col)
+        if ptype not in ("tinyint", "smallint", "int", "bigint"):
+            raise TypeError(
+                f"partition column {part_col!r} must be tinyint, smallint, "
+                f"int or bigint, got {ptype}"
+            )
         snap = self.current_snapshot()
         cur_sid = snap.get("schema_id") if snap else None
         cur = self.schema(cur_sid) if cur_sid is not None else None
@@ -888,8 +913,9 @@ class IcebergLayoutTable:
             expect_extra={"part_spec_id": base_spec_id},
         )
 
+    @staticmethod
     def _normalize_to_schema(
-        self, df: DataFrame, written: dict | None, target: dict, part_col: str
+        df: DataFrame, written: dict, target: dict, part_col: str
     ) -> DataFrame:
         """Project ``df`` (read with its written column names/types)
         onto ``target``: rename by field id, cast widened types, NULL-
@@ -900,15 +926,10 @@ class IcebergLayoutTable:
             for c in (part_col, "snapv", "_file", "_pos")
             if c in df.columns
         ]
-        wrote_by_id = (
-            {f["id"]: f for f in written["fields"]} if written else None
-        )
+        wrote_by_id = {f["id"]: f for f in written["fields"]}
         for f in target["fields"]:
-            if wrote_by_id is not None:
-                wf = wrote_by_id.get(f["id"])
-                src = wf["name"] if wf else None
-            else:
-                src = f["name"]
+            wf = wrote_by_id.get(f["id"])
+            src = wf["name"] if wf else None
             if src is not None and src in df.columns:
                 cols.append(F.col(src).cast(f["type"]).alias(f["name"]))
             else:
@@ -925,7 +946,7 @@ class IcebergLayoutTable:
     ) -> dict:
         """Write all not-yet-committed partitions of ``df``; resumable.
 
-        ``df`` must carry ``part_col`` (string-able partition value).
+        ``df`` must carry ``part_col`` as an integer column.
         Returns the committed snapshot dict.
         """
         versions = self.part_versions()
@@ -1049,6 +1070,8 @@ class IcebergLayoutTable:
     ) -> None:
         if not missing:
             return
+        if schema_id is None:  # a bare call: the schema the write resolves to
+            schema_id = self._ensure_write_schema(df, part_col)[0]
         t0 = time.time()
         pending = df.where(F.col(part_col).cast("string").isin(missing)).withColumn(
             "snapv", F.lit(version)
@@ -1141,8 +1164,7 @@ class IcebergLayoutTable:
             )
 
     def _version_dir(self, part: str, version: int, part_col: str = "part") -> str:
-        base = os.path.join(self.data_dir, f"{part_col}={part}")
-        return base if version == -1 else os.path.join(base, f"snapv={version}")
+        return os.path.join(self.data_dir, f"{part_col}={part}", f"snapv={version}")
 
     # file identity for position deletes: everything after the LAST
     # "/data/" — stable across "file://" vs bare paths and across a
@@ -1254,127 +1276,40 @@ class IcebergLayoutTable:
                 df = df.join(dd, cond, "left_anti")
         return df
 
-    def _read_versions(
-        self,
-        spark: SparkSession,
-        versions: dict[str, int] | list[tuple[str, int]],
-        part_col: str = "part",
-        target_schema: dict | None = None,
-        deletes: list[dict] | None = None,
-        with_pos: bool = False,
-        files: dict[object, list[str]] | None = None,
-    ) -> DataFrame:
-        # ``files``: extra data files to scan, keyed by the schema id
-        # they were written under (plan_files' pruned survivors).
-        # pre-MVCC parts (version -1) live as loose files directly
-        # under part=<p>; once a later MVCC rewrite adds snapv=<v>
-        # subdirs there, reading the bare directory would pick up BOTH
-        # — so legacy versions enumerate only the direct files.
-        # With ``target_schema`` set, versions are grouped by the
-        # schema their manifests say they were WRITTEN under (one scan
-        # per distinct written schema — a handful at most) and each
-        # group is field-id-normalized to the target before the union;
-        # without it, raw physical columns come back unchanged.
-        dir_groups: dict[object, list[str]] = {}
-        legacy_groups: dict[object, list[str]] = {}
-        pairs = sorted(versions.items()) if isinstance(versions, dict) else sorted(versions)
-        for p, v in pairs:
-            d = self._version_dir(p, v, part_col)
-            if not os.path.exists(d):
-                continue
-            key = None
-            if target_schema is not None:
-                key = (self._manifest(p, v) or {}).get("schema_id")
-            if v == -1:
-                legacy_groups.setdefault(key, []).extend(
-                    sorted(
-                        os.path.join(d, f)
-                        for f in os.listdir(d)
-                        if f.endswith(".parquet")
-                        and os.path.isfile(os.path.join(d, f))
-                    )
-                )
-            else:
-                dir_groups.setdefault(key, []).append(d)
-        for key, paths in (files or {}).items():
-            dir_groups.setdefault(
-                key if target_schema is not None else None, []
-            ).extend(paths)
-
-        def _norm(df: DataFrame, key) -> DataFrame:
-            if target_schema is None:
-                return df
-            written = self.schema(key) if key is not None else self.schema(0)
-            return self._normalize_to_schema(df, written, target_schema, part_col)
-
-        need_pos = with_pos or any(
-            d.get("kind", "pos") == "pos" for d in (deletes or [])
+    @staticmethod
+    def _schema_ddl(schema: dict, part_col: str) -> str:
+        """Spark DDL for the files written under ``schema``: its fields
+        (stored as ``df.dtypes`` simple strings, which ARE DDL) plus the
+        partition-directory columns `` `<part_col>` bigint, snapv int``.
+        Partition values are integers (``_ensure_write_schema`` refuses
+        anything else), so ``part_col`` is bigint on every read — never
+        the type Spark would discover from the ``part=<p>`` names seen
+        by one read. Passing it to ``spark.read.schema`` skips parquet
+        footer inference — the metadata-not-footers contract real
+        Iceberg has: plan building stops scaling with file count (a
+        52-file benchmark table spent ~1.3 s/read inferring; explicit
+        schema is ~5x faster, and the gap grows with partitions). Files
+        written NARROWER than their registered schema (the allowed
+        int→bigint / float→double promotions) upcast at scan (verified
+        on Spark 4)."""
+        return ", ".join(
+            [f"`{f['name']}` {f['type']}" for f in schema["fields"]]
+            + [f"`{part_col}` bigint", "snapv int"]
         )
 
-        def _reader(key):
-            r = spark.read.option("basePath", self.data_dir)
-            if target_schema is not None:
-                ddl = self._schema_ddl(
-                    self.schema(key) if key is not None else self.schema(0)
-                )
-                if ddl:
-                    r = r.schema(ddl)
-            return r
-
-        dfs = []
-        for key, paths in sorted(
-            dir_groups.items(), key=lambda kv: (kv[0] is None, kv[0])
-        ):
-            df = _reader(key).parquet(*paths)
-            if need_pos:
-                df = self._with_pos(df)
-            dfs.append(_norm(df, key))
-        for key, files in sorted(
-            legacy_groups.items(), key=lambda kv: (kv[0] is None, kv[0])
-        ):
-            if not files:
-                continue
-            df = _reader(key).parquet(*files).withColumn("snapv", F.lit(-1))
-            if need_pos:
-                df = self._with_pos(df)
-            dfs.append(_norm(df, key))
-        if not dfs:
-            out = _norm(spark.read.parquet(self.data_dir).limit(0), None)
-            if need_pos:
-                out = out.withColumn("_file", F.lit(None).cast("string")).withColumn(
-                    "_pos", F.lit(None).cast("bigint")
-                )
-        else:
-            out = dfs[0]
-            for d in dfs[1:]:
-                out = out.unionByName(d, allowMissingColumns=True)
-        if deletes:
-            out = self._apply_deletes(spark, out, deletes)
-        if need_pos and not with_pos:
-            out = out.drop("_file", "_pos")
-        return out
-
-    @staticmethod
-    def _schema_ddl(schema: dict | None) -> str | None:
-        """Spark DDL string for a registered schema (field types are
-        stored as ``df.dtypes`` simple strings, which ARE DDL). Passing
-        it to ``spark.read.schema`` skips parquet footer inference —
-        the metadata-not-footers contract real Iceberg has: plan
-        building stops scaling with file count (a 52-file benchmark
-        table spent ~1.3 s/read inferring; explicit schema is ~5x
-        faster, and the gap grows with partitions). Partition-dir
-        columns (part/snapv) are appended by Spark's discovery exactly
-        as under inference, and files written NARROWER than their
-        registered schema (the allowed int→bigint / float→double
-        promotions) upcast at scan (verified on Spark 4)."""
-        if not schema:
-            return None
-        return ", ".join(f"`{f['name']}` {f['type']}" for f in schema["fields"])
-
-    def _manifest(self, p: str, v: int) -> dict | None:
-        m = _read_json(os.path.join(self.meta_dir, f"manifest-{p}-v{v}.json"))
-        if m is None:  # pre-MVCC manifest name
-            m = _read_json(os.path.join(self.meta_dir, f"manifest-{p}.json"))
+    def _manifest(self, p: str, v: int) -> dict:
+        """The manifest of one (part, version) data-file set: its exact
+        file list with per-file stats and the schema the files were
+        written under. A manifest lacking either is an old layout and
+        is refused."""
+        name = f"manifest-{p}-v{v}.json"
+        m = _read_json(os.path.join(self.meta_dir, name))
+        if m is None:
+            self._refuse_layout(name, "is missing", "pre-MVCC")
+        if "files" not in m:
+            self._refuse_layout(name, "has no file list", "stat-less manifest")
+        if m.get("schema_id") is None:
+            self._refuse_layout(name, "records no schema_id", "schema-less")
         return m
 
     @staticmethod
@@ -1422,15 +1357,16 @@ class IcebergLayoutTable:
         snapshot_id: int | None = None,
         prune: dict | None = None,
     ) -> dict:
-        """Iceberg scan planning over manifest column stats: resolve
-        the snapshot's (part, version) set, skip every data file whose
+        """Iceberg scan planning over manifest file lists: the exact
+        data files of each base version and each merge-on-read
+        ``adds`` version of the snapshot, minus every file whose
         per-file min/max ranges (recorded at write time for the table
-        sort-order columns) cannot overlap ``prune``, and return the
-        surviving absolute file paths — metadata-only, no Spark job.
+        sort-order columns) cannot overlap ``prune`` — metadata-only,
+        no Spark job. Every table read scans what this returns.
 
         ``prune``: ``{col: (lo, hi)}`` inclusive ranges (``None`` bound
         = open) or ``{col: value}`` for equality. Unknown columns and
-        stat-less legacy manifests are kept (never unsound).
+        files without stats for a column are kept (never unsound).
 
         Planning cost is O(committed parts) small-JSON reads on the
         driver — the same shape as Iceberg's driver-side planning over
@@ -1439,20 +1375,22 @@ class IcebergLayoutTable:
         prune short-circuits before the manifest read, so time-ranged
         plans touch only the overlapping weeks' manifests.
 
-        Returns ``{"files", "legacy_dirs", "total_files",
+        Returns ``{"files", "files_by_schema", "total_files",
         "skipped_files", "skipped_parts", "part_col"}``.
         """
-        snap = self._resolve(snapshot_id, required=True)
+        return self._plan(self._resolve(snapshot_id, required=True), None, prune)
+
+    def _plan(self, snap: dict, parts, prune: dict | None) -> dict:
+        """:meth:`plan_files` over ``snap``, limited to ``parts``
+        (default: every partition)."""
         part_col = snap.get("part_col", "part")
         rng = self._normalize_prune(prune or {})
         tsid = snap.get("schema_id")
-        target = self.schema(tsid) if tsid is not None else None
         name_maps: dict[int, dict[str, str]] = {}
         files: list[str] = []
-        files_by_schema: dict[object, list[str]] = {}
-        legacy_dirs: dict[str, int] = {}
+        files_by_schema: dict[int, list[str]] = {}
         total = skipped = skipped_parts = 0
-        for p, v in sorted(self._version_pairs(snap)):
+        for p, v in sorted(self._version_pairs(snap, parts)):
             part_prune = dict(rng)
             if part_col in part_prune:
                 # short-circuits BEFORE the manifest read: time-ranged
@@ -1468,23 +1406,18 @@ class IcebergLayoutTable:
                 ):
                     skipped_parts += 1
                     continue
-            m = self._manifest(p, v) or {}
-            frs = m.get("files")
-            if frs is None:  # legacy manifest without file stats
-                legacy_dirs[p] = v
-                continue
-            wsid = m.get("schema_id")
-            if target is not None and wsid is not None and wsid != tsid:
+            m = self._manifest(p, v)
+            frs, wsid = m["files"], m["schema_id"]
+            if part_prune and wsid != tsid:
                 # stats are keyed by WRITTEN column names; after a
                 # rename the caller prunes with the current name — map
                 # it back via field ids so old files still skip
                 nm = name_maps.get(wsid)
                 if nm is None:
-                    ws = self.schema(wsid) or {"fields": []}
-                    by_id = {f["id"]: f["name"] for f in ws["fields"]}
+                    by_id = {f["id"]: f["name"] for f in self.schema(wsid)["fields"]}
                     nm = {
                         f["name"]: by_id.get(f["id"], f["name"])
-                        for f in target["fields"]
+                        for f in self.schema(tsid)["fields"]
                     }
                     name_maps[wsid] = nm
                 part_prune = {nm.get(c, c): b for c, b in part_prune.items()}
@@ -1503,7 +1436,6 @@ class IcebergLayoutTable:
         return {
             "files": files,
             "files_by_schema": files_by_schema,
-            "legacy_dirs": legacy_dirs,
             "total_files": total,
             "skipped_files": skipped,
             "skipped_parts": skipped_parts,
@@ -1517,27 +1449,57 @@ class IcebergLayoutTable:
         parts=None,
         schema_of: dict | None = None,
         with_pos: bool = False,
-        plan: dict | None = None,
+        prune: dict | None = None,
     ) -> DataFrame:
         """The current rows of ``parts`` (default: every partition) in
-        ``snap``: each base version plus its merge-on-read ``adds``,
-        with the snapshot's delete files applied, normalized to the
-        schema of ``schema_of`` (default: ``snap`` itself, so time
-        travel to a pre-rename snapshot sees the old names). ``plan``
-        (a :meth:`plan_files` result) scans its surviving files instead
-        of whole versions. The one reader behind DML, compaction,
-        :meth:`read_tier`, :meth:`read_parts` and :meth:`read_changes`."""
+        ``snap`` — the one table reader, behind DML, compaction,
+        :meth:`read_tier`, :meth:`read_parts` and :meth:`read_changes`.
+
+        One plan (:meth:`_plan`: the exact files of each base version
+        and each merge-on-read ``adds`` version that ``prune`` can
+        match) and one scan per written schema: the files under that
+        schema's DDL with ``part_col`` bigint, normalized by field id
+        to the schema of ``schema_of`` (default: ``snap`` itself, so
+        time travel to a pre-rename snapshot sees the old names), then
+        the snapshot's delete files applied. Nothing to scan gives the
+        empty frame in the target schema's shape, with no Spark job."""
         parts = list(snap["parts"]) if parts is None else [str(p) for p in parts]
+        part_col = snap.get("part_col", "part")
         sid = (schema_of or snap).get("schema_id")
-        pairs, files = self._version_pairs(snap, parts), None
-        if plan is not None:
-            pairs, files = plan["legacy_dirs"], plan["files_by_schema"]
-        return self._read_versions(
-            spark, pairs, snap.get("part_col", "part"),
-            target_schema=self.schema(sid) if sid is not None else None,
-            deletes=self._delete_descs(snap, parts), with_pos=with_pos,
-            files=files,
-        ).drop("snapv")
+        target = self.schema(sid) if sid is not None else {"fields": []}
+        plan = self._plan(snap, parts, prune)
+        deletes = self._delete_descs(snap, parts)
+        need_pos = with_pos or any(d.get("kind", "pos") == "pos" for d in deletes)
+        scans = []
+        for wsid, paths in sorted(plan["files_by_schema"].items()):
+            written = self.schema(wsid)
+            df = (
+                spark.read.option("basePath", self.data_dir)
+                .schema(self._schema_ddl(written, part_col))
+                .parquet(*paths)
+            )
+            if need_pos:
+                df = self._with_pos(df)
+            scans.append(self._normalize_to_schema(df, written, target, part_col))
+        if not scans:
+            # zero rows in the target's shape: LIMIT 0 plans as an empty
+            # local relation, so neither building nor collecting it runs
+            # a Spark job
+            cols = [(part_col, "bigint")]
+            if with_pos:
+                cols += [("_file", "string"), ("_pos", "bigint")]
+            cols += [(f["name"], f["type"]) for f in target["fields"]]
+            return spark.range(1).select(
+                *[F.lit(None).cast(t).alias(c) for c, t in cols]
+            ).limit(0)
+        out = scans[0]
+        for df in scans[1:]:
+            out = out.unionByName(df)
+        if deletes:
+            out = self._apply_deletes(spark, out, deletes)
+        if need_pos and not with_pos:
+            out = out.drop("_file", "_pos")
+        return out.drop("snapv")
 
     def read_parts(
         self,
@@ -1565,9 +1527,9 @@ class IcebergLayoutTable:
         with_pos: bool = False,
         as_of: float | None = None,
     ) -> DataFrame:
-        """Snapshot-isolated view: exactly the partition versions the
-        (current or time-travel) snapshot committed, read as explicit
-        directories — partition pruning by construction, and immune to
+        """Snapshot-isolated view: the current rows of exactly the
+        partition versions the (current or time-travel) snapshot
+        committed, read as the manifests' exact file lists — immune to
         concurrent rewrites of newer versions. Time travel by id
         (``snapshot_id``) or commit timestamp (``as_of`` epoch
         seconds, resolved on this ref's parent chain).
@@ -1575,25 +1537,20 @@ class IcebergLayoutTable:
         ``prune`` ({col: (lo, hi)} or {col: value}) additionally skips
         data files via manifest column stats (:meth:`plan_files`) and
         applies the same range as a residual WHERE — exact results,
-        with IO proportional to the files that can match."""
+        with IO proportional to the files that can match. The
+        partition column reads as bigint; a table with no data reads
+        as zero rows in its registered schema's shape."""
         if as_of is not None:
             if snapshot_id is not None:
                 raise ValueError("pass snapshot_id OR as_of, not both")
             snapshot_id = self.snapshot_as_of(as_of)["snapshot_id"]
         snap = self._resolve(snapshot_id, required=True)
-        if not prune:
-            return self._current_rows(spark, snap, with_pos=with_pos)
-        # scan only the files whose manifest stats can match
-        plan = self.plan_files(snap["snapshot_id"], prune)
-        if not (plan["files"] or plan["legacy_dirs"]):
-            # nothing can match: empty, in the snapshot's shape
-            return self._current_rows(spark, snap, with_pos=with_pos).limit(0)
-        out = self._current_rows(spark, snap, with_pos=with_pos, plan=plan)
+        out = self._current_rows(spark, snap, with_pos=with_pos, prune=prune)
         # residual predicate: stats pruning is IO-elision only; the
         # range itself is enforced on the surviving rows (Iceberg's
         # residual evaluation), so results are exact even where stats
         # are missing or coarse
-        for c, (lo, hi) in self._normalize_prune(prune).items():
+        for c, (lo, hi) in self._normalize_prune(prune or {}).items():
             if c not in out.columns:
                 continue
             if lo is not None:
@@ -2350,31 +2307,10 @@ class IcebergLayoutTable:
                     continue
                 d = self._version_dir(p, v, s.get("part_col", part_col))
                 if os.path.exists(d):
-                    if v == -1:
-                        # pre-MVCC version: the bare part=<p> directory
-                        # may ALSO hold live snapv=<v> subdirs from a
-                        # later rewrite — delete only the loose files,
-                        # never the versioned subdirectories
-                        removed = False
-                        for f in os.listdir(d):
-                            fp = os.path.join(d, f)
-                            if os.path.isfile(fp):
-                                os.remove(fp)
-                                removed = True
-                        if removed:
-                            deleted.append(d)
-                        if not os.listdir(d):
-                            os.rmdir(d)
-                    else:
-                        shutil.rmtree(d)
-                        deleted.append(d)
-                for m in (
-                    os.path.join(self.meta_dir, f"manifest-{p}-v{v}.json"),
-                    *( [os.path.join(self.meta_dir, f"manifest-{p}.json")]
-                       if v == -1 else [] ),
-                ):
-                    if os.path.exists(m):
-                        os.remove(m)
+                    shutil.rmtree(d)
+                    deleted.append(d)
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(self.meta_dir, f"manifest-{p}-v{v}.json"))
                 live.add((p, v))  # only delete once
             os.remove(os.path.join(self.meta_dir, f"snapshot-{n}.json"))
         return deleted

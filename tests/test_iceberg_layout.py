@@ -177,54 +177,6 @@ def test_mvcc_lineage_tracks_versions(spark, tmp_path):
     assert len(lin) == 1 and lin[0]["rows"] == 2 and lin[0]["version"] == 1
 
 
-def test_pre_mvcc_layout_read_and_expire(spark, tmp_path):
-    """Legacy (pre-MVCC) partitions live as loose files directly under
-    part=<p>. After a later MVCC rewrite adds snapv=<v> subdirs there:
-    time-travel reads of the legacy snapshot must see ONLY the loose
-    files (no double-read), and expiring the legacy snapshot must
-    delete ONLY the loose files — never the live snapv directories."""
-    import glob
-    import json
-    import os
-
-    from lambdo_spark.sources.iceberg_layout import IcebergLayoutTable
-
-    root = str(tmp_path / "t4")
-    t = IcebergLayoutTable(root)
-    # hand-build the legacy layout: files directly under part=1,
-    # snapshot with list-form "parts" (the pre-MVCC metadata shape)
-    spark.createDataFrame(
-        [(1, 10, "old_a"), (1, 11, "old_b")], "part long, k long, v string"
-    ).write.partitionBy("part").parquet(t.data_dir)
-    with open(os.path.join(t.meta_dir, "snapshot-0.json"), "w") as f:
-        json.dump({"snapshot_id": 0, "parts": ["1"], "part_col": "part"}, f)
-    with open(os.path.join(t.meta_dir, "CURRENT"), "w") as f:
-        json.dump({"snapshot": "snapshot-0.json"}, f)
-    assert t.part_versions() == {"1": -1}
-
-    # MVCC rewrite of the same partition — snapv subdir appears INSIDE part=1
-    s1 = t.overwrite_parts(
-        spark.createDataFrame([(1, 99, "new")], "part long, k long, v string"),
-        ["1"],
-    )
-    assert os.path.isdir(os.path.join(root, "data", "part=1", f"snapv={s1['snapshot_id']}"))
-
-    # legacy snapshot read: exactly the two old rows, not old+new
-    old = t.read_tier(spark, snapshot_id=0).toPandas()
-    assert sorted(old["v"]) == ["old_a", "old_b"]
-    assert t.read_tier(spark).toPandas()["v"].tolist() == ["new"]
-
-    # expire the legacy snapshot: loose files go, snapv=<v> survives
-    deleted = t.expire_snapshots(keep_last=1)
-    assert deleted and all("snapv" not in d for d in deleted)
-    loose = [
-        f for f in glob.glob(os.path.join(root, "data", "part=1", "*"))
-        if os.path.isfile(f)
-    ]
-    assert loose == []
-    assert t.read_tier(spark).toPandas()["v"].tolist() == ["new"]
-
-
 def test_compaction_carries_applied_deltas(spark, tmp_path):
     """compact_parts must not drop snapshot application state — the
     exactly-once delta ledger survives maintenance commits."""
@@ -325,31 +277,6 @@ def test_manifest_file_stats_and_scan_pruning(spark, tmp_path):
     one_url = tier.select("url").first()[0]
     pr = t.read_tier(spark, prune={"url": one_url})
     assert pr.count() == t.read_tier(spark).where(F.col("url") == one_url).count()
-
-
-def test_scan_pruning_legacy_manifest_fallback(spark, tmp_path):
-    """Manifests without a files list (pre-stats layout) are read in
-    full — pruning must degrade to correct, never to dropped rows."""
-    import json
-
-    pages = generate_pages(spark, 1000, seed=5)
-    tier = with_part(finalize(partials_from_pages(pages, 3600)))
-    root = str(tmp_path / "t")
-    t = IcebergLayoutTable(root)
-    t.write_tier(tier)
-    # strip the files key from every manifest, simulating old metadata
-    for name in os.listdir(t.meta_dir):
-        if name.startswith("manifest-"):
-            p = os.path.join(t.meta_dir, name)
-            with open(p) as f:
-                m = json.load(f)
-            m.pop("files", None)
-            with open(p, "w") as f:
-                json.dump(m, f)
-    plan = t.plan_files(prune={"bucket_s": (0, 1)})
-    assert plan["files"] == [] and plan["legacy_dirs"]
-    got = t.read_tier(spark, prune={"bucket_s": (0, 10**12)})
-    assert got.count() == tier.count()
 
 
 def test_read_changes_between_snapshots(spark, tmp_path):
@@ -718,8 +645,10 @@ def _readback_manifest_oracle(spark, t, part, version, part_col="part"):
     group by input_file_name() with bit_xor(xxhash64(data cols)) and
     min/max of the sort-order columns (non-numeric ones as
     CAST(... AS STRING)). The writer observes the hash in its write job
-    and reads stats from parquet footers; both must agree with this."""
-    written = t._read_versions(spark, {part: version}, part_col)
+    and reads stats from parquet footers; both must agree with this.
+    The version directory is read as Spark lists it, not through the
+    manifest under test."""
+    written = spark.read.parquet(t._version_dir(part, version, part_col))
     dtypes = dict(written.dtypes)
     hashable = [
         F.to_json(F.col(c)) if d.startswith(("map", "struct", "array")) else F.col(c)

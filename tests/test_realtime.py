@@ -155,7 +155,7 @@ def test_realtime_cascade_bounds_raw_scan_by_store_watermark(
     raw = spark.read.parquet(raw_path)
 
     w30 = materialization_watermark(root, "30d")
-    w_p = _table_watermark(_partials_store(root), None, "bucket_s")
+    w_p = _table_watermark(_partials_store(root), "bucket_s")
     assert w_p > w30  # the cascade genuinely narrows the raw span
     plan = read_realtime_tier(
         spark, root, "30d", raw, cascade=True

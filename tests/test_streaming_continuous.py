@@ -166,7 +166,7 @@ def test_stream_root_serves_cascade_realtime(spark, tmp_path):
     # new data lands but is NOT streamed yet: only rows at/above the
     # store watermark (below it, un-refreshed late rows are invisible
     # by contract — same as TimescaleDB's materialization threshold)
-    w_p = _table_watermark(_partials_store(root), None, "bucket_s")
+    w_p = _table_watermark(_partials_store(root), "bucket_s")
     fresh = generate_pages(spark, 800, seed=34).where(
         F.unix_timestamp("warc_ts") >= w_p
     )

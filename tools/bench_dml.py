@@ -71,7 +71,7 @@ def verbs(spark, delta_rows, schema):
 
 
 def files_of(t: IcebergLayoutTable, pairs) -> int:
-    return sum(len((t._manifest(p, v) or {}).get("files", [])) for p, v in pairs)
+    return sum(len(t._manifest(p, v)["files"]) for p, v in pairs)
 
 
 def change_counts(t: IcebergLayoutTable, before: dict, after: dict) -> dict:

@@ -189,7 +189,7 @@ def main() -> None:
 
     w30 = materialization_watermark(root, "30d")
     store = _partials_store(root)
-    w_p = _table_watermark(store, None, "bucket_s")
+    w_p = _table_watermark(store, "bucket_s")
     plain_raw = fetch_bytes(raw_files, need, ts_col="warc_ts", ts_min=float(w30))
     casc_raw = fetch_bytes(raw_files, need, ts_col="warc_ts", ts_min=float(w_p))
     store_files = [
