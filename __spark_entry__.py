@@ -1285,11 +1285,11 @@ def _q_rename_fillna(spark, sf_dir):
 
 
 def _q_roll_mad_w7(spark, sf_dir):
-    """User-kernel escape hatch through the workflow language: rolling
-    median-absolute-deviation (no JVM expression exists) runs as an
-    Arrow GROUPED_AGG pandas kernel over the bounded window — the
-    reference's arbitrary-callable roll (Column.py:584-590),
-    vectorized. Oracle: DuckDB's native mad() window aggregate."""
+    """Holistic registry kernel through the workflow language: rolling
+    median-absolute-deviation over the bounded window, a JVM window
+    expression (the frame's sorted values, the median of their
+    absolute deviations from the median) with no Python in the plan.
+    Oracle: DuckDB's native mad() window aggregate."""
     spec = {
         "tables": [
             {"id": "events", "operation": "source", "format": "parquet",

@@ -16,7 +16,9 @@ A kernel has up to three compilation strategies, best first:
   sum(v*w)/sum(w) must window each primitive aggregate separately,
   which is why the kernel receives the window instead of the caller
   wrapping the result)
-- ``pandas_fn``                 -> Series kernel for roll/all fallback
+- ``pandas_fn``                 -> Series kernel for roll/all fallback;
+  only user callables (:func:`user_kernel`) have one — every
+  registered kernel has an ``expr`` or ``agg`` form
 """
 
 from __future__ import annotations
@@ -164,15 +166,15 @@ def _simple(fn):
     return lambda c, over=None: _ov(fn(c), over)
 
 
-register(Kernel("sum", agg=_simple(lambda c: F.sum(c[0])), pandas_fn=lambda s: s[0].sum()))
-register(Kernel("mean", agg=_simple(lambda c: F.avg(c[0])), pandas_fn=lambda s: s[0].mean()))
-register(Kernel("min", agg=_simple(lambda c: F.min(c[0])), pandas_fn=lambda s: s[0].min()))
-register(Kernel("max", agg=_simple(lambda c: F.max(c[0])), pandas_fn=lambda s: s[0].max()))
-register(Kernel("count", agg=_simple(lambda c: F.count(c[0] if c else F.lit(1))), pandas_fn=lambda s: s[0].count()))
-register(Kernel("size", agg=_simple(lambda c: F.count(F.lit(1))), pandas_fn=lambda s: len(s[0])))
-register(Kernel("stddev", agg=_simple(lambda c: F.stddev_samp(c[0])), pandas_fn=lambda s: s[0].std()))
-register(Kernel("first", agg=_simple(lambda c: F.first(c[0])), pandas_fn=lambda s: s[0].iloc[0]))
-register(Kernel("last", agg=_simple(lambda c: F.last(c[0])), pandas_fn=lambda s: s[0].iloc[-1]))
+register(Kernel("sum", agg=_simple(lambda c: F.sum(c[0]))))
+register(Kernel("mean", agg=_simple(lambda c: F.avg(c[0]))))
+register(Kernel("min", agg=_simple(lambda c: F.min(c[0]))))
+register(Kernel("max", agg=_simple(lambda c: F.max(c[0]))))
+register(Kernel("count", agg=_simple(lambda c: F.count(c[0] if c else F.lit(1)))))
+register(Kernel("size", agg=_simple(lambda c: F.count(F.lit(1)))))
+register(Kernel("stddev", agg=_simple(lambda c: F.stddev_samp(c[0]))))
+register(Kernel("first", agg=_simple(lambda c: F.first(c[0]))))
+register(Kernel("last", agg=_simple(lambda c: F.last(c[0]))))
 
 
 def _edge(c: list[Column]) -> Column:
@@ -186,10 +188,6 @@ register(
     Kernel(
         "first_by",
         agg=_simple(lambda c: F.min(_edge(c)).getField("v")),
-        pandas_fn=lambda s: s[0].iloc[
-            __import__("pandas").DataFrame({"o": s[1], "v": s[0]})
-            .sort_values(["o", "v"]).index[0]
-        ],
         doc="value at the smallest (order, value) — M4 'first'; "
         "inputs [value, order_col]",
     )
@@ -198,10 +196,6 @@ register(
     Kernel(
         "last_by",
         agg=_simple(lambda c: F.max(_edge(c)).getField("v")),
-        pandas_fn=lambda s: s[0].iloc[
-            __import__("pandas").DataFrame({"o": s[1], "v": s[0]})
-            .sort_values(["o", "v"]).index[-1]
-        ],
         doc="value at the largest (order, value) — M4 'last'; "
         "inputs [value, order_col]",
     )
@@ -212,7 +206,6 @@ register(
         agg=lambda c, over=None: F.size(_ov(F.collect_set(c[0]), over))
         if over is not None
         else F.count_distinct(c[0]),
-        pandas_fn=lambda s: s[0].nunique(),
     )
 )
 
@@ -227,38 +220,89 @@ register(
     Kernel(
         "mean_weighted",
         agg=_mean_weighted_expr,
-        pandas_fn=lambda s: (s[0] * s[1]).sum() / s[1].sum(),
         doc="weighted mean (reference lambdo/std.py:136-152)",
     )
 )
 
 
-# ------------------------------------------------- holistic (pandas-only)
-# aggregates with no algebraic JVM form — these run through the
-# pandas_fn escape hatch (Arrow GROUPED_AGG over window frames /
-# groups), exactly the path user kernels take
+# ------------------------------------------------------------- holistic
+# order-statistic aggregates: no partial-agg form, so each builds on
+# the frame's (or group's) sorted values — one JVM collect + sort per
+# frame, O(w log w), the same O(n·w) shape as pandas' per-frame call
+# but without the Arrow round trip. The formulas restate numpy's, so
+# the results equal pandas' nan-skipping median/quantile bit for bit.
+
+
+def _let(value: Column, fn) -> Column:
+    # ``fn`` of ``value`` bound to a lambda variable: a formula naming
+    # the sorted array four times would otherwise make Catalyst plan
+    # four copies of the window aggregate behind it
+    return F.get(F.transform(F.array(value), fn), 0)
+
+
+def _sorted_values(c: Column, over) -> Column:
+    # NaN is pandas' missing value as well as NULL (collect_list
+    # already drops NULLs)
+    vals = _ov(F.collect_list(c.cast("double")), over)
+    return F.array_sort(F.filter(vals, lambda x: ~F.isnan(x)))
+
+
+def _median_of(arr: Column) -> Column:
+    # numpy: the middle element, or the mean of the two middle ones;
+    # an empty array indexes out of range → NULL
+    n = F.size(arr)
+    mid = F.get(arr, F.floor(n / F.lit(2)))
+    return F.when(n % 2 == 1, mid).otherwise(
+        (F.get(arr, F.floor((n - 1) / F.lit(2))) + mid) / F.lit(2.0)
+    )
+
+
+def _quantile_of(arr: Column, q: float) -> Column:
+    # numpy's 'linear' method: virtual index (n-1)·q between neighbours
+    # lo and hi, interpolated by numpy's _lerp (which switches form at
+    # gamma 0.5); pandas hands numpy q as a percentage, hence q·100/100
+    q = float(q) * 100.0 / 100.0
+    n = F.size(arr)
+    v = (n - 1).cast("double") * F.lit(q)
+    i = F.floor(v)
+    lo = F.get(arr, i)
+    hi = F.get(arr, F.least(i + 1, n - 1))
+    g = v - i
+    d = hi - lo
+    return F.when(g >= 0.5, hi - d * (F.lit(1.0) - g)).otherwise(lo + d * g)
+
+
+def _mad_of(arr: Column) -> Column:
+    return _let(_median_of(arr), lambda m: _let(
+        F.array_sort(F.transform(arr, lambda x: F.abs(x - m))), _median_of
+    ))
+
+
+def _quantile_agg(c: list[Column], over=None, q: float = 0.5) -> Column:
+    if not 0.0 <= q <= 1.0:
+        raise ValueError(f"quantile q must be in [0, 1], got {q}")
+    return _let(_sorted_values(c[0], over), lambda a: _quantile_of(a, q))
+
 
 register(
     Kernel(
         "median",
-        pandas_fn=lambda s: s[0].median(),
-        doc="exact median — holistic, no partial-agg form; exercises "
-        "the pandas escape hatch (reference's custom-callable roll, "
-        "Column.py:584-590)",
+        agg=lambda c, over=None: _let(_sorted_values(c[0], over), _median_of),
+        doc="exact median of the non-null values",
     )
 )
 register(
     Kernel(
         "mad",
-        pandas_fn=lambda s: (s[0] - s[0].median()).abs().median(),
-        doc="median absolute deviation — no Spark built-in at all; "
+        agg=lambda c, over=None: _let(_sorted_values(c[0], over), _mad_of),
+        doc="median absolute deviation — no Spark built-in; "
         "DuckDB mad() is the oracle",
     )
 )
 register(
     Kernel(
         "quantile",
-        pandas_fn=lambda s, q=0.5: s[0].quantile(q),
+        agg=_quantile_agg,
         doc="exact linear-interpolation quantile (pandas default)",
     )
 )

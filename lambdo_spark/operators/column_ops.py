@@ -48,10 +48,10 @@ def _pandas_scalar_udf(k: Kernel, model: dict | None):
 def _pandas_agg_udf(k: Kernel, model: dict | None):
     """Arrow-vectorized aggregate fallback (GROUPED_AGG pandas_udf):
     works over groupBy AND over bounded/unbounded window frames
-    (SPARK-24561) — the escape hatch for holistic kernels (median,
-    MAD, user callables) the JVM has no expression for. The frame is
-    materialized per row, so this is O(n·w) per partition — the slow
-    path by design; kernels with an ``agg`` form never come here."""
+    (SPARK-24561) — the escape hatch for user callables, which have no
+    JVM expression. The frame crosses into Python once per row, so
+    this is O(n·w) per partition plus the Arrow round trip; every
+    registry kernel has an ``agg`` form and never comes here."""
     fn, kw = k.pandas_fn, dict(model or {})
     return F.pandas_udf(
         lambda *cols: fn(list(cols), **kw), k.returns, F.PandasUDFType.GROUPED_AGG
@@ -66,7 +66,7 @@ def calculate(
     model: dict | None = None,
 ) -> DataFrame:
     """C1 — per-row scalar (reference Column.py:524-559), compiled to a
-    built-in JVM expression; user/holistic kernels fall back to an
+    built-in JVM expression; user kernels fall back to an
     Arrow-vectorized pandas_udf (never row-at-a-time)."""
     k = _resolve_kernel(kernel)
     cols = [F.col(c) for c in inputs]
@@ -93,10 +93,11 @@ def roll(
     min_periods defaults to the window size (reference semantics:
     first N-1 rows NULL, tests/test_roll.py:46-48).
 
-    Kernels without a JVM aggregate form (median, MAD, user
-    callables) run through the GROUPED_AGG pandas fallback over the
-    same bounded frame — the reference's rolling-apply generality
-    (Column.py:584-590), Arrow-vectorized.
+    Registry kernels, the holistic median/MAD/quantile included, are
+    JVM window expressions over the frame. User callables run through
+    the GROUPED_AGG pandas fallback over the same bounded frame — the
+    reference's rolling-apply generality (Column.py:584-590),
+    Arrow-vectorized.
     """
     k = _resolve_kernel(kernel)
     mp = window if min_periods is None else min_periods

@@ -10,7 +10,7 @@ boolean columns).
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -38,6 +38,44 @@ def map_table(df: DataFrame, fn, schema) -> DataFrame:
     mapInPandas (reference Table.py:461-506 calls the UDF on the full
     frame; here the kernel sees Arrow batches per partition)."""
     return df.mapInPandas(fn, schema=schema)
+
+
+def whole_groups(batches: Iterator, keys: Sequence[str]) -> Iterator:
+    """Regroup the Arrow batches of a partition sorted by ``keys`` into
+    frames of whole groups, for a ``mapInPandas`` kernel that needs
+    each group entire: one Python call per batch, not per group. A
+    batch's last group may go on in the next batch, so it is held back
+    as a list of pieces and joined once, when a later batch starts
+    another group: a group spanning many batches is copied once, not
+    once per batch. Memory stays O(batch + largest group), not
+    O(partition). NULL keys form one group; with no keys the whole
+    partition is one group."""
+    import numpy as np
+    import pandas as pd
+
+    def same(col, v):  # NULL-safe: a NULL key equals a NULL key
+        return (col.isna() if pd.isna(v) else col == v).to_numpy()
+
+    held = []
+    for b in batches:
+        if len(b) == 0:
+            continue
+        tail = np.ones(len(b), dtype=bool)
+        for k in keys:
+            tail &= same(b[k], b[k].iloc[-1])
+        cut = np.flatnonzero(~tail)
+        s = cut[-1] + 1 if len(cut) else 0
+        if s == 0 and held and all(
+            same(held[-1][k].iloc[-1:], b[k].iloc[-1])[0] for k in keys
+        ):
+            held.append(b)  # the whole batch continues the held group
+            continue
+        done = [f for f in held + [b.iloc[:s]] if len(f)]
+        if done:
+            yield pd.concat(done, ignore_index=True)
+        held = [b.iloc[s:]]
+    if held:
+        yield pd.concat(held, ignore_index=True)
 
 
 def project(df: DataFrame, inputs: Sequence[str], outputs: Sequence[str] | None = None) -> DataFrame:
@@ -287,6 +325,21 @@ def asof_join(
     )
 
 
+def _agg_exprs(aggregations: Sequence[dict]) -> list:
+    """The aggregate columns of an ``aggregations`` spec list (see
+    :func:`aggregate_table`): each registry kernel's JVM ``agg`` form."""
+    from lambdo_spark.functions.registry import get_kernel
+
+    exprs = []
+    for spec in aggregations:
+        k = get_kernel(spec.get("kernel", "size" if not spec.get("inputs") else "sum"))
+        if k.agg is None:
+            raise ValueError(f"kernel '{k.name}' has no aggregate form")
+        cols = [F.col(c) for c in spec.get("inputs", [])]
+        exprs.append(k.agg(cols, **spec.get("model", {})).alias(spec["id"]))
+    return exprs
+
+
 def aggregate_table(
     df: DataFrame,
     keys: Sequence[str],
@@ -298,16 +351,7 @@ def aggregate_table(
     no inputs -> group size (std.py: `size` when no inputs).
     All aggs share ONE groupBy → one shuffle (the reference caches the
     groupby object for the same reason, Column.py:816-842)."""
-    from lambdo_spark.functions.registry import get_kernel
-
-    exprs = []
-    for spec in aggregations:
-        name = spec["id"]
-        kname = spec.get("kernel", "size" if not spec.get("inputs") else "sum")
-        k = get_kernel(kname)
-        cols = [F.col(c) for c in spec.get("inputs", [])]
-        exprs.append(k.agg(cols, **spec.get("model", {})).alias(name))
-    return df.groupBy(*keys).agg(*exprs)
+    return df.groupBy(*keys).agg(*_agg_exprs(aggregations))
 
 
 def aggregate_grouping_sets(
@@ -327,15 +371,7 @@ def aggregate_grouping_sets(
     MSB, matching DuckDB's GROUPING()) to disambiguate subtotal rows
     from genuine NULL key values.
     """
-    from lambdo_spark.functions.registry import get_kernel
-
-    exprs = []
-    for spec in aggregations:
-        name = spec["id"]
-        kname = spec.get("kernel", "size" if not spec.get("inputs") else "sum")
-        k = get_kernel(kname)
-        cols = [F.col(c) for c in spec.get("inputs", [])]
-        exprs.append(k.agg(cols, **spec.get("model", {})).alias(name))
+    exprs = _agg_exprs(aggregations)
     if gid_col:
         exprs.insert(0, F.grouping_id().cast("long").alias(gid_col))
     grouped = df.rollup(*keys) if mode == "rollup" else df.cube(*keys)
@@ -355,9 +391,9 @@ def window_aggregate(
     as ONE declarative op, valid on BOTH batch and streaming frames
     (``F.window`` is streaming-state aware; on a stream, put a
     watermark on the source for append-mode finality). Same
-    ``aggregations`` spec as :func:`aggregate_table`; kernels without
-    a JVM ``agg`` form fall back to the GROUPED_AGG pandas escape
-    hatch.
+    ``aggregations`` spec as :func:`aggregate_table`; every registry
+    kernel, the holistic median/MAD/quantile included, is a JVM
+    aggregate, so each is valid on a stream.
 
     One shuffle on (window, keys), map-side combined. The bucket is
     emitted as epoch SECONDS (long) — engine-stable for oracles
@@ -369,26 +405,13 @@ def window_aggregate(
     overlapping buckets (Spark expands them in one Expand node — no
     self-joins, still a single shuffle).
     """
-    from lambdo_spark.functions.registry import get_kernel
-    from lambdo_spark.operators.column_ops import _pandas_agg_udf
-
-    exprs = []
-    for spec in aggregations:
-        name = spec["id"]
-        kname = spec.get("kernel", "size" if not spec.get("inputs") else "sum")
-        k = get_kernel(kname)
-        cols = [F.col(c) for c in spec.get("inputs", [])]
-        if k.agg is not None:
-            exprs.append(k.agg(cols, **spec.get("model", {})).alias(name))
-        else:
-            exprs.append(_pandas_agg_udf(k, spec.get("model"))(*cols).alias(name))
     tcol = F.col(ts)
     if dict(df.dtypes).get(ts) in ("bigint", "int", "smallint", "tinyint"):
         # epoch-seconds bucket columns (tier outputs) re-aggregate
         # directly: whole-second window starts make the round-trip exact
         tcol = tcol.cast("timestamp")
     win = F.window(tcol, duration, slide) if slide else F.window(tcol, duration)
-    out = df.groupBy(win.alias("__w__"), *keys).agg(*exprs)
+    out = df.groupBy(win.alias("__w__"), *keys).agg(*_agg_exprs(aggregations))
     return out.select(
         F.unix_timestamp(F.col("__w__.start")).alias(bucket_col),
         *keys,

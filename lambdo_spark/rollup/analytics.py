@@ -8,12 +8,14 @@ monitoring-stack follow-ons (Prometheus/TimescaleDB-style) a rollup
 engine is actually queried with, each expressed Spark-first:
 
 * ``ewma`` — per-series exponential smoothing. The recurrence is
-  inherently sequential per series, so the kernel is a vectorized
-  pandas ``ewm`` inside ``applyInPandas`` (one Arrow batch per
-  series); the shuffle is ONE hash exchange on the series key. A
-  series never splits across tasks — the unit of work is bounded by
-  per-key cardinality (hours-in-retention for tier input), not corpus
-  size, so 10^12 rows fan out across keys. (For a pathological single
+  inherently sequential per series, so the kernel is pandas' compiled
+  grouped ``ewm`` over sorted partitions: ONE hash exchange on the
+  series key, a sort within each partition, then one Python call per
+  Arrow batch covering all of the batch's whole series
+  (``table_ops.whole_groups``), never one per series. A series never
+  splits across tasks — the unit of work is bounded by per-key
+  cardinality (hours-in-retention for tier input), not corpus size,
+  so 10^12 rows fan out across keys. (For a pathological single
   series, the EWMA numerator/denominator are both linear recurrences
   y_t = (1-a)·y_{t-1} + c_t and admit the same two-phase partition
   prefix treatment as ``sampling.global_ordinal``; not needed for
@@ -45,6 +47,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from lambdo_spark.operators.table_ops import whole_groups
+
 
 # ------------------------------------------------------------- ewma
 
@@ -71,25 +75,40 @@ def ewma(
     (pandas ``ignore_na=False``): a null row re-emits the prior
     smoothed value, and the gap discounts older observations against
     the next real one (test_ewma_null_passthrough pins y_2 = 18, not
-    the gap-ignoring 15).
+    the gap-ignoring 15). Empty ``keys``: the whole frame is one series.
     """
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
+    keys, a, adj = list(keys), float(alpha), bool(adjust)
     out_schema = StructType(
         list(df.schema.fields) + [StructField(output, DoubleType())]
     )
-    order = list(order_cols)
-    a = float(alpha)
-    adj = bool(adjust)
 
-    def _kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
-        pdf[output] = (
-            pdf[value_col].astype("float64").ewm(alpha=a, adjust=adj).mean()
-        )
-        return pdf
+    def _kernel(batches):
+        for b in whole_groups(batches, keys):
+            y = b[value_col].astype("float64")
+            if keys:
+                # pandas' grouped ewm runs its compiled kernel over each
+                # group's bounds: the values equal a per-series ewm bit
+                # for bit
+                y = (
+                    y.groupby([b[k] for k in keys], dropna=False, sort=False)
+                    .ewm(alpha=a, adjust=adj)
+                    .mean()
+                    .droplevel(list(range(len(keys))))
+                )
+            else:
+                y = y.ewm(alpha=a, adjust=adj).mean()
+            yield b.assign(**{output: y})
 
-    return df.groupBy(*keys).applyInPandas(_kernel, schema=out_schema)
+    # NULL order values last, as pandas' sort_values puts NaN; no keys:
+    # the whole frame is one series, in one partition
+    order = [F.col(c).asc_nulls_last() for c in order_cols]
+    return (
+        (df.repartition(*keys) if keys else df.repartition(1))
+        .sortWithinPartitions(*keys, *order)
+        .mapInPandas(_kernel, schema=out_schema)
+    )
 
 
 # ---------------------------------------------- seasonal anomaly flags

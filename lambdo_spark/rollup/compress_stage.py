@@ -13,8 +13,8 @@ many small groups (measured 11 s for 1.5k groups at sf0.1). Instead:
 
 One Python invocation per Arrow batch, many groups per batch; group
 boundaries never interleave because rows are sorted within the
-partition, and a group straddling two batches is handled by carrying
-the open tail group into the next batch (memory stays O(batch +
+partition, and a group straddling two batches is carried into the
+next one by ``table_ops.whole_groups`` (memory stays O(batch +
 largest group), not O(partition)).
 
 The shuffle is sized to the data: with no explicit ``partitions`` it
@@ -48,6 +48,7 @@ from lambdo_spark.functions.compress import (
     encode_timestamps_many,
     encode_values_many,
 )
+from lambdo_spark.operators.table_ops import whole_groups
 
 
 def _compressed_schema(tier: DataFrame) -> str:
@@ -93,23 +94,8 @@ def compress_tier(
     chunk_span = chunk_buckets * tier_seconds
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for b in batches:
-            if carry is not None:
-                b = pd.concat([carry, b], ignore_index=True)
-                carry = None
-            if len(b) == 0:
-                continue
-            # rows are sorted by (url, chunk) within the partition —
-            # hold back the last (possibly incomplete) group
-            last_key = (b["url"].iloc[-1], b["_chunk"].iloc[-1])
-            tail_mask = (b["url"] == last_key[0]) & (b["_chunk"] == last_key[1])
-            carry = b[tail_mask]
-            closed = b[~tail_mask]
-            if len(closed):
-                yield _encode_batch(closed)
-        if carry is not None and len(carry):
-            yield _encode_batch(carry)
+        for b in whole_groups(batches, ["url", "_chunk"]):
+            yield _encode_batch(b)
 
     # no count given → a REPARTITION_BY_COL exchange AQE can coalesce
     by_url = (partitions, "url") if partitions is not None else ("url",)

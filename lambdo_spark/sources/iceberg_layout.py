@@ -1375,8 +1375,9 @@ class IcebergLayoutTable:
         prune short-circuits before the manifest read, so time-ranged
         plans touch only the overlapping weeks' manifests.
 
-        Returns ``{"files", "files_by_schema", "total_files",
-        "skipped_files", "skipped_parts", "part_col"}``.
+        Returns ``{"files", "files_by_schema", "parts", "total_files",
+        "skipped_files", "skipped_parts", "part_col"}``; ``parts`` is
+        the set of partitions with at least one kept file.
         """
         return self._plan(self._resolve(snapshot_id, required=True), None, prune)
 
@@ -1389,6 +1390,7 @@ class IcebergLayoutTable:
         name_maps: dict[int, dict[str, str]] = {}
         files: list[str] = []
         files_by_schema: dict[int, list[str]] = {}
+        kept_parts: set[str] = set()
         total = skipped = skipped_parts = 0
         for p, v in sorted(self._version_pairs(snap, parts)):
             part_prune = dict(rng)
@@ -1433,9 +1435,11 @@ class IcebergLayoutTable:
             files += paths
             if paths:
                 files_by_schema.setdefault(wsid, []).extend(paths)
+                kept_parts.add(p)
         return {
             "files": files,
             "files_by_schema": files_by_schema,
+            "parts": kept_parts,
             "total_files": total,
             "skipped_files": skipped,
             "skipped_parts": skipped_parts,
@@ -1468,7 +1472,11 @@ class IcebergLayoutTable:
         sid = (schema_of or snap).get("schema_id")
         target = self.schema(sid) if sid is not None else {"fields": []}
         plan = self._plan(snap, parts, prune)
-        deletes = self._delete_descs(snap, parts)
+        # only the kept parts' delete files: a delete names rows of its
+        # own partition (position deletes name files; MOR merge keys
+        # determine the partition), so a skipped part's deletes match
+        # nothing that is read
+        deletes = self._delete_descs(snap, plan["parts"])
         need_pos = with_pos or any(d.get("kind", "pos") == "pos" for d in deletes)
         scans = []
         for wsid, paths in sorted(plan["files_by_schema"].items()):

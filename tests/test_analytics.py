@@ -95,6 +95,78 @@ def test_ewma_alpha_validation(spark):
         ewma(df, "v", ["ts"], ["k"], alpha=0.0)
 
 
+@pytest.mark.parametrize("adjust", [True, False])
+def test_ewma_series_straddle_arrow_batches(spark, adjust):
+    """Batches of 7 rows cut every series (20–40 rows) several times:
+    the held-back tail group must make each series one ewm pass,
+    bit-identical to per-series pandas. Two key columns, one NULL."""
+    rng = np.random.default_rng(11)
+    rows = []
+    for k1, k2 in [("a", 1), ("a", 2), ("b", 1), ("b", None), (None, 3)]:
+        n = int(rng.integers(20, 40))
+        for i, t in enumerate(rng.permutation(n)):
+            v = None if rng.random() < 0.1 else float(rng.integers(0, 1000))
+            rows.append((k1, k2, int(t), v))
+    df = spark.createDataFrame(rows, "k1 string, k2 long, ts long, v double")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        got = ewma(df, "v", ["ts"], ["k1", "k2"], alpha=0.3, adjust=adjust).toPandas()
+    finally:
+        spark.conf.set(conf, old)
+    ref = pd.DataFrame(rows, columns=["k1", "k2", "ts", "v"])
+    for (k1, k2), g in ref.groupby(["k1", "k2"], dropna=False):
+        g = g.sort_values("ts")
+        want = g["v"].astype(float).ewm(alpha=0.3, adjust=adjust).mean().to_numpy()
+        mine = got[(got["k1"].isna() if pd.isna(k1) else got["k1"] == k1)
+                   & (got["k2"].isna() if pd.isna(k2) else got["k2"] == k2)]
+        np.testing.assert_array_equal(mine.sort_values("ts")["ewma"].to_numpy(), want)
+    assert len(got) == len(rows)
+
+
+@pytest.mark.parametrize("adjust", [True, False])
+def test_ewma_long_series_spans_many_arrow_batches(spark, adjust):
+    """One 200-row series between two short ones, in batches of 7:
+    the held group goes on through ~28 whole batches and must still
+    come out as one ewm pass, bit-identical to pandas."""
+    rng = np.random.default_rng(5)
+    rows = []
+    for k, n in [("a", 3), ("b", 200), ("c", 4)]:
+        for t in rng.permutation(n):
+            v = None if rng.random() < 0.1 else float(rng.integers(0, 1000))
+            rows.append((k, int(t), v))
+    df = _series_df(spark, rows)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        got = ewma(df, "v", ["ts"], ["k"], alpha=0.2, adjust=adjust).toPandas()
+    finally:
+        spark.conf.set(conf, old)
+    ref = pd.DataFrame(rows, columns=["k", "ts", "v"])
+    assert len(got) == len(rows)
+    for k, g in ref.groupby("k"):
+        want = g.sort_values("ts")["v"].astype(float).ewm(alpha=0.2, adjust=adjust).mean()
+        mine = got[got["k"] == k].sort_values("ts")["ewma"].to_numpy()
+        np.testing.assert_array_equal(mine, want.to_numpy())
+
+
+def test_ewma_without_keys_is_one_series(spark):
+    rows = [(k, t, float(v)) for t, (k, v) in enumerate(zip("abab", [4, 8, 2, 6]))]
+    got = ewma(_series_df(spark, rows), "v", ["ts"], [], alpha=0.5).toPandas()
+    want = pd.Series([4.0, 8.0, 2.0, 6.0]).ewm(alpha=0.5).mean().to_numpy()
+    np.testing.assert_array_equal(got.sort_values("ts")["ewma"].to_numpy(), want)
+
+
+def test_ewma_plans_one_exchange_and_a_batch_map(spark):
+    df = _series_df(spark, [("a", i, i) for i in range(5)])
+    plan = ewma(df, "v", ["ts"], ["k"], alpha=0.5)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange ") == 1
+    assert "MapInPandas" in plan
+    assert "FlatMapGroupsInPandas" not in plan
+
+
 # ------------------------------------------------- seasonal anomaly
 
 

@@ -184,3 +184,37 @@ def test_watermark_refuses_a_file_without_the_stat(spark, tmp_path):
     t = _table(spark, str(tmp_path / "t"), sort_order=("url",))
     with pytest.raises(ValueError, match=r"data file part=0/snapv=0/\S+ records no max bucket_s stat"):
         _table_watermark(t, "bucket_s")
+
+
+def test_pruned_read_skips_the_deletes_of_pruned_parts(spark, tmp_path):
+    """A MOR position delete in part 0 does not reach a read pruned to
+    part 604800: no delete file of part 0 is scanned."""
+    t = _table(spark, str(tmp_path / "t"))
+    t.delete_where(spark, "part = 0 AND v = 1", mode="merge-on-read")
+    full = t.read_tier(spark)
+    assert any("/deletes/" in f for f in full.inputFiles())
+    pruned = t.read_tier(spark, prune={"part": 604800})
+    files = pruned.inputFiles()
+    assert not [f for f in files if "/deletes/" in f and "part=0" in f]
+    assert sorted(map(tuple, pruned.drop("part").collect())) == [
+        (f"u{k}", 604800 + k, k) for k in range(5)
+    ]
+
+
+def test_pruned_read_with_equality_deletes_equals_filtered_read(spark, tmp_path):
+    """A MOR merge writes equality deletes; the pruned read equals the
+    unpruned read filtered to the same range."""
+    t = _table(spark, str(tmp_path / "t"))
+    delta = spark.createDataFrame(
+        [(0, "u1", 1, 10), (604800, "u2", 604802, 20), (604800, "u7", 604807, 7)], DDL
+    )
+    t.merge_rows(delta, ["url", "bucket_s"], mode="merge-on-read")
+    assert any(d.get("kind") == "eq" for ds in t.current_snapshot()["deletes"].values()
+               for d in ds)
+    for prune in ({"part": 604800}, {"part": 0}, {"bucket_s": (604801, 604900)}):
+        (c, bound), = prune.items()
+        lo, hi = bound if isinstance(bound, tuple) else (bound, bound)
+        want = t.read_tier(spark).where(f"{c} BETWEEN {lo} AND {hi}")
+        got = t.read_tier(spark, prune=prune)
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+        assert got.count() > 0

@@ -139,11 +139,15 @@ test_dedup.py's multiprobe no-crossJoin pin):
         """
 The plan shape for each new operator, and which check pins it:
 
-- **ewma** — one `Exchange hashpartitioning(keys)` feeding
-  `FlatMapGroupsInPandas` (the per-series ewm kernel); no other
-  shuffle, no row-at-a-time Python. A series never splits across
-  tasks; the unit of work is the per-key series, which is bounded by
-  the retention window on tier input.
+- **ewma** — one `Exchange hashpartitioning(keys)`, a `Sort` on
+  (keys, order) within each partition, then `MapInPandas`: one Python
+  call per Arrow batch runs pandas' grouped ewm over the batch's whole
+  series (a series cut by the batch end is held back for the next
+  batch), never one call per series. No other shuffle, no
+  row-at-a-time Python (pinned: tests/test_analytics.py
+  `test_ewma_plans_one_exchange_and_a_batch_map`). A series never
+  splits across tasks; the unit of work is the per-key series, which
+  is bounded by the retention window on tier input.
 - **cusum** — ONE exchange + ONE sort: the cumulative-sum windows and
   their running extrema all share `partitionBy(keys).orderBy(order)`,
   so Catalyst chains the Window nodes over the same sort without
