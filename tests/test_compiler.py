@@ -965,7 +965,8 @@ _PIN_TARGETS = {
         "time_weighted_finalize counter_partials counter_downsample "
         "counter_finalize value_hist_partials value_hist_downsample "
         "quantile_from_hist distinct_per_bucket distinct_sketch_partials "
-        "distinct_sketch_downsample distinct_sketch_finalize heavy_hitters"
+        "distinct_sketch_downsample distinct_sketch_finalize heavy_hitters "
+        "sessionize delta rate locf interpolate_linear"
     ),
     "lambdo_spark.rollup.analytics": (
         "ewma anomaly_seasonal cusum corr_pairs holt_winters rolling_corr"
@@ -995,6 +996,10 @@ _PIN_TARGETS = {
     "lambdo_spark.rollup.incremental": "read_finalized_tier",
     "lambdo_spark.streaming.upsert_stream": "streaming_upsert_writer",
     "lambdo_spark.sources.iceberg_layout": "IcebergLayoutTable",
+    "lambdo_spark.operators.column_ops": (
+        "calculate roll roll_range shift window_all link compose aggregate_column"
+    ),
+    "lambdo_spark.functions.train": "resolve_model",
 }
 
 
@@ -1029,6 +1034,7 @@ class _Recorder:
     def __init__(self, log, name, real=None):
         self._log, self._name = log, name
         self._sig = None if real is None else inspect.signature(real)
+        self.__signature__ = self._sig
 
     def __call__(self, *args, **kwargs):
         if self._sig is None:
@@ -1838,6 +1844,326 @@ def test_table_op_plumbing_pin(case, plumbing_log, request):
     if tdef.get("operation") == "quality_filter":
         request.getfixturevalue("spark")  # F.col needs an active session
     assert _pin_run(plumbing_log, tdef) == _PINS[case]
+
+
+# ------------------------------------------------------- column plumbing pin
+# Every column op, compiled inside an ``extend`` table with the library
+# callables replaced by recorders. A case is the table's extra keys
+# plus its ``columns``; ``/compat`` cases build under reference_compat.
+_T = {"order_by": ["to"], "partition_by": ["tp"]}
+_COL_PIN_CASES = [
+    ("noop", {"columns": [{"id": "a"}]}),
+    # C1 calculate, with C10 models and the reference's function refs
+    ("calculate", {**_T, "columns": [
+        {"id": "c", "operation": "calculate", "kernel": "round", "inputs": "a",
+         "model": {"ndigits": 2}, "returns": "long", "fillna_value": 0,
+         "exclude": True, "outputs": "c", "data_type": "float"}]}),
+    ("calculate/min", {"columns": [
+        {"id": "c", "operation": "calculate", "kernel": "abs", "inputs": ["a"]}]}),
+    ("calculate/train", {"columns": [
+        {"id": "c", "operation": "calculate", "kernel": "linear_predict",
+         "inputs": ["a", "b"], "model": "$file:m.json",
+         "train": {"function": "ols", "inputs": ["a"], "outputs": ["y"]}}]}),
+    ("calculate/file", {"columns": [
+        {"id": "c", "operation": "calculate", "kernel": "linear_predict",
+         "inputs": ["a"], "model": "$file:m.json"}]}),
+    ("calculate/user", {"columns": [
+        {"id": "c", "operation": "calculate", "function": "pin_kernels:kernel",
+         "inputs": ["a", "b"], "returns": "long", "model": {"n": 1}}]}),
+    ("calculate/user-compat", {"columns": [
+        {"id": "c", "function": "pin_kernels:kernel", "inputs": ["a"]}]}),
+    ("calculate/infer", {"columns": [
+        {"id": "c", "function": "builtins:float", "inputs": "a", "window": 1}]}),
+    ("calculate/to_datetime", {"columns": [
+        {"id": "c", "function": "pandas:to_datetime", "inputs": ["a"],
+         "model": {"format": "%Y-%m-%d %H:%M", "errors": "coerce"}}]}),
+    ("calculate/all-scalar", {"columns": [
+        {"id": "c", "kernel": "abs", "window": "all", "inputs": ["a"]}]}),
+    # C2 roll / roll_range
+    ("roll", {**_T, "columns": [
+        {"id": "r", "operation": "roll", "kernel": "quantile", "inputs": ["v"],
+         "window": 3.0, "min_periods": 1, "model": {"q": 0.5},
+         "order_by": ["o"], "partition_by": ["k"], "fillna_value": 0.0}]}),
+    ("roll/min", {"order_by": ["to"], "columns": [
+        {"id": "r", "operation": "roll", "kernel": "mean", "inputs": ["v"],
+         "window": 3}]}),
+    ("roll/infer", {**_T, "columns": [
+        {"id": "r", "function": "numpy:mean", "inputs": ["v"], "window": "4"}]}),
+    ("roll/extensions", {**_T, "columns": [
+        {"id": "r", "operation": "roll", "kernel": "sum", "inputs": ["v"],
+         "window": 3, "extensions": [{"window": 2}, {"window": 5, "id": "r5"}]}]}),
+    ("roll/compat", {"columns": [
+        {"id": "r", "operation": "roll", "kernel": "mean", "inputs": ["v"],
+         "window": 2},
+        {"id": "s", "operation": "shift", "inputs": ["v"]}]}),
+    ("roll_range", {**_T, "columns": [
+        {"id": "rr", "operation": "roll_range", "kernel": "sum", "inputs": ["v"],
+         "range_seconds": 60.0, "ts": "t", "partition_by": ["k"],
+         "model": {}}]}),
+    ("roll_range/min", {"columns": [
+        {"id": "rr", "operation": "roll_range", "kernel": "sum", "inputs": ["v"],
+         "range_seconds": 60, "ts": "t"}]}),
+    # C3 shift / all
+    ("shift", {**_T, "columns": [
+        {"id": "s", "operation": "shift", "inputs": ["v"], "periods": -2.0,
+         "order_by": ["o"], "partition_by": ["k"]}]}),
+    ("shift/min", {"order_by": ["to"], "columns": [
+        {"id": "s", "operation": "shift", "inputs": ["v"]}]}),
+    ("shift/series", {"order_by": ["to"], "columns": [
+        {"id": "s", "function": "pandas:Series.shift", "inputs": "v",
+         "model": {"periods": 3}}]}),
+    ("all", {**_T, "columns": [
+        {"id": "a", "operation": "all", "kernel": "mean", "inputs": ["v"],
+         "partition_by": ["k"], "order_by": ["o"], "model": {}}]}),
+    ("all/min", {"columns": [
+        {"id": "a", "operation": "all", "kernel": "mean", "inputs": ["v"]}]}),
+    ("all/infer", {**_T, "columns": [
+        {"id": "a", "kernel": "mean", "window": "all", "inputs": ["v"]}]}),
+    # C4-C6 link / compose / aggregate
+    ("link", {**_T, "columns": [
+        {"id": "l", "operation": "link", "keys": ["k"], "linked_table": "other",
+         "linked_keys": ["k2"], "exclude": True}]}),
+    ("link/min", {"columns": [
+        {"id": "l", "operation": "link", "keys": ["k"], "linked_table": "other",
+         "linked_keys": ["k2"]}]}),
+    ("compose", {**_T, "columns": [
+        {"id": "cp", "operation": "compose", "link": "l", "linked_table": "other",
+         "linked_keys": ["k2"], "target": "x", "fillna_value": "-"}]}),
+    ("compose/min", {"columns": [
+        {"id": "cp", "operation": "compose", "link": "l", "linked_table": "other",
+         "linked_keys": ["k2"], "target": "x"}]}),
+    ("aggregate", {**_T, "columns": [
+        {"id": "g", "operation": "aggregate", "fact_table": "other", "keys": ["k"],
+         "fact_keys": ["fk"], "kernel": "sum", "measure": "v", "fillna_value": 0,
+         "model": {}}]}),
+    ("aggregate/min", {"columns": [
+        {"id": "g", "operation": "aggregate", "fact_table": "other", "keys": ["k"],
+         "fact_keys": ["fk"], "kernel": "count"}]}),
+    # time-series columns
+    ("sessionize", {**_T, "columns": [
+        {"id": "sid", "operation": "sessionize", "ts": "t", "gap_seconds": 30.0,
+         "tiebreak": ["x"], "partition_by": ["k"]}]}),
+    ("sessionize/min", {"columns": [
+        {"id": "sid", "operation": "sessionize", "ts": "t", "gap_seconds": 30}]}),
+    ("delta", {**_T, "columns": [
+        {"id": "d", "operation": "delta", "inputs": ["v"], "order_by": ["o"],
+         "partition_by": ["k"]}]}),
+    ("delta/min", {"order_by": ["to"], "columns": [
+        {"id": "d", "operation": "delta", "inputs": ["v"]}]}),
+    ("rate", {**_T, "columns": [
+        {"id": "rt", "operation": "rate", "inputs": ["v"], "ts": "t",
+         "counter_reset": True, "scale": 1000.0, "order_by": ["o"],
+         "partition_by": ["k"]}]}),
+    ("rate/min", {"order_by": ["to"], "columns": [
+        {"id": "rt", "operation": "rate", "inputs": ["v"], "ts": "t"}]}),
+    ("locf", {**_T, "columns": [
+        {"id": "f", "operation": "locf", "inputs": ["v", "w"], "order_by": ["o"],
+         "partition_by": ["k"]}]}),
+    ("locf/min", {"order_by": ["to"], "columns": [
+        {"id": "f", "operation": "locf", "inputs": ["v"]}]}),
+    ("interpolate", {**_T, "columns": [
+        {"id": "i", "operation": "interpolate", "inputs": ["v"], "bucket": "b",
+         "ndigits": 3.0, "partition_by": ["k"]}]}),
+    ("interpolate/min", {"columns": [
+        {"id": "i", "operation": "interpolate", "inputs": ["v"], "bucket": "b"}]}),
+]
+
+
+def _col_pin_run(log, case):
+    """The calls one ``_COL_PIN_CASES`` table makes, with function
+    addresses stripped from the reprs of wrapped user kernels."""
+    import re
+
+    tdef = {"id": "out", "operation": "extend", "source": "src",
+            **dict(_COL_PIN_CASES)[case]}
+    data = {"src": _Probe(log, "src"), "other": _Probe(log, "other")}
+    Workflow({"tables": [tdef]}, _Probe(log, "spark"), data,
+             reference_compat=case.endswith("compat")).execute()
+    return [re.sub(r"<function \S*?(<lambda>|\w+) at 0x\w+>", r"<\1>", line)
+            for line in log]
+
+
+@pytest.mark.parametrize("case", [c for c, _ in _COL_PIN_CASES])
+def test_column_op_plumbing_pin(case, plumbing_log, request):
+    """Each column op hands the library callable exactly today's
+    arguments — the table-level ``order_by``/``partition_by`` defaults,
+    the reference's operation inference and function rewrites, the
+    post-attach ``fillna_value`` and the reference_compat row order
+    included."""
+    tdef = dict(_COL_PIN_CASES)[case]
+    if case.endswith("compat") or "fillna_value" in repr(tdef):
+        request.getfixturevalue("spark")  # F.col needs an active session
+    assert _col_pin_run(plumbing_log, case) == _COL_PINS[case]
+
+
+_COL_PINS = {
+    'noop': [
+        'table_ops.extend(prev=src)',
+    ],
+    'calculate': [
+        'table_ops.extend(prev=src)',
+        "column_ops.calculate(df=table_ops.extend(), output='c', kernel='round', inputs=['a'], model={'ndigits': 2})",
+        "column_ops.calculate().withColumn('c', Column<'coalesce(c, 0)'>)",
+        "column_ops.calculate().withColumn().drop('c')",
+    ],
+    'calculate/min': [
+        'table_ops.extend(prev=src)',
+        "column_ops.calculate(df=table_ops.extend(), output='c', kernel='abs', inputs=['a'], model=None)",
+    ],
+    'calculate/train': [
+        'table_ops.extend(prev=src)',
+        "train.resolve_model(model='$file:m.json', df=table_ops.extend(), train={'function': 'ols', 'inputs': ['a'], 'outputs': ['y']})",
+        "column_ops.calculate(df=table_ops.extend(), output='c', kernel='linear_predict', inputs=['a', 'b'], model=train.resolve_model())",
+    ],
+    'calculate/file': [
+        'table_ops.extend(prev=src)',
+        "train.resolve_model(model='$file:m.json', df=table_ops.extend(), train=None)",
+        "column_ops.calculate(df=table_ops.extend(), output='c', kernel='linear_predict', inputs=['a'], model=train.resolve_model())",
+    ],
+    'calculate/user': [
+        'table_ops.extend(prev=src)',
+        "column_ops.calculate(df=table_ops.extend(), output='c', kernel=Kernel(name='c', expr=None, agg=None, pandas_fn=<<lambda>>, returns='long', doc=''), inputs=['a', 'b'], model={'n': 1})",
+    ],
+    'calculate/user-compat': [
+        'table_ops.extend(prev=src)',
+        "column_ops.calculate(df=table_ops.extend(), output='c', kernel=Kernel(name='c', expr=None, agg=None, pandas_fn=<_row_at_a_time>, returns='double', doc=''), inputs=['a'], model=None)",
+    ],
+    'calculate/infer': [
+        'table_ops.extend(prev=src)',
+        "column_ops.calculate(df=table_ops.extend(), output='c', kernel='float', inputs=['a'], model=None)",
+    ],
+    'calculate/to_datetime': [
+        'table_ops.extend(prev=src)',
+        "column_ops.calculate(df=table_ops.extend(), output='c', kernel='to_timestamp', inputs=['a'], model={'fmt': 'yyyy-MM-dd HH:mm', 'coerce': True})",
+    ],
+    'calculate/all-scalar': [
+        'table_ops.extend(prev=src)',
+        "column_ops.calculate(df=table_ops.extend(), output='c', kernel='abs', inputs=['a'], model=None)",
+    ],
+    'roll': [
+        'table_ops.extend(prev=src)',
+        "column_ops.roll(df=table_ops.extend(), output='r', kernel='quantile', inputs=['v'], window=3, order_by=['o'], partition_by=['k'], model={'q': 0.5}, min_periods=1)",
+        "column_ops.roll().withColumn('r', Column<'coalesce(r, 0.0)'>)",
+    ],
+    'roll/min': [
+        'table_ops.extend(prev=src)',
+        "column_ops.roll(df=table_ops.extend(), output='r', kernel='mean', inputs=['v'], window=3, order_by=['to'], partition_by=None, model=None, min_periods=None)",
+    ],
+    'roll/infer': [
+        'table_ops.extend(prev=src)',
+        "column_ops.roll(df=table_ops.extend(), output='r', kernel='mean', inputs=['v'], window=4, order_by=['to'], partition_by=['tp'], model=None, min_periods=None)",
+    ],
+    'roll/extensions': [
+        'table_ops.extend(prev=src)',
+        "column_ops.roll(df=table_ops.extend(), output='r_0', kernel='sum', inputs=['v'], window=2, order_by=['to'], partition_by=['tp'], model=None, min_periods=None)",
+        "column_ops.roll(df=column_ops.roll(), output='r5', kernel='sum', inputs=['v'], window=5, order_by=['to'], partition_by=['tp'], model=None, min_periods=None)",
+    ],
+    'roll/compat': [
+        'table_ops.extend(prev=src)',
+        "table_ops.extend().withColumn('__row_order__', Column<'monotonically_increasing_id()'>)",
+        "column_ops.roll(df=table_ops.extend().withColumn(), output='r', kernel='mean', inputs=['v'], window=2, order_by=['__row_order__'], partition_by=None, model=None, min_periods=None)",
+        "column_ops.roll().withColumn('__row_order__', Column<'monotonically_increasing_id()'>)",
+        "column_ops.shift(df=column_ops.roll().withColumn(), output='s', input_col='v', periods=1, order_by=['__row_order__'], partition_by=None)",
+    ],
+    'roll_range': [
+        'table_ops.extend(prev=src)',
+        "column_ops.roll_range(df=table_ops.extend(), output='rr', kernel='sum', inputs=['v'], range_seconds=60, ts_col='t', partition_by=['k'], model={})",
+    ],
+    'roll_range/min': [
+        'table_ops.extend(prev=src)',
+        "column_ops.roll_range(df=table_ops.extend(), output='rr', kernel='sum', inputs=['v'], range_seconds=60, ts_col='t', partition_by=None, model=None)",
+    ],
+    'shift': [
+        'table_ops.extend(prev=src)',
+        "column_ops.shift(df=table_ops.extend(), output='s', input_col='v', periods=-2, order_by=['o'], partition_by=['k'])",
+    ],
+    'shift/min': [
+        'table_ops.extend(prev=src)',
+        "column_ops.shift(df=table_ops.extend(), output='s', input_col='v', periods=1, order_by=['to'], partition_by=None)",
+    ],
+    'shift/series': [
+        'table_ops.extend(prev=src)',
+        "column_ops.shift(df=table_ops.extend(), output='s', input_col='v', periods=3, order_by=['to'], partition_by=None)",
+    ],
+    'all': [
+        'table_ops.extend(prev=src)',
+        "column_ops.window_all(df=table_ops.extend(), output='a', kernel='mean', inputs=['v'], partition_by=['k'], order_by=['o'], model={})",
+    ],
+    'all/min': [
+        'table_ops.extend(prev=src)',
+        "column_ops.window_all(df=table_ops.extend(), output='a', kernel='mean', inputs=['v'], partition_by=None, order_by=None, model=None)",
+    ],
+    'all/infer': [
+        'table_ops.extend(prev=src)',
+        "column_ops.window_all(df=table_ops.extend(), output='a', kernel='mean', inputs=['v'], partition_by=['tp'], order_by=['to'], model=None)",
+    ],
+    'link': [
+        'table_ops.extend(prev=src)',
+        "column_ops.link(df=table_ops.extend(), output='l', keys=['k'], linked_table=other, linked_keys=['k2'])",
+        "column_ops.link().drop('l')",
+    ],
+    'link/min': [
+        'table_ops.extend(prev=src)',
+        "column_ops.link(df=table_ops.extend(), output='l', keys=['k'], linked_table=other, linked_keys=['k2'])",
+    ],
+    'compose': [
+        'table_ops.extend(prev=src)',
+        "column_ops.compose(df=table_ops.extend(), output='cp', link_col='l', linked_table=other, linked_keys=['k2'], target_col='x')",
+        "column_ops.compose().withColumn('cp', Column<'coalesce(cp, '-')'>)",
+    ],
+    'compose/min': [
+        'table_ops.extend(prev=src)',
+        "column_ops.compose(df=table_ops.extend(), output='cp', link_col='l', linked_table=other, linked_keys=['k2'], target_col='x')",
+    ],
+    'aggregate': [
+        'table_ops.extend(prev=src)',
+        "column_ops.aggregate_column(group_df=table_ops.extend(), output='g', fact_df=other, group_keys=['k'], fact_keys=['fk'], kernel='sum', measure='v', fillna_value=0, model={})",
+    ],
+    'aggregate/min': [
+        'table_ops.extend(prev=src)',
+        "column_ops.aggregate_column(group_df=table_ops.extend(), output='g', fact_df=other, group_keys=['k'], fact_keys=['fk'], kernel='count', measure=None, fillna_value=None, model=None)",
+    ],
+    'sessionize': [
+        'table_ops.extend(prev=src)',
+        "timeseries.sessionize(df=table_ops.extend(), key=['k'], ts_col='t', gap_seconds=30, order_tiebreak=['x'], out_col='sid')",
+    ],
+    'sessionize/min': [
+        'table_ops.extend(prev=src)',
+        "timeseries.sessionize(df=table_ops.extend(), key=[], ts_col='t', gap_seconds=30, order_tiebreak=(), out_col='sid')",
+    ],
+    'delta': [
+        'table_ops.extend(prev=src)',
+        "timeseries.delta(df=table_ops.extend(), output='d', value_col='v', order_by=['o'], partition_by=['k'])",
+    ],
+    'delta/min': [
+        'table_ops.extend(prev=src)',
+        "timeseries.delta(df=table_ops.extend(), output='d', value_col='v', order_by=['to'], partition_by=[])",
+    ],
+    'rate': [
+        'table_ops.extend(prev=src)',
+        "timeseries.rate(df=table_ops.extend(), output='rt', value_col='v', ts_col='t', order_by=['o'], partition_by=['k'], counter_reset=True, scale=1000)",
+    ],
+    'rate/min': [
+        'table_ops.extend(prev=src)',
+        "timeseries.rate(df=table_ops.extend(), output='rt', value_col='v', ts_col='t', order_by=['to'], partition_by=[], counter_reset=False, scale=1000000)",
+    ],
+    'locf': [
+        'table_ops.extend(prev=src)',
+        "timeseries.locf(df=table_ops.extend(), cols=['v', 'w'], order_by=['o'], partition_by=['k'])",
+    ],
+    'locf/min': [
+        'table_ops.extend(prev=src)',
+        "timeseries.locf(df=table_ops.extend(), cols=['v'], order_by=['to'], partition_by=[])",
+    ],
+    'interpolate': [
+        'table_ops.extend(prev=src)',
+        "timeseries.interpolate_linear(df=table_ops.extend(), value_col='v', bucket_col='b', partition_by=['k'], output='i', ndigits=3)",
+    ],
+    'interpolate/min': [
+        'table_ops.extend(prev=src)',
+        "timeseries.interpolate_linear(df=table_ops.extend(), value_col='v', bucket_col='b', partition_by=[], output='i', ndigits=6)",
+    ],
+}
 
 
 # ------------------------------------------------------- op-table refusals
