@@ -58,6 +58,20 @@ def _pandas_agg_udf(k: Kernel, model: dict | None):
     )
 
 
+def _aggregate(
+    k: Kernel, cols: list[Column], model: dict | None, over: WindowSpec | None = None
+) -> Column:
+    """The kernel as an aggregate, over the window frame ``over`` when
+    given: its JVM ``agg`` form, else the pandas fallback for user
+    callables."""
+    if k.agg is not None:
+        return k.agg(cols, over=over, **(model or {}))
+    if k.pandas_fn is None or not cols:
+        raise ValueError(f"kernel '{k.name}' has no aggregate form")
+    value = _pandas_agg_udf(k, model)(*cols)
+    return value if over is None else value.over(over)
+
+
 def calculate(
     df: DataFrame,
     output: str,
@@ -103,23 +117,21 @@ def roll(
     mp = window if min_periods is None else min_periods
     w = _window(partition_by, order_by).rowsBetween(-(window - 1), 0)
     cols = [F.col(c) for c in inputs]
-    if k.agg is not None:
-        value = k.agg(cols, over=w, **(model or {}))
-    elif k.pandas_fn is not None:
-        value = _pandas_agg_udf(k, model)(*cols).over(w)
-    else:
-        raise ValueError(f"kernel '{k.name}' has no aggregate form")
+    value = _aggregate(k, cols, model, w)
     if mp > 1:
-        # pandas min_periods counts non-null OBSERVATIONS, not frame
-        # rows — a window of 3 rows holding [1.0, NULL, 2.0] has 2
-        # observations and must yield NULL at min_periods=3
-        if len(cols) == 1:
+        # pandas min_periods counts OBSERVATIONS, not frame rows: values
+        # neither NULL nor (float/double) NaN — a window of 3 rows
+        # holding [1.0, NULL, 2.0] or [1.0, NaN, 2.0] has 2 and must
+        # yield NULL at min_periods=3
+        floats = {name for name, t in df.dtypes if t in ("float", "double")}
+        if len(cols) == 1 and inputs[0] not in floats:
             have = F.count(cols[0]).over(w)
         else:
-            nn = cols[0].isNotNull()
-            for c in cols[1:]:
-                nn = nn & c.isNotNull()
-            have = F.count(F.when(nn, F.lit(1))).over(w)
+            seen = None
+            for name, c in zip(inputs, cols):
+                ok = c.isNotNull() & ~F.isnan(c) if name in floats else c.isNotNull()
+                seen = ok if seen is None else seen & ok
+            have = F.count(F.when(seen, F.lit(1))).over(w)
         value = F.when(have >= F.lit(mp), value)
     return df.withColumn(output, value)
 
@@ -151,12 +163,7 @@ def roll_range(
         .orderBy(sec)
         .rangeBetween(-(int(range_seconds) - 1), 0)
     )
-    cols = [F.col(c) for c in inputs]
-    if k.agg is not None:
-        return df.withColumn(output, k.agg(cols, over=w, **(model or {})))
-    if k.pandas_fn is None:
-        raise ValueError(f"kernel '{k.name}' has no aggregate form")
-    return df.withColumn(output, _pandas_agg_udf(k, model)(*cols).over(w))
+    return df.withColumn(output, _aggregate(k, [F.col(c) for c in inputs], model, w))
 
 
 def shift(
@@ -193,12 +200,7 @@ def window_all(
         w = w.orderBy(*order_by).rowsBetween(
             Window.unboundedPreceding, Window.unboundedFollowing
         )
-    cols = [F.col(c) for c in inputs]
-    if k.agg is not None:
-        return df.withColumn(output, k.agg(cols, over=w, **(model or {})))
-    if k.pandas_fn is None:
-        raise ValueError(f"kernel '{k.name}' has no aggregate form")
-    return df.withColumn(output, _pandas_agg_udf(k, model)(*cols).over(w))
+    return df.withColumn(output, _aggregate(k, [F.col(c) for c in inputs], model, w))
 
 
 def link(
@@ -249,7 +251,7 @@ def aggregate_column(
     group_keys: Sequence[str],
     fact_keys: Sequence[str],
     kernel: str,
-    measure: str | None,
+    measure: str | None = None,
     fillna_value=None,
     model: dict | None = None,
 ) -> DataFrame:
@@ -258,13 +260,7 @@ def aggregate_column(
     the group table so empty groups survive, fillna for them
     (tests/test_aggregate.py:77-79)."""
     k = _resolve_kernel(kernel)
-    cols = [F.col(measure)] if measure else []
-    if k.agg is not None:
-        agg_col = k.agg(cols, **(model or {}))
-    elif k.pandas_fn is not None and cols:
-        agg_col = _pandas_agg_udf(k, model)(*cols)
-    else:
-        raise ValueError(f"kernel '{k.name}' has no aggregate form")
+    agg_col = _aggregate(k, [F.col(measure)] if measure else [], model)
     agg = (
         fact_df.groupBy(*[F.col(c) for c in fact_keys])
         .agg(agg_col.alias(output))

@@ -13,8 +13,8 @@ Column.py:17-24, Topology.py:18-30), re-imagined:
   callable's own; the table dependencies derive from the entries, and an
   unknown op or key is refused when the Workflow is constructed. A new
   op is one ``_OPS`` entry plus its row in docs/workflow_spec.md;
-- *column definitions* compile to withColumn/join stages — C1–C6 from
-  ``operators.column_ops``;
+- *column definitions* go through the column op table ``_COLUMN_OPS``
+  the same way, each one withColumn/join stage;
 - ``extensions`` desugar compiler-side into N concrete columns
   (reference utils.py:13-36, expansion Table.py:48-63);
 - dependency stratification is the same Kahn-style layering as
@@ -36,7 +36,7 @@ import json
 import re
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from lambdo_spark.operators import column_ops as C
 from lambdo_spark.operators import table_ops as T
@@ -231,6 +231,7 @@ _COERCE = {
     "int": int, "float": float, "bool": bool, "str": str, "tuple": tuple,
     "first": lambda cols: cols[0],
     "one": _one,
+    "or_empty": lambda v: v or [],  # an unset partition_by as no keys
     "quotas": lambda q: {stratum: int(n) for stratum, n in q.items()},
 }
 
@@ -241,6 +242,14 @@ _COMMON_KEYS = frozenset({
     "column_filter", "after", "function", "inputs", "model", "outputs",
     "attributes",
 })
+
+# accepted on every column, the reference's outputs/data_type included
+_COLUMN_KEYS = frozenset({
+    "id", "operation", "kernel", "function", "returns", "inputs", "model",
+    "exclude", "fillna_value", "extensions", "order_by", "partition_by", "window",
+    "outputs", "data_type",
+})
+_ROW_ORDER = "__row_order__"  # reference_compat's physical row order
 
 
 def _parse_keys(spec: str) -> tuple[tuple[str, str, str | None], ...]:
@@ -253,8 +262,10 @@ def _parse_keys(spec: str) -> tuple[tuple[str, str, str | None], ...]:
     return tuple(out)
 
 
-def _where(tdef: dict) -> str:
-    return f"table {tdef['id']!r} ({tdef.get('operation', 'source')})"
+def _where(d: dict) -> str:
+    if "_table" in d:  # a column def, as the Workflow normalized it
+        return f"table {d['_table']!r} column {d.get('id')!r} ({d['operation']})"
+    return f"table {d['id']!r} ({d.get('operation', 'source')})"
 
 
 class _Op:
@@ -276,6 +287,8 @@ class _Op:
       it computes with — any other value is refused.
     """
 
+    common = _COMMON_KEYS
+
     def __init__(
         self, fn, keys="", tables="source", preset=None, stream=None, fixed=None
     ):
@@ -285,13 +298,13 @@ class _Op:
         self.preset = preset or {}
         self.stream = stream
         self.fixed = fixed or {}
-        self.accepted = _COMMON_KEYS.union(
+        self.accepted = self.common.union(
             (k.partition(".")[0] for k, _, _ in self.keys + self.tables),
             stream.accepted if stream else (),
         )
 
-    def build(self, wf, tdef: dict) -> DataFrame:
-        args, kw = [], {}
+    def build(self, wf, tdef: dict, *args) -> DataFrame:
+        args, kw = list(args), {}
         for key, param, _ in self.tables:
             if "." in key or key not in tdef:
                 if key == "source":
@@ -324,13 +337,17 @@ class _Op:
         fn = self._callable()
         if fn is self.fn:
             args = (wf, tdef, *args)
+        self._require(fn, tdef, len(args), kw)
+        return fn(*args, **kw)
+
+    def _require(self, fn, tdef: dict, nargs: int, given) -> None:
+        """Refuses a parameter without a default past ``nargs``, not given."""
         for i, p in enumerate(inspect.signature(fn).parameters.values()):
             if (
-                p.default is p.empty and i >= len(args) and p.name not in kw
+                p.default is p.empty and i >= nargs and p.name not in given
                 and p.kind in (p.POSITIONAL_OR_KEYWORD, p.KEYWORD_ONLY)
             ):
                 raise ValueError(f"{_where(tdef)} needs {self._key_of(p.name)!r}")
-        return fn(*args, **kw)
 
     def _callable(self):
         if callable(self.fn):
@@ -389,56 +406,85 @@ def _on(v) -> bool:
 class _Chain(_Op):
     """The shape the mergeable time-series aggregates share: partials,
     merged to the coarser ``merge_to`` tier when it is set, then a last
-    step run when ``final_if`` (a key and its default) is on. ``direct``
-    is a one-pass form built instead when nothing is merged."""
+    step run when ``final_if`` (a key and its default) is on."""
 
-    def __init__(
-        self, partials, merge, final, final_if=("finalize", True), direct=None
-    ):
+    def __init__(self, partials, merge, final, final_if=("finalize", True)):
         super().__init__(self._build)
-        self.steps = (partials, merge, final, final_if, direct)
+        self.steps = (partials, merge, final, final_if)
         self.accepted = self.accepted.union(
             {"merge_to", final_if[0]},
-            *(s.accepted for s in (partials, merge, final, direct) if s),
+            *(s.accepted for s in (partials, merge, final)),
         )
 
     def _build(self, wf, tdef: dict, src: DataFrame) -> DataFrame:
-        partials, merge, final, (key, default), direct = self.steps
-        if direct is not None and not _on(tdef.get("merge_to")):
-            return direct.call(wf, tdef, src)
+        partials, merge, final, (key, default) = self.steps
         df = partials.call(wf, tdef, src)
         if _on(tdef.get("merge_to")):
             df = merge.call(wf, tdef, df)
+        else:  # an off ``merge_to`` (null, false) names no width
+            tdef = {k: v for k, v in tdef.items() if k != "merge_to"}
         if _on(tdef.get(key, default)):
             df = final.call(wf, tdef, df)
         return df
 
 
-# column ops that need a row order (order_by, or reference_compat's
-# physical row order)
-_ORDERED_COLUMN_OPS = frozenset({"roll", "shift", "delta", "rate", "locf"})
+class _Col(_Op):
+    """One column operation: ``fn(df, ...)`` returns ``df`` with the
+    column attached (an op function takes ``(wf, cdef, df, ...)``);
+    ``kernel``/``function`` reach a ``kernel`` parameter as
+    ``Workflow._kernel_ref`` resolves them, and an ``order_by``
+    parameter without a default means the op needs a row order."""
 
-# column ops that read another table, and the key naming it
-_COLUMN_TABLE_KEYS = {
-    "link": "linked_table", "compose": "linked_table", "aggregate": "fact_table",
-}
+    common = _COLUMN_KEYS
+
+    def __init__(self, fn, keys="", tables="", preset=None):
+        super().__init__(fn, keys, tables, preset)
+        self.takes = {param for _, param, _ in self.keys}
+
+    def compile(self, cdef: dict, row_order: bool) -> None:
+        """Refuses a normalized column def that misses a required key,
+        before any table builds; a missing row order is the physical one
+        when ``row_order`` (reference_compat) allows it."""
+        fn = self._callable()
+        p = inspect.signature(fn).parameters.get("order_by")
+        if p is not None and p.default is p.empty and not cdef["order_by"]:
+            if not row_order:
+                raise ValueError(f"{_where(cdef)} needs 'order_by'")
+            cdef["order_by"] = [_ROW_ORDER]
+        given = {p for k, p, _ in self.keys + self.tables if k in cdef}
+        self._require(fn, cdef, 3 if fn is self.fn else 1, given | set(self.preset))
+
+    def build(self, wf, cdef: dict, df: DataFrame) -> DataFrame:
+        if cdef["order_by"] == [_ROW_ORDER] and _ROW_ORDER not in df.columns:
+            df = df.withColumn(_ROW_ORDER, F.monotonically_increasing_id())
+        df = super().build(wf, cdef, df)
+        # C9 — fillna applied post-attach (reference Column.py:437-496),
+        # unless the op takes it itself
+        fv = cdef.get("fillna_value")
+        if fv is not None and "fillna_value" not in self.takes:
+            cid = cdef["id"]
+            df = df.withColumn(cid, F.coalesce(F.col(cid), F.lit(fv)))
+        return df
+
+    def call(self, wf, cdef: dict, df: DataFrame, **kw) -> DataFrame:
+        if "kernel" in self.takes:
+            kw["kernel"] = wf._kernel_ref(cdef)
+        return super().call(wf, cdef, df, **kw)
 
 
 def _table_deps(tdef: dict) -> set[str]:
     deps: set[str] = set()
-    op = _OPS.get(tdef.get("operation", "source"))
-    for key, _, _ in op.tables if op else ():
-        head, _, sub = key.partition(".")
-        names = tdef.get(head)
-        if sub:
-            names = names.get(sub) if isinstance(names, dict) else None
-        if names is not None:
-            deps.update([names] if isinstance(names, str) else names)
-    for cdef in tdef.get("columns", []):
-        for c in expand_extensions(cdef):
-            key = _COLUMN_TABLE_KEYS.get(c.get("operation"))
-            if key:
-                deps.add(c[key])
+    cols = [c for cdef in tdef.get("columns", []) for c in expand_extensions(cdef)]
+    for d, op in [(tdef, _OPS.get(tdef.get("operation", "source")))] + [
+        (c, _COLUMN_OPS.get(c.get("operation"))) for c in cols
+    ]:
+        for key, _, _ in op.tables if op else ():
+            head, _, sub = key.partition(".")
+            names = d.get(head)
+            if sub:
+                names = names.get(sub) if isinstance(names, dict) else None
+            if names is not None:
+                deps.update([names] if isinstance(names, str) else names)
     # explicit ordering for side-effect chains the data flow can't
     # express (a tier `source` reading a tier `sink`'s root goes
     # through the filesystem, not through a table reference)
@@ -475,19 +521,46 @@ def stratify(spec: dict) -> list[list[str]]:
     return layers
 
 
-def _lookup(tdef: dict) -> _Op:
-    """The table's ``_OPS`` entry; refuses an unknown op or key."""
-    name = tdef.get("operation", "source")
-    op = _OPS.get(name)
+def _lookup(ops: dict, d: dict, keys, kind: str = "table") -> _Op:
+    """``d``'s entry in ``ops``; refuses an unknown op, or a key of
+    ``keys`` (the def as written) that the entry does not accept."""
+    name = d.get("operation", "source")
+    op = ops.get(name)
     if op is None:
-        raise ValueError(f"table {tdef['id']!r}: unknown table operation '{name}'")
-    unknown = set(tdef) - op.accepted
+        raise ValueError(f"{_where(d)}: unknown {kind} operation '{name}'")
+    unknown = set(keys) - op.accepted
     if unknown:
         raise ValueError(
-            f"{_where(tdef)}: unknown key(s) {sorted(unknown)}; "
+            f"{_where(d)}: unknown key(s) {sorted(unknown)}; "
             f"{name!r} accepts {sorted(op.accepted)}"
         )
     return op
+
+
+def _normalize_column(c: dict) -> dict:
+    """A column def in the op table's terms: a bare-string ``inputs`` as
+    a list (reference Column.py:442), well-known function refs rewritten
+    and the operation inferred (Column.py:74-104)."""
+    c = dict(c)
+    if isinstance(c.get("inputs"), str):
+        c["inputs"] = [c["inputs"]]
+    _rewrite_wellknown_function(c)
+    if c.get("operation") is None and (c.get("function") or c.get("kernel")):
+        w = str(c.get("window", "one"))
+        if w in ("one", "1"):
+            c["operation"] = "calculate"
+        elif w == "all":
+            # reference specs use window=all for elementwise whole-column
+            # fns (example5.json's to_datetime); a scalar-only registry
+            # kernel IS elementwise
+            from lambdo_spark.functions.registry import kernels
+
+            k = kernels().get(c["kernel"]) if isinstance(c.get("kernel"), str) else None
+            scalar = k is not None and k.expr is not None and k.agg is None
+            c["operation"] = "calculate" if scalar else "all"
+        else:
+            c["operation"] = "roll"
+    return c
 
 
 class Workflow:
@@ -527,7 +600,8 @@ class Workflow:
         self._order = [t["id"] for t in spec["tables"]]
         self._tdefs = {t["id"]: t for t in spec["tables"]}
         self._normalize_operations()
-        self._ops = {tid: _lookup(td) for tid, td in self._tdefs.items()}
+        self._ops = {tid: _lookup(_OPS, td, td) for tid, td in self._tdefs.items()}
+        self._columns = {tid: self._compile_columns(t) for tid, t in self._tdefs.items()}
         self.layers = stratify(self.spec)
 
     def _normalize_operations(self) -> None:
@@ -557,6 +631,21 @@ class Workflow:
                         "no predecessor to extend"
                     )
                 td["source"] = self._order[i - 1]
+
+    def _compile_columns(self, td: dict) -> list[tuple[dict, _Col]]:
+        """The column defs, normalized over the table's ``order_by`` and
+        ``partition_by``, with their ``_COLUMN_OPS`` entries; refuses an
+        unknown op or key, or a missing required key."""
+        out = []
+        for cdef in td.get("columns", []):
+            for c in map(_normalize_column, expand_extensions(cdef)):
+                d = {"order_by": td.get("order_by"),
+                     "partition_by": td.get("partition_by"), **c,
+                     "operation": c.get("operation") or "noop", "_table": td["id"]}
+                op = _lookup(_COLUMN_OPS, d, c, "column")
+                op.compile(d, self.reference_compat)
+                out.append((d, op))
+        return out
 
     def _normalize_function_table(self, td: dict) -> None:
         """Reference T3 function tables (Table.py:192-203: a table def
@@ -685,19 +774,18 @@ class Workflow:
             )
         return eval(src)  # noqa: S307 — explicit opt-in above
 
-    def _kernel_ref(self, c: dict, rowwise: bool = False):
+    def _kernel_ref(self, c: dict):
         """``kernel``/``function`` field → registry name (string,
         resolved by column_ops) or an ad-hoc user Kernel wrapping a
         ``module:attr`` callable / inline lambda (reference
         resolve.py:14-49). User callables receive the input columns as
         positional pd.Series (the reference's calling convention) and
         must be vectorized: return a Series (calculate) or a scalar
-        (roll/all/aggregate)."""
+        (roll/all/aggregate) — except in a reference_compat calculate,
+        which runs them row-at-a-time."""
         from lambdo_spark.functions.registry import user_kernel
 
         ref = c.get("kernel", c.get("function"))
-        if ref is None:
-            raise ValueError(f"column '{c.get('id')}' needs a kernel/function")
         returns = c.get("returns", "double")
         if callable(ref):
             fn = ref
@@ -707,7 +795,7 @@ class Workflow:
             fn = resolve_callable(ref)
         else:
             return ref  # registry kernel name
-        if rowwise:
+        if self.reference_compat and c["operation"] == "calculate":
             # reference calculate convention (Column.py:552-559):
             # 1 input -> fn per value (Series.apply); N inputs -> fn
             # per row ndarray (DataFrame.apply axis=1). Exact but
@@ -739,14 +827,11 @@ class Workflow:
     # ------------------------------------------------------------ build
     def _build_table(self, tdef: dict) -> DataFrame:
         df = self._ops[tdef["id"]].build(self, tdef)
-        order_by = tdef.get("order_by")
-        partition_by = tdef.get("partition_by")
         drop_after: list[str] = []
-        for cdef in tdef.get("columns", []):
-            for c in expand_extensions(cdef):
-                df = self._eval_column(df, c, order_by, partition_by)
-                if c.get("exclude"):
-                    drop_after.append(c["id"])
+        for c, op in self._columns[tdef["id"]]:
+            df = op.build(self, c, df)
+            if c.get("exclude"):
+                drop_after.append(c["id"])
         rf = tdef.get("row_filter")
         if rf:
             df = T.row_filter(
@@ -755,12 +840,12 @@ class Workflow:
                 predicate=rf.get("predicate"),
                 sample=rf.get("sample"),
                 slice_spec=rf.get("slice"),
-                order_by=rf.get("order_by", order_by),
+                order_by=rf.get("order_by", tdef.get("order_by")),
             )
         if drop_after:
             df = df.drop(*drop_after)
-        if "__row_order__" in df.columns:  # reference_compat helper col
-            df = df.drop("__row_order__")
+        if _ROW_ORDER in df.columns:  # reference_compat helper col
+            df = df.drop(_ROW_ORDER)
         cf = tdef.get("column_filter")
         if cf is not None:
             if isinstance(cf, dict):
@@ -768,147 +853,6 @@ class Workflow:
             else:
                 df = T.column_filter(df, keep=cf)
         return df
-
-
-    def _eval_column(
-        self, df: DataFrame, c: dict, t_order: list | None, t_part: list | None
-    ) -> DataFrame:
-        out = self._eval_column_op(df, c, t_order, t_part)
-        # C9 — fillna applied post-attach for ANY column op (reference
-        # Column.py:437-496); the aggregate op also accepts it inline
-        fv = c.get("fillna_value")
-        if fv is not None and c.get("operation") != "aggregate":
-            from pyspark.sql import functions as F
-
-            cid = c["id"]
-            out = out.withColumn(cid, F.coalesce(F.col(cid), F.lit(fv)))
-        return out
-
-    def _eval_column_op(
-        self, df: DataFrame, c: dict, t_order: list | None, t_part: list | None
-    ) -> DataFrame:
-        if isinstance(c.get("inputs"), str):  # reference allows a bare
-            c = {**c, "inputs": [c["inputs"]]}  # string (Column.py:442)
-        if c.get("function") or c.get("kernel"):
-            c = dict(c)
-            _rewrite_wellknown_function(c)
-        op = c.get("operation")
-        if op is None and (c.get("function") or c.get("kernel")):
-            # reference operation inference (Column.py:74-104):
-            # window one/1 -> calculate, all -> all, numeric -> roll
-            w = str(c.get("window", "one"))
-            if w in ("one", "1"):
-                op = "calculate"
-            elif w == "all":
-                op = "all"
-            else:
-                op, c["window"] = "roll", int(w)
-            if op == "all" and isinstance(c.get("kernel"), str):
-                # reference specs use window=all for elementwise
-                # whole-column fns (example5.json's to_datetime);
-                # a scalar-only registry kernel IS elementwise
-                from lambdo_spark.functions.registry import kernels as _kreg
-
-                k = _kreg().get(c["kernel"])
-                if k is not None and k.expr is not None and k.agg is None:
-                    op = "calculate"
-        if op is None:  # C7 noop — reference existing column
-            return df
-        out = c["id"]
-        order_by = c.get("order_by", t_order)
-        partition_by = c.get("partition_by", t_part)
-        if op in _ORDERED_COLUMN_OPS and not order_by:
-            if not self.reference_compat:
-                raise ValueError(f"{op} column '{out}' needs order_by")
-            # reference implicit physical row order (README.md:109-121)
-            if "__row_order__" not in df.columns:
-                from pyspark.sql import functions as F
-
-                df = df.withColumn(
-                    "__row_order__", F.monotonically_increasing_id()
-                )
-            order_by = ["__row_order__"]
-        if op == "calculate":
-            model = c.get("model")
-            if c.get("train") is not None or (
-                isinstance(model, str) and model.startswith("$file:")
-            ):
-                # C10 (reference Column.py:844-956): fit-or-load the
-                # model before applying; artifact persisted by $file: ref
-                from lambdo_spark.functions.train import resolve_model
-
-                model = resolve_model(model, df, c.get("train"))
-            return C.calculate(
-                df, out,
-                self._kernel_ref(c, rowwise=self.reference_compat),
-                c["inputs"], model,
-            )
-        if op == "roll":
-            return C.roll(
-                df, out, self._kernel_ref(c), c["inputs"], int(c["window"]),
-                order_by, partition_by, c.get("model"), c.get("min_periods"),
-            )
-        if op == "roll_range":
-            return C.roll_range(
-                df, out, self._kernel_ref(c), c["inputs"], int(c["range_seconds"]),
-                c["ts"], partition_by, c.get("model"),
-            )
-        if op == "shift":
-            return C.shift(
-                df, out, c["inputs"][0], int(c.get("periods", 1)),
-                order_by, partition_by,
-            )
-        if op == "all":
-            return C.window_all(
-                df, out, self._kernel_ref(c), c["inputs"], partition_by, order_by,
-                c.get("model"),
-            )
-        if op == "link":
-            return C.link(
-                df, out, c["keys"], self.tables[c["linked_table"]],
-                c["linked_keys"],
-            )
-        if op == "compose":
-            return C.compose(
-                df, out, c["link"], self.tables[c["linked_table"]],
-                c["linked_keys"], c["target"],
-            )
-        if op == "aggregate":
-            return C.aggregate_column(
-                df, out, self.tables[c["fact_table"]], c["keys"],
-                c["fact_keys"], self._kernel_ref(c), c.get("measure"),
-                c.get("fillna_value"), c.get("model"),
-            )
-        if op == "sessionize":
-            from lambdo_spark.rollup.timeseries import sessionize
-
-            return sessionize(
-                df, partition_by or [], c["ts"], int(c["gap_seconds"]),
-                c.get("tiebreak", ()), out,
-            )
-        if op == "delta":
-            from lambdo_spark.rollup.timeseries import delta
-
-            return delta(df, out, c["inputs"][0], order_by, partition_by or [])
-        if op == "rate":
-            from lambdo_spark.rollup.timeseries import rate
-
-            return rate(
-                df, out, c["inputs"][0], c["ts"], order_by, partition_by or [],
-                c.get("counter_reset", False), int(c.get("scale", 1_000_000)),
-            )
-        if op == "locf":
-            from lambdo_spark.rollup.timeseries import locf
-
-            return locf(df, c["inputs"], order_by, partition_by or [])
-        if op == "interpolate":
-            from lambdo_spark.rollup.timeseries import interpolate_linear
-
-            return interpolate_linear(
-                df, c["inputs"][0], c["bucket"], partition_by or [], out,
-                int(c.get("ndigits", 6)),
-            )
-        raise ValueError(f"unknown column operation '{op}'")
 
 
 def compile_workflow(
@@ -959,8 +903,6 @@ def _stream_source(spark: SparkSession, kw: dict) -> DataFrame:
     df = reader.load(kw["path"])
     wm = kw.get("watermark")
     if wm:
-        from pyspark.sql import functions as F
-
         # withWatermark requires TIMESTAMP; parquet files written
         # without a zone scan as TIMESTAMP_NTZ. The session zone is
         # pinned to UTC (session.py), so the cast is epoch-exact.
@@ -1048,8 +990,6 @@ def _quality_filter(wf, tdef, src, text="text", rules=None, flag=None) -> DataFr
     """Gopher/C4 web-text rules (functions/text.py): keep rows passing
     the composite boolean, or flag them when ``flag: "<col>"`` is given
     (one JVM expression over the text column, pushdown-friendly)."""
-    from pyspark.sql import functions as F
-
     from lambdo_spark.functions.text import gopher_filter
 
     keep = gopher_filter(F.col(text), **(rules or {}))
@@ -1087,6 +1027,21 @@ def _lm_score(wf, tdef: dict, docs: DataFrame, ref=None, **kw) -> DataFrame:
         cols = {k: v for k, v in kw.items() if k in ("id_col", "text_col")}
         kw["counts"] = lm_counts(ref, **cols)
     return lm_score(docs, **kw)
+
+
+def _noop(wf, cdef: dict, df: DataFrame) -> DataFrame:
+    """C7 — a column def naming an existing column."""
+    return df
+
+
+def _calculate(wf, cdef: dict, df: DataFrame, output, kernel, inputs, model=None,
+               train=None) -> DataFrame:
+    """C1; fits or loads a ``train``/``$file:`` model first (C10)."""
+    if train is not None or (isinstance(model, str) and model.startswith("$file:")):
+        from lambdo_spark.functions.train import resolve_model
+
+        model = resolve_model(model, df, train)
+    return C.calculate(df, output, kernel, inputs, model)
 
 
 def _sink(wf, tdef: dict, src: DataFrame, **kw) -> DataFrame:
@@ -1209,8 +1164,8 @@ _OPS: dict[str, _Op] = {
         _Op(_TS + "time_weighted_partials", _SERIES + " bucket_col"),
         _Op(_TS + "time_weighted_downsample", "tier_seconds=fine_width_s:int "
             "merge_to=coarse_width_s:int keys=partition_by bucket_col"),
-        _Op(_TS + "time_weighted_finalize", "merge_to=width_s:int bucket_col"),
-        direct=_Op(_TS + "time_weighted", _SERIES + " bucket_col tiebreak")),
+        _Op(_TS + "time_weighted_finalize",
+            "merge_to=width_s:int tier_seconds=width_s:int bucket_col")),
     "counter": _Chain(_Op(_TS + "counter_partials", _SERIES + " bucket_col"),
                       _Op(_TS + "counter_downsample", _MERGE),
                       _Op(_TS + "counter_finalize", "output")),
@@ -1289,4 +1244,38 @@ _OPS: dict[str, _Op] = {
     "semdedup": _Op("functions.semdedup:semdedup",
                     "tau:float k:int iters:int id_col vector=vec_col"),
     "bpe": _Op(_bpe, "num_merges:int merges " + _DOCS + " min_count:int"),
+}
+
+# ------------------------------------------------------- the column table
+_CO = "operators.column_ops:"
+_KERNEL = "id=output kernel function=kernel inputs model"
+
+_COLUMN_OPS: dict[str, _Col] = {
+    "noop": _Col(_noop),
+    # C1-C3: per row, rolling and whole-group
+    "calculate": _Col(_calculate, _KERNEL + " train"),
+    "roll": _Col(_CO + "roll", _KERNEL + " window:int order_by partition_by "
+                 "min_periods"),
+    "roll_range": _Col(_CO + "roll_range", _KERNEL + " range_seconds:int ts=ts_col "
+                       "partition_by"),
+    "shift": _Col(_CO + "shift", "id=output inputs=input_col:first periods:int "
+                  "order_by partition_by", preset={"periods": 1}),
+    "all": _Col(_CO + "window_all", _KERNEL + " partition_by order_by"),
+    # C4-C6: columns read from another table
+    "link": _Col(_CO + "link", "id=output keys linked_keys", tables="linked_table"),
+    "compose": _Col(_CO + "compose", "id=output link=link_col linked_keys "
+                    "target=target_col", tables="linked_table"),
+    "aggregate": _Col(_CO + "aggregate_column", "id=output keys=group_keys fact_keys "
+                      "kernel function=kernel measure fillna_value model",
+                      tables="fact_table=fact_df"),
+    # time series
+    "sessionize": _Col(_TS + "sessionize", "id=out_col partition_by=key:or_empty "
+                       "ts=ts_col gap_seconds:int tiebreak=order_tiebreak"),
+    "delta": _Col(_TS + "delta", "id=output inputs=value_col:first order_by "
+                  "partition_by:or_empty"),
+    "rate": _Col(_TS + "rate", "id=output inputs=value_col:first ts=ts_col order_by "
+                 "partition_by:or_empty counter_reset scale:int"),
+    "locf": _Col(_TS + "locf", "inputs=cols order_by partition_by:or_empty"),
+    "interpolate": _Col(_TS + "interpolate_linear", "id=output inputs=value_col:first "
+                        "bucket=bucket_col partition_by:or_empty ndigits:int"),
 }

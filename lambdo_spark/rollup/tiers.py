@@ -31,7 +31,7 @@ arithmetic: identical semantics in Spark and the DuckDB oracle, and
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 TIER_SECONDS = {"1h": 3600, "1d": 86400, "30d": 2592000}
 
@@ -58,6 +58,18 @@ def partials_from_table(
     referenced columns are touched, so Catalyst prunes the rest (for
     pages: html/binary never leave the parquet scan).
     """
+    return partial_rows(
+        df, bucket_expr(ts_col, tier_seconds), key_col, ts_col, cat_col, measure
+    )
+
+
+def partial_rows(
+    df: DataFrame, bucket: Column, key_col: str, ts_col: str, cat_col, measure
+) -> DataFrame:
+    """The partial row, one definition for the batch tiers and the
+    stream: ``(url, bucket_s, lang, n_points, sum_len, min_ts, max_ts)``
+    grouped on ``bucket`` — a bucket start, or on a stream the
+    event-time window ``bucket_s`` is taken from."""
     cat = F.col(cat_col) if isinstance(cat_col, str) else cat_col
     # NULL category (undetected language) buckets under a sentinel:
     # it would otherwise become a NULL map key in finalize's
@@ -68,7 +80,7 @@ def partials_from_table(
     return (
         df.select(
             F.col(key_col).alias("url"),
-            bucket_expr(ts_col, tier_seconds).alias("bucket_s"),
+            bucket.alias("bucket_s"),
             cat.alias("lang"),
             m.alias("_len"),
             F.col(ts_col).alias("_ts"),

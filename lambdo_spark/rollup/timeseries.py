@@ -387,7 +387,6 @@ def time_weighted(
     width_s: int,
     partition_by: Sequence[str],
     bucket_col: str = "bucket_s",
-    tiebreak: Sequence[str] = (),
 ) -> DataFrame:
     """Time-weighted aggregate per (key, bucket) with LOCF-within-
     bucket semantics (the shape of TimescaleDB's
@@ -402,41 +401,19 @@ def time_weighted(
     ``covered_s`` (bucket end − first sample) — plus
     ``twa = wsum div covered_s``: integer division over exact
     partials keeps cross-engine hash parity (float means drift in
-    the last bit). For re-aggregating to coarser tiers use
-    :func:`time_weighted_partials` / :func:`time_weighted_downsample`
-    — a plain sum of ``wsum`` is NOT the coarser integral, because
-    each bucket's last sample holds past its bucket end under the
-    coarser bucketing (the downsample adds those boundary holds).
+    the last bit). It is :func:`time_weighted_partials` finalized at
+    the same width; to re-aggregate to coarser tiers, merge the
+    partials with :func:`time_weighted_downsample` first — a plain sum
+    of ``wsum`` is NOT the coarser integral, because each bucket's last
+    sample holds past its bucket end under the coarser bucketing.
 
     One shuffle total: the ``lead`` window and the groupBy both key
     on (keys, bucket), so the window's hash exchange satisfies the
     aggregate and Catalyst plans no second exchange."""
-    ts_s = F.unix_timestamp(F.col(ts_col)).cast("long")
-    prepared = df.select(
-        *partition_by,
-        (F.floor(ts_s / width_s) * width_s).cast("long").alias(bucket_col),
-        ts_s.alias("_ts_s"),
-        F.col(value_col).cast("long").alias("_v"),
-        *[F.col(c) for c in tiebreak],
+    partials = time_weighted_partials(
+        df, value_col, ts_col, width_s, partition_by, bucket_col
     )
-    w = Window.partitionBy(*partition_by, bucket_col).orderBy(
-        "_ts_s", "_v", *tiebreak
-    )
-    hold = (
-        F.coalesce(F.lead("_ts_s").over(w), F.col(bucket_col) + width_s)
-        - F.col("_ts_s")
-    )
-    return (
-        prepared.withColumn("_hold_s", hold)
-        .groupBy(*partition_by, bucket_col)
-        .agg(
-            F.sum(F.col("_v") * F.col("_hold_s")).alias("wsum"),
-            F.max(F.col(bucket_col) + width_s - F.col("_ts_s")).alias(
-                "covered_s"
-            ),
-        )
-        .withColumn("twa", F.expr("wsum div covered_s"))
-    )
+    return time_weighted_finalize(partials, width_s, bucket_col)
 
 
 def time_weighted_partials(

@@ -8,15 +8,17 @@ the watermark passes, then the state is dropped.
 
 Merge-compatibility invariant: a streamed 1h partial row is
 *identical* to the batch 1h partial row once the bucket is closed —
-the same (url, bucket_s, lang, n_points, sum_len, min_ts, max_ts)
-algebra — so downstream 1d/30d downsampling (batch) can consume
-either. tests/test_streaming.py pins streamed == batch on the same
-input.
+both are ``tiers.partial_rows``, one definition of the (url, bucket_s,
+lang, n_points, sum_len, min_ts, max_ts) row — so downstream 1d/30d
+downsampling (batch) can consume either. tests/test_streaming.py pins
+streamed == batch on the same input.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from lambdo_spark.rollup.tiers import partial_rows
 
 
 def streaming_1h_partials(
@@ -29,33 +31,16 @@ def streaming_1h_partials(
 ) -> DataFrame:
     """readStream pages → watermarked 1h-window partials.
 
-    Uses ``F.window`` (event-time, streaming-state aware) rather than
-    the batch bucket arithmetic; ``bucket_s`` is derived from the
-    window start so output schema matches the batch tier exactly.
+    The batch tier's partial row (``tiers.partial_rows``) grouped on an
+    event-time ``F.window`` (streaming-state aware) instead of the
+    bucket arithmetic; ``bucket_s`` is the window start, so the output
+    schema matches the batch tier exactly.
     """
-    return (
-        pages_stream.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.col(url_col).alias("url"),
-            F.window(F.col(ts_col), "1 hour").alias("w"),
-            F.col(lang_col).alias("lang"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum(F.length(F.col(text_col)).cast("long")).alias("sum_len"),
-            F.min(F.col(ts_col)).alias("min_ts"),
-            F.max(F.col(ts_col)).alias("max_ts"),
-        )
-        .select(
-            "url",
-            F.unix_timestamp(F.col("w.start")).alias("bucket_s"),
-            "lang",
-            "n_points",
-            "sum_len",
-            "min_ts",
-            "max_ts",
-        )
-    )
+    return partial_rows(
+        pages_stream.withWatermark(ts_col, watermark),
+        F.window(F.col(ts_col), "1 hour"),
+        url_col, ts_col, lang_col, F.length(F.col(text_col)).cast("long"),
+    ).withColumn("bucket_s", F.unix_timestamp(F.col("bucket_s.start")))
 
 
 def run_stream_to_parquet(

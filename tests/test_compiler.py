@@ -1171,8 +1171,8 @@ _PIN_CASES = [
                   "ts": "t", "tier_seconds": 60}),
     ("time_weighted", {"operation": "time_weighted", **_S, "keys": ["k"],
                        "value": "v", "ts": "t", "tier_seconds": 60.0,
-                       "bucket_col": "b", "tiebreak": ["x"],
-                       "merge_to": 3600.0, "finalize": False}),
+                       "bucket_col": "b", "merge_to": 3600.0,
+                       "finalize": False}),
     ("time_weighted/merge", {"operation": "time_weighted", **_S, "keys": ["k"],
                              "value": "v", "ts": "t", "tier_seconds": 60,
                              "merge_to": 3600}),
@@ -1529,7 +1529,8 @@ _PINS = {
         "timeseries.time_weighted_finalize(partials=timeseries.time_weighted_downsample(), width_s=3600, bucket_col='bucket_s', output='twa')",
     ],
     'time_weighted/min': [
-        "timeseries.time_weighted(df=src, value_col='v', ts_col='t', width_s=60, partition_by=['k'], bucket_col='bucket_s', tiebreak=())",
+        "timeseries.time_weighted_partials(df=src, value_col='v', ts_col='t', width_s=60, partition_by=['k'], bucket_col='bucket_s')",
+        "timeseries.time_weighted_finalize(partials=timeseries.time_weighted_partials(), width_s=60, bucket_col='bucket_s', output='twa')",
     ],
     'counter': [
         "timeseries.counter_partials(df=src, value_col='v', ts_col='t', width_s=60, partition_by=['k'], bucket_col='b')",
@@ -2207,16 +2208,85 @@ def test_stream_twin_keeps_batch_required_keys(tdef, key):
         wf.execute()
 
 
-@pytest.mark.parametrize("op", ["roll", "shift", "delta", "rate", "locf"])
+_ORDERED = {
+    "roll": {"kernel": "sum", "inputs": ["v"], "window": 2},
+    "shift": {"inputs": ["v"]},
+    "delta": {"inputs": ["v"]},
+    "rate": {"inputs": ["v"], "ts": "t"},
+    "locf": {"inputs": ["v"]},
+}
+
+
+@pytest.mark.parametrize("op", list(_ORDERED))
 def test_ordered_column_op_needs_order_by(op):
-    col = {"id": "c", "operation": op, "inputs": ["v"], "kernel": "sum",
-           "window": 2, "ts": "t"}
-    wf = Workflow(
-        {"tables": [{"id": "t", "operation": "data", "columns": [col]}]},
-        _Probe([], "spark"), {"t": _Probe([], "t")},
-    )
-    with pytest.raises(ValueError, match=f"^{op} column 'c' needs order_by$"):
-        wf.execute()
+    """A column op whose callable takes ``order_by`` without a default
+    needs a row order — refused when the Workflow is constructed."""
+    col = {"id": "c", "operation": op, **_ORDERED[op]}
+    with pytest.raises(ValueError, match=f"^table 't' column 'c' \\({op}\\) needs 'order_by'$"):
+        Workflow(
+            {"tables": [{"id": "t", "operation": "data", "columns": [col]}]},
+            _Probe([], "spark"), {"t": _Probe([], "t")},
+        )
+
+
+@pytest.mark.parametrize("col, match", [
+    # a misspelt key is refused, not silently dropped
+    ({"id": "r", "operation": "roll", "kernel": "mean", "inputs": ["v"],
+      "window": 2, "min_period": 1},
+     r"^table 'data' column 'r' \(roll\): unknown key\(s\) \['min_period'\]; "
+     r"'roll' accepts .*'min_periods'"),
+    # a missing required key names the key
+    ({"id": "r", "operation": "roll", "kernel": "mean", "inputs": ["v"]},
+     r"^table 'data' column 'r' \(roll\) needs 'window'$"),
+    ({"id": "s", "operation": "shift"},
+     r"^table 'data' column 's' \(shift\) needs 'inputs'$"),
+    ({"id": "r", "operation": "roll", "inputs": ["v"], "window": 2},
+     r"^table 'data' column 'r' \(roll\) needs 'kernel'$"),
+    ({"id": "l", "operation": "link", "keys": ["k"], "linked_keys": ["k"]},
+     r"^table 'data' column 'l' \(link\) needs 'linked_table'$"),
+    ({"operation": "delta", "inputs": ["v"]},
+     r"^table 'data' column None \(delta\) needs 'id'$"),
+    # an unknown op, and a key no column takes on a noop column
+    ({"id": "r", "operation": "rol", "kernel": "mean", "inputs": ["v"], "window": 2},
+     r"^table 'data' column 'r' \(rol\): unknown column operation 'rol'$"),
+    ({"id": "a", "window_size": 3},
+     r"^table 'data' column 'a' \(noop\): unknown key\(s\) \['window_size'\]"),
+    # inference: no operation plus a window is a roll, checked as one
+    ({"id": "r", "kernel": "mean", "inputs": ["v"], "window": 3, "periods": 1},
+     r"^table 'data' column 'r' \(roll\): unknown key\(s\) \['periods'\]"),
+])
+def test_column_spec_is_refused_at_construction(col, match):
+    """Column defs are checked like table defs: an unknown op or key, or
+    a missing required key, raises at ``Workflow(...)`` naming the
+    table, the column and the key — not at ``execute()``."""
+    spec = {"tables": [{"id": "data", "operation": "data", "order_by": ["i"],
+                        "columns": [col]}]}
+    with pytest.raises(ValueError, match=match):
+        Workflow(spec, _Probe([], "spark"), {"data": _Probe([], "data")})
+
+
+def test_column_keys_in_extensions_are_checked():
+    base = {"id": "m", "operation": "roll", "kernel": "mean", "inputs": ["v"],
+            "window": 3, "extensions": [{"window": 2}, {"min_period": 1}]}
+    spec = {"tables": [{"id": "data", "operation": "data", "order_by": ["i"],
+                        "columns": [base]}]}
+    with pytest.raises(ValueError, match=r"column 'm_1' \(roll\): unknown key"):
+        Workflow(spec, _Probe([], "spark"), {"data": _Probe([], "data")})
+
+
+def test_column_table_dependencies_come_from_the_op_table():
+    """A column reading another table orders the build like a table
+    input does."""
+    from lambdo_spark.plans.compiler import _table_deps
+
+    tdef = {"id": "g", "operation": "extend", "source": "src", "columns": [
+        {"id": "l", "operation": "link", "keys": ["k"], "linked_table": "dim",
+         "linked_keys": ["k"]},
+        {"id": "n", "operation": "aggregate", "fact_table": "facts", "keys": ["k"],
+         "fact_keys": ["k"], "kernel": "count"},
+        {"id": "c", "operation": "compose", "link": "l", "linked_table": "dim2",
+         "linked_keys": ["k"], "target": "x"}]}
+    assert _table_deps(tdef) == {"src", "dim", "facts", "dim2"}
 
 
 def test_misspelt_key_is_refused_at_construction():
@@ -2248,15 +2318,15 @@ def test_stream_keys_and_reference_keys_compile_on_batch(plumbing_log):
     assert plumbing_log[-1] == "spark.createDataFrame(pin_kernels.make())"
 
 
-def _documented_table_fields() -> dict[str, set[str]]:
-    """op → the keys docs/workflow_spec.md lists for it (union of its
-    rows; parenthesized remarks are not keys)."""
+def _documented_table_fields(section="Table definitions") -> dict[str, set[str]]:
+    """op → the keys a section of docs/workflow_spec.md lists for it
+    (union of its rows; parenthesized remarks are not keys)."""
     import os
     import re
 
     path = os.path.join(os.path.dirname(__file__), "..", "docs", "workflow_spec.md")
     with open(path) as f:
-        section = f.read().split("## Table definitions")[1].split("\n## ")[0]
+        section = f.read().split(f"## {section}")[1].split("\n## ")[0]
     fields: dict[str, set[str]] = {}
     for line in section.splitlines():
         if not line.startswith("| `"):
@@ -2275,3 +2345,16 @@ def test_docs_list_exactly_the_accepted_keys():
     assert sorted(documented) == sorted(_OPS)
     for op, entry in _OPS.items():
         assert documented[op] - _COMMON_KEYS == entry.accepted - _COMMON_KEYS, op
+
+
+def test_docs_list_exactly_the_column_keys():
+    """Each column op's row lists exactly the keys its ``_COLUMN_OPS``
+    entry reads (``id``, which every op takes, is stated once above
+    the table)."""
+    from lambdo_spark.plans.compiler import _COLUMN_OPS
+
+    documented = _documented_table_fields("Column definitions")
+    assert sorted(documented) == sorted(_COLUMN_OPS)
+    for op, entry in _COLUMN_OPS.items():
+        own = {key for key, _, _ in entry.keys + entry.tables}
+        assert documented[op] == own - {"id"}, op

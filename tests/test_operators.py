@@ -284,3 +284,29 @@ def test_roll_min_periods_counts_observations_not_rows(spark):
     for i in range(1, 6):
         e = exp[i - 1]
         assert (out[i] is None) == math.isnan(e) or out[i] == e
+
+
+@pytest.mark.parametrize("kernel", ["median", "sum"])
+def test_roll_min_periods_does_not_count_nan(spark, kernel):
+    """pandas treats NaN as missing: [1.0, NaN, 2.0] at window 3 holds 2
+    observations, so min_periods=3 leaves every row NULL."""
+    import pandas as pd
+
+    df = spark.createDataFrame([(1, 1.0), (2, float("nan")), (3, 2.0)],
+                               "i long, v double")
+    out = C.roll(df, "s", kernel, ["v"], 3, ["i"], min_periods=3)
+    assert [r["s"] for r in out.orderBy("i").collect()] == [None, None, None]
+    exp = getattr(pd.Series([1.0, float("nan"), 2.0]).rolling(3, min_periods=3), kernel)()
+    assert exp.isna().all()
+
+
+def test_roll_gate_on_integers_plans_no_nan_test(spark):
+    """The NaN test is only planned over float/double inputs: an integer
+    column keeps the plain ``count`` gate."""
+    df = spark.createDataFrame([(1, 1), (2, None), (3, 2)], "i long, v long")
+    out = C.roll(df, "s", "sum", ["v"], 2, ["i"])
+    assert "isnan" not in out._jdf.queryExecution().analyzed().toString()
+    assert [r["s"] for r in out.orderBy("i").collect()] == [None, None, None]
+    floats = C.roll(df.withColumn("v", F.col("v").cast("double")), "s", "sum", ["v"], 2,
+                    ["i"])
+    assert "isnan" in floats._jdf.queryExecution().analyzed().toString()

@@ -56,3 +56,29 @@ def test_stream_resumes_from_checkpoint(spark, tmp_path, pages_parquet):
     _run(spark, pages_parquet, out, ckpt)
     n2 = spark.read.parquet(out).count()
     assert n2 == n1
+
+
+def test_null_language_streams_to_the_batch_partial(spark, tmp_path):
+    """A page without a detected language partials under the batch
+    tier's "und" sentinel on the stream too, so ``finalize`` over the
+    streamed partials builds its language map (a NULL map key raises)."""
+    from datetime import datetime
+
+    from lambdo_spark.rollup.tiers import finalize
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [("u1", datetime(2024, 1, 1, 0, 10), "abc", None),
+         ("u1", datetime(2024, 1, 1, 5, 10), "hello", "en")],
+        "url string, warc_ts timestamp, text string, lang string",
+    ).write.parquet(src)
+    _run(spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+
+    cols = ["url", "bucket_s", "lang", "n_points", "sum_len", "min_ts", "max_ts"]
+    first = F.col("bucket_s") == 1704067200
+    streamed = spark.read.parquet(str(tmp_path / "out")).select(cols)
+    batch = partials_from_pages(spark.read.parquet(src), 3600).select(cols)
+    got = streamed.where(first).collect()
+    assert got == batch.where(first).collect() and got[0]["lang"] == "und"
+    hist = finalize(streamed).where(first).collect()[0]["lang_hist"]
+    assert hist == {"und": 1}

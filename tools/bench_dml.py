@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from lambdo_spark.session import get_spark, host_resources
 from lambdo_spark.sources.iceberg_layout import IcebergLayoutTable
-from tools import load1
+from tools import wait_for_quiet
 
 WEEK = 604800
 N_ROWS = 2_000_000
@@ -93,13 +93,6 @@ def change_counts(t: IcebergLayoutTable, before: dict, after: dict) -> dict:
     }
 
 
-def wait_for_quiet(cpus: int) -> float:
-    t0 = time.time()
-    while load1() > cpus and time.time() - t0 < LOAD_WAIT_S:
-        time.sleep(5)
-    return load1()
-
-
 def main() -> None:
     cpus, _ = host_resources()
     spark = get_spark(
@@ -135,7 +128,7 @@ def main() -> None:
                 shutil.copytree(base_root, root)
                 t = IcebergLayoutTable(root)
                 before = t.current_snapshot()
-                load = wait_for_quiet(cpus)
+                load = wait_for_quiet(cpus, LOAD_WAIT_S)
                 group = f"bench_dml_{verb}_{mode}"
                 sc.setJobGroup(group, f"{verb} {mode}")
                 t0 = time.time()

@@ -26,7 +26,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tools import load1  # noqa: E402
+from tools import load1, wait_for_quiet  # noqa: E402
 
 # Parallelism pair evidencing the north rule's N -> 4N criterion.
 # Default 2 -> 8: a raw-CPU spin benchmark (cpu_ceiling) shows this
@@ -166,23 +166,6 @@ def subprocess_run(cores: int, rows: int) -> dict:
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
-def wait_for_quiet(gate: float, timeout_s: float, poll_s: float = 20.0) -> bool:
-    """Block until external load drops below ``gate`` (we are idle
-    between measurements, so load1 ≈ co-tenant load) or ``timeout_s``
-    passes. Measured 2026-08-18: ungated runs under a persistent 3–6
-    core external load read local[8] 2.4–7x slow (151.9–437.4 s for a
-    clean-host 62 s wall) — best-of-N interleaving cannot rescue a
-    window that never happens; gating waits for the window instead."""
-    t0 = time.time()
-    while time.time() - t0 < timeout_s:
-        l1 = load1()
-        if l1 < gate:
-            return True
-        print(f"load gate: load1={l1:.2f} >= {gate} — waiting", flush=True)
-        time.sleep(poll_s)
-    return False
-
-
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--child":
         print(json.dumps(run_once(int(sys.argv[2]), int(sys.argv[3]))))
@@ -212,7 +195,7 @@ def main() -> None:
     for _ in range(reps):
         for cores in (LOW, HIGH):
             if gate:
-                gated_ok &= wait_for_quiet(gate, gate_timeout)
+                gated_ok &= wait_for_quiet(gate, gate_timeout, poll_s=20.0) < gate
             ceilings.append(round(cpu_ceiling(), 3))
             r = subprocess_run(cores, rows)
             r["load1_before"] = load1()
