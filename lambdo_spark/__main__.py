@@ -290,14 +290,7 @@ def _run_delete(args) -> int:
     spark = get_spark(app_name="lambdo_spark:delete", master=args.master)
     try:
         t = IcebergLayoutTable(args.table, branch=args.branch)
-        prune = {}
-        for w in args.prune:
-            c, _, v = w.partition("=")
-            if ".." in v:
-                lo, hi = v.split("..", 1)
-                prune[c] = (_coerce(lo) if lo else None, _coerce(hi) if hi else None)
-            else:
-                prune[c] = _coerce(v)
+        prune = _prune(args.prune)
         before = (t.current_snapshot() or {}).get("snapshot_id")
         snap = t.delete_where(spark, args.where, prune=prune or None, mode=args.mode)
         changed = snap["snapshot_id"] != before
@@ -370,6 +363,20 @@ def _coerce(v: str):
     return v
 
 
+def _prune(specs: list[str]) -> dict:
+    """``COL=LO..HI`` (inclusive; either end may be left open) and
+    ``COL=VALUE`` specs as a ``plan_files`` prune, numbers coerced."""
+    prune: dict = {}
+    for w in specs:
+        c, _, v = w.partition("=")
+        if ".." in v:
+            lo, hi = v.split("..", 1)
+            prune[c] = (_coerce(lo) if lo else None, _coerce(hi) if hi else None)
+        else:
+            prune[c] = _coerce(v)
+    return prune
+
+
 def _run_plan(args) -> int:
     """Metadata-only (no SparkSession): resolve the snapshot, apply
     manifest column-stat pruning, report what a read would touch."""
@@ -384,14 +391,7 @@ def _run_plan(args) -> int:
             indent=1,
         ))
         return 0
-    prune: dict = {}
-    for w in args.where:
-        c, _, v = w.partition("=")
-        if ".." in v:
-            lo, hi = v.split("..", 1)
-            prune[c] = (_coerce(lo) if lo else None, _coerce(hi) if hi else None)
-        else:
-            prune[c] = _coerce(v)
+    prune = _prune(args.where)
     plan = t.plan_files(args.snapshot, prune)
     out = {
         "table": args.table,
@@ -410,26 +410,23 @@ def _run_plan(args) -> int:
 
 def main(argv: list[str] | None = None) -> int:
     argv = list(sys.argv[1:] if argv is None else argv)
-    # bare form: `python -m lambdo_spark workflow.json [...]` runs it
-    if argv and argv[0] not in (
-        "retention", "refresh", "maintain", "stream-refresh", "plan",
-        "schema", "delete", "merge", "branch", "update", "evolve-parts",
-        "realtime",
-    ):
-        argv = ["run", *argv]
-
     ap = argparse.ArgumentParser(prog="lambdo_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
-    runp = sub.add_parser("run", help="execute a workflow JSON (// comments ok)")
+    def command(name, run, **kw):
+        p = sub.add_parser(name, **kw)
+        p.set_defaults(run=run)
+        return p
+
+    runp = command("run", _run_workflow, help="execute a workflow JSON (// comments ok)")
     runp.add_argument("workflow")
     runp.add_argument("--master", default=None)
     runp.add_argument("--show", metavar="TABLE", action="append", default=[])
     runp.add_argument("--show-rows", type=int, default=20)
 
-    ret = sub.add_parser("retention", help="flagship tier rollup pipeline")
-    ref = sub.add_parser(
-        "refresh",
+    ret = command("retention", _run_tier_build, help="flagship tier rollup pipeline")
+    ref = command(
+        "refresh", _run_tier_build,
         help="incremental tier refresh: merge a pages delta, rebuild "
         "only affected partitions (exactly-once per --delta-tag)",
     )
@@ -443,8 +440,8 @@ def main(argv: list[str] | None = None) -> int:
     ret.add_argument("--no-audit", action="store_true")
     ref.add_argument("--delta-tag", default="", help="idempotency key for this delta")
 
-    srf = sub.add_parser(
-        "stream-refresh",
+    srf = command(
+        "stream-refresh", _run_stream_refresh,
         help="continuous-aggregate maintenance: watch a directory for "
         "new pages parquet files and incrementally refresh the tiers "
         "(exactly-once per micro-batch)",
@@ -458,8 +455,8 @@ def main(argv: list[str] | None = None) -> int:
                      "default: availableNow catch-up then exit")
     srf.add_argument("--master", default=None)
 
-    rtm = sub.add_parser(
-        "realtime",
+    rtm = command(
+        "realtime", _run_realtime,
         help="real-time continuous-aggregate read: finalized tier ∪ "
         "fresh rollup of the raw tail (--cascade: coarse-tier edge "
         "from the 1h partials store, raw bounded by the store "
@@ -481,8 +478,8 @@ def main(argv: list[str] | None = None) -> int:
                      help="print the last N buckets")
     rtm.add_argument("--master", default=None)
 
-    mnt = sub.add_parser(
-        "maintain",
+    mnt = command(
+        "maintain", _run_maintain,
         help="table maintenance: compact small files and/or expire old "
         "snapshot versions of one Iceberg-layout table",
     )
@@ -515,8 +512,8 @@ def main(argv: list[str] | None = None) -> int:
                      "as orphaned (protects in-flight writers)")
     mnt.add_argument("--master", default=None)
 
-    pln = sub.add_parser(
-        "plan",
+    pln = command(
+        "plan", _run_plan,
         help="metadata-only scan planning: which data files a pruned "
         "read of one Iceberg-layout table would touch (no Spark job)",
     )
@@ -535,8 +532,8 @@ def main(argv: list[str] | None = None) -> int:
         "to CURRENT) — the planning half of read_changes",
     )
 
-    sch = sub.add_parser(
-        "schema",
+    sch = command(
+        "schema", _run_schema,
         help="show or evolve one Iceberg-layout table's schema "
         "(metadata-only; renames/drops/widens rewrite ZERO data files)",
     )
@@ -549,8 +546,8 @@ def main(argv: list[str] | None = None) -> int:
     sch.add_argument("--widen", action="append", default=[], metavar="NAME:TYPE",
                      help="promote a type (tinyint→…→bigint, float→double)")
 
-    evo = sub.add_parser(
-        "evolve-parts",
+    evo = command(
+        "evolve-parts", _run_evolve_parts,
         help="partition spec evolution: change a table's (or a whole "
         "retention root's) time-partition width; empty tables evolve "
         "metadata-only, populated ones re-bucket in one atomic commit",
@@ -564,8 +561,8 @@ def main(argv: list[str] | None = None) -> int:
                      "(86400=daily, 604800=weekly)")
     evo.add_argument("--master", default=None)
 
-    brn = sub.add_parser(
-        "branch",
+    brn = command(
+        "branch", _run_branch,
         help="create/publish/drop branch refs (write-audit-publish): "
         "stage writes on a branch with --branch on write commands, "
         "audit them, then publish fast-forwards main atomically "
@@ -578,8 +575,8 @@ def main(argv: list[str] | None = None) -> int:
     brn.add_argument("--publish", default=None, metavar="NAME")
     brn.add_argument("--drop", default=None, metavar="NAME")
 
-    dlt = sub.add_parser(
-        "delete",
+    dlt = command(
+        "delete", _run_delete,
         help="row-level DELETE: rewrite only the partitions containing "
         "matching rows (stat-pruned scan finds them)",
     )
@@ -597,8 +594,8 @@ def main(argv: list[str] | None = None) -> int:
                      help="stage the delete on a branch ref (write-audit-publish)")
     dlt.add_argument("--master", default=None)
 
-    upd = sub.add_parser(
-        "update",
+    upd = command(
+        "update", _run_update,
         help="row-level UPDATE: SET col=expr on rows matching a "
         "predicate — copy-on-write rewrites matching partitions, "
         "merge-on-read writes position-deletes + updated images",
@@ -614,8 +611,8 @@ def main(argv: list[str] | None = None) -> int:
                      help="stage the update on a branch ref (write-audit-publish)")
     upd.add_argument("--master", default=None)
 
-    mrg = sub.add_parser(
-        "merge",
+    mrg = command(
+        "merge", _run_merge,
         help="keyed MERGE (upsert): delta rows replace base rows with "
         "the same key; only the delta's partitions are rewritten",
     )
@@ -631,30 +628,11 @@ def main(argv: list[str] | None = None) -> int:
                      help="stage the merge on a branch ref (write-audit-publish)")
     mrg.add_argument("--master", default=None)
 
+    # bare form: `python -m lambdo_spark workflow.json [...]` runs it
+    if argv and argv[0] not in sub.choices:
+        argv = ["run", *argv]
     args = ap.parse_args(argv)
-    if args.cmd == "branch":
-        return _run_branch(args)
-    if args.cmd == "evolve-parts":
-        return _run_evolve_parts(args)
-    if args.cmd == "schema":
-        return _run_schema(args)
-    if args.cmd == "delete":
-        return _run_delete(args)
-    if args.cmd == "update":
-        return _run_update(args)
-    if args.cmd == "merge":
-        return _run_merge(args)
-    if args.cmd == "plan":
-        return _run_plan(args)
-    if args.cmd == "run":
-        return _run_workflow(args)
-    if args.cmd == "stream-refresh":
-        return _run_stream_refresh(args)
-    if args.cmd == "realtime":
-        return _run_realtime(args)
-    if args.cmd == "maintain":
-        return _run_maintain(args)
-    return _run_tier_build(args)
+    return args.run(args)
 
 
 if __name__ == "__main__":

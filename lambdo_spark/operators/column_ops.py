@@ -58,6 +58,17 @@ def _pandas_agg_udf(k: Kernel, model: dict | None):
     )
 
 
+def _nan_as_null(df: DataFrame, inputs: Sequence[str]) -> list[Column]:
+    """The input columns with a float/double NaN read as NULL — pandas'
+    missing value — so a window kernel skips it (Spark's ``sum``/``avg``
+    propagate NaN and ``max`` orders it above every number). Other
+    types pass through unchanged."""
+    floats = {name for name, t in df.dtypes if t in ("float", "double")}
+    return [
+        F.when(~F.isnan(c), F.col(c)) if c in floats else F.col(c) for c in inputs
+    ]
+
+
 def _aggregate(
     k: Kernel, cols: list[Column], model: dict | None, over: WindowSpec | None = None
 ) -> Column:
@@ -116,21 +127,19 @@ def roll(
     k = _resolve_kernel(kernel)
     mp = window if min_periods is None else min_periods
     w = _window(partition_by, order_by).rowsBetween(-(window - 1), 0)
-    cols = [F.col(c) for c in inputs]
+    cols = _nan_as_null(df, inputs)
     value = _aggregate(k, cols, model, w)
     if mp > 1:
         # pandas min_periods counts OBSERVATIONS, not frame rows: values
-        # neither NULL nor (float/double) NaN — a window of 3 rows
-        # holding [1.0, NULL, 2.0] or [1.0, NaN, 2.0] has 2 and must
-        # yield NULL at min_periods=3
-        floats = {name for name, t in df.dtypes if t in ("float", "double")}
-        if len(cols) == 1 and inputs[0] not in floats:
+        # neither NULL nor NaN (NULL here) — a window of 3 rows holding
+        # [1.0, NULL, 2.0] or [1.0, NaN, 2.0] has 2 and must yield NULL
+        # at min_periods=3
+        if len(cols) == 1:
             have = F.count(cols[0]).over(w)
         else:
             seen = None
-            for name, c in zip(inputs, cols):
-                ok = c.isNotNull() & ~F.isnan(c) if name in floats else c.isNotNull()
-                seen = ok if seen is None else seen & ok
+            for c in cols:
+                seen = c.isNotNull() if seen is None else seen & c.isNotNull()
             have = F.count(F.when(seen, F.lit(1))).over(w)
         value = F.when(have >= F.lit(mp), value)
     return df.withColumn(output, value)
@@ -163,7 +172,7 @@ def roll_range(
         .orderBy(sec)
         .rangeBetween(-(int(range_seconds) - 1), 0)
     )
-    return df.withColumn(output, _aggregate(k, [F.col(c) for c in inputs], model, w))
+    return df.withColumn(output, _aggregate(k, _nan_as_null(df, inputs), model, w))
 
 
 def shift(

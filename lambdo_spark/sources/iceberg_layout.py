@@ -7,23 +7,44 @@ manifests with lineage + metrics, idempotent partition rewrites —
 over partitioned Parquet:
 
     <root>/data/part=<p>/snapv=<v>/*.parquet   (immutable once committed)
+    <root>/deletes/delv=<v>/part=<p>/*.parquet (merge-on-read delete files)
     <root>/metadata/manifest-<p>-v<v>.json     (files, stats, lineage per part version)
     <root>/metadata/snapshot-<n>.json          (maps part -> version)
     <root>/metadata/CURRENT                    (atomic pointer, tmp+rename)
 
-**MVCC**: a rewrite of partition p writes a NEW ``snapv`` directory
-(version = the snapshot id being produced) and the new snapshot points
-at it; the previous version's files are untouched, so a reader that
-resolved an older snapshot keeps reading consistent data for as long
-as it runs (until ``expire_snapshots`` garbage-collects). This is what
-in-place dynamic overwrite cannot give — there, the old snapshot's
-"committed" partition is deleted mid-rewrite under the reader.
+**MVCC**: a rewrite of partition p writes a NEW ``snapv`` directory and
+the new snapshot points at it; the previous version's files are
+untouched, so a reader that resolved an older snapshot keeps reading
+consistent data for as long as it runs (until ``expire_snapshots``
+garbage-collects). This is what in-place dynamic overwrite cannot
+give — there, the old snapshot's "committed" partition is deleted
+mid-rewrite under the reader.
 
-Resume: a killed run leaves data files but no manifest/snapshot for
-incomplete partitions; the next run lists committed partitions from
-CURRENT's snapshot, recomputes ONLY the missing ones, writes them
-under the next version (clobbering only same-version leftovers —
-idempotent), and commits. Readers only ever follow CURRENT → committed
+**Metadata protocol**, one rule each:
+
+- *Claims*: data versions, schemas and partition specs are ids claimed
+  by creating ``metadata/<kind>-<n>`` exclusively (O_EXCL), so two
+  writers never share an id and no claimed file is ever overwritten.
+  Versions are their own namespace and start at the next snapshot id,
+  so a version id is never issued twice.
+- *Commits*: every commit is a change (parts to set, parts to drop)
+  plus the checks the writer's work rests on (base part versions,
+  merge-on-read row state, schema id, application keys), applied under
+  the commit lock to the LATEST snapshot. A failed check raises
+  :class:`ConcurrentWriteConflict`; whatever else landed meanwhile is
+  kept.
+- *GC*: a file set (a version's directory and manifest, or a delete-file
+  directory) that no kept snapshot references is removed when an
+  expired snapshot referenced it (``expire_snapshots``), or when its
+  newest file is older than a grace period (``remove_orphans``). A
+  writer between its write and its commit is referenced by nothing,
+  so only the grace period can take its files — never an expiry.
+
+Resume: a killed run leaves data files but no snapshot for its
+partitions; the next run lists committed partitions from CURRENT's
+snapshot, recomputes ONLY the missing ones into a freshly claimed
+version, and commits. The killed run's files are orphans for
+``remove_orphans``. Readers only ever follow CURRENT → committed
 versions.
 
 Time travel: ``read_tier(spark, snapshot_id=n)`` reads the exact
@@ -66,6 +87,7 @@ depends on ``write_tier``/``overwrite_parts``/``read_tier``.
 from __future__ import annotations
 
 import contextlib
+import itertools
 import json
 import os
 import shutil
@@ -143,6 +165,31 @@ def _read_json(path: str) -> dict | None:
         return None
     with open(path) as f:
         return json.load(f)
+
+
+def _meta_id(name: str, prefix: str, suffix: str = ".json") -> int | None:
+    """The id ``n`` of a ``<prefix>-<n><suffix>`` metadata file name,
+    else None."""
+    n = name[len(prefix) + 1 : len(name) - len(suffix)]
+    if name.startswith(f"{prefix}-") and name.endswith(suffix) and n.isdigit():
+        return int(n)
+    return None
+
+
+def _listdir(path: str) -> list[str]:
+    return sorted(os.listdir(path)) if os.path.isdir(path) else []
+
+
+def _newest(paths: list[str]) -> float:
+    """The newest mtime among ``paths`` (files, and the top-level
+    entries of directories); 0 when there is none."""
+    times = [0.0]
+    for path in paths:
+        if os.path.isdir(path):
+            times += [os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)]
+        elif os.path.exists(path):
+            times.append(os.path.getmtime(path))
+    return max(times)
 
 
 class IcebergLayoutTable:
@@ -264,7 +311,7 @@ class IcebergLayoutTable:
                 continue
             ref = _read_json(os.path.join(self.meta_dir, f))
             if ref:
-                out[b] = int(ref["snapshot"].split("-")[1].split(".")[0])
+                out[b] = _meta_id(ref["snapshot"], "snapshot")
         return out
 
     def publish_branch(self, name: str) -> dict:
@@ -284,20 +331,16 @@ class IcebergLayoutTable:
                 self.snapshot(None, cur["snapshot"])["snapshot_id"]
                 if cur else None
             )
-            node = self.snapshot(None, ref["snapshot"])
-            head_id = node["snapshot_id"]
-            while node is not None:
-                if node["snapshot_id"] == main_id:
-                    break
-                parent = node.get("parent")
-                node = self.snapshot(parent) if parent is not None else None
-            else:
-                if main_id is not None:
-                    raise ConcurrentWriteConflict(
-                        f"main advanced past branch {name!r}'s base "
-                        f"(main={main_id}, not an ancestor of branch head "
-                        f"{head_id}) — re-branch from current main and replay"
-                    )
+            head = self.snapshot(None, ref["snapshot"])
+            head_id = head["snapshot_id"]
+            if main_id is not None and all(
+                s["snapshot_id"] != main_id for s in self._ancestry(head)
+            ):
+                raise ConcurrentWriteConflict(
+                    f"main advanced past branch {name!r}'s base "
+                    f"(main={main_id}, not an ancestor of branch head "
+                    f"{head_id}) — re-branch from current main and replay"
+                )
             _atomic_write_json(
                 os.path.join(self.meta_dir, "CURRENT"), dict(ref)
             )
@@ -314,15 +357,20 @@ class IcebergLayoutTable:
         newest snapshot on THIS ref's history whose commit time is
         ≤ ``ts`` (epoch seconds), found by walking parent pointers
         from the head — never a snapshot from another branch."""
-        node = self.current_snapshot()
-        while node is not None:
+        for node in self._ancestry(self.current_snapshot()):
             if node.get("committed_at", 0) <= ts:
                 return node
-            parent = node.get("parent")
-            node = self.snapshot(parent) if parent is not None else None
         raise FileNotFoundError(
             f"no snapshot at or before ts={ts} on branch {self.branch!r}"
         )
+
+    def _ancestry(self, snap: dict | None):
+        """``snap`` and its ancestors, newest first, along the parent
+        pointers (up to the first one expired)."""
+        while snap is not None:
+            yield snap
+            parent = snap.get("parent")
+            snap = self.snapshot(parent) if parent is not None else None
 
     def _resolve(self, snapshot_id: int | None, required: bool = False) -> dict | None:
         """Snapshot ``snapshot_id`` (None = this ref's head); with
@@ -352,34 +400,44 @@ class IcebergLayoutTable:
             return []
         return [self._manifest(p, v) for p, v in sorted(self._version_pairs(snap))]
 
-    def _next_snapshot_id(self) -> int:
-        # GLOBAL max across every snapshot file: branches share one
-        # snapshot-id namespace, so ids never collide across refs
-        ids = [
-            int(f.split("-")[1].split(".")[0])
-            for f in os.listdir(self.meta_dir)
-            if f.startswith("snapshot-") and f.endswith(".json")
-        ]
-        return max(ids, default=-1) + 1
+    def _ids(self, prefix: str, suffix: str = ".json") -> list[int]:
+        """The ids of the ``<prefix>-<n><suffix>`` files in metadata/,
+        ascending. Snapshot ids are one namespace across every branch."""
+        ids = (_meta_id(f, prefix, suffix) for f in os.listdir(self.meta_dir))
+        return sorted(n for n in ids if n is not None)
 
-    def _claim_version(self) -> int:
-        """Atomically claim a unique data-version id (O_EXCL marker):
-        concurrent writers land data in DISTINCT ``snapv`` directories,
-        so a lost commit race leaves orphan files — never a mixed or
-        clobbered partition directory. Version ids are a separate
-        namespace from snapshot ids (the parts map carries the actual
-        version per partition)."""
-        n = self._next_snapshot_id()
+    def _next_id(self, prefix: str) -> int:
+        return max(self._ids(prefix), default=-1) + 1
+
+    def _claim(self, prefix: str, body: dict | None = None, floor: int = 0) -> int:
+        """Claim the lowest free id from max(next ``prefix`` id,
+        ``floor``) up by creating its file exclusively (O_EXCL):
+        ``<prefix>-<n>.json`` holding ``body``, or an empty
+        ``<prefix>-<n>.claim`` marker without one. Concurrent claimers
+        get distinct ids and no claimed file is overwritten; an id whose
+        commit loses its race is an orphan.
+
+        Data versions are claimed as markers from the next snapshot id
+        (``floor``): concurrent writers land in DISTINCT ``snapv``
+        directories, and a marker dropped below that id can never be
+        claimed again."""
+        n = max(self._next_id(prefix), floor)
+        suffix = ".claim" if body is None else ".json"
         while True:
             try:
                 fd = os.open(
-                    os.path.join(self.meta_dir, f"version-{n}.claim"),
+                    os.path.join(self.meta_dir, f"{prefix}-{n}{suffix}"),
                     os.O_CREAT | os.O_EXCL | os.O_WRONLY,
                 )
-                os.close(fd)
-                return n
             except FileExistsError:
                 n += 1
+                continue
+            with os.fdopen(fd, "w") as f:
+                if body is not None:
+                    json.dump(body, f, indent=1, sort_keys=True)
+                    f.flush()
+                    os.fsync(f.fileno())
+            return n
 
     @contextlib.contextmanager
     def _commit_lock(self, timeout_s: float = 30.0, stale_s: float = 120.0):
@@ -467,7 +525,6 @@ class IcebergLayoutTable:
 
     def _commit(
         self,
-        parts: dict[str, int],
         extra: dict,
         update: dict[str, int] | None = None,
         base_versions: dict[str, int] | None = None,
@@ -478,14 +535,15 @@ class IcebergLayoutTable:
         remove: set[str] | None = None,
         expect_extra: dict | None = None,
     ) -> dict:
-        """Commit a new snapshot. Single-writer form: ``parts`` is the
-        full map (as computed by the caller). Optimistic-concurrency
-        form (``update`` given): under the commit lock, re-read the
-        LATEST snapshot, validate that no partition in ``update``
-        changed since ``base_versions`` was read (raise
-        :class:`ConcurrentWriteConflict` otherwise — Iceberg's commit
-        validation), and merge ``update`` onto the latest parts map —
-        concurrent writers to disjoint partitions all land."""
+        """Commit a new snapshot: under the commit lock, re-read the
+        LATEST snapshot, run the checks the caller's work rests on (no
+        partition in ``update`` or ``remove`` changed since
+        ``base_versions``; ``expect_row_state``, ``expect_schema``,
+        ``expect_extra`` unchanged — else raise
+        :class:`ConcurrentWriteConflict`, Iceberg's commit validation),
+        then set ``update`` on and drop ``remove`` from the latest parts
+        map. Everything else a concurrent commit landed is kept, so
+        writers to disjoint partitions all land."""
         with self._commit_lock():
             prev = self.current_snapshot() or {}
             for k, v in (expect_extra or {}).items():
@@ -510,22 +568,21 @@ class IcebergLayoutTable:
                     f"schema evolved since base: expected schema_id="
                     f"{expect_schema}, found {prev.get('schema_id')}"
                 )
-            if update is not None or remove is not None:
-                latest = dict(prev.get("parts", {}))
-                if base_versions is not None:
-                    changed = {
-                        p: latest.get(p)
-                        for p in (*(update or {}), *(remove or ()))
-                        if latest.get(p) != base_versions.get(p)
-                    }
-                    if changed:
-                        raise ConcurrentWriteConflict(
-                            f"partitions rewritten since base snapshot: "
-                            f"{sorted(changed)}"
-                        )
-                parts = {**latest, **(update or {})}
-                for p in remove or ():
-                    parts.pop(p, None)
+            latest = prev.get("parts", {})
+            if base_versions is not None:
+                changed = {
+                    p: latest.get(p)
+                    for p in (*(update or {}), *(remove or ()))
+                    if latest.get(p) != base_versions.get(p)
+                }
+                if changed:
+                    raise ConcurrentWriteConflict(
+                        f"partitions rewritten since base snapshot: "
+                        f"{sorted(changed)}"
+                    )
+            parts = {**latest, **(update or {})}
+            for p in remove or ():
+                parts.pop(p, None)
             if expect_row_state is not None:
                 # serializable row-state validation (Iceberg's
                 # validateNoConflicting{Deletes,AppendedData}): a MOR
@@ -539,7 +596,7 @@ class IcebergLayoutTable:
                             f"row state of partition {p!r} changed since "
                             f"base snapshot (concurrent merge/delete)"
                         )
-            n = self._next_snapshot_id()
+            n = self._next_id("snapshot")
             carried = {k: prev[k] for k in self.CARRIED_EXTRA_KEYS if k in prev}
             # merge-on-read delete files and appended data files
             # survive a commit only while their partition's BASE data
@@ -617,30 +674,6 @@ class IcebergLayoutTable:
             s["schema_id"] = schema_id
         return s
 
-    def _claim_schema(self, fields: list[dict], last_field_id: int) -> int:
-        """Register an immutable schema file under a unique id
-        (O_EXCL — concurrent claimers land distinct ids; an id whose
-        commit loses the CAS race is just an orphan metadata file)."""
-        ids = [
-            int(f.split("-")[1].split(".")[0])
-            for f in os.listdir(self.meta_dir)
-            if f.startswith("schema-") and f.endswith(".json")
-        ]
-        n = max(ids, default=-1) + 1
-        body = {"fields": fields, "last_field_id": last_field_id}
-        while True:
-            path = os.path.join(self.meta_dir, f"schema-{n}.json")
-            try:
-                fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                n += 1
-                continue
-            with os.fdopen(fd, "w") as f:
-                json.dump(body, f, indent=1, sort_keys=True)
-                f.flush()
-                os.fsync(f.fileno())
-            return n
-
     def _ensure_write_schema(self, df: DataFrame, part_col: str):
         """Resolve the schema this write lands under. Returns
         ``(schema_id, expect_schema)`` for :meth:`_commit` —
@@ -673,7 +706,8 @@ class IcebergLayoutTable:
                 {"id": i + 1, "name": c, "type": t}
                 for i, (c, t) in enumerate(data_fields)
             ]
-            return self._claim_schema(fields, len(fields)), cur_sid
+            body = {"fields": fields, "last_field_id": len(fields)}
+            return self._claim("schema", body), cur_sid
         by_name = {f["name"]: f for f in cur["fields"]}
         out = [dict(f) for f in cur["fields"]]
         last = cur["last_field_id"]
@@ -701,13 +735,15 @@ class IcebergLayoutTable:
                     )
         if not evolved:
             return cur["schema_id"], self._SCHEMA_UNCHECKED
-        return self._claim_schema(out, last), cur_sid
+        body = {"fields": out, "last_field_id": last}
+        return self._claim("schema", body), cur_sid
 
     def _evolve(self, mutate, desc: str) -> dict:
         """Apply a metadata-only schema change: derive the new field
-        list from the current schema, register it, and commit a
-        snapshot with the same partition versions — CAS-validated
-        against the base schema id."""
+        list from the current schema, register it, and commit it onto
+        the latest snapshot — CAS-validated against the base schema id,
+        so a concurrent evolution conflicts and a concurrent data
+        commit is kept."""
         cur = self.schema()
         if cur is None:
             raise FileNotFoundError(
@@ -715,10 +751,9 @@ class IcebergLayoutTable:
                 "write registers schema 0 from the written columns)"
             )
         fields, last = mutate([dict(f) for f in cur["fields"]], cur["last_field_id"])
-        sid = self._claim_schema(fields, last)
+        sid = self._claim("schema", {"fields": fields, "last_field_id": last})
         snap = self.current_snapshot() or {}
         return self._commit(
-            dict(snap.get("parts", {})),
             {
                 "input_snapshot": f"schema-evolution:{desc}",
                 "new_parts": [],
@@ -806,20 +841,8 @@ class IcebergLayoutTable:
         s = _read_json(os.path.join(self.meta_dir, f"part-spec-{spec_id}.json"))
         if s is None:
             raise FileNotFoundError(f"no part-spec-{spec_id}.json in {self.meta_dir}")
+        s["spec_id"] = spec_id
         return s
-
-    def _claim_part_spec(self, spec: dict) -> int:
-        existing = [
-            int(f.rsplit("-", 1)[1].split(".")[0])
-            for f in os.listdir(self.meta_dir)
-            if f.startswith("part-spec-") and f.endswith(".json")
-        ]
-        n = max(existing, default=0) + 1
-        _atomic_write_json(
-            os.path.join(self.meta_dir, f"part-spec-{n}.json"),
-            {**spec, "spec_id": n},
-        )
-        return n
 
     def with_part(self, df: DataFrame) -> DataFrame:
         """Derive the partition column from the table's CURRENT spec —
@@ -856,25 +879,26 @@ class IcebergLayoutTable:
             return snap or {}
         base_spec_id = (snap or {}).get("part_spec_id")
         part_col = (snap or {}).get("part_col", "part")
-        sid = self._claim_part_spec(
+        # spec 0 is the implicit default: claimed specs start at 1
+        sid = self._claim(
+            "part-spec",
             {
                 "bucket_col": bucket_col,
                 "part_seconds": int(part_seconds),
                 "parent_spec_id": cur["spec_id"],
-            }
+            },
+            floor=1,
         )
+        label = f"partition-evolution:{part_seconds}s"
         old_parts = dict((snap or {}).get("parts", {}))
         if not old_parts:
             return self._commit(
-                {},
                 {
-                    "input_snapshot": f"partition-evolution:{part_seconds}s",
+                    "input_snapshot": label,
                     "new_parts": [],
                     "part_col": part_col,
                     "part_spec_id": sid,
                 },
-                update={},
-                base_versions={},
                 expect_extra={"part_spec_id": base_spec_id},
             )
         if not rewrite:
@@ -888,28 +912,11 @@ class IcebergLayoutTable:
             raise ValueError("rewrite=True needs spark=")
         rows = self.read_tier(spark).drop(part_col)
         df = with_part(rows, bucket_col=bucket_col, part_seconds=part_seconds)
-        new_parts = sorted(
-            {str(r[0]) for r in df.select(part_col).distinct().collect()}
-        )
-        schema_id, expect_schema = self._ensure_write_schema(df, part_col)
-        version = self._claim_version()
-        self._write_parts(
-            df, new_parts, version, part_col,
-            f"partition-evolution:{part_seconds}s", schema_id,
-        )
-        return self._commit(
-            {},
-            {
-                "input_snapshot": f"partition-evolution:{part_seconds}s",
-                "new_parts": new_parts,
-                "part_col": part_col,
-                "part_spec_id": sid,
-                "schema_id": schema_id,
-            },
-            update={p: version for p in new_parts},
+        new_parts = self._parts_of(df, part_col)
+        return self._write_and_commit(
+            df, new_parts, part_col, label, {"part_spec_id": sid},
             base_versions=old_parts,
             remove=set(old_parts) - set(new_parts),
-            expect_schema=expect_schema,
             expect_extra={"part_spec_id": base_spec_id},
         )
 
@@ -946,29 +953,16 @@ class IcebergLayoutTable:
     ) -> dict:
         """Write all not-yet-committed partitions of ``df``; resumable.
 
-        ``df`` must carry ``part_col`` as an integer column.
-        Returns the committed snapshot dict.
+        ``df`` must carry ``part_col`` as an integer column. The
+        missing partitions are pinned to the snapshot they were found
+        missing in, so a concurrent writer committing one of them
+        conflicts. Returns the committed snapshot dict.
         """
-        versions = self.part_versions()
-        all_parts = {
-            str(r[0]) for r in df.select(part_col).distinct().collect()
-        }
-        missing = sorted(all_parts - set(versions))
-        schema_id, expect_schema = self._ensure_write_schema(df, part_col)
-        version = self._claim_version()
-        self._write_parts(df, missing, version, part_col, input_snapshot, schema_id)
-        return self._commit(
-            {},
-            {
-                "input_snapshot": input_snapshot,
-                "new_parts": missing,
-                "part_col": part_col,
-                "schema_id": schema_id,
-                **(extra or {}),
-            },
-            update={p: version for p in missing},
-            base_versions=versions,
-            expect_schema=expect_schema,
+        snap = self.current_snapshot() or {}
+        done = snap.get("parts", {})
+        missing = [p for p in self._parts_of(df, part_col) if p not in done]
+        return self.overwrite_parts(
+            df, missing, part_col, input_snapshot, extra, base_snapshot=snap
         )
 
     def overwrite_parts(
@@ -1006,25 +1000,47 @@ class IcebergLayoutTable:
         else:
             base = self.part_versions()
             row_state = None
+        return self._write_and_commit(
+            df, parts, part_col, input_snapshot, extra,
+            base_versions=base, expect_row_state=row_state,
+            expect_extra=expect_extra, cluster=cluster,
+        )
+
+    def _write_and_commit(
+        self,
+        df: DataFrame,
+        parts: list[str],
+        part_col: str,
+        label: str,
+        extra: dict | None,
+        base_versions: dict[str, int],
+        remove: set[str] | None = None,
+        expect_row_state: dict[str, tuple] | None = None,
+        expect_extra: dict | None = None,
+        cluster: bool | None = None,
+    ) -> dict:
+        """The data write behind write_tier, overwrite_parts and the
+        partitioning rewrite: check the write schema, claim a version,
+        write ``parts`` of ``df`` under it, and commit them (dropping
+        ``remove``) validated against ``base_versions``."""
         schema_id, expect_schema = self._ensure_write_schema(df, part_col)
-        version = self._claim_version()
+        version = self._claim("version", floor=self._next_id("snapshot"))
         self._write_parts(
-            df, parts, version, part_col, input_snapshot, schema_id,
-            cluster=cluster,
+            df, parts, version, part_col, label, schema_id, cluster=cluster
         )
         return self._commit(
-            {},
             {
-                "input_snapshot": input_snapshot,
+                "input_snapshot": label,
                 "new_parts": parts,
                 "part_col": part_col,
                 "schema_id": schema_id,
                 **(extra or {}),
             },
             update={p: version for p in parts},
-            base_versions=base,
+            base_versions=base_versions,
+            remove=remove,
             expect_schema=expect_schema,
-            expect_row_state=row_state,
+            expect_row_state=expect_row_state,
             expect_extra=expect_extra,
         )
 
@@ -1038,23 +1054,21 @@ class IcebergLayoutTable:
         carrying updated application state (e.g. clearing a pending
         refresh marker after downstream tables committed).
 
-        The parts map is taken from the LATEST snapshot under the
-        commit lock (``update={}``), so a data commit landing between
-        this caller's read and its commit is never rolled back.
+        Like every commit it applies to the LATEST snapshot under the
+        commit lock, so a data commit landing between this caller's
+        read and its commit is never rolled back.
         ``expect_extra`` CASes application-state keys the caller
         derived its update from (e.g. the pending marker it is
         clearing) — a concurrent mover raises ConcurrentWriteConflict
         instead of being clobbered."""
         snap = self.current_snapshot() or {}
         return self._commit(
-            {},
             {
                 "input_snapshot": input_snapshot,
                 "new_parts": [],
                 "part_col": snap.get("part_col", "part"),
                 **(extra or {}),
             },
-            update={},
             expect_extra=expect_extra,
         )
 
@@ -1113,10 +1127,10 @@ class IcebergLayoutTable:
             pending = pending.sortWithinPartitions(part_col, *sort_cols)
         # dynamic overwrite touches only (part, snapv=version) dirs —
         # never any committed version: version ids are CLAIMED
-        # exclusively (_claim_version), so no two writers ever share a
-        # snapv dir; a crashed attempt's files become unreferenced
-        # orphans (remove_orphans GCs them) and the retry lands in a
-        # fresh version -> still idempotent end-state
+        # exclusively (_claim), so no two writers ever share a snapv
+        # dir; a crashed attempt's files become unreferenced orphans
+        # (remove_orphans GCs them) and the retry lands in a fresh
+        # version -> still idempotent end-state
         (
             pending.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -1149,7 +1163,7 @@ class IcebergLayoutTable:
             ]
             files = [fr for fr in files if fr["rows"]]
             _atomic_write_json(
-                os.path.join(self.meta_dir, f"manifest-{p}-v{version}.json"),
+                self._manifest_path(p, version),
                 {
                     "part": p,
                     "version": version,
@@ -1165,6 +1179,9 @@ class IcebergLayoutTable:
 
     def _version_dir(self, part: str, version: int, part_col: str = "part") -> str:
         return os.path.join(self.data_dir, f"{part_col}={part}", f"snapv={version}")
+
+    def _manifest_path(self, part: str, version: int) -> str:
+        return os.path.join(self.meta_dir, f"manifest-{part}-v{version}.json")
 
     # file identity for position deletes: everything after the LAST
     # "/data/" — stable across "file://" vs bare paths and across a
@@ -1217,18 +1234,18 @@ class IcebergLayoutTable:
         predates the delete's sequence number — so a merge's own
         appended rows survive its delete, and a later merge's delete
         supersedes an earlier merge's rows (last-writer-wins by
-        sequence, Iceberg v2 semantics)."""
+        sequence, Iceberg v2 semantics).
 
-        def _live(ds):
-            out = []
-            for d in ds:
-                p = os.path.join(self.root, d["path"])
-                if os.path.exists(p):
-                    out.append((p, d))
-            return out
-
-        pos = _live([d for d in descs if d.get("kind", "pos") == "pos"])
-        eqs = _live([d for d in descs if d.get("kind") == "eq"])
+        A delete file the snapshot names but the disk lacks fails the
+        scan, naming its path: skipping it would serve deleted rows."""
+        pos = [
+            os.path.join(self.root, d["path"])
+            for d in descs if d.get("kind", "pos") == "pos"
+        ]
+        eqs = [
+            (os.path.join(self.root, d["path"]), d)
+            for d in descs if d.get("kind") == "eq"
+        ]
         # explicit read schemas: delete sets on a stacked-DML table are
         # MANY small files (hundreds per merge wave); footer inference
         # over them dominated plan-build time. Columns absent from a
@@ -1238,7 +1255,7 @@ class IcebergLayoutTable:
         if pos:
             dd = (
                 spark.read.schema("_file string, _pos bigint")
-                .parquet(*[p for p, _ in pos])
+                .parquet(*pos)
                 .select("_file", "_pos")
                 .distinct()
             )
@@ -1302,8 +1319,9 @@ class IcebergLayoutTable:
         file list with per-file stats and the schema the files were
         written under. A manifest lacking either is an old layout and
         is refused."""
-        name = f"manifest-{p}-v{v}.json"
-        m = _read_json(os.path.join(self.meta_dir, name))
+        path = self._manifest_path(p, v)
+        name = os.path.basename(path)
+        m = _read_json(path)
         if m is None:
             self._refuse_layout(name, "is missing", "pre-MVCC")
         if "files" not in m:
@@ -1793,7 +1811,7 @@ class IcebergLayoutTable:
         if arrive is not None:
             # before anything is written: a refused delta leaves no trace
             schema_id, expect_schema = self._ensure_write_schema(arrive, part_col)
-        v = self._claim_version()
+        v = self._claim("version", floor=self._next_id("snapshot"))
         if keys is None:
             # position deletes land in exactly the partitions holding
             # leaving rows, so their write also finds the partitions
@@ -1811,7 +1829,6 @@ class IcebergLayoutTable:
         if arrive is not None:
             self._write_parts(arrive, parts, v, part_col, label, schema_id)
         return self._commit(
-            {},
             {
                 "input_snapshot": label,
                 "new_parts": [p for p in parts if p not in snap["parts"]],
@@ -2101,51 +2118,6 @@ class IcebergLayoutTable:
             base_snapshot=snap, cluster=False,
         )
 
-    def _sweep_delete_files(
-        self, live_paths: set[str], older_than_s: float = 0.0
-    ) -> list[str]:
-        """Remove merge-on-read delete-file part-directories whose
-        descriptor path no live snapshot references (crashed delete
-        attempts, expired snapshots' deletes, post-compaction leftovers).
-        Empty ``delv=`` dirs are dropped with them."""
-        removed: list[str] = []
-        ddir = os.path.join(self.root, "deletes")
-        if not os.path.isdir(ddir):
-            return removed
-        now = time.time()
-        for vdir in sorted(os.listdir(ddir)):
-            vpath = os.path.join(ddir, vdir)
-            if not (vdir.startswith("delv=") and os.path.isdir(vpath)):
-                continue
-            for pdir in sorted(os.listdir(vpath)):
-                full = os.path.join(vpath, pdir)
-                rel = f"deletes/{vdir}/{pdir}"
-                if "=" not in pdir or rel in live_paths or not os.path.isdir(full):
-                    continue
-                newest = max(
-                    (os.path.getmtime(os.path.join(full, f))
-                     for f in os.listdir(full)),
-                    default=0,
-                )
-                if older_than_s and now - newest <= older_than_s:
-                    continue
-                shutil.rmtree(full)
-                removed.append(full)
-            if not any(
-                os.path.isdir(os.path.join(vpath, x)) for x in os.listdir(vpath)
-            ):
-                shutil.rmtree(vpath)
-        return removed
-
-    @staticmethod
-    def _live_delete_paths(snaps: list[dict]) -> set[str]:
-        return {
-            d["path"]
-            for s in snaps
-            for ds in (s.get("deletes") or {}).values()
-            for d in ds
-        }
-
     def rewrite_deletes(
         self, spark: SparkSession, min_files: int = 1, target_files: int = 1
     ) -> dict:
@@ -2172,64 +2144,109 @@ class IcebergLayoutTable:
         return self.compact_parts(spark, parts=todo, target_files=target_files)
 
     def remove_orphans(self, older_than_s: float = 3600.0) -> list[str]:
-        """Delete (part, snapv) data directories referenced by NO
-        existing snapshot — leftovers of crashed attempts and lost
-        optimistic-concurrency races (Iceberg's remove_orphan_files).
-        ``older_than_s`` protects in-flight writers: a directory is
-        only an orphan candidate once its newest file is older than
-        the grace period. Also drops version-claim markers strictly
-        below the next snapshot id — ids no future writer can claim
-        (claims always start at the next id and go up)."""
-        live: set[tuple[str, int]] = set()
-        snap_ids = [
-            int(f.split("-")[1].split(".")[0])
-            for f in os.listdir(self.meta_dir)
-            if f.startswith("snapshot-") and f.endswith(".json")
-        ]
-        all_snaps = []
-        for n in snap_ids:
-            s = self.snapshot(n)
-            all_snaps.append(s)
-            live |= set(self._version_pairs(s))
-        deleted = self._sweep_delete_files(
-            self._live_delete_paths(all_snaps), older_than_s
-        )
-        now = time.time()
-        if not os.path.isdir(self.data_dir):
-            return deleted
-        for pdir in os.listdir(self.data_dir):
+        """Delete the file sets no existing snapshot references —
+        leftovers of crashed attempts and lost optimistic-concurrency
+        races (Iceberg's remove_orphan_files): version directories with
+        their manifests, and delete-file directories. ``older_than_s``
+        protects in-flight writers: a set is only an orphan once its
+        newest file is older than the grace period. Also drops
+        version-claim markers strictly below the next snapshot id — ids
+        no future claim starts at or below. Returns the deleted
+        directories."""
+        snaps = [s for s in map(self.snapshot, self._ids("snapshot")) if s]
+        deleted = self._gc(snaps, older_than_s=older_than_s)
+        floor = self._next_id("snapshot")
+        for n in self._ids("version", ".claim"):
+            if n < floor:
+                with contextlib.suppress(OSError):
+                    os.remove(os.path.join(self.meta_dir, f"version-{n}.claim"))
+        return deleted
+
+    def _file_sets(self, snap: dict) -> dict[tuple, list[str]]:
+        """The file sets ``snap`` references, each with its paths: a
+        (part, version) set is its ``snapv`` directory and manifest, a
+        delete set its ``deletes/delv=<v>/<part_col>=<p>`` directory."""
+        pc = snap.get("part_col", "part")
+        out = {
+            ("data", p, v): [self._version_dir(p, v, pc), self._manifest_path(p, v)]
+            for p, v in self._version_pairs(snap)
+        }
+        for ds in (snap.get("deletes") or {}).values():
+            for d in ds:
+                out[("deletes", d["path"])] = [os.path.join(self.root, d["path"])]
+        return out
+
+    def _file_sets_on_disk(self) -> dict[tuple, list[str]]:
+        """Every file set on disk, referenced or not, keyed as in
+        :meth:`_file_sets`. A ``delv=`` directory with no subdirectory
+        (a delete that wrote no partition) is a set of its own; one
+        still holding Spark's ``_temporary`` is being written."""
+        out: dict[tuple, list[str]] = {}
+        for pdir in _listdir(self.data_dir):
             if "=" not in pdir:
                 continue
             p = pdir.split("=", 1)[1]
-            base = os.path.join(self.data_dir, pdir)
-            for vdir in os.listdir(base):
-                if not vdir.startswith("snapv="):
-                    continue
-                v = int(vdir.split("=", 1)[1])
-                if (p, v) in live:
-                    continue
-                d = os.path.join(base, vdir)
-                newest = max(
-                    (os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d)),
-                    default=0,
+            for vdir in _listdir(os.path.join(self.data_dir, pdir)):
+                if vdir.startswith("snapv="):
+                    out.setdefault(("data", p, int(vdir[len("snapv="):])), []).append(
+                        os.path.join(self.data_dir, pdir, vdir)
+                    )
+        for f in _listdir(self.meta_dir):
+            if not (f.startswith("manifest-") and f.endswith(".json")):
+                continue
+            p, _, v = f[len("manifest-"):-len(".json")].rpartition("-v")
+            if v.isdigit():
+                out.setdefault(("data", p, int(v)), []).append(
+                    os.path.join(self.meta_dir, f)
                 )
-                if now - newest > older_than_s:
-                    shutil.rmtree(d)
-                    deleted.append(d)
-        # claim markers below the next snapshot id are unreachable by
-        # any future _claim_version scan — safe to drop (tiny files,
-        # but unbounded growth under heavy contention otherwise)
-        floor = self._next_snapshot_id()
-        for f in os.listdir(self.meta_dir):
-            if f.startswith("version-") and f.endswith(".claim"):
-                try:
-                    n = int(f[len("version-") : -len(".claim")])
-                except ValueError:
-                    continue
-                if n < floor:
-                    with contextlib.suppress(OSError):
-                        os.remove(os.path.join(self.meta_dir, f))
-        return deleted
+        for vdir in _listdir(os.path.join(self.root, "deletes")):
+            if not vdir.startswith("delv="):
+                continue
+            subs = self._subdirs(f"deletes/{vdir}")
+            rels = [f"deletes/{vdir}/{d}" for d in subs if "=" in d]
+            for rel in rels if subs else [f"deletes/{vdir}"]:
+                out[("deletes", rel)] = [os.path.join(self.root, rel)]
+        return out
+
+    def _subdirs(self, rel: str) -> list[str]:
+        path = os.path.join(self.root, rel)
+        return [d for d in _listdir(path) if os.path.isdir(os.path.join(path, d))]
+
+    def _gc(
+        self,
+        kept: list[dict],
+        expired: list[dict] = (),
+        older_than_s: float | None = None,
+    ) -> list[str]:
+        """The one GC rule (the module docstring's): a file set no
+        ``kept`` snapshot references is removed when an ``expired``
+        snapshot referenced it, or, with ``older_than_s`` (the orphan
+        pass), when its newest file is at least that old. A ``delv=``
+        directory goes with its last partition. Returns the removed
+        directories."""
+        live = set()
+        for snap in kept:
+            live.update(self._file_sets(snap))
+        doomed: dict[tuple, list[str]] = {}
+        for snap in expired:
+            doomed.update(self._file_sets(snap))
+        if older_than_s is not None:
+            now = time.time()
+            for key, paths in self._file_sets_on_disk().items():
+                if key not in doomed and now - _newest(paths) >= older_than_s:
+                    doomed[key] = paths
+        removed = []
+        for key in sorted(set(doomed) - live):
+            for path in doomed[key]:
+                if os.path.isdir(path):
+                    shutil.rmtree(path)
+                    removed.append(path)
+                elif os.path.exists(path):
+                    os.remove(path)
+            vdir = os.path.dirname(key[1]) if key[0] == "deletes" else ""
+            if vdir.startswith("deletes/delv=") and not self._subdirs(vdir):
+                shutil.rmtree(os.path.join(self.root, vdir), ignore_errors=True)
+        return removed
 
     # ------------------------------------------------------------ expire
     def drop_parts_older_than(self, cutoff: int) -> dict:
@@ -2256,7 +2273,6 @@ class IcebergLayoutTable:
         if not doomed:
             return snap
         return self._commit(
-            {},
             {
                 "input_snapshot": f"drop:{part_col}<{cutoff}",
                 "new_parts": [],
@@ -2268,60 +2284,33 @@ class IcebergLayoutTable:
         )
 
     def expire_snapshots(self, keep_last: int = 1) -> list[str]:
-        """Garbage-collect partition versions referenced only by
-        snapshots older than the ``keep_last`` most recent. Returns the
-        deleted data directories. CURRENT and the kept snapshots stay
-        fully readable (Iceberg's expire_snapshots)."""
-        snaps = sorted(
-            int(f.split("-")[1].split(".")[0])
-            for f in os.listdir(self.meta_dir)
-            if f.startswith("snapshot-") and f.endswith(".json")
-        )
+        """Expire every snapshot older than the ``keep_last`` most
+        recent, then remove the file sets only they referenced — and
+        nothing no expired snapshot referenced, so a writer between its
+        write and its commit keeps its files. Returns the deleted
+        directories. CURRENT and the kept snapshots stay fully readable
+        (Iceberg's expire_snapshots)."""
+        ids = self._ids("snapshot")
         # every ref head (main + branches) stays readable regardless of
         # age — an unpublished audit branch must survive maintenance —
-        # and so must each head's ancestry down to the protected
-        # region, or publish_branch's fast-forward walk would break
+        # and so does each branch's own commit chain (branch-tagged
+        # snapshots, down to the fork into main history), or
+        # publish_branch's ancestry walk would break
         refs = self.list_branches()
         heads = set(refs.values())
-        keep_set = set(snaps[-keep_last:]) | (heads & set(snaps))
-        branch_heads = {v for b, v in refs.items() if b != "main"}
-        for h in sorted(branch_heads & set(snaps)):
-            # protect the branch's own commit chain (branch-tagged
-            # snapshots) so publish_branch's ancestry walk stays
-            # intact; the walk stops at the fork into main history
-            node = self.snapshot(h)
-            while node is not None and (
-                node.get("branch") or node["snapshot_id"] in heads
-            ):
-                keep_set.add(node["snapshot_id"])
-                parent = node.get("parent")
-                node = self.snapshot(parent) if parent is not None else None
-        keep = sorted(keep_set & set(snaps))
-        drop = [n for n in snaps if n not in keep_set]
-        live: set[tuple[str, int]] = set()
-        part_col = "part"
-        kept_snaps = []
-        for n in keep:
-            s = self.snapshot(n)
-            kept_snaps.append(s)
-            part_col = s.get("part_col", part_col)
-            live |= set(self._version_pairs(s))
-        # delete files referenced only by expired snapshots go with them
-        deleted = self._sweep_delete_files(self._live_delete_paths(kept_snaps))
-        for n in drop:
-            s = self.snapshot(n)
-            for p, v in self._version_pairs(s):
-                if (p, v) in live:
-                    continue
-                d = self._version_dir(p, v, s.get("part_col", part_col))
-                if os.path.exists(d):
-                    shutil.rmtree(d)
-                    deleted.append(d)
-                with contextlib.suppress(FileNotFoundError):
-                    os.remove(os.path.join(self.meta_dir, f"manifest-{p}-v{v}.json"))
-                live.add((p, v))  # only delete once
-            os.remove(os.path.join(self.meta_dir, f"snapshot-{n}.json"))
-        return deleted
+        keep = set(ids[-keep_last:]) | heads
+        for b, h in refs.items():
+            if b != "main":
+                chain = itertools.takewhile(
+                    lambda s: s.get("branch") or s["snapshot_id"] in heads,
+                    self._ancestry(self.snapshot(h)),
+                )
+                keep.update(s["snapshot_id"] for s in chain)
+        snaps = [s for s in map(self.snapshot, ids) if s]
+        expired = [s for s in snaps if s["snapshot_id"] not in keep]
+        for s in expired:
+            os.remove(os.path.join(self.meta_dir, f"snapshot-{s['snapshot_id']}.json"))
+        return self._gc([s for s in snaps if s["snapshot_id"] in keep], expired)
 
 
 def with_part(

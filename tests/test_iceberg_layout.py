@@ -376,18 +376,18 @@ def test_optimistic_concurrency_conflict_and_orphans(spark, tmp_path):
     t.write_tier(df)
     base = dict(t.part_versions())  # both writers read the same base
 
-    va = t._claim_version()
+    va = t._claim("version", floor=t._next_id("snapshot"))
     t._write_parts(df.withColumn("k", df.k + 1000), ["1"], va, "part", "A")
-    t._commit({}, {"input_snapshot": "A", "new_parts": ["1"], "part_col": "part"},
+    t._commit({"input_snapshot": "A", "new_parts": ["1"], "part_col": "part"},
               update={"1": va}, base_versions=base)
 
-    vb = t._claim_version()
+    vb = t._claim("version", floor=t._next_id("snapshot"))
     assert vb != va
     t._write_parts(df.withColumn("k", df.k + 5000), ["1"], vb, "part", "B")
     import pytest as _pytest
 
     with _pytest.raises(ConcurrentWriteConflict):
-        t._commit({}, {"input_snapshot": "B", "new_parts": ["1"], "part_col": "part"},
+        t._commit({"input_snapshot": "B", "new_parts": ["1"], "part_col": "part"},
                   update={"1": vb}, base_versions=base)
 
     back = t.read_tier(spark)
@@ -819,3 +819,116 @@ def test_overwrite_parts_runs_no_job_after_write(spark, tmp_path, monkeypatch):
     assert len(after_write) == 1 and after_write[0]
     assert jobs == after_write[0], sorted(jobs - after_write[0])
     assert sum(m["rows"] for m in t.lineage() if m["part"] in parts) == delta.count()
+
+
+# ---------------------------------------------- metadata protocol races
+def _before_lock(t, other_commit):
+    """Land ``other_commit`` (through another handle) just before ``t``
+    next takes the commit lock: a concurrent commit inside ``t``'s
+    read→commit window."""
+    lock = t._commit_lock
+
+    def racing(*a, **kw):
+        del t._commit_lock
+        other_commit()
+        return lock(*a, **kw)
+
+    t._commit_lock = racing
+
+
+def test_rename_keeps_a_concurrent_data_commit(spark, tmp_path):
+    """A schema evolution commits its change onto the latest parts map:
+    a partition landed between its read and its commit survives, and
+    so does the rename."""
+    root = str(tmp_path / "t")
+    t = IcebergLayoutTable(root)
+    rows = "part long, url string, v double"
+    t.write_tier(spark.createDataFrame([(0, "a", 1.0), (604800, "b", 2.0)], rows))
+    late = spark.createDataFrame([(1209600, "c", 3.0)], rows)
+    _before_lock(t, lambda: IcebergLayoutTable(root).overwrite_parts(late, ["1209600"]))
+    t.rename_column("v", "value")
+    assert sorted(t.part_versions()) == ["0", "1209600", "604800"]
+    back = t.read_tier(spark)
+    assert sorted(r["value"] for r in back.collect()) == [1.0, 2.0, 3.0]
+
+
+def test_part_spec_claims_from_one_listing_get_distinct_ids(tmp_path, monkeypatch):
+    """Two part-spec claims that both listed metadata/ before either
+    wrote start from the same id: the exclusive create moves the second
+    to the next id, and the first spec file keeps its content."""
+    t = IcebergLayoutTable(str(tmp_path / "t"))
+    listdir = os.listdir
+
+    def stale(d="."):
+        names = listdir(d)
+        if d != t.meta_dir:
+            return names
+        return [f for f in names if not f.startswith("part-spec-")]
+
+    monkeypatch.setattr(os, "listdir", stale)
+    first = t.evolve_partitioning(86400)
+    second = t.evolve_partitioning(3600)
+    monkeypatch.undo()
+    assert first["part_spec_id"] != second["part_spec_id"]
+    assert t.part_spec(first["part_spec_id"])["part_seconds"] == 86400
+    assert t.part_spec(second["part_spec_id"])["part_seconds"] == 3600
+
+
+def test_expire_inside_a_mor_delete_keeps_its_delete_files(spark, tmp_path):
+    """expire_snapshots removes only what an expired snapshot
+    referenced: a merge-on-read delete's files, written but not yet
+    committed, survive it and the delete applies."""
+    root = str(tmp_path / "t")
+    t = IcebergLayoutTable(root)
+    t.write_tier(spark.createDataFrame(
+        [(0, i, float(i)) for i in range(10)], "part long, k long, v double"
+    ))
+    _before_lock(t, lambda: IcebergLayoutTable(root).expire_snapshots(keep_last=1))
+    t.delete_where(spark, "v < 3", mode="merge-on-read")
+    assert t.read_tier(spark).count() == 7
+
+
+def test_remove_orphans_takes_a_lost_writers_manifest(spark, tmp_path):
+    """A writer that loses a commit race leaves a version directory and
+    its manifest; remove_orphans removes both, and nothing a snapshot
+    references."""
+    from lambdo_spark.sources.iceberg_layout import ConcurrentWriteConflict
+
+    root = str(tmp_path / "t")
+    t = IcebergLayoutTable(root)
+    rows = "part long, k long"
+    t.write_tier(spark.createDataFrame([(1, 0)], rows))
+    winner = spark.createDataFrame([(1, 5)], rows)
+    _before_lock(t, lambda: IcebergLayoutTable(root).overwrite_parts(winner, ["1"]))
+    with pytest.raises(ConcurrentWriteConflict):
+        t.overwrite_parts(spark.createDataFrame([(1, 9)], rows), ["1"])
+
+    def manifests():
+        return sorted(f for f in os.listdir(t.meta_dir) if f.startswith("manifest-"))
+
+    live = sorted(
+        f"manifest-1-v{t.snapshot(n)['parts']['1']}.json" for n in (0, 1)
+    )
+    assert len(manifests()) == 3
+    t.remove_orphans(older_than_s=0.0)
+    assert manifests() == live
+    assert sorted(os.listdir(os.path.join(root, "data", "part=1"))) == sorted(
+        f"snapv={t.snapshot(n)['parts']['1']}" for n in (0, 1)
+    )
+    assert [r["k"] for r in t.read_tier(spark).collect()] == [5]
+
+
+def test_missing_delete_file_fails_the_read(spark, tmp_path):
+    """A committed delete file that is gone fails the read, naming its
+    path, instead of serving the rows it deleted."""
+    t = IcebergLayoutTable(str(tmp_path / "t"))
+    t.write_tier(spark.createDataFrame(
+        [(0, i, float(i)) for i in range(10)], "part long, k long, v double"
+    ))
+    t.delete_where(spark, "v < 3", mode="merge-on-read")
+    path = t.current_snapshot()["deletes"]["0"][0]["path"]
+    import shutil
+
+    shutil.rmtree(os.path.join(t.root, path))
+    with pytest.raises(Exception, match=path):
+        t.read_tier(spark).count()

@@ -300,6 +300,31 @@ def test_roll_min_periods_does_not_count_nan(spark, kernel):
     assert exp.isna().all()
 
 
+@pytest.mark.parametrize("kernel,last", [("sum", 3.0), ("mean", 1.5), ("max", 2.0)])
+def test_roll_skips_nan_like_pandas(spark, kernel, last):
+    """A NaN inside an otherwise valid float window is missing, as in
+    pandas: it neither poisons ``sum``/``mean`` nor wins ``max``."""
+    import pandas as pd
+
+    df = spark.createDataFrame([(1, 1.0), (2, float("nan")), (3, 2.0)],
+                               "i long, v double")
+    out = C.roll(df, "s", kernel, ["v"], 3, ["i"], min_periods=2)
+    assert [r["s"] for r in out.orderBy("i").collect()] == [None, None, last]
+    exp = getattr(pd.Series([1.0, float("nan"), 2.0]).rolling(3, min_periods=2), kernel)()
+    assert exp.isna().tolist() == [True, True, False] and exp.iloc[2] == last
+
+
+def test_roll_range_skips_nan_like_pandas(spark):
+    import pandas as pd
+
+    df = spark.createDataFrame([(1, 1.0), (2, float("nan")), (3, 2.0)],
+                               "i long, v double").withColumn("ts", F.col("i").cast("timestamp"))
+    out = C.roll_range(df, "s", "sum", ["v"], 3, "ts")
+    assert [r["s"] for r in out.orderBy("i").collect()] == [1.0, 1.0, 3.0]
+    exp = pd.Series([1.0, float("nan"), 2.0], index=pd.to_datetime([1, 2, 3], unit="s"))
+    assert exp.rolling("3s").sum().tolist() == [1.0, 1.0, 3.0]
+
+
 def test_roll_gate_on_integers_plans_no_nan_test(spark):
     """The NaN test is only planned over float/double inputs: an integer
     column keeps the plain ``count`` gate."""

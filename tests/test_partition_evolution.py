@@ -92,7 +92,7 @@ def test_spec_pointer_cas(spark, tmp_path):
         # a committer that derived its work from the pre-evolution
         # spec (part_spec_id absent) must fail the metadata CAS
         t._commit(
-            {}, {"input_snapshot": "stale", "new_parts": [], "part_col": "part"},
+            {"input_snapshot": "stale", "new_parts": [], "part_col": "part"},
             update={}, base_versions={},
             expect_extra={"part_spec_id": None},
         )

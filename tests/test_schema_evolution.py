@@ -160,11 +160,9 @@ def test_concurrent_evolution_conflicts(spark, tmp_path):
     for f in fields:
         if f["name"] == "v":
             f["name"] = "val2"
-    sid = b._claim_schema(fields, base["last_field_id"])
-    snap = b.current_snapshot()
+    sid = b._claim("schema", {"fields": fields, "last_field_id": base["last_field_id"]})
     with pytest.raises(ConcurrentWriteConflict, match="schema evolved"):
         b._commit(
-            dict(snap["parts"]),
             {"schema_id": sid, "new_parts": [], "part_col": "part",
              "input_snapshot": "schema-evolution:race"},
             expect_schema=base["schema_id"],

@@ -127,17 +127,18 @@ def test_string_partitioned_table_is_not_read(spark, tmp_path):
     """The shape a writer without the integer check could land: string
     partition values fail the bigint partition column at scan."""
     t = IcebergLayoutTable(str(tmp_path / "t"))
-    sid = t._claim_schema(
-        [{"id": 1, "name": "url", "type": "string"}, {"id": 2, "name": "n", "type": "bigint"}],
-        2,
-    )
-    v = t._claim_version()
+    sid = t._claim("schema", {
+        "fields": [{"id": 1, "name": "url", "type": "string"},
+                   {"id": 2, "name": "n", "type": "bigint"}],
+        "last_field_id": 2,
+    })
+    v = t._claim("version", floor=t._next_id("snapshot"))
     t._write_parts(
         spark.createDataFrame([("u1", "a", 3)], "url string, part string, n long"),
         ["a"], v, "part", "hand-built", sid,
     )
     t._commit(
-        {}, {"input_snapshot": "hand-built", "new_parts": ["a"], "part_col": "part",
+        {"input_snapshot": "hand-built", "new_parts": ["a"], "part_col": "part",
              "schema_id": sid},
         update={"a": v},
     )
