@@ -505,8 +505,9 @@ def main(argv: list[str] | None = None) -> int:
                      "read tax (delete files + appended file sets) is at "
                      "least MIN_FILES — folds them into clean base files")
     mnt.add_argument("--remove-orphans", action="store_true",
-                     help="delete data dirs no snapshot references "
-                     "(crashed attempts, lost commit races)")
+                     help="delete version dirs, manifests and delete files "
+                     "no snapshot references (crashed attempts, lost "
+                     "commit races)")
     mnt.add_argument("--orphan-grace", type=float, default=3600.0,
                      help="seconds a dir must be idle before it counts "
                      "as orphaned (protects in-flight writers)")

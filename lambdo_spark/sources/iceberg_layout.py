@@ -2130,9 +2130,7 @@ class IcebergLayoutTable:
         rewrite. Run periodically next to a streaming upsert sink so
         the anti-join side stays broadcast-sized. Returns the commit
         snapshot, or the current one when nothing qualifies."""
-        snap = self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no snapshot in {self.meta_dir}")
+        snap = self._resolve(None, required=True)
         tax: dict[str, int] = {}
         for p, ds in (snap.get("deletes") or {}).items():
             tax[p] = tax.get(p, 0) + len(ds)
@@ -2259,9 +2257,7 @@ class IcebergLayoutTable:
         :meth:`expire_snapshots` later reclaims the bytes. Commit
         validation rejects a concurrent rewrite of a partition being
         dropped (the rewrite would otherwise resurrect under GC)."""
-        snap = self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no snapshot in {self.meta_dir}")
+        snap = self._resolve(None, required=True)
         part_col = snap.get("part_col", "part")
         try:
             doomed = sorted(p for p in snap["parts"] if int(p) < cutoff)

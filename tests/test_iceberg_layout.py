@@ -932,3 +932,48 @@ def test_missing_delete_file_fails_the_read(spark, tmp_path):
     shutil.rmtree(os.path.join(t.root, path))
     with pytest.raises(Exception, match=path):
         t.read_tier(spark).count()
+
+
+def test_concurrent_claims_get_distinct_ids(tmp_path):
+    """Stress: more claiming threads than cores, all racing the same
+    ids — every claim gets its own id and every claimed file keeps its
+    own body."""
+    import json
+    import sys
+    import threading
+
+    t = IcebergLayoutTable(str(tmp_path / "t"))
+    got: list[tuple[str, int, int]] = []
+    lock = threading.Lock()
+
+    def claim(w):
+        for i in range(5):
+            tag = w * 100 + i
+            for kind, n in (
+                ("schema", t._claim("schema", {"fields": [], "last_field_id": tag})),
+                ("part-spec", t._claim("part-spec", {"part_seconds": tag}, floor=1)),
+                ("version", t._claim("version", floor=t._next_id("snapshot"))),
+            ):
+                with lock:
+                    got.append((kind, n, tag))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=claim, args=(w,)) for w in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    for kind in ("schema", "part-spec", "version"):
+        ids = [n for k, n, _ in got if k == kind]
+        assert len(ids) == 40 and len(set(ids)) == 40, kind
+    for kind, n, tag in got:
+        if kind == "schema":
+            assert t.schema(n)["last_field_id"] == tag
+        elif kind == "part-spec":
+            with open(os.path.join(t.meta_dir, f"part-spec-{n}.json")) as f:
+                assert json.load(f)["part_seconds"] == tag
