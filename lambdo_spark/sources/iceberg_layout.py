@@ -604,21 +604,17 @@ class IcebergLayoutTable:
             # merge/delete, compaction, refresh) reads with deletes and
             # adds APPLIED, so the new version has them materialized
             # and the descriptors must drop with it
-            prev_parts = prev.get("parts", {})
-            kept_dels = {
-                p: list(ds)
-                for p, ds in (prev.get("deletes") or {}).items()
-                if p in parts and parts[p] == prev_parts.get(p)
-            }
-            for p, descs in (add_deletes or {}).items():
-                kept_dels[p] = kept_dels.get(p, []) + list(descs)
-            kept_adds = {
-                p: list(vs)
-                for p, vs in (prev.get("adds") or {}).items()
-                if p in parts and parts[p] == prev_parts.get(p)
-            }
-            for p, vs in (add_adds or {}).items():
-                kept_adds[p] = kept_adds.get(p, []) + list(vs)
+            row_files = {}
+            for key, added in (("deletes", add_deletes), ("adds", add_adds)):
+                kept = {
+                    p: list(xs)
+                    for p, xs in (prev.get(key) or {}).items()
+                    if p in parts and parts[p] == latest.get(p)
+                }
+                for p, xs in (added or {}).items():
+                    kept[p] = kept.get(p, []) + list(xs)
+                if kept:
+                    row_files[key] = kept
             new = {
                 "snapshot_id": n,
                 "parts": parts,
@@ -636,8 +632,7 @@ class IcebergLayoutTable:
                 "parent": prev.get("snapshot_id"),
                 **({"branch": self.branch} if self.branch != "main" else {}),
                 **carried,
-                **({"deletes": kept_dels} if kept_dels else {}),
-                **({"adds": kept_adds} if kept_adds else {}),
+                **row_files,
                 **extra,
             }
             name = f"snapshot-{n}.json"
