@@ -905,13 +905,16 @@ class IcebergLayoutTable:
             )
         if spark is None:
             raise ValueError("rewrite=True needs spark=")
-        rows = self.read_tier(spark).drop(part_col)
+        rows = self.read_tier(spark, snapshot_id=snap["snapshot_id"]).drop(part_col)
         df = with_part(rows, bucket_col=bucket_col, part_seconds=part_seconds)
         new_parts = self._parts_of(df, part_col)
+        # the rewrite carries every current row: a merge-on-read change
+        # landing after the read must fail it, not be undone by it
         return self._write_and_commit(
             df, new_parts, part_col, label, {"part_spec_id": sid},
             base_versions=old_parts,
             remove=set(old_parts) - set(new_parts),
+            expect_row_state=self._row_state(snap, old_parts),
             expect_extra={"part_spec_id": base_spec_id},
         )
 

@@ -977,3 +977,22 @@ def test_concurrent_claims_get_distinct_ids(tmp_path):
         elif kind == "part-spec":
             with open(os.path.join(t.meta_dir, f"part-spec-{n}.json")) as f:
                 assert json.load(f)["part_seconds"] == tag
+
+
+def test_partitioning_rewrite_conflicts_with_a_concurrent_mor_delete(spark, tmp_path):
+    """The re-bucketing rewrite reads every current row, so a
+    merge-on-read delete landing before its commit fails the commit
+    instead of being undone by it."""
+    from lambdo_spark.sources.iceberg_layout import ConcurrentWriteConflict
+
+    root = str(tmp_path / "t")
+    t = IcebergLayoutTable(root)
+    t.write_tier(with_part(spark.createDataFrame(
+        [(f"u{i}", i * 3600, float(i)) for i in range(48)],
+        "url string, bucket_s bigint, v double",
+    )))
+    other = IcebergLayoutTable(root)
+    _before_lock(t, lambda: other.delete_where(spark, "v < 3", mode="merge-on-read"))
+    with pytest.raises(ConcurrentWriteConflict):
+        t.evolve_partitioning(86400, spark=spark, rewrite=True)
+    assert t.read_tier(spark).count() == 45
