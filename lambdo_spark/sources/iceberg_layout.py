@@ -887,6 +887,8 @@ class IcebergLayoutTable:
         label = f"partition-evolution:{part_seconds}s"
         old_parts = dict((snap or {}).get("parts", {}))
         if not old_parts:
+            # metadata-only only while the table stays empty: a write
+            # landing before this commit fails it (CAS on the parts map)
             return self._commit(
                 {
                     "input_snapshot": label,
@@ -894,7 +896,10 @@ class IcebergLayoutTable:
                     "part_col": part_col,
                     "part_spec_id": sid,
                 },
-                expect_extra={"part_spec_id": base_spec_id},
+                expect_extra={
+                    "part_spec_id": base_spec_id,
+                    "parts": (snap or {}).get("parts"),
+                },
             )
         if not rewrite:
             raise ValueError(

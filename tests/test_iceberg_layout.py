@@ -996,3 +996,21 @@ def test_partitioning_rewrite_conflicts_with_a_concurrent_mor_delete(spark, tmp_
     with pytest.raises(ConcurrentWriteConflict):
         t.evolve_partitioning(86400, spark=spark, rewrite=True)
     assert t.read_tier(spark).count() == 45
+
+
+def test_metadata_only_respec_conflicts_with_a_concurrent_write(spark, tmp_path):
+    """Re-specing an empty table is metadata-only; a write landing
+    before its commit makes the table non-empty, so the commit fails
+    instead of labelling the weekly part it wrote with a daily spec."""
+    from lambdo_spark.sources.iceberg_layout import ConcurrentWriteConflict
+
+    root = str(tmp_path / "t")
+    t = IcebergLayoutTable(root)
+    rows = with_part(spark.createDataFrame(
+        [("u", 604800 + 3 * 86400, 1.0)], "url string, bucket_s bigint, v double"
+    ))
+    _before_lock(t, lambda: IcebergLayoutTable(root).write_tier(rows))
+    with pytest.raises(ConcurrentWriteConflict):
+        t.evolve_partitioning(86400)
+    assert t.part_spec()["part_seconds"] == 7 * 86400
+    assert sorted(t.part_versions()) == ["604800"]
