@@ -87,7 +87,6 @@ depends on ``write_tier``/``overwrite_parts``/``read_tier``.
 from __future__ import annotations
 
 import contextlib
-import itertools
 import json
 import os
 import shutil
@@ -2299,12 +2298,12 @@ class IcebergLayoutTable:
         heads = set(refs.values())
         keep = set(ids[-keep_last:]) | heads
         for b, h in refs.items():
-            if b != "main":
-                chain = itertools.takewhile(
-                    lambda s: s.get("branch") or s["snapshot_id"] in heads,
-                    self._ancestry(self.snapshot(h)),
-                )
-                keep.update(s["snapshot_id"] for s in chain)
+            if b == "main":
+                continue
+            for s in self._ancestry(self.snapshot(h)):
+                if not (s.get("branch") or s["snapshot_id"] in heads):
+                    break
+                keep.add(s["snapshot_id"])
         snaps = [s for s in map(self.snapshot, ids) if s]
         expired = [s for s in snaps if s["snapshot_id"] not in keep]
         for s in expired:
