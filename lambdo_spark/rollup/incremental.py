@@ -21,11 +21,15 @@ carry (sum, count), min/max, per-lang partial rows; never averages):
   exact.
 * Every rewrite goes through ``IcebergLayoutTable.overwrite_parts``:
   dynamic partition overwrite + fresh manifest + new snapshot, so a
-  crash mid-refresh leaves the previous snapshot readable and the
-  refresh idempotently re-runnable (re-merging the same delta into an
-  already-merged store would double-count — hence the store commit
-  carries the delta tag in ``input_snapshot`` for dedup by the
-  caller's orchestration).
+  crash mid-refresh leaves the previous snapshot readable.
+* **Exactly-once is enforced here**, not by the caller's
+  orchestration: re-merging a delta into an already-merged store
+  would double-count, so the store's merge commit appends the delta
+  tag to its ``applied_deltas`` ledger (a replayed tag returns
+  ``skipped`` without reading its pages) and records a ``pending``
+  marker with the affected weeks. A metadata-only commit clears the
+  marker once every tier committed; a later call that finds it set
+  first finishes that tier rebuild (``refresh_from_pages``).
 
 Late data needs no special path: a page for any historical bucket
 lands in its week's partition and that week (plus any coarser bucket

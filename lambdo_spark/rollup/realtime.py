@@ -160,7 +160,11 @@ def read_realtime_tier(
         # the 1d/30d edge buckets half-full). Serve materialized rows
         # strictly below W and re-aggregate W itself along with the
         # tail: one extra bucket of rebuild buys correctness at every
-        # tier regardless of where ingestion stopped.
+        # tier regardless of where ingestion stopped. W stays a literal
+        # here and in the tail filter below, although codegen inlines
+        # it and so compiles these filters anew for each watermark:
+        # only a literal bound reaches the parquet scan as a pushed
+        # filter, and row-group pruning of the tail and the tier needs it.
         mat = read_finalized_tier(spark, root, tier_name, prune=prune).where(
             F.col("bucket_s") < F.lit(w)
         )
@@ -178,8 +182,10 @@ def read_realtime_tier(
                     spark, prune={"bucket_s": (w, w_p - 1)}
                 ).drop("part")
                 raw_from = w_p
-        # direct column comparison (not unix_timestamp(col) >= ...) so
-        # the predicate reaches the parquet scan as a pushed filter
+        # direct column comparison with a literal bound (not
+        # unix_timestamp(col) >= ..., and not a bound codegen could
+        # pass by reference) so the predicate reaches the parquet scan
+        # as a pushed filter
         tail = raw.where(
             F.col(ts_col) >= F.timestamp_seconds(F.lit(raw_from))
         )

@@ -22,6 +22,16 @@ Partition policy (n = the master's core count):
   two. An existing checkpoint keeps the count its offset log recorded;
 - an explicit ``shuffle_partitions=`` sets both values.
 
+Codegen policy: ``spark.sql.codegen.cache.maxEntries`` is 256, not
+Spark's 100. The cache of compiled whole-stage classes is a Guava LRU
+split into four segments, so at 100 a segment holds about 25 classes.
+A refresh (``refresh_from_pages``) and its realtime reads use about
+170 distinct classes, so at 100 each one was evicted before the next
+refresh asked for it: 105 Janino compiles per warm refresh-and-read,
+each JIT-compiled again. At 256 the refresh compiles 0 classes and
+the reads 8 (their watermark bounds are inlined literals); 200 still
+evicts. The entries hold compiled classes, not data.
+
 Executor Python workers start with ``_worker_site`` on their
 PYTHONPATH (merged in front of any ``spark.executorEnv.PYTHONPATH``
 the caller passes); its ``sitecustomize`` removes pyspark's per-task
@@ -82,9 +92,10 @@ def session_conf(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> dict[str, str]:
-    """The partition and worker-path settings ``get_spark`` adds for a
-    master with ``cpus`` cores (policy in the module docstring);
-    ``extra_conf`` wins except for PYTHONPATH, which is merged."""
+    """The partition, codegen and worker-path settings ``get_spark``
+    adds for a master with ``cpus`` cores (policy in the module
+    docstring); ``extra_conf`` wins except for PYTHONPATH, which is
+    merged."""
     extra = dict(extra_conf or {})
     if shuffle_partitions is None:
         state, batch = cpus, max(2 * cpus, 8)
@@ -94,6 +105,7 @@ def session_conf(
     conf = {
         "spark.sql.shuffle.partitions": str(state),
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(batch),
+        "spark.sql.codegen.cache.maxEntries": "256",
         path_key: os.pathsep.join(p for p in (WORKER_SITE, extra.pop(path_key, "")) if p),
     }
     conf.update(extra)

@@ -37,8 +37,10 @@ mid-rewrite under the reader.
   directory) that no kept snapshot references is removed when an
   expired snapshot referenced it (``expire_snapshots``), or when its
   newest file is older than a grace period (``remove_orphans``). A
-  writer between its write and its commit is referenced by nothing,
-  so only the grace period can take its files — never an expiry.
+  schema or partition-spec file goes by the grace period alone, once
+  no kept snapshot and no kept manifest names its id. A writer between
+  its write and its commit is referenced by nothing, so only the grace
+  period can take its files — never an expiry.
 
 Resume: a killed run leaves data files but no snapshot for its
 partitions; the next run lists committed partitions from CURRENT's
@@ -173,6 +175,10 @@ def _meta_id(name: str, prefix: str, suffix: str = ".json") -> int | None:
     if name.startswith(f"{prefix}-") and name.endswith(suffix) and n.isdigit():
         return int(n)
     return None
+
+
+# metadata files a snapshot references by id: (file prefix, snapshot key)
+_META_SETS = (("schema", "schema_id"), ("part-spec", "part_spec_id"))
 
 
 def _listdir(path: str) -> list[str]:
@@ -1089,8 +1095,13 @@ class IcebergLayoutTable:
         if schema_id is None:  # a bare call: the schema the write resolves to
             schema_id = self._ensure_write_schema(df, part_col)[0]
         t0 = time.time()
+        # snapv as a STRING literal: codegen inlines an int literal into
+        # the generated Java, so each version would compile new classes;
+        # a string one is passed by reference and the write's code is
+        # reused from version to version. The directory name
+        # (snapv=<v>) is the same either way, and snapv is no data column.
         pending = df.where(F.col(part_col).cast("string").isin(missing)).withColumn(
-            "snapv", F.lit(version)
+            "snapv", F.lit(str(version))
         )
         dtypes = dict(pending.dtypes)
         data_cols = [c for c in dtypes if c not in (part_col, "snapv")]
@@ -1577,7 +1588,9 @@ class IcebergLayoutTable:
         # residual predicate: stats pruning is IO-elision only; the
         # range itself is enforced on the surviving rows (Iceberg's
         # residual evaluation), so results are exact even where stats
-        # are missing or coarse
+        # are missing or coarse. The bounds stay literals, which codegen
+        # inlines (a class per bound): only a literal reaches the
+        # parquet scan as a pushed filter for row-group pruning.
         for c, (lo, hi) in self._normalize_prune(prune or {}).items():
             if c not in out.columns:
                 continue
@@ -2147,7 +2160,8 @@ class IcebergLayoutTable:
         """Delete the file sets no existing snapshot references —
         leftovers of crashed attempts and lost optimistic-concurrency
         races (Iceberg's remove_orphan_files): version directories with
-        their manifests, and delete-file directories. ``older_than_s``
+        their manifests, delete-file directories, and the schema and
+        partition-spec files of lost evolutions. ``older_than_s``
         protects in-flight writers: a set is only an orphan once its
         newest file is older than the grace period. Also drops
         version-claim markers strictly below the next snapshot id — ids
@@ -2178,9 +2192,11 @@ class IcebergLayoutTable:
 
     def _file_sets_on_disk(self) -> dict[tuple, list[str]]:
         """Every file set on disk, referenced or not, keyed as in
-        :meth:`_file_sets`. A ``delv=`` directory with no subdirectory
-        (a delete that wrote no partition) is a set of its own; one
-        still holding Spark's ``_temporary`` is being written."""
+        :meth:`_file_sets`, plus each ``schema-<n>.json`` and
+        ``part-spec-<n>.json`` as ``(prefix, n)``. A ``delv=`` directory
+        with no subdirectory (a delete that wrote no partition) is a set
+        of its own; one still holding Spark's ``_temporary`` is being
+        written."""
         out: dict[tuple, list[str]] = {}
         for pdir in _listdir(self.data_dir):
             if "=" not in pdir:
@@ -2192,6 +2208,10 @@ class IcebergLayoutTable:
                         os.path.join(self.data_dir, pdir, vdir)
                     )
         for f in _listdir(self.meta_dir):
+            for prefix, _ in _META_SETS:
+                n = _meta_id(f, prefix)
+                if n is not None:
+                    out[(prefix, n)] = [os.path.join(self.meta_dir, f)]
             if not (f.startswith("manifest-") and f.endswith(".json")):
                 continue
             p, _, v = f[len("manifest-"):-len(".json")].rpartition("-v")
@@ -2221,12 +2241,19 @@ class IcebergLayoutTable:
         """The one GC rule (the module docstring's): a file set no
         ``kept`` snapshot references is removed when an ``expired``
         snapshot referenced it, or, with ``older_than_s`` (the orphan
-        pass), when its newest file is at least that old. A ``delv=``
-        directory goes with its last partition. Returns the removed
-        directories."""
+        pass), when its newest file is at least that old. A schema or
+        partition-spec file is live while a kept snapshot or one of
+        their manifests names its id; expiry alone never removes one. A
+        ``delv=`` directory goes with its last partition. Returns the
+        removed directories."""
         live = set()
         for snap in kept:
             live.update(self._file_sets(snap))
+            live.update((prefix, snap.get(key)) for prefix, key in _META_SETS)
+        # kept files are read under the schema they were written under
+        kept_versions = [k[1:] for k in live if k[0] == "data"]
+        for p, v in kept_versions:
+            live.add(("schema", (_read_json(self._manifest_path(p, v)) or {}).get("schema_id")))
         doomed: dict[tuple, list[str]] = {}
         for snap in expired:
             doomed.update(self._file_sets(snap))

@@ -918,6 +918,33 @@ def test_remove_orphans_takes_a_lost_writers_manifest(spark, tmp_path):
     assert [r["k"] for r in t.read_tier(spark).collect()] == [5]
 
 
+def test_remove_orphans_takes_unreferenced_schemas_and_part_specs(spark, tmp_path):
+    """Schemas and part specs claimed by evolutions that never committed
+    are orphans; remove_orphans removes them and keeps every one a
+    snapshot or a kept manifest names — here schema 0, which no
+    snapshot names after the expiry but the renamed files were written
+    under."""
+    t = IcebergLayoutTable(str(tmp_path / "t"))
+    t.evolve_partitioning(86400)  # part-spec-1, metadata-only
+    t.write_tier(spark.createDataFrame([(0, 1, 2.0)], "part long, k long, v double"))
+    t.rename_column("v", "value")
+    t.expire_snapshots(keep_last=1)
+    for tag in range(40):
+        t._claim("schema", {"fields": [], "last_field_id": tag})
+        t._claim("part-spec", {"part_seconds": tag}, floor=1)
+
+    def meta():
+        return sorted(
+            f for f in os.listdir(t.meta_dir) if f.startswith(("schema-", "part-spec-"))
+        )
+
+    assert len(meta()) == 83
+    t.remove_orphans(older_than_s=0.0)
+    assert meta() == ["part-spec-1.json", "schema-0.json", "schema-1.json"]
+    assert t.part_spec()["part_seconds"] == 86400
+    assert [tuple(r) for r in t.read_tier(spark).select("k", "value").collect()] == [(1, 2.0)]
+
+
 def test_missing_delete_file_fails_the_read(spark, tmp_path):
     """A committed delete file that is gone fails the read, naming its
     path, instead of serving the rows it deleted."""

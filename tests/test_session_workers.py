@@ -9,9 +9,13 @@
    (``spark.sql.shuffle.partitions`` = cores for a new checkpoint)
    while AQE batch shuffles start at ``max(2 x cores, 8)``; an existing
    checkpoint keeps its recorded count.
+3. Codegen policy: generated classes outlive a burst of other plans,
+   and a table write at a new version reuses the last write's classes.
+   Compiles are counted with Spark's ``CodegenMetrics``.
 
-The Spark-side checks run in a child process with its own session, so
-the shared test session is not reconfigured.
+The Spark-side checks run in child processes with their own sessions,
+so the shared test session is not reconfigured and its history does
+not move the compile counts.
 """
 
 import importlib
@@ -138,6 +142,10 @@ def test_session_conf_partition_policy_and_worker_path():
     conf = session_conf(4, extra_conf={path_key: "/x/lib", "spark.sql.shuffle.partitions": "5"})
     assert conf[path_key] == os.pathsep.join([WORKER_SITE, "/x/lib"])
     assert conf["spark.sql.shuffle.partitions"] == "5"
+    # codegen policy: a cache that holds a refresh's generated classes
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert session_conf(4)[key] == "256"
+    assert session_conf(4, extra_conf={key: "64"})[key] == "64"
 
 
 _CHILD = """
@@ -272,3 +280,79 @@ def test_batch_shuffle_starts_at_twice_the_cores(probe):
 
 def test_existing_checkpoint_keeps_its_partition_count(probe):
     assert probe["restarted_checkpoint"] == 8
+
+
+_CODEGEN_CHILD = """
+import json, os, sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import functions as F
+from lambdo_spark.session import get_spark
+from lambdo_spark.sources.iceberg_layout import IcebergLayoutTable
+
+spark = get_spark(app_name="codegen_probe", extra_conf={{
+    "spark.ui.showConsoleProgress": "false",
+}})
+spark.sparkContext.setLogLevel("ERROR")
+metric = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+          .CodegenMetrics.METRIC_COMPILATION_TIME())
+
+def compiles(run):
+    n = metric.getCount()
+    run()
+    return metric.getCount() - n
+
+out = {{}}
+# an int literal is inlined into the generated source: every k makes
+# classes of its own (two per collect), about 150 in all -- more than
+# Spark's default cache of 100 holds, well inside the policy's 256
+base = spark.range(4)
+projections = [base.select((F.col("id") * k + k).alias("x")) for k in range(1, 76)]
+out["first"] = compiles(projections[0].collect)
+out["others"] = compiles(lambda: [p.collect() for p in projections[1:]])
+out["first_again"] = compiles(projections[0].collect)
+
+table = IcebergLayoutTable(os.path.join({work!r}, "t"))
+rows = spark.createDataFrame(
+    [(0, 1, 1.0), (604800, 2, 2.0)], "part long, k long, v double"
+)
+out["versions"] = []
+
+def write():
+    snap = table.overwrite_parts(rows, ["0", "604800"])
+    out["versions"].append(snap["parts"]["0"])
+
+out["writes"] = [compiles(write) for _ in range(2)]
+print("PROBE " + json.dumps(out))
+spark.stop()
+"""
+
+
+@pytest.fixture(scope="module")
+def codegen(tmp_path_factory):
+    work = str(tmp_path_factory.mktemp("codegen_probe"))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEM="1g", TMPDIR=work)
+    res = subprocess.run(
+        [sys.executable, "-c", _CODEGEN_CHILD.format(repo=REPO, work=work)],
+        env=env, cwd=work, capture_output=True, text=True, timeout=900,
+    )
+    line = next((x for x in res.stdout.splitlines() if x.startswith("PROBE ")), None)
+    assert line is not None, res.stderr[-3000:]
+    return json.loads(line[len("PROBE "):])
+
+
+def test_generated_classes_outlive_a_burst_of_other_plans(codegen):
+    """74 other compiled projections in between (Spark's default
+    cache keeps 100 classes, in four LRU segments of 25): the first
+    projection's classes are still cached."""
+    assert codegen["first"] >= 1 and codegen["others"] >= 74 * codegen["first"]
+    assert codegen["first_again"] == 0
+
+
+def test_a_write_at_a_new_version_compiles_nothing(codegen):
+    """The second overwrite of the same frame shape, at the next
+    version, reuses every class of the first: the version reaches the
+    partition path without being inlined into generated source."""
+    assert codegen["versions"][1] > codegen["versions"][0]
+    first, second = codegen["writes"]
+    assert first >= 1
+    assert second == 0

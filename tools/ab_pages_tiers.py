@@ -40,7 +40,7 @@ from lambdo_spark.rollup.tiers import (
 )
 from lambdo_spark.rollup.compress_stage import compress_tier
 from lambdo_spark.sources.pages import generate_pages
-from tools import load1
+from tools import load1, wait_for_quiet
 
 PAGES_ROWS = int(os.environ.get("BENCH_PAGES_ROWS", "2000000"))
 
@@ -129,8 +129,7 @@ def main() -> None:
     counts = set()
     for rep in range(reps):
         for name, fn in variants.items():
-            while load1() > 8.0:          # wait out load spikes
-                time.sleep(10)
+            wait_for_quiet(8.0, float("inf"), poll_s=10.0)  # wait out load spikes
             t0 = time.time()
             counts.add(fn(pages))
             walls[name].append(round(time.time() - t0, 3))
